@@ -47,6 +47,7 @@ from .operators.partitioning import (
     QuadtreePartitioner,
     STRPartitioner,
 )
+from .session import local_frame
 from .sources import points as points_src
 
 DEFAULT_PARTITION_SIZE = 1000  # src/main.cpp:60-65
@@ -333,8 +334,7 @@ class SpatialEngine:
                     # instead.  BroadcastHashJoin preserves the probe
                     # side's cached hash-partitioning on cell_id, so the
                     # downstream applyInPandas still runs exchange-free.
-                    cdf = self.spark.createDataFrame(
-                        pd.DataFrame({"cell_id": np.asarray(cells, dtype=np.int64)}))
+                    cdf = local_frame(self.spark, {"cell_id": cells}, "cell_id bigint")
                     df = df.join(F.broadcast(cdf), "cell_id", "left_semi")
         return df, keys
 
@@ -529,10 +529,8 @@ class SpatialEngine:
         parts = self._range_probe(rects, materialize=False, routing=boundary,
                                   rects_np=(rects_arr, qids))
         agg = parts.groupBy("query_id").agg(F.sum("cnt").alias("cnt"))
-        # Arrow-path local frame (a Python row list re-pickles per job and
-        # costs ~0.5s at 18k queries)
-        qdf = self.spark.createDataFrame(pd.DataFrame(
-            {"query_id": qids, "base": base}))
+        qdf = local_frame(self.spark, {"query_id": qids, "base": base},
+                          "query_id bigint, base bigint")
         return (
             qdf.join(agg, "query_id", "left")
             .select("query_id",
@@ -550,21 +548,21 @@ class SpatialEngine:
     def point_lookup(self, pts: list[tuple]) -> DataFrame:
         """Q3 point lookup (src/main.cpp:416-450), canonical fetch-one =
         min(pid) among exact matches; misses -> pid = -1."""
+        from .operators import probes
         p = self.partitioner
         if isinstance(p, STRPartitioner):
             self.cell_stats()
-        qrows = []
-        for (qid, qx, qy) in pts:
-            for c in p.cells_for_rect(qx, qy, qx, qy):
-                qrows.append((qid, float(qx), float(qy), int(c)))
-        qdf = self.spark.createDataFrame(qrows, "query_id bigint, qx double, qy double, cell_id bigint")
+        qdf = local_frame(
+            self.spark,
+            probes.point_routing(pts, [p.cells_for_rect(qx, qy, qx, qy) for (_, qx, qy) in pts]),
+            probes.POINT_ROUTING_SCHEMA)
         pts_df = self.assigned_points()
         hit = (
             pts_df.join(F.broadcast(qdf), "cell_id")
             .where((F.col("x") == F.col("qx")) & (F.col("y") == F.col("qy")))
             .groupBy("query_id").agg(F.min("pid").alias("pid"))
         )
-        alldf = self.spark.createDataFrame([(q[0],) for q in pts], "query_id bigint")
+        alldf = local_frame(self.spark, {"query_id": [q[0] for q in pts]}, "query_id bigint")
         return alldf.join(hit, "query_id", "left").select(
             "query_id", F.coalesce(F.col("pid"), F.lit(-1)).cast("bigint").alias("pid"))
 
@@ -638,7 +636,7 @@ class SpatialEngine:
         if materialize:
             return parts
         agg = parts.groupBy("query_id").agg(F.sum("cnt").alias("cnt"))
-        qdf = self.spark.createDataFrame([(q,) for q in qids], "query_id bigint")
+        qdf = local_frame(self.spark, {"query_id": qids}, "query_id bigint")
         return qdf.join(agg, "query_id", "left").select(
             "query_id", F.coalesce(F.col("cnt"), F.lit(0)).cast("bigint").alias("cnt"))
 
@@ -699,7 +697,7 @@ class SpatialEngine:
         if pairs:
             return parts
         agg = parts.groupBy("polygon_id").agg(F.sum("cnt").alias("cnt"))
-        gdf = self.spark.createDataFrame([(g,) for g in polygons], "polygon_id bigint")
+        gdf = local_frame(self.spark, {"polygon_id": list(polygons)}, "polygon_id bigint")
         return gdf.join(agg, "polygon_id", "left").select(
             "polygon_id", F.coalesce(F.col("cnt"), F.lit(0)).cast("bigint").alias("cnt"))
 
@@ -767,8 +765,10 @@ class SpatialEngine:
         """polygon -> candidate tile set (the Q5 filter mapping as data)."""
         if isinstance(self.partitioner, STRPartitioner):
             self.cell_stats()
-        rows = []
-        for gid, (vx, vy) in polygons.items():
-            for c in self.partitioner.cells_for_rect(min(vx), min(vy), max(vx), max(vy)):
-                rows.append((gid, int(c)))
-        return self.spark.createDataFrame(rows, "polygon_id bigint, cell_id bigint")
+        from .operators import probes
+        cells, gi = probes.flatten_cell_lists(
+            [self.partitioner.cells_for_rect(min(vx), min(vy), max(vx), max(vy))
+             for (vx, vy) in polygons.values()])
+        gids = np.asarray(list(polygons), dtype=np.int64)
+        return local_frame(self.spark, {"polygon_id": gids[gi], "cell_id": cells},
+                           "polygon_id bigint, cell_id bigint")

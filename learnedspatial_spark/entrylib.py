@@ -24,6 +24,7 @@ from .engine import SpatialEngine
 from .functions import text as tx
 from .functions.geo import haversine_m_sql
 from .operators import corpus, dedup, multimodal, similarity
+from .session import local_frame
 from .sources import workloads as wl
 from .sources.points import LAT_SQL, LON_SQL, POINTS_CTE
 from .sqlcompat import flit
@@ -588,9 +589,11 @@ def _cells_touched(spark, sf_dir):
     of fixed-grid cells each query rectangle routes to."""
     from .engine import SpatialEngine
     eng = SpatialEngine(spark, sf_dir, scheme="fixed_grid")
-    rows = [(qid, int(eng.partitioner.cells_for_rect(fx, fy, tx, ty).shape[0]))
-            for (qid, fx, fy, tx, ty) in _rects()]
-    return spark.createDataFrame(rows, "query_id bigint, cells bigint")
+    rects = _rects()
+    return local_frame(spark, {
+        "query_id": [r[0] for r in rects],
+        "cells": [eng.partitioner.cells_for_rect(fx, fy, tx, ty).shape[0]
+                  for (_, fx, fy, tx, ty) in rects]}, "query_id bigint, cells bigint")
 
 
 def _points_decimated(spark, sf_dir):
@@ -619,8 +622,9 @@ def _scan_overhead(spark, sf_dir):
             rows.append((qid, fx, fy, tx, ty, int(cells.min()), int(cells.max())))
         else:  # empty/inverted query rectangle: no cells routed
             rows.append((qid, fx, fy, tx, ty, 0, -1))
-    qdf = spark.createDataFrame(
-        rows, "query_id bigint, fx double, fy double, tx double, ty double, lo bigint, hi bigint")
+    qdf = local_frame(
+        spark, dict(zip(("query_id", "fx", "fy", "tx", "ty", "lo", "hi"), zip(*rows))),
+        "query_id bigint, fx double, fy double, tx double, ty double, lo bigint, hi bigint")
     pts = eng.assigned_points()
     j = pts.join(F.broadcast(qdf),
                  (F.col("cell_id") >= F.col("lo")) & (F.col("cell_id") <= F.col("hi")))
@@ -628,7 +632,7 @@ def _scan_overhead(spark, sf_dir):
         F.count(F.when((F.col("y") >= F.col("fy")) & (F.col("y") <= F.col("ty")), 1)).alias("scanned"),
         F.count(F.when((F.col("y") >= F.col("fy")) & (F.col("y") <= F.col("ty"))
                        & (F.col("x") >= F.col("fx")) & (F.col("x") <= F.col("tx")), 1)).alias("hits")))
-    alldf = spark.createDataFrame([(r[0],) for r in rows], "query_id bigint")
+    alldf = local_frame(spark, {"query_id": [r[0] for r in rows]}, "query_id bigint")
     return (alldf.join(agg, "query_id", "left")
             .select("query_id",
                     F.coalesce("scanned", F.lit(0)).cast("bigint").alias("scanned"),

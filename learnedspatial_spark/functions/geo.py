@@ -86,10 +86,12 @@ def haversine_s2_col(lat1r: Column, lon1r: Column, lat2r: Column, lon2r: Column)
     as a pure Column expression — monotone in great-circle distance and
     well-conditioned (no asin amplification near the antipode), which is
     what conservative distance GATES should compare on (see
-    operators/distjoin._prefilter_expr)."""
+    operators/distjoin._prefilter_expr).  The products associate left to
+    right exactly as in :func:`haversine_m_sql` and the NumPy kernels, so
+    :func:`haversine_m_col` is bit-identical to the SQL form."""
     u = F.sin((lat2r - lat1r) / F.lit(2.0))
     v = F.sin((lon2r - lon1r) / F.lit(2.0))
-    return u * u + F.cos(lat1r) * F.cos(lat2r) * (v * v)
+    return u * u + F.cos(lat1r) * F.cos(lat2r) * v * v
 
 
 def haversine_m_col(lat1r: Column, lon1r: Column, lat2r: Column, lon2r: Column) -> Column:
@@ -99,10 +101,16 @@ def haversine_m_col(lat1r: Column, lon1r: Column, lat2r: Column, lon2r: Column) 
     return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(F.least(s, F.lit(1.0)))
 
 
-def haversine_m_sql(lat1r: str, lon1r: str, lat2r: str, lon2r: str) -> str:
-    """The same formula as an ANSI-SQL string (DuckDB oracle side)."""
+def haversine_s2_sql(lat1r: str, lon1r: str, lat2r: str, lon2r: str) -> str:
+    """:func:`haversine_s2_col` as an ANSI-SQL string."""
     two = "cast(2 as double)"
     u = f"sin(({lat2r} - ({lat1r})) / {two})"
     v = f"sin(({lon2r} - ({lon1r})) / {two})"
-    s = f"sqrt({u}*{u} + cos({lat1r})*cos({lat2r})*{v}*{v})"
+    return f"{u}*{u} + cos({lat1r})*cos({lat2r})*{v}*{v}"
+
+
+def haversine_m_sql(lat1r: str, lon1r: str, lat2r: str, lon2r: str) -> str:
+    """The same formula as an ANSI-SQL string (DuckDB oracle side)."""
+    two = "cast(2 as double)"
+    s = f"sqrt({haversine_s2_sql(lat1r, lon1r, lat2r, lon2r)})"
     return f"{two} * cast('{EARTH_RADIUS_M!r}' as double) * asin(least({s}, cast(1 as double)))"

@@ -302,6 +302,10 @@ def distance_join_pairs(
     Self-join dedup: the blocked candidates meet each (l, r) exactly
     once; ``l.pid < r.pid`` then keeps one orientation of the two
     symmetric meetings.
+
+    Precondition: ``id_col`` is unique.  Two points sharing an id never
+    pair (``l.pid < r.pid`` is false for them), whatever their distance.
+    The DuckDB twin has the same semantics.
     """
     base = _normalize(points, id_col, lat_col, lon_col)
     cand = _blocked_candidates(base, base, radius_m).where(
@@ -341,6 +345,11 @@ def knn_join(
     and the window partition count per key is bounded by the points
     within the radius — data density, not corpus-frequency skew.  Ties
     break on (dist_m, r_pid), deterministic on both engines.
+
+    Precondition: ``id_col`` is unique within ``left``.  The top-k
+    window partitions by the left id, so left points sharing an id merge
+    into one neighbor set of k rows.  The DuckDB twin has the same
+    semantics.
     """
     l = _normalize(left, id_col, lat_col, lon_col)
     r = _normalize(right, id_col, lat_col, lon_col)

@@ -16,9 +16,10 @@ to run inside ``applyInPandas`` over one grid cell at a time:
 * probe: interpolate the spline to an estimated position
   (Spline.hpp:385-453) then repair to the exact bound.  The reference
   repairs with unbounded linear over/under-shot scans
-  (Spline.hpp:476-520); we repair with an exponentially expanding window +
-  ``np.searchsorted`` — identical results, bounded worst case, and
-  vectorized across a whole query batch.
+  (Spline.hpp:476-520); we bisect a window around the estimate (first
+  eps + 2 either side, widened 4x until the bound is interior or meets
+  the array edge) in lock-step across the whole query batch —
+  identical results, bounded worst case.
 
 A radix hint table (Spline.hpp:349-383) only accelerates spline-segment
 location; ``np.searchsorted`` over the knot keys is result-identical

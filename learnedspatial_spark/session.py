@@ -8,8 +8,10 @@ Arrow enabled for pandas UDF exchange) while remaining correct on
 from __future__ import annotations
 
 import os
+from typing import Mapping
 
-from pyspark.sql import SparkSession
+import numpy as np
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -44,3 +46,24 @@ def get_spark(
         for k, v in extra_conf.items():
             b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_frame(spark: SparkSession, columns: Mapping[str, object], schema: str) -> DataFrame:
+    """A driver-built table (a query batch, its routing rows) as a JVM
+    ``LocalTableScan``: the columns travel to the JVM once as an Arrow
+    stream and no Python worker ever evaluates the table.
+
+    ``columns`` maps names to array-likes of equal length (NumPy arrays,
+    lists); ``schema`` is a DDL string naming the same columns in order.
+    The Arrow-table form of ``createDataFrame`` neither consults
+    ``spark.sql.execution.arrow.pyspark.enabled`` nor has a silent
+    fallback, and it stays a ``LocalTableScan`` at zero rows.  The other
+    forms do not: a Python row list, and an EMPTY pandas frame even with
+    a schema, plan as ``Scan ExistingRDD`` over a ``PythonRDD``, which
+    starts ``defaultParallelism`` Python tasks per job that reads it.
+    Values must convert to the schema's types without loss (pyarrow
+    raises otherwise)."""
+    import pyarrow as pa
+
+    table = pa.table({name: np.asarray(col) for name, col in columns.items()})
+    return spark.createDataFrame(table, schema)

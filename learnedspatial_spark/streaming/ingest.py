@@ -21,6 +21,7 @@ from ..operators.partitioning import (
     MortonPartitioner,
     Partitioner,
 )
+from ..session import local_frame
 
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 
@@ -243,7 +244,7 @@ def pip_count_stream(spark: SparkSession,
     # the stream has fully terminated (availableNow) and `out` is already
     # detached from it — release the executor-pinned polygon arrays
     bpolys.unpersist()
-    gdf = spark.createDataFrame([(int(g),) for g in polygons], "polygon_id bigint")
+    gdf = local_frame(spark, {"polygon_id": [int(g) for g in polygons]}, "polygon_id bigint")
     return gdf.join(out, "polygon_id", "left").select(
         "polygon_id", F.coalesce(F.col("cnt"), F.lit(0)).cast("bigint").alias("cnt"))
 

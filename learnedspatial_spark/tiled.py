@@ -39,6 +39,7 @@ from .operators import probes
 from .operators import spline as spl
 from .operators.partitioning import Partitioner
 from .ops import storage
+from .session import local_frame
 
 
 class TiledSpatialEngine:
@@ -161,9 +162,8 @@ class TiledSpatialEngine:
         parts = self._pruned_scan(list(cellmap)).mapInPandas(
             probe, schema="query_id bigint, cnt bigint")
         agg = parts.groupBy("query_id").agg(F.sum("cnt").alias("cnt"))
-        qdf = self.spark.createDataFrame(
-            [(r[0], int(base[i])) for i, r in enumerate(rects)],
-            "query_id bigint, base bigint")
+        qdf = local_frame(self.spark, {"query_id": qids, "base": base},
+                          "query_id bigint, base bigint")
         return (qdf.join(agg, "query_id", "left")
                 .select("query_id",
                         (F.coalesce(F.col("cnt"), F.lit(0)) + F.col("base"))
@@ -175,20 +175,15 @@ class TiledSpatialEngine:
         resolved id column (pid for derived-point indexes, url for
         page-built ones).  Output (query_id, <id>); misses are -1 for a
         numeric pid, NULL otherwise."""
-        qrows = []
-        cells = set()
-        for (qid, qx, qy) in pts:
-            for c in self.partitioner.cells_for_rect(qx, qy, qx, qy):
-                qrows.append((qid, float(qx), float(qy), int(c)))
-                cells.add(int(c))
-        qdf = self.spark.createDataFrame(
-            qrows, "query_id bigint, qx double, qy double, cell_id bigint")
+        routing = probes.point_routing(
+            pts, [self.partitioner.cells_for_rect(qx, qy, qx, qy) for (_, qx, qy) in pts])
+        qdf = local_frame(self.spark, routing, probes.POINT_ROUTING_SCHEMA)
         id_col, id_type = self._id_column()
-        hit = (self._pruned_scan(sorted(cells))
+        hit = (self._pruned_scan(np.unique(routing["cell_id"]).tolist())
                .join(F.broadcast(qdf), "cell_id")
                .where((F.col("x") == F.col("qx")) & (F.col("y") == F.col("qy")))
                .groupBy("query_id").agg(F.min(id_col).alias(id_col)))
-        alldf = self.spark.createDataFrame([(q[0],) for q in pts], "query_id bigint")
+        alldf = local_frame(self.spark, {"query_id": [q[0] for q in pts]}, "query_id bigint")
         out = alldf.join(hit, "query_id", "left")
         if id_col == "pid":
             return out.select(
@@ -264,7 +259,7 @@ class TiledSpatialEngine:
         parts = self._pruned_scan(list(cellmap)).mapInPandas(
             probe, schema="query_id bigint, cnt bigint")
         agg = parts.groupBy("query_id").agg(F.sum("cnt").alias("cnt"))
-        qdf = self.spark.createDataFrame([(q,) for q in qids], "query_id bigint")
+        qdf = local_frame(self.spark, {"query_id": qids}, "query_id bigint")
         return qdf.join(agg, "query_id", "left").select(
             "query_id", F.coalesce(F.col("cnt"), F.lit(0)).cast("bigint").alias("cnt"))
 
@@ -321,7 +316,7 @@ class TiledSpatialEngine:
         parts = self._pruned_scan(list(polymap)).mapInPandas(
             probe, schema="polygon_id bigint, cnt bigint")
         agg = parts.groupBy("polygon_id").agg(F.sum("cnt").alias("cnt"))
-        gdf = self.spark.createDataFrame([(g,) for g in polygons], "polygon_id bigint")
+        gdf = local_frame(self.spark, {"polygon_id": list(polygons)}, "polygon_id bigint")
         return gdf.join(agg, "polygon_id", "left").select(
             "polygon_id", F.coalesce(F.col("cnt"), F.lit(0)).cast("bigint").alias("cnt"))
 

@@ -168,3 +168,82 @@ def test_pages_source_engine(spark, tmp_path):
     lat, lon = datagen.coords_for_ids(ids)
     for (qid, fx, fy, tx, ty) in rects:
         assert got[qid] == orc.range_count(lat, lon, fx, fy, tx, ty), qid
+
+
+# ---------------------------------------------------------------------------
+# Literal tables: every table an engine builds from a query batch must plan
+# as a JVM LocalTableScan.  A row-list (or empty pandas) createDataFrame
+# plans as `Scan ExistingRDD` over a PythonRDD and starts defaultParallelism
+# Python tasks in every job that reads it, whatever the job computes.
+
+@pytest.fixture(scope="module")
+def both_engines(spark, sf_dir, tmp_path_factory):
+    from learnedspatial_spark import pipeline
+    from learnedspatial_spark.tiled import TiledSpatialEngine
+
+    root = str(tmp_path_factory.mktemp("literal_tables") / "index")
+    pipeline.build_tiled_index(spark, None, root, partition_size=500,
+                               points_df=points_src.points_df(spark, sf_dir))
+    return {"session": SpatialEngine(spark, sf_dir, scheme="fixed_grid", partition_size=500),
+            "tiled": TiledSpatialEngine(spark, root)}
+
+
+def _batches(corpus, empty: bool) -> dict:
+    pid, x, y = corpus
+    if empty:
+        return {"rects": [], "pts": [], "circles": [], "polys": {}, "knn": []}
+    return {"rects": wl.rectangles(n_per_tier=2),
+            "pts": wl.point_queries(x, y, n_hits=3, n_misses=2),
+            "circles": wl.distance_queries(n=3),
+            "polys": wl.polygons(n=3),
+            "knn": wl.knn_queries(n=3)}
+
+
+def _literal_table_cases(eng, corpus, b):
+    """(method, lazy DataFrame, row -> key/value, oracle dict) per
+    public query method of ``eng``."""
+    pid, x, y = corpus
+    xr, yr = (x / 180.0) * np.pi, (y / 180.0) * np.pi
+    polys_np = {g: (np.asarray(vx), np.asarray(vy)) for g, (vx, vy) in b["polys"].items()}
+    cases = [
+        ("range_count", eng.range_count(b["rects"]),
+         lambda r: (r["query_id"], r["cnt"]),
+         {q: orc.range_count(x, y, fx, fy, tx, ty) for (q, fx, fy, tx, ty) in b["rects"]}),
+        ("range_materialize", eng.range_materialize(b["rects"]),
+         lambda r: ((r["query_id"], r["pid"]), 1),
+         {(q, int(pid[i])): 1 for (q, fx, fy, tx, ty) in b["rects"]
+          for i in orc.range_materialize(x, y, fx, fy, tx, ty)}),
+        ("point_lookup", eng.point_lookup(b["pts"]),
+         lambda r: (r["query_id"], r["pid"]),
+         {q: (lambda w: -1 if w is None else w)(orc.point_lookup(x, y, pid, qx, qy))
+          for (q, qx, qy) in b["pts"]}),
+        ("distance_count", eng.distance_count(b["circles"]),
+         lambda r: (r["query_id"], r["cnt"]),
+         {q: orc.distance_count(xr, yr, (qx / 180.0) * np.pi, (qy / 180.0) * np.pi, rad)
+          for (q, qx, qy, rad) in b["circles"]}),
+        ("pip", eng.pip(b["polys"]),
+         lambda r: (r["polygon_id"], r["cnt"]), orc.pip_counts(x, y, polys_np)),
+        ("knn", eng.knn(b["knn"]),
+         lambda r: ((r["query_id"], r["rnk"]), r["pid"]),
+         {(q, i + 1): p for (q, qx, qy, k) in b["knn"]
+          for i, p in enumerate(orc.knn_euclidean(x, y, pid, qx, qy, k))}),
+    ]
+    if hasattr(eng, "polygon_tiles"):
+        cases.append((
+            "polygon_tiles", eng.polygon_tiles(b["polys"]),
+            lambda r: ((r["polygon_id"], r["cell_id"]), 1),
+            {(g, int(c)): 1 for g, (vx, vy) in b["polys"].items()
+             for c in eng.partitioner.cells_for_rect(min(vx), min(vy), max(vx), max(vy))}))
+    return cases
+
+
+@pytest.mark.parametrize("empty", [False, True], ids=["batch", "empty"])
+@pytest.mark.parametrize("engine", ["session", "tiled"])
+def test_query_tables_plan_without_python_rdd(both_engines, corpus, engine, empty):
+    eng = both_engines[engine]
+    for name, df, kv, want in _literal_table_cases(eng, corpus, _batches(corpus, empty)):
+        got = dict(kv(r) for r in df.collect())
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Scan ExistingRDD" not in plan, (engine, name, plan)
+        assert got == want, (engine, name)
+        assert bool(want) != empty, (engine, name)  # empty batch -> no rows

@@ -38,6 +38,8 @@ import bench  # noqa: E402
 
 QUERIES = ("range_count", "distance_count", "pip", "knn",
            "range_materialize")
+#: Page-touch bandwidth (GB/s) at or above which the host counts as quiet.
+QUIET_GBS = 1.0
 
 
 def wait_quiet(max_wait_s: float) -> tuple[bool, float, float]:
@@ -52,22 +54,23 @@ def wait_quiet(max_wait_s: float) -> tuple[bool, float, float]:
     """
     waited = 0.0
     _, pt = bench.host_bandwidth_gbs()
-    if pt < 1.0:
+    if pt < QUIET_GBS:
         bench.host_active_recovery()
         _, pt = bench.host_bandwidth_gbs()
-    while pt < 1.0 and waited < max_wait_s:
+    while pt < QUIET_GBS and waited < max_wait_s:
         time.sleep(60)
         waited += 60
         bench.host_active_recovery()
         _, pt = bench.host_bandwidth_gbs()
-    return pt >= 1.0, pt, waited
+    return pt >= QUIET_GBS, pt, waited
 
 
 def adjudicate(spark, query: str, sf_dir: str, repeats: int = 5,
                cpus: int = 32, scheme: str = "fixed_grid",
                refine: str = "learned") -> dict:
     """Warm the engine exactly as bench.py does, then time `query`
-    best-of-`repeats` with page-touch witnesses around the block."""
+    best-of-`repeats` with page-touch witnesses around the block.
+    ``quiet`` holds only if both bracketing witnesses read quiet."""
     from learnedspatial_spark.engine import SpatialEngine
     from learnedspatial_spark.sources import workloads as wl
 
@@ -105,7 +108,7 @@ def adjudicate(spark, query: str, sf_dir: str, repeats: int = 5,
         walls.append(round(time.perf_counter() - t0, 4))
     pt_close = bench.host_bandwidth_gbs()[1]
     return {
-        "query": query, "quiet": True, "walls": walls,
+        "query": query, "quiet": bool(min(pt_open, pt_close) >= QUIET_GBS), "walls": walls,
         "best": min(walls), "median": sorted(walls)[len(walls) // 2],
         "pagetouch_open": pt_open, "pagetouch_close": pt_close,
         "sf_dir": sf_dir, "cpus": cpus, "scheme": scheme, "refine": refine,

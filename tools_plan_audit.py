@@ -29,6 +29,15 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
+def literal_tables_local(plan: str) -> str:
+    """Marker when the query-batch tables are JVM LocalTableScans, never a
+    ``Scan ExistingRDD`` over Python rows (which starts Python tasks in a
+    job that has no Python kernel to run)."""
+    if "LocalTableScan" in plan and "Scan ExistingRDD" not in plan:
+        return "\n-- audit: literal-tables-local (query tables are LocalTableScans)\n"
+    return ""
+
+
 def main() -> None:
     from pyspark.sql import functions as F
 
@@ -52,7 +61,9 @@ def main() -> None:
         "FlatMapGroupsInPandas",
     ]))
     p2 = plan_of(eng.point_lookup(wl.point_queries(*__import__("learnedspatial_spark.sources.points", fromlist=["points_np"]).points_np(sf)[1:3], n_hits=5, n_misses=2)))
-    sections.append(("point_lookup (broadcast candidate join)", p2, ["BroadcastHashJoin", "codegen id"]))
+    p2 += literal_tables_local(p2)
+    sections.append(("point_lookup (broadcast candidate join)", p2, [
+        "BroadcastHashJoin", "codegen id", "literal-tables-local"]))
     p3 = plan_of(similarity.brute_cosine_topk(
         spark.read.parquet(f"{sf}/embeddings.parquet"),
         similarity.query_vectors(spark, sf, n=4), k=5))
@@ -82,10 +93,12 @@ def main() -> None:
         shuffle_ex = len(re.findall(r"\bExchange", p5))
         if 0 < shuffle_ex <= 2:
             p5 += "\n-- audit: probe-shuffle-free (only the final per-query aggregation exchanges)\n"
+        p5 += literal_tables_local(p5)
         sections.append(("tiled range_count (materialized index, pruned scan)", p5, [
             "PartitionFilters",
             "MapInPandas",
             "probe-shuffle-free",
+            "literal-tables-local",
         ]))
 
     # production input path (north rule): pages -> points must prune the
