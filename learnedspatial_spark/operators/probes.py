@@ -1,10 +1,9 @@
 """Shared per-cell probe kernels (pure NumPy, no Spark).
 
-Both execution engines — the in-session ``SpatialEngine`` (one cell-keyed
-shuffle, ``applyInPandas`` per cell) and the materialized
-``TiledSpatialEngine`` (partition-pruned scan, ``mapInPandas`` per
-cell-local batch) — refine candidates with THESE kernels, so the two paths
-cannot drift semantically.  Semantics mirror the reference cells
+The query core (``core.py``) routes with these helpers and builds its
+per-cell kernels from them for both cell sources — the in-session
+``SpatialEngine`` and the materialized ``TiledSpatialEngine`` — so the
+two paths cannot drift semantically.  Semantics mirror the reference cells
 (include/partition_cells/*, SURVEY.md §2.5): inclusive bounds, (y, x) sort
 order, fully-contained short-circuit, learned-vs-binary-search refinement
 returning identical rows.
@@ -107,11 +106,11 @@ def flatten_cell_lists(cells_per_query) -> tuple[np.ndarray, np.ndarray]:
 POINT_ROUTING_SCHEMA = "query_id bigint, qx double, qy double, cell_id bigint"
 
 
-def point_routing(pts, cells_per_point) -> dict[str, np.ndarray]:
+def point_routing(pts, cells: np.ndarray, qi: np.ndarray) -> dict[str, np.ndarray]:
     """Point-lookup routing rows as columns: one (query_id, qx, qy,
-    cell_id) row per candidate cell of each ``(query_id, x, y)`` point —
-    the broadcast side of both engines' exact-match join."""
-    cells, qi = flatten_cell_lists(cells_per_point)
+    cell_id) row per flat (cell, point index) candidate pair of the
+    ``(query_id, x, y)`` points — the broadcast side of the exact-match
+    join."""
     xy = np.asarray([(p[1], p[2]) for p in pts], dtype=np.float64).reshape(len(pts), 2)
     qids = np.asarray([p[0] for p in pts], dtype=np.int64)
     return {"query_id": qids[qi], "qx": xy[qi, 0], "qy": xy[qi, 1], "cell_id": cells}
@@ -173,27 +172,6 @@ def route_contained(rects_arr: np.ndarray, cells_flat: np.ndarray,
                  & (rects_arr[qf, 1] <= miny[si]) & (rects_arr[qf, 3] >= maxy[si]))
     np.add.at(base, qf[contained], count[si[contained]])
     return base, compact_routing(cf[~contained], qf[~contained])
-
-
-def split_contained_counts(rects, cells_per_query, ids, minx, miny, maxx, maxy, count):
-    """O3 shortcut applied at ROUTING, vectorized over each query's
-    candidate-cell array: cells whose data bbox lies fully inside query
-    qi accumulate their cached counts into ``base[qi]`` (never scanned);
-    only the boundary (cell, query) pairs still need a probe.  A broad
-    rectangle at a deep grid level has up to O(#cells) candidates — the
-    contained/uncontained split runs as numpy masks so the driver never
-    pays a per-cell Python loop for them, and the boundary dict it does
-    build is O(perimeter) for such rects.  Candidate ids with no stats
-    row (no data) are dropped.  Shared by the in-session and tiled
-    engines so the two paths cannot drift."""
-    rects_arr = np.asarray([[r[1], r[2], r[3], r[4]] for r in rects],
-                           dtype=np.float64).reshape(len(rects), 4)
-    cells_flat, qidx_flat = flatten_cell_lists(cells_per_query)
-    base, (cells_u, offsets, qs) = route_contained(
-        rects_arr, cells_flat, qidx_flat, ids, minx, miny, maxx, maxy, count)
-    boundary = {int(c): qs[offsets[i]:offsets[i + 1]].tolist()
-                for i, c in enumerate(cells_u)}
-    return base, boundary
 
 
 def range_count_cell(xs_sorted, ys_sorted, fx, fy, tx, ty,
@@ -309,13 +287,12 @@ def stab_edges(edges: np.ndarray, y: float) -> np.ndarray:
     return e["id"][(e["low"] <= y) & (y <= e["high"])]
 
 
-def knn_candidate_cells(ids, minx, miny, maxx, maxy, count, queries) -> dict:
-    """Driver-side kNN cell pruning shared by BOTH engines (so the two
-    paths cannot drift): per query take cells ascending by bbox-min-d2
-    until their counts cover k, bound R = max bbox-max-d2 of that prefix,
-    and route the query to every cell with min-d2 <= R — exact by
-    construction.  Returns {cell_id: [query_index, ...]}."""
-    cellmap: dict[int, list[int]] = {}
+def knn_candidate_cells(ids, minx, miny, maxx, maxy, count, queries):
+    """Driver-side kNN cell pruning: per query take cells ascending by
+    bbox-min-d2 until their counts cover k, bound R = max bbox-max-d2 of
+    that prefix, and route the query to every cell with min-d2 <= R —
+    exact by construction.  Returns flat (cells, query_index) pairs."""
+    cells, qidx = [np.empty(0, dtype=np.int64)], [np.empty(0, dtype=np.int64)]
     for qi, (qid, qx, qy, k) in enumerate(queries):
         dx = np.maximum(np.maximum(minx - qx, qx - maxx), 0.0)
         dy = np.maximum(np.maximum(miny - qy, qy - maxy), 0.0)
@@ -327,14 +304,14 @@ def knn_candidate_cells(ids, minx, miny, maxx, maxy, count, queries) -> dict:
         cum = np.cumsum(count[order])
         need = min(int(np.searchsorted(cum, k)) + 1, order.shape[0])
         R = float(dmax[order[:need]].max())
-        for c in ids[dmin <= R]:
-            cellmap.setdefault(int(c), []).append(qi)
-    return cellmap
+        cells.append(ids[dmin <= R])
+        qidx.append(np.full(cells[-1].shape[0], qi, dtype=np.int64))
+    return np.concatenate(cells), np.concatenate(qidx)
 
 
 def knn_merge_topk(pdf, qid: int, k: int, id_col: str = "pid"):
     """Per-query merge of the per-cell top-k partials (the associative
-    reduce both engines apply in their final applyInPandas): global order
+    reduce of the core's final applyInPandas): global order
     (d2, x, y, id), first k rows -> (query_id, rnk, id)."""
     import pandas as pd
     order = np.lexsort((pdf[id_col].to_numpy(), pdf["py"].to_numpy(),
@@ -345,15 +322,15 @@ def knn_merge_topk(pdf, qid: int, k: int, id_col: str = "pid"):
         id_col: pdf[id_col].to_numpy()[order]})
 
 
-def widen_ulps(lo: float, hi: float, ulps: int = 8) -> tuple[float, float]:
-    """Widen a [lo, hi] routing bound by ``ulps`` float steps on each side
-    — the conservative margin BOTH engines must apply to the Matuschek
-    circle bbox before cell routing (the bbox math amplifies rounding
-    near the poles well past 1 ulp; an under-widened bound can prune a
-    cell holding a true inclusive-boundary hit)."""
+def widen_ulps(lo, hi, ulps: int = 8):
+    """Widen [lo, hi] routing bounds (scalars or arrays) by ``ulps`` float
+    steps on each side — the conservative margin the Matuschek circle
+    bbox needs before cell routing (the bbox math amplifies rounding near
+    the poles well past 1 ulp; an under-widened bound can prune a cell
+    holding a true inclusive-boundary hit)."""
     for _ in range(ulps):
-        lo = float(np.nextafter(lo, -np.inf))
-        hi = float(np.nextafter(hi, np.inf))
+        lo = np.nextafter(lo, -np.inf)
+        hi = np.nextafter(hi, np.inf)
     return lo, hi
 
 

@@ -255,3 +255,16 @@ def fit_cell_model(y_sorted: np.ndarray, eps: float = SPLINE_EPSILON, linear_thr
     err = np.abs(spline_estimate(kk, kp, keys) - pos)
     return {"n": n, "linear_scan": False, "knot_keys": kk.tolist(), "knot_pos": kp.tolist(),
             "avg_err": float(err.mean()), "max_err": float(err.max())}
+
+
+MODEL_SCHEMA = ("cell_id bigint, n bigint, linear_scan boolean, "
+                "knot_keys array<double>, knot_pos array<double>, "
+                "avg_err double, max_err double")
+
+
+def fit_model_frame(key, pdf):
+    """``groupBy("cell_id").applyInPandas`` body: one cell's rows -> its
+    model-table row (:data:`MODEL_SCHEMA`), shared by the in-session model
+    table and the tiled index build."""
+    import pandas as pd
+    return pd.DataFrame([{"cell_id": int(key[0]), **fit_cell_model(np.sort(pdf["y"].to_numpy()))}])

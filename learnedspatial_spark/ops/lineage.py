@@ -1,11 +1,9 @@
-"""Per-partition lineage + metrics sink (north rule).
+"""Run lineage + per-cell metrics (north rule).
 
 Engine analogs of the reference's instrumentation (SURVEY.md §4 O11/O12:
-``GetUsedMemory``, ``PRINT_STATS`` cells_intersected / scanned-point
-counters, src/main.cpp:140-186): every query job can emit a metrics
-DataFrame — one row per (query, cell) — that is aggregated and appended to
-a parquet metrics log together with run lineage (partitioner spec hash,
-input path, workload fingerprint, wall times).
+``GetUsedMemory``, ``PRINT_STATS`` counters, src/main.cpp:140-186): each
+index build appends one lineage line (partitioner spec hash, inputs, wall
+times) and writes the per-cell row-count/bbox table.
 """
 
 from __future__ import annotations
@@ -16,11 +14,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
-
-METRICS_SCHEMA = ("run_id string, job string, cell_id bigint, queries_touched bigint, "
-                  "rows_in_cell bigint, rows_scanned bigint, rows_emitted bigint, "
-                  "wall_ms double")
+from pyspark.sql import DataFrame
 
 
 def spec_hash(spec: dict) -> str:
@@ -28,8 +22,7 @@ def spec_hash(spec: dict) -> str:
 
 
 class RunLog:
-    """Append-only lineage log: one JSON line per run + optional parquet
-    metrics table partitioned by run_id."""
+    """Append-only lineage log: one JSON line per run."""
 
     def __init__(self, root: str):
         self.root = root
@@ -51,10 +44,6 @@ class RunLog:
         with open(os.path.join(self.root, "runs.jsonl"), "a") as f:
             f.write(json.dumps(line) + "\n")
         return self.run_id
-
-    def write_metrics(self, spark: SparkSession, metrics_df: DataFrame) -> None:
-        (metrics_df.write.mode("append")
-         .parquet(os.path.join(self.root, "metrics.parquet")))
 
 
 def cell_metrics(assigned: DataFrame) -> DataFrame:

@@ -20,11 +20,11 @@ import math
 import os
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import extract
+from .core import id_field
 from .operators import spline as spl
 from .operators.partitioning import (
     AdaptiveGridPartitioner,
@@ -60,23 +60,8 @@ def build_tiled_index(
         pages = spark.read.parquet(pages_path)
         points = extract.points_from_pages(pages)
     # a stable id column for deterministic tie-breaks (url for pages, pid
-    # for derived point tables) — the same resolution rule as
-    # tiled._id_column: a known id name, else the single non-(x, y)
-    # column; anything else raises.  First-extra-column-wins would crash
-    # on an (x, y)-only frame and, worse, silently pick a NON-unique
-    # column (weight, ts, ...), making the hash sample and the STR rank
-    # tiebreak nondeterministic between a run and its resume.
-    named = [c for c in points.columns if c in ("pid", "url", "doc_id")]
-    others = [c for c in points.columns if c not in ("x", "y")]
-    if len(named) == 1:
-        id_col = named[0]
-    elif len(others) == 1:
-        id_col = others[0]
-    else:
-        raise ValueError(
-            "cannot resolve a unique id column for deterministic "
-            f"tie-breaks: columns {points.columns} (expected one of "
-            "pid/url/doc_id, or exactly one non-(x, y) column)")
+    # for derived point tables), the same rule the tiled engine reads
+    id_col = id_field(points.schema).name
 
     # partitioner from one stats pass (closed-form schemes need only bbox +
     # count — no driver collect of data)
@@ -178,19 +163,8 @@ def build_tiled_index(
 
     def fit_batch(batch_cells: list[int]) -> None:
         sub = tiled.where(F.col("cell_id").isin([int(c) for c in batch_cells]))
-
-        def fit(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            ys = np.sort(pdf["y"].to_numpy())
-            m = spl.fit_cell_model(ys)
-            return pd.DataFrame([{"cell_id": int(key[0]), "n": m["n"],
-                                  "linear_scan": m["linear_scan"],
-                                  "knot_keys": m["knot_keys"], "knot_pos": m["knot_pos"],
-                                  "avg_err": m["avg_err"], "max_err": m["max_err"]}])
-
         batch_df = sub.groupBy("cell_id").applyInPandas(
-            fit, schema=("cell_id bigint, n bigint, linear_scan boolean, "
-                         "knot_keys array<double>, knot_pos array<double>, "
-                         "avg_err double, max_err double"))
+            spl.fit_model_frame, schema=spl.MODEL_SCHEMA)
         storage.write_table(batch_df, model_path,
                             mode="overwrite" if not manifest.done_cells else "append")
 

@@ -26,8 +26,11 @@ from ..session import local_frame
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 
 # geo:{lat},{lon} extraction — same pattern the batch extractor embeds
-# (datagen.HTML_TEMPLATE); regexp shared between batch and stream.
-GEO_RE = r"geo:(-?[0-9]+(?:\.[0-9eE+-]+)?),(-?[0-9]+(?:\.[0-9eE+-]+)?)"
+# (datagen.HTML_TEMPLATE); regexp shared between batch and stream and the
+# DuckDB derivation.  Coordinates are Python float reprs, so the exponent
+# may follow the integer part directly (``9e-06``), not only a fraction.
+_NUM_RE = r"-?[0-9]+(?:\.[0-9]*)?(?:[eE][+-]?[0-9]+)?"
+GEO_RE = rf"geo:({_NUM_RE}),({_NUM_RE})"
 
 
 def extract_points_stream(pages: DataFrame) -> DataFrame:

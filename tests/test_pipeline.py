@@ -3,6 +3,7 @@
 import os
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from learnedspatial_spark import datagen, pipeline
@@ -144,8 +145,9 @@ def test_tiled_engine_query_parity(spark, tmp_path):
     for (qid, fx, fy, tx, ty) in rects:
         want[qid] = flat.where((F.col("x") >= fx) & (F.col("x") <= tx)
                                & (F.col("y") >= fy) & (F.col("y") <= ty)).count()
-    got_l = {r["query_id"]: r["cnt"] for r in eng.range_count(rects, refine="learned").collect()}
-    got_b = {r["query_id"]: r["cnt"] for r in eng.range_count(rects, refine="binsearch").collect()}
+    eng_b = TiledSpatialEngine(spark, out_root, refine="binsearch")
+    got_l = {r["query_id"]: r["cnt"] for r in eng.range_count(rects).collect()}
+    got_b = {r["query_id"]: r["cnt"] for r in eng_b.range_count(rects).collect()}
     assert got_l == want and got_b == want
 
     rows = eng.range_materialize(rects[:2]).collect()
@@ -153,7 +155,7 @@ def test_tiled_engine_query_parity(spark, tmp_path):
     assert n0 == want[0]
     # refine wiring: the learned (broadcast-models) and binary-search
     # materialize paths return the identical row set
-    rows_b = eng.range_materialize(rects[:2], refine="binsearch").collect()
+    rows_b = eng_b.range_materialize(rects[:2]).collect()
     assert sorted(map(tuple, rows)) == sorted(map(tuple, rows_b))
 
     # point_lookup resolves the id column on a page-built index (url ids):
@@ -376,3 +378,110 @@ def test_pages_exact_build_survives_unparsable_geo(spark, tmp_path):
     assert eng.points().count() == 8          # Spark side drops the poison rows
     _, x, _ = eng._points_np()                # DuckDB side must agree
     assert x.shape[0] == 8
+
+
+def test_pages_parse_exponent_coordinates_exactly(spark, tmp_path):
+    """Coordinates are Python float reprs, so an exponent can follow the
+    integer part directly (``9e-06``).  The Spark extraction and the
+    DuckDB derivation must both parse every form to the exact double —
+    a lat in that form must not drop the page, a lon in it must not read
+    as its mantissa — and both must still drop the unparsable rows."""
+    import datetime
+
+    from pyspark.sql import types as T
+
+    from learnedspatial_spark.engine import SpatialEngine
+    src = str(tmp_path / "pages")
+    schema = T.StructType([
+        T.StructField("url", T.StringType()), T.StructField("warc_ts", T.TimestampType()),
+        T.StructField("html", T.BinaryType()), T.StructField("text", T.StringType()),
+        T.StructField("lang", T.StringType())])
+    coords = [(11.640876, 9e-06), (9e-06, 11.5), (1.5e-05, -3.25), (-2e-07, 1e-05),
+              (-12.5, 170.0)] + [(10.0 + i, 20.0 + i) for i in range(4)]
+    ts = datetime.datetime(2026, 1, 1)
+    rows = [(f"https://x.example/{i}", ts, b"<html/>", f"meta geo:{lat},{lon} body", "en")
+            for i, (lat, lon) in enumerate(coords)]
+    rows += [("https://x.example/poison1", ts, b"<html/>", "see geo: tags here", "en"),
+             ("https://x.example/poison2", ts, b"<html/>", "geo:-.,-. broken", "en")]
+    spark.createDataFrame(rows, schema).write.parquet(src)
+    eng = SpatialEngine(spark, src, source="pages", scheme="kd_tree")
+    want = sorted(coords)
+    assert sorted((r["x"], r["y"]) for r in eng.points().collect()) == want
+    _, x, y = eng._points_np()
+    assert sorted(zip(x.tolist(), y.tolist())) == want
+
+
+@pytest.fixture(scope="module")
+def tiled_sf(spark, sf_dir, tmp_path_factory):
+    """A tiled index over the test corpus's derived points (pid ids),
+    cells of ~500 rows so they carry learned knots."""
+    from learnedspatial_spark.sources.points import points_df, points_np
+    root = str(tmp_path_factory.mktemp("tiled_sf") / "index")
+    pipeline.build_tiled_index(spark, None, root, partition_size=500,
+                               points_df=points_df(spark, sf_dir))
+    return root, points_np(sf_dir)
+
+
+def test_tiled_binsearch_x_and_polygon_tiles(spark, tiled_sf):
+    """The tiled source answers ``refine="binsearch_x"`` (the C3
+    BinarySearchXCell kernel) and ``polygon_tiles`` through the shared
+    core, identical to the oracle and to ``cells_for_rect``."""
+    from learnedspatial_spark.sources import workloads as wl
+    from learnedspatial_spark.tiled import TiledSpatialEngine
+    from oracle import oracle as orc
+    root, (pid, x, y) = tiled_sf
+    eng = TiledSpatialEngine(spark, root, refine="binsearch_x")
+    rects = wl.rectangles(n_per_tier=4)
+    got = {r["query_id"]: r["cnt"] for r in eng.range_count(rects).collect()}
+    assert got == {q: orc.range_count(x, y, fx, fy, tx, ty) for (q, fx, fy, tx, ty) in rects}
+    rows = sorted((r["query_id"], r["pid"], r["x"], r["y"])
+                  for r in eng.range_materialize(rects).collect())
+    assert rows == sorted((q, int(pid[i]), float(x[i]), float(y[i]))
+                          for (q, fx, fy, tx, ty) in rects
+                          for i in orc.range_materialize(x, y, fx, fy, tx, ty))
+    polys = wl.polygons(n=5)
+    got_t = sorted((r["polygon_id"], r["cell_id"]) for r in eng.polygon_tiles(polys).collect())
+    assert got_t == sorted(
+        (g, int(c)) for g, (vx, vy) in polys.items()
+        for c in eng.partitioner.cells_for_rect(min(vx), min(vy), max(vx), max(vy)))
+    assert got_t
+
+
+def test_tiled_queries_exact_when_cells_span_arrow_batches(spark, tiled_sf):
+    """With 64-row Arrow batches one cell's rows reach the probe in
+    several batches; range count/materialize with full-cell learned knots
+    and kNN per-batch partials must stay exact."""
+    from learnedspatial_spark.sources import workloads as wl
+    from learnedspatial_spark.tiled import TiledSpatialEngine
+    from oracle import oracle as orc
+    root, (pid, x, y) = tiled_sf
+    eng = TiledSpatialEngine(spark, root)
+    assert eng._model_dict(), "cells of ~500 rows must carry learned knots"
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "64")
+    try:
+        def batch_sizes(it):
+            for pdf in it:
+                yield pdf.groupby("cell_id").size().rename("n").reset_index()
+        per_batch = (eng._pruned_scan(list(eng.cell_stats().ids))
+                     .mapInPandas(batch_sizes, "cell_id bigint, n bigint").collect())
+        assert max(r["n"] for r in per_batch) <= 64
+        batches_per_cell = {}
+        for r in per_batch:
+            batches_per_cell[r["cell_id"]] = batches_per_cell.get(r["cell_id"], 0) + 1
+        assert max(batches_per_cell.values()) > 1
+
+        rects = wl.rectangles(n_per_tier=4)
+        got = {r["query_id"]: r["cnt"] for r in eng.range_count(rects).collect()}
+        assert got == {q: orc.range_count(x, y, fx, fy, tx, ty) for (q, fx, fy, tx, ty) in rects}
+        rows = sorted((r["query_id"], r["pid"]) for r in eng.range_materialize(rects).collect())
+        assert rows == sorted((q, int(pid[i])) for (q, fx, fy, tx, ty) in rects
+                              for i in orc.range_materialize(x, y, fx, fy, tx, ty))
+        knnq = wl.knn_queries(n=8)
+        got_k = {}
+        for r in sorted(eng.knn(knnq).collect(), key=lambda r: (r["query_id"], r["rnk"])):
+            got_k.setdefault(r["query_id"], []).append(r["pid"])
+        assert got_k == {q: orc.knn_euclidean(x, y, pid, qx, qy, k) for (q, qx, qy, k) in knnq}
+    finally:
+        spark.conf.set(key, old)

@@ -38,6 +38,16 @@ def literal_tables_local(plan: str) -> str:
     return ""
 
 
+def probe_shuffle_free(plan: str, merges: int) -> str:
+    """Marker when the plan's only shuffle Exchanges are its ``merges``
+    per-query merges: the probe itself reads the pruned scan in place.
+    Formatted plans list each node twice (tree + detail); a
+    BroadcastExchange of a small query table is not a shuffle."""
+    if len(re.findall(r"\bExchange", plan)) == 2 * merges:
+        return "\n-- audit: probe-shuffle-free (only the per-query merge exchanges)\n"
+    return ""
+
+
 def main() -> None:
     from pyspark.sql import functions as F
 
@@ -86,20 +96,23 @@ def main() -> None:
         teng = TiledSpatialEngine(spark, f"{td}/idx")
         p5 = plan_of(teng.range_count([(0, -60.0, -120.0, 30.0, 45.0),
                                        (1, 5.0, -170.0, 80.0, 170.0)]))
-        # formatted plans list each node twice (tree + detail); broadcast
-        # of the tiny query list is fine — only shuffle Exchanges count.
-        # <= 2 occurrences of standalone "Exchange" == exactly the final
-        # per-query aggregation exchange
-        shuffle_ex = len(re.findall(r"\bExchange", p5))
-        if 0 < shuffle_ex <= 2:
-            p5 += "\n-- audit: probe-shuffle-free (only the final per-query aggregation exchanges)\n"
-        p5 += literal_tables_local(p5)
+        p5 += probe_shuffle_free(p5, merges=1) + literal_tables_local(p5)
         sections.append(("tiled range_count (materialized index, pruned scan)", p5, [
             "PartitionFilters",
             "MapInPandas",
             "probe-shuffle-free",
             "literal-tables-local",
         ]))
+        # every family on the tiled source stays shuffle-free: kNN's one
+        # exchange is its per-query top-k merge, distance_materialize has none
+        p5k = plan_of(teng.knn(wl.knn_queries(n=4)))
+        p5k += probe_shuffle_free(p5k, merges=1)
+        sections.append(("tiled knn (pruned scan, per-query merge)", p5k, [
+            "PartitionFilters", "MapInPandas", "probe-shuffle-free"]))
+        p5d = plan_of(teng.distance_materialize(wl.distance_queries(n=4)))
+        p5d += probe_shuffle_free(p5d, merges=0)
+        sections.append(("tiled distance_materialize (pruned scan, no exchange)", p5d, [
+            "PartitionFilters", "MapInPandas", "probe-shuffle-free"]))
 
     # production input path (north rule): pages -> points must prune the
     # scan to (url, text) — html (the fat binary column) stays unread when
