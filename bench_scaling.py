@@ -1,36 +1,37 @@
 #!/usr/bin/env python
-"""Two-parallelism scaling evidence (north rule: throughput scaling
-efficiency >= 0.8 from N to 4N executors; sandbox evidence per driver
-instruction = the identical job at two local parallelism levels, same
-input).
+"""Scaling efficiency local[1] -> local[4]: the identical engine job at two
+local parallelism levels on the same input.
+
+    python bench_scaling.py
 
 Methodology
 -----------
-* Input: the sf0.1 lineitem replicated 96x (57.6M points) into a temp
-  parquet, partition_size=8000 (the reference's tuned-knob example,
-  README.md:62-63) — sized so per-cell probe compute dominates fixed job
-  costs (at raw sf0.1 a probe job is ~70% constant overhead and no
-  parallelism level helps; scaling claims only mean something in the
-  compute-dominated regime, which is also the 100 TB regime).  This VM's
-  run-to-run wall noise is ±15-20% on sub-15s jobs; the larger input puts
-  every measured wall well past that.
-* Engine job: fixed-grid learned index; measured workloads are the
-  BASELINE metrics — the PIP spatial join (2,000 polygons), the distance
-  join (600 radius queries), and range count (1,804 rectangles).  Build,
-  assignment shuffle and model fit run before the timer (the reference
-  splits build(ms) vs ns/lookup the same way, src/main.cpp:129-130).
-* Warm-up pass first (Python worker pool spawn is lazily per-core and
-  would bill the 4N run ~4x the spawn cost), then best-of-3 per workload.
-* Pairs measured: N=4 -> 4N=16 (primary) and N=8 -> 4N=32 (secondary).
-  The box has 32 physical cores but a SINGLE JVM + driver + 32 Python
-  workers saturate the socket beyond ~16 task slots (memory bandwidth +
-  JVM Arrow feeders competing with Python compute), which a real
-  multi-executor cluster does not share — each 4N executor brings its own
-  socket/LLC/JVM.  Both pairs are reported; the stage-level task-second
-  split (journaled in BENCH/BASELINE.md) shows the probe work itself
-  divides cleanly 4x.
+* Input: the sf0.1 lineitem (``$SPARK_GRAFT_SF_DIR``) replicated
+  ``REPLICATION`` times by DuckDB into one parquet file; each replica
+  shifts ``l_orderkey``, so every row derives a distinct point.  Probe
+  compute must dominate fixed job costs for a scaling figure to mean
+  anything: at raw sf0.1 a probe job is mostly constant overhead and no
+  parallelism level helps.
+* Job: a fixed-grid learned index at ``PARTITION_SIZE`` points per cell
+  (the reference's tuned-knob example, README.md:62-63) answering a PIP
+  batch, a distance batch and a range-count batch, plus the table x table
+  joins ``distance_join_pairs`` and ``knn_join`` over the same points
+  (``points_df``).  Each job's answer is one integer: the summed
+  per-query counts, or the joined row count.  Index build, assignment
+  shuffle and model fit run before the timers (the reference splits
+  build ms from ns/lookup the same way, src/main.cpp:129-130).
+* Protocol: one fresh subprocess per level run, in the order 1, 4, 4, 1,
+  so a drifting host degrades both levels alike.  Each run is bracketed
+  by ``bench.wait_quiet`` and a closing page-touch witness.  A run makes
+  one untimed pass over the jobs (Python worker start, JIT) and one timed
+  pass.  A level's wall per job is the better of its two runs.
+* Efficiency per job and combined is ``(w1 / w4) / 4``; the JSON carries
+  the 0.8 target and whether the combined figure meets it.  Every job's
+  answer must be identical in every run, or the script raises.
+* ``kernel_lookup_bench`` adds the in-cell search at three occupancies,
+  learned spline vs ``np.searchsorted``, measured in this process.
 
-Writes BENCH/BASELINE.md and prints one JSON line.
+On a 4-vCPU host one run takes about 16 minutes.  Prints one JSON line.
 """
 
 from __future__ import annotations
@@ -39,172 +40,121 @@ import json
 import os
 import subprocess
 import sys
+import tempfile
+import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
-SCALE_INPUT = os.environ.get("SPARK_GRAFT_SCALE_INPUT", "/tmp/learnedspatial_scale_input")
-REPLICATION = int(os.environ.get("SPARK_GRAFT_SCALE_REP", "96"))
-# the reference's partition-size knob must be tuned per dataset/workload
-# (README.md:62-63, example uses 8000); at the scale-run's input size 1000
-# leaves ~30k tiny cells whose per-group overhead dominates — 8000 puts the
-# work back in the vectorized kernels, which is the regime being measured
-PARTITION_SIZE = int(os.environ.get("SPARK_GRAFT_SCALE_PS", "8000"))
-# range batch: 6000/tier -> 18,004 rectangles, the production-sized batch
-# (VERDICT r4 #1): the r4 decomposition fitted a ~1.9s fixed per-job term
-# on a 12s local[4] wall (15%) and predicted the range leg's sub-0.8
-# ratio was batch size, not code; at 10x the fitted fixed term must be
-# <5% of the local[4] wall and the ratio is a real table row, not an
-# extrapolation.  r4's 1,804-rect measurement stays in git history.
-RANGE_TIER_N = int(os.environ.get("SPARK_GRAFT_SCALE_RANGE_N", "6000"))
+sys.path.insert(0, REPO)
+
+import bench  # noqa: E402
+
+ORDER = (1, 4, 4, 1)
+TARGET = 0.8
+# 5 replicas of sf0.1 = 3.0M points: every job's local[4] wall is >= ~3 s,
+# one run takes ~16 min, and the 1M-point grid of the kernel sweep has
+# ~1.0M-row cells.  A replica's coordinates repeat every 18 replicas (the
+# derivation's modular arithmetic), so more than 18 would stack points.
+REPLICATION = 5
+# the reference's partition-size knob (README.md:62-63, example 8000):
+# cells large enough that the vectorized per-cell kernels, not per-group
+# overhead, carry the work
+PARTITION_SIZE = 8000
+N_POLYGONS = 2000
+N_CIRCLES = 600
+N_RECTS_PER_TIER = 6000
+JOIN_RADIUS_M = 2000.0
+KNN_K = 3
+KNN_LEFT_MOD = 10  # knn_join's left side: pid % KNN_LEFT_MOD == 0
+# a level run takes ~5 min at local[1] on a 4-vCPU host; a run launched
+# into the host's sick mode can be several times slower
+CHILD_TIMEOUT_S = 3600
+SCALE_INPUT = os.path.join(tempfile.gettempdir(), f"learnedspatial_scale_x{REPLICATION}")
 
 
-def prepare_input(sf_dir: str) -> None:
+def prepare_input(sf_dir: str) -> str:
+    """Write ``sf_dir``'s lineitem replicated ``REPLICATION`` times to
+    ``SCALE_INPUT`` once; every level run reads this one file."""
     import duckdb
-    os.makedirs(SCALE_INPUT, exist_ok=True)
     out = os.path.join(SCALE_INPUT, "lineitem.parquet")
-    if os.path.exists(out):
-        return
-    duckdb.sql(f"""
-      COPY (
-        SELECT l_orderkey + r.rep * 1000000 AS l_orderkey, l_partkey, l_suppkey,
-               l_linenumber, l_quantity, l_extendedprice, l_discount, l_tax,
-               l_returnflag, l_linestatus, l_shipdate
-        FROM read_parquet('{sf_dir}/lineitem.parquet')
-        CROSS JOIN (SELECT unnest(generate_series(0, {REPLICATION - 1})) AS rep) r
-      ) TO '{out}' (FORMAT parquet)
-    """)
+    if not os.path.exists(out):
+        os.makedirs(SCALE_INPUT, exist_ok=True)
+        duckdb.sql(f"""
+          COPY (
+            SELECT l_orderkey + r.rep * 1000000 AS l_orderkey, l_partkey, l_suppkey,
+                   l_linenumber, l_quantity, l_extendedprice, l_discount, l_tax,
+                   l_returnflag, l_linestatus, l_shipdate
+            FROM read_parquet('{sf_dir}/lineitem.parquet')
+            CROSS JOIN (SELECT unnest(generate_series(0, {REPLICATION - 1})) AS rep) r
+          ) TO '{out}.tmp' (FORMAT parquet)
+        """)
+        os.replace(f"{out}.tmp", out)
+    return SCALE_INPUT
 
 
-CHILD = r"""
-import json, os, sys, time
-import numpy as np
-sys.path.insert(0, {repo!r})
-from learnedspatial_spark.session import get_spark
-from learnedspatial_spark.engine import SpatialEngine
-from learnedspatial_spark.sources import workloads as wl
+def level_run(cores: int, input_dir: str) -> None:
+    """One level run (the subprocess body): build, one untimed pass, one
+    timed pass; prints {"cores", "rows", "answers", "walls"}."""
+    import numpy as np
 
-cores = int(sys.argv[1])
-spark = get_spark(f"scale{{cores}}", master=f"local[{{cores}}]", shuffle_partitions=64)
-spark.range(1000).selectExpr("sum(id)").collect()
-eng = SpatialEngine(spark, {scale_input!r}, scheme="fixed_grid",
-                    partition_size={partition_size})
-pts = eng.assigned_points().cache()
-n = pts.count()
-eng.fit_models()
+    from learnedspatial_spark.engine import SpatialEngine
+    from learnedspatial_spark.operators.distjoin import distance_join_pairs, knn_join
+    from learnedspatial_spark.session import get_spark
+    from learnedspatial_spark.sources import workloads as wl
+    from learnedspatial_spark.sources.points import points_df
 
-rng = np.random.default_rng(99)
-circles = [(i, float(rng.uniform(-80, 80)), float(rng.uniform(-180, 180)),
-            float(rng.uniform(3e5, 2e6))) for i in range(600)]
-polys = wl.polygons(n=2000)
-rects = wl.rectangles(n_per_tier={range_tier_n})
+    spark = get_spark(f"scale{cores}", master=f"local[{cores}]",
+                      shuffle_partitions=4 * max(ORDER))
+    eng = SpatialEngine(spark, input_dir, scheme="fixed_grid",
+                        partition_size=PARTITION_SIZE)
+    rows = eng.assigned_points().cache().count()
+    eng.fit_models()
+    pts = points_df(spark, input_dir)
 
-jobs = {{
-    "pip_join": lambda: eng.pip(polys).collect(),
-    "distance_join": lambda: eng.distance_count(circles).collect(),
-    "range_count": lambda: eng.range_count(rects).collect(),
-}}
-only = os.environ.get("SPARK_GRAFT_SCALE_JOBS")
-if only:
-    keep = set(only.split(","))
-    jobs = {{k: v for k, v in jobs.items() if k in keep}}
-for j in jobs.values():
-    j()  # warm python worker pool + shuffle reuse
-best = {{}}
-for _ in range(3):
-    for name, j in jobs.items():
-        t0 = time.perf_counter(); j()
-        w = time.perf_counter() - t0
-        best[name] = min(best.get(name, 1e18), w)
-best["total"] = sum(v for k, v in best.items() if k != "total")
+    rng = np.random.default_rng(99)
+    circles = [(i, float(rng.uniform(-80, 80)), float(rng.uniform(-180, 180)),
+                float(rng.uniform(3e5, 2e6))) for i in range(N_CIRCLES)]
+    polys = wl.polygons(n=N_POLYGONS)
+    rects = wl.rectangles(n_per_tier=N_RECTS_PER_TIER)
 
-# learned vs binsearch per selectivity tier at production occupancy
-# (README.md:63's 8000-point cells; the papers' regime) — measured once,
-# at the widest parallelism.  kNN is measured in the same regime so a
-# headline-suite q_knn wall (raw sf0.1, scheduling-floor-dominated) can
-# be adjudicated against the compute-dominated number.
-tiers = {{}}
-if cores == 32:
-    knnq = wl.knn_queries(n=30)
-    eng.knn(knnq).collect()  # warm this plan
-    w = 1e18
-    for _ in range(2):
-        t0 = time.perf_counter(); eng.knn(knnq).collect()
-        w = min(w, time.perf_counter() - t0)
-    tiers["knn_30q"] = w
-    tn = {range_tier_n}
-    tier_slices = {{"lo": rects[0:tn], "mid": rects[tn:2*tn], "hi": rects[2*tn:3*tn]}}
-    # the two refinements are timed INTERLEAVED (like the kernel sweep):
-    # this host's oscillating sick mode struck single sequential timings
-    # twice in round 5 (attempt-1 lo_learned 8.0s vs 3.4s quiet,
-    # attempt-2 mid_learned 14.9s vs 3.6s) — interleaving degrades both
-    # sides together instead of poisoning one
-    for tname, trs in tier_slices.items():
-        for refine in ("learned", "binsearch"):
-            eng.refine = refine
-            eng.range_count(trs).collect()  # warm this plan
-            tiers[tname + "_" + refine] = 1e18
-        for _ in range(2):
-            for refine in ("learned", "binsearch"):
-                eng.refine = refine
-                t0 = time.perf_counter(); eng.range_count(trs).collect()
-                k = tname + "_" + refine
-                tiers[k] = min(tiers[k], time.perf_counter() - t0)
-    eng.refine = "learned"
-print(json.dumps({{"cores": cores, "rows": n, "walls": best, "tiers": tiers}}))
-spark.stop()
-"""
+    def counted(df) -> int:
+        return sum(r[-1] for r in df.collect())
+
+    jobs = {
+        "pip": lambda: counted(eng.pip(polys)),
+        "distance": lambda: counted(eng.distance_count(circles)),
+        "range_count": lambda: counted(eng.range_count(rects)),
+        "distance_join_pairs": lambda: distance_join_pairs(pts, JOIN_RADIUS_M).count(),
+        "knn_join": lambda: knn_join(pts.where(f"pid % {KNN_LEFT_MOD} = 0"), pts,
+                                     KNN_K, JOIN_RADIUS_M).count(),
+    }
+    for job in jobs.values():
+        job()
+    answers, walls = {}, {}
+    for name, job in jobs.items():
+        t0 = time.perf_counter()
+        answers[name] = job()
+        walls[name] = round(time.perf_counter() - t0, 3)
+    print(json.dumps({"cores": cores, "rows": rows, "answers": answers, "walls": walls}))
+    spark.stop()
 
 
-def run(cores: int) -> dict:
-    """One parallelism level in a fresh subprocess, BRACKETED by the
-    page-touch host witness (this VM's sick mode oscillates mid-run:
-    a level measured while pagetouch < ~1 GB/s is contaminated and the
-    artifact must say so).  Waits bounded for quiet before launching;
-    with SPARK_GRAFT_SCALE_LEVEL_RETRIES > 0, a level whose CLOSING
-    witness is sick is re-measured (the opening witness cannot see a
-    mid-run strike — attempt 1 of the r5 range re-run launched quiet
-    and closed at 0.41 GB/s).  Every attempt's bracket is recorded."""
-    import time
-
-    import bench
-    retries = int(os.environ.get("SPARK_GRAFT_SCALE_LEVEL_RETRIES", "0"))
-    max_wait = float(os.environ.get("SPARK_GRAFT_BENCH_MAX_WAIT_S", "480"))
-    script = CHILD.format(repo=REPO, scale_input=SCALE_INPUT,
-                          partition_size=PARTITION_SIZE,
-                          range_tier_n=RANGE_TIER_N)
-    # a level launched into the sick mode can run 3-20x slow; the child
-    # timeout is a knob so a forced-launch run isn't killed mid-level
-    child_timeout = int(os.environ.get("SPARK_GRAFT_SCALE_CHILD_TIMEOUT_S", "1800"))
-    attempts = []
-    for attempt in range(retries + 1):
-        waited = 0.0
-        _, pt = bench.host_bandwidth_gbs()
-        if pt < 1.0:  # drive the idle-memory sick form out before waiting
-            bench.host_active_recovery()
-            _, pt = bench.host_bandwidth_gbs()
-        while pt < 1.0 and waited < max_wait:
-            time.sleep(45)
-            waited += 45
-            bench.host_active_recovery()
-            _, pt = bench.host_bandwidth_gbs()
-        out = subprocess.run([sys.executable, "-c", script, str(cores)],
-                             capture_output=True, text=True,
-                             timeout=child_timeout)
-        res = None
-        for line in out.stdout.splitlines():
-            if line.startswith("{"):
-                res = json.loads(line)
-        if res is None:
-            raise RuntimeError(f"no result from cores={cores}: {out.stderr[-2000:]}")
-        _, pt_after = bench.host_bandwidth_gbs()
-        res["witness"] = {"pagetouch_before": pt, "pagetouch_after": pt_after,
-                          "quiet_wait_s": waited}
-        attempts.append(res)
-        if pt_after >= 1.0:
-            break
-    best = attempts[-1]
-    if len(attempts) > 1:
-        best["witness"]["prior_attempts"] = [a["witness"] for a in attempts[:-1]]
-    return best
+def run_level(cores: int, input_dir: str, max_wait_s: float) -> dict:
+    """One level run in a fresh subprocess, bracketed by the quiet gate
+    and a closing page-touch witness."""
+    quiet, pt_open, waited = bench.wait_quiet(max_wait_s)
+    out = subprocess.run(
+        [sys.executable, "-c",
+         f"import bench_scaling; bench_scaling.level_run({cores}, {input_dir!r})"],
+        cwd=REPO, capture_output=True, text=True, timeout=CHILD_TIMEOUT_S)
+    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
+    if out.returncode != 0 or not lines:
+        raise RuntimeError(f"local[{cores}] run failed (rc={out.returncode}): "
+                           f"{out.stderr[-2000:]}")
+    res = json.loads(lines[-1])
+    res["witness"] = {"quiet": quiet, "pagetouch_open": pt_open,
+                      "pagetouch_close": bench.host_bandwidth_gbs()[1],
+                      "waited_s": waited}
+    return res
 
 
 #: Kernel-bench occupancy sweep: the tuned-example 8k cells, a 64k mid
@@ -225,8 +175,6 @@ def kernel_lookup_bench(input_dir: str, partition_sizes=KERNEL_OCCUPANCIES,
     comparison.  Results are asserted identical before timing; the two
     kernels are timed INTERLEAVED (alternating reps) so an oscillating
     host degrades both sides together instead of poisoning one."""
-    import time
-
     import numpy as np
 
     from learnedspatial_spark.operators import spline as spl
@@ -262,344 +210,38 @@ def kernel_lookup_bench(input_dir: str, partition_sizes=KERNEL_OCCUPANCIES,
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    prepare_input(sf_dir)
-    from_json = os.environ.get("SPARK_GRAFT_SCALE_FROM_JSON")
-    rerun_jobs = os.environ.get("SPARK_GRAFT_SCALE_RERUN_JOBS")
-    witness_note = ""
-    prior = None
-    if from_json:
-        # regenerate the report from a previously captured run — the Spark
-        # walls are 30 minutes of idle-machine time; the report shouldn't
-        # cost that to re-render (the kernel sweep is reused too when the
-        # capture carries one)
-        with open(from_json) as f:
-            prior = json.load(f)
-        res = {int(c): {"walls": w, "rows": prior["rows"],
-                        "tiers": prior.get("tiers_learned_vs_binsearch", {}),
-                        "witness": (prior.get("level_witnesses") or {}).get(str(c))}
-               for c, w in prior["walls"].items()}
-        n_rects = int(prior.get("range_n", 1804))
-        witness_note = prior.get("witness_note", "")
-    elif rerun_jobs:
-        # re-measure ONLY the named workloads (a code fix that touches one
-        # leg shouldn't cost a full 30-minute re-run of the others) and
-        # splice them into a base capture; the composed artifact names
-        # which walls/witnesses come from which run
-        base_path = os.environ["SPARK_GRAFT_SCALE_BASE_JSON"]
-        with open(base_path) as f:
-            prior = json.load(f)
-        os.environ["SPARK_GRAFT_SCALE_JOBS"] = rerun_jobs
-        jobs = rerun_jobs.split(",")
-        fresh = {c: run(c) for c in (16, 4, 32, 8)}
-        rerun_out = os.environ.get("SPARK_GRAFT_SCALE_RERUN_OUT")
-        if rerun_out:
-            with open(rerun_out, "w") as f:
-                json.dump({str(c): fresh[c] for c in fresh}, f, indent=1)
-        res = {}
-        for c in (4, 8, 16, 32):
-            walls = dict(prior["walls"][str(c)])
-            for k in jobs:
-                walls[k] = fresh[c]["walls"][k]
-            walls["total"] = sum(v for k, v in walls.items() if k != "total")
-            res[c] = {"walls": walls, "rows": fresh[c]["rows"],
-                      "tiers": fresh[c].get("tiers")
-                      or prior.get("tiers_learned_vs_binsearch", {}),
-                      "witness": fresh[c]["witness"]}
-        n_rects = RANGE_TIER_N * 3 + 4
-        base_wits = prior.get("level_witnesses") or {}
-        base_line = ", ".join(
-            f"local[{c}] {v['pagetouch_before']:.2f}/{v['pagetouch_after']:.2f}"
-            for c, v in sorted(base_wits.items(), key=lambda kv: int(kv[0])) if v)
-        witness_note = (f"  The {', '.join(jobs)} walls (and the witnesses "
-                        f"above) are a re-measurement; the other legs' walls "
-                        f"come from the base capture {os.path.basename(base_path)} "
-                        f"(its witnesses: {base_line}).")
-    else:
-        res = {c: run(c) for c in (16, 4, 32, 8)}
-        n_rects = RANGE_TIER_N * 3 + 4
-
-    def eff(lo, hi):
-        return {k: round(res[lo]["walls"][k] / res[hi]["walls"][k] / 4, 3)
-                for k in res[lo]["walls"]}
-
-    e416 = eff(4, 16)
-    e832 = eff(8, 32)
-
-    def decomp(k):
-        # two-point fit w(N) = f + c/N over the primary pair: f = the
-        # fixed per-JOB term (stage launch, driver collect), c = compute
-        # that divides by parallelism.  Used to show WHERE a sub-0.8
-        # per-workload ratio comes from when the combined number passes.
-        c = (res[4]["walls"][k] - res[16]["walls"][k]) * 16 / 3
-        f = max(res[4]["walls"][k] - c / 4, 0.0)
-        return f, c
-    rows = res[16]["rows"]
-    tiers = res[32].get("tiers", {})
-    if prior is not None and prior.get("kernel_ns_per_lookup"):
-        # reuse the captured kernel sweep: it was measured under quiet
-        # witnesses; re-measuring during a report re-render would splice
-        # possibly-contaminated numbers into an otherwise-witnessed table
-        kern = prior["kernel_ns_per_lookup"]
-    else:
-        kern = kernel_lookup_bench(SCALE_INPUT)
-    result = {
-        "metric": "scaling efficiency N -> 4N (same input, identical job)",
-        "rows": rows,
-        "range_n": n_rects,
-        "walls": {str(c): res[c]["walls"] for c in res},
-        "efficiency_4_to_16": e416,
-        "efficiency_8_to_32": e832,
-        "target": 0.8,
-        "pass_4_to_16": e416["total"] >= 0.8,
-        "tiers_learned_vs_binsearch": {k: round(v, 2) for k, v in tiers.items()},
-        "kernel_ns_per_lookup": kern,
-        # per-level page-touch witnesses (quiet >= ~1 GB/s): a level
-        # bracketed by a sick reading is contaminated evidence
-        "level_witnesses": {str(c): res[c].get("witness") for c in res},
-    }
-    if witness_note:
-        result["witness_note"] = witness_note
-    if rerun_jobs:
-        result["composed_from"] = {
-            "base_json": os.path.basename(os.environ["SPARK_GRAFT_SCALE_BASE_JSON"]),
-            "rerun_jobs": rerun_jobs.split(",")}
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    # one-off follow-up (range workload at 3x batch) — rendered from its
-    # checked-in JSON when present so report regeneration keeps it
-    range3x_note = ""
-    r3x_path = os.path.join(REPO, "BENCH", "range3x_r4.json")
-    if os.path.exists(r3x_path):
-        with open(r3x_path) as fh:
-            r3x = json.load(fh)
-        w4x, w16x = r3x["4"]["wall"], r3x["16"]["wall"]
-        fx = max(w4x - (w4x - w16x) * 16 / 3 / 4, 0.0)
-        range3x_note = f"""
-Prediction audit trail (round 4): the original 1,804-rect range leg
-measured 0.68; the decomposition predicted batch size, not code, and an
-intermediate 3x re-measurement ({r3x['4']['rects']:,} rectangles:
-local[4] {w4x:.1f}s / local[16] {w16x:.1f}s, efficiency
-{r3x['eff_4_to_16']:.2f}, fixed term ~{fx:.1f}s — BENCH/range3x_r4.json)
-moved it in the predicted direction.  The table above closes that loop:
-the range row IS the production-sized batch now, measured at all four
-levels with per-level bracketing witnesses.  The 3x run also measured the
-amortization that makes big batches cheap — 3x the queries cost only
-~1.4x the compute, because the vectorized per-cell kernels share the
-candidate-run scan across queries.
-"""
-    w = {c: res[c]["walls"] for c in res}
-    wit_parts = []
-    for c in sorted(res):
-        wv = res[c].get("witness")
-        wit_parts.append(
-            f"local[{c}] {wv['pagetouch_before']:.2f}/{wv['pagetouch_after']:.2f}"
-            if wv else f"local[{c}] n/a")
-    wit_line = ", ".join(wit_parts)
-    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
-        f.write(f"""# BENCH/BASELINE — engine measurements
-
-## Scaling efficiency (north rule: >= 0.8 from N -> 4N executors)
-
-Sandbox evidence per driver instruction: the identical engine job at two
-parallelism levels on the same input ({rows:,} points = sf0.1 lineitem
-replicated x{REPLICATION}; fixed-grid learned index; build/assignment/model
-fit excluded from the timers; warm best-of-3 per workload).
-
-| workload | local[4] | local[16] | eff 4->16 | local[8] | local[32] | eff 8->32 |
-|---|---|---|---|---|---|---|
-| PIP spatial join (2,000 polygons) | {w[4]['pip_join']:.1f}s | {w[16]['pip_join']:.1f}s | **{e416['pip_join']:.2f}** | {w[8]['pip_join']:.1f}s | {w[32]['pip_join']:.1f}s | {e832['pip_join']:.2f} |
-| distance join (600 radius queries) | {w[4]['distance_join']:.1f}s | {w[16]['distance_join']:.1f}s | **{e416['distance_join']:.2f}** | {w[8]['distance_join']:.1f}s | {w[32]['distance_join']:.1f}s | {e832['distance_join']:.2f} |
-| range count ({n_rects:,} rectangles) | {w[4]['range_count']:.1f}s | {w[16]['range_count']:.1f}s | **{e416['range_count']:.2f}** | {w[8]['range_count']:.1f}s | {w[32]['range_count']:.1f}s | {e832['range_count']:.2f} |
-| **combined** | {w[4]['total']:.1f}s | {w[16]['total']:.1f}s | **{e416['total']:.2f}** | {w[8]['total']:.1f}s | {w[32]['total']:.1f}s | {e832['total']:.2f} |
-
-**Primary pair N=4 -> 4N=16: combined efficiency {e416['total']:.2f}
-(target >= 0.8: {"PASS" if e416['total'] >= 0.8 else "FAIL"}).**
-
-Per-level page-touch witnesses (GB/s before/after each level; quiet >=
-~1 — this VM's documented oscillating sick mode contaminates any level
-bracketed by a low reading): {wit_line}.{witness_note}
-
-### Reading the per-workload spread
-
-The two-point decomposition `w(N) = f + c/N` (fixed per-JOB term `f` —
-stage launch, driver-side collect — plus compute `c` that divides by
-parallelism) fits the primary pair exactly by construction and makes the
-spread legible: f/c = {decomp('pip_join')[0]:.1f}s/{decomp('pip_join')[1]:.0f}s (PIP),
-{decomp('distance_join')[0]:.1f}s/{decomp('distance_join')[1]:.0f}s (distance),
-{decomp('range_count')[0]:.1f}s/{decomp('range_count')[1]:.0f}s (range).  The range batch is
-PRODUCTION-SIZED as of round 5 ({n_rects:,} rectangles — VERDICT r4 #1):
-its fitted fixed term is {decomp('range_count')[0]:.1f}s =
-{decomp('range_count')[0] / w[4]['range_count'] * 100:.1f}% of the local[4] wall
-(criterion: <5%), {"so the table's range ratio measures compute scaling, not per-job overhead" if decomp('range_count')[0] / w[4]['range_count'] < 0.05 else "which FAILS the <5% criterion: the range ratio above still contains a non-compute term that does not divide with parallelism, and the row cannot be read as pure compute scaling (see BENCH/ADJUDICATION_r5.md for the named cause and its fix status)"}.
-On a real cluster a true per-JOB fixed term stays per-job (it does not
-grow with executors).
-{range3x_note}
-### Why two pairs, and what they mean at cluster scale
-
-This sandbox runs ONE JVM (driver + executor threads + Arrow feeders) and
-all Python probe workers on a single 32-core socket.  Stage-level task
-metrics (Spark REST API) show the probe stage's total task-seconds divide
-cleanly by parallelism — tasks are independent; but beyond ~16 concurrent
-task slots the single-process stack saturates shared LLC/memory bandwidth
-and JVM<->Python Arrow streams, so 8->32 under-reports what 4 independent
-executors would do.  On a real cluster each 4N executor adds its own
-socket, LLC, JVM and Python pool — the regime the 4->16 pair measures.
-The ceiling is MEASURED, not inferred (round 5, no Spark involved —
-`tools_kernel_scaling.py`, raw JSON `BENCH/kernel_mechanism_r5.json`):
-a fixed DRAM-bound workload split across 4 vs 16 processes scales at
-0.625 (aggregate bandwidth 8.8 -> 21.9 GB/s, not 4x) — bracketing the
-range row — while the engine's own `range_count_cell` kernel at engine
-occupancy scales at 0.922 (its scans are cache-resident; the
-DRAM-bound bytes are the per-job streaming traffic, so the least
-compute-per-byte leg hits the socket ceiling first; details in
-BENCH/ADJUDICATION_r5.md "Mechanism probe").
-Design properties that carry over: one cell-keyed shuffle reused by every
-probe (plan-verified Sort-only reuse), broadcast specs O(#cells), no
-driver-side bottleneck, AQE skew split + optional deterministic salting
-for oversized cells.
-
-## Headline suite
-
-`python bench.py` (sf0.1, local[32]) prints the one-line JSON; the driver
-records BENCH_r*.json per round.
-""")
-        if tiers:
-            def spd(t):
-                return tiers[f"{t}_binsearch"] / tiers[f"{t}_learned"]
-            f.write(f"""
-## Learned vs binary-search refinement by selectivity tier
-
-Range count per tier ({RANGE_TIER_N:,} rectangles each) on the same {rows:,}-point
-corpus at partition_size={PARTITION_SIZE} (README.md:63's tuned example —
-~{PARTITION_SIZE}-point cells, the occupancy regime the learned-index
-papers evaluate; at raw sf0.1 both refinements sit at the scheduling
-floor and measure ~equal).  local[32], warm, best-of-2; speedup =
-binsearch wall / learned wall (>1 favors learned).
-
-| tier (selectivity) | learned | binary search | learned speedup |
-|---|---|---|---|
-| lo (~1e-7 area) | {tiers['lo_learned']:.1f}s | {tiers['lo_binsearch']:.1f}s | {spd('lo'):.2f}x |
-| mid (~1e-4) | {tiers['mid_learned']:.1f}s | {tiers['mid_binsearch']:.1f}s | {spd('mid'):.2f}x |
-| hi (~1e-2) | {tiers['hi_learned']:.1f}s | {tiers['hi_binsearch']:.1f}s | {spd('hi'):.2f}x |
-
-Both refinements produce identical results (the per-scheme range-count
-oracles); the comparison is throughput only.
-{(prior.get("tier_sweep_provenance") + chr(10)) if prior and prior.get("tier_sweep_provenance") else ""}
-### Kernel-level ns/lookup by occupancy (the reference's own metric)
-
-The reference reports build ms + ns/lookup (src/main.cpp:129-130).  The
-wall clocks above bound the refinement term by the candidate-run scan and
-per-query aggregation BOTH refinements share, so the in-cell bound search
-is also measured in isolation — driver-side NumPy on the largest REAL
-derived cell at each occupancy ({kern[0]['n_queries']:,} uniform queries,
-best of 5, kernels timed interleaved, results asserted identical).  The
-learned kernel's repair is a vectorized BISECTION of the eps-window
-(round 5 — ~5x less memory traffic than the previous (queries x 2*eps)
-gather, operators/spline.py):
-
-| cell rows | spline knots | learned ns/lookup | `np.searchsorted` ns/lookup | learned speedup |
-|---|---|---|---|---|
-""")
-            for k in kern:
-                f.write(f"| {k['cell_rows']:,} | {k['n_knots']} "
-                        f"| {k['learned_ns_per_lookup']} "
-                        f"| {k['binsearch_ns_per_lookup']} "
-                        f"| {k['binsearch_ns_per_lookup'] / k['learned_ns_per_lookup']:.2f}x |\n")
-            f.write("""
-Measured conclusion, stated plainly: the crossover is occupancy.  At
-8k-row cells `np.searchsorted` over an L2-resident array is near the
-memory floor and the learned kernel does NOT beat it — the papers'
-per-lookup gaps arise over much larger sorted arrays, where each of the
-log2(n) binary-search probes is a cache miss.  Exactly that regime is
-where the learned kernel now WINS: at ~1M-row cells the spline walk
-touches only the (cache-resident) knot table plus one ~64-entry window
-(~2 lines, hot after the first bisection round), while full binary
-search walks ~20 DRAM-missing probes.  Both kernels still sit below the
-shared per-query candidate-run scan at the tuned 8k occupancy, which is
-why the tier walls above are refinement-insensitive.  The engine keeps
-`refine="learned"` as the reference-parity default (identical results
-at every occupancy by construction); `refine="binsearch"` remains the
-measured winner at small L2-resident cells and is a one-argument switch
-— pick by the partition-size knob.
-""")
-            if "knn_30q" in tiers:
-                f.write(f"""
-### kNN at production occupancy
-
-30 kNN queries (stats-pruned candidate cells, per-cell top-k, merge) on
-the same {rows:,}-point corpus at partition_size={PARTITION_SIZE},
-local[32], warm best-of-2: **{tiers['knn_30q']:.1f}s**
-({tiers['knn_30q'] / 30 * 1000:.0f} ms/query).  The headline suite's
-`q_knn` at raw sf0.1 sits at the Spark scheduling floor; this row is the
-compute-dominated number to adjudicate regressions against.
-""")
-        dj_path = os.path.join(REPO, "BENCH", "distjoin_r5.json")
-        if os.path.exists(dj_path):
-            with open(dj_path) as djf:
-                dj = json.load(djf)
-            sl = dj["single_level"]
-            r0 = sl["runs"][0]
-            sc = dj["scaling"]["post_prefilter_runs"]
-            sc0 = dj["scaling"]["pre_prefilter"]
-            scr = dj["scaling"].get("config", {})
-            sc_cfg = (f"{scr.get('replicate', '?')} lon-rotated corpus "
-                      f"replicas = {scr.get('points', 0):,} points, "
-                      f"{scr.get('radius_m', 0) / 1000:.0f} km radius")
-            f.write(f"""
-## Table x table spatial joins (round 5, operators/distjoin.py)
-
-`python tools_distjoin_bench.py` — quiet-gated, warm best-of-2 per run,
-two independent runs (raw JSON `BENCH/distjoin_r5.json`; cross-run
-agreement on every wall is the strike discriminator).  Input: the sf0.1
-corpus ({r0['points']:,} points) as a 64-split (pid, x, y) parquet both
-engines read, radius {r0['radius_m'] / 1000:.0f} km, local[{r0['cpus']}].
-
-| job | output rows | engine best | single-node DuckDB (band join + exact haversine, same input) |
-|---|---|---|---|
-| `distance_join_pairs` (all pairs within radius) | {r0['rows']['pairs_count']:,} | {sl['best']['pairs_count_s']:.1f}s | {sl['best']['duckdb_pairs_count_s']:.1f}s |
-| `knn_join` (k={r0['k']}, left = pid%10==0) | {r0['rows']['knn_count']:,} | {sl['best']['knn_count_s']:.1f}s | — (correctness twin graded by the driver) |
-
-The engine beats the single-node baseline
-~{sl['best']['duckdb_pairs_count_s'] / sl['best']['pairs_count_s']:.1f}x on one
-machine, and its shuffle is keyed by (band, cell) blocks — the exchange
-a 1000-executor cluster partitions by, with AQE skew-split on hot
-blocks.  Pair counts are verified against the DuckDB twin inside the
-tool (assert) and by the graded `distance_join_pairs` /
-`knn_join_radius` contract entries.
-
-**Candidate traffic is gated codegen-side.**  The blocked candidates
-outnumber true pairs ~8x; shipping them all to the exact NumPy refine
-made the join the engine's lowest compute-per-byte stage (one haversine
-per 48 Arrow bytes) and saturated the socket before the cores — a
-compute-dominated 9.6M-point run measured 4->16 efficiency
-{sc0['pairs_efficiency']:.2f} with walls barely dividing.  A
-conservative JVM filter on the haversine's s^2 term (monotone,
-well-conditioned, threshold inflated 2^-20 — ~10^9x the cross-engine
-trig ulp error, so no true pair can drop; the exact decision stays on
-the DuckDB-parity NumPy kernel) now trims the Arrow stream to ~the true
-pairs.
-
-N->4N scaling (north-rule method: interleaved subprocess levels
-4,16,16,4 on the SAME materialized compute-dominated input —
-{sc_cfg}), {len(sc)} independent run(s):
-
-| run | pairs local[4] | pairs local[16] | eff 4->16 | knn eff |
-|---|---|---|---|---|
-| pre-filter off (motivating) | {sc0['pairs_wall_lo']:.1f}s | {sc0['pairs_wall_hi']:.1f}s | {sc0['pairs_efficiency']:.2f} | {sc0['knn_efficiency']:.2f} |
-""")
-            for i, s in enumerate(sc):
-                f.write(f"| run {i + 1} | {s['pairs_wall_lo']:.1f}s "
-                        f"| {s['pairs_wall_hi']:.1f}s "
-                        f"| {s['pairs_efficiency']:.2f} "
-                        f"| {s['knn_efficiency']:.2f} |\n")
-            big = dj["scaling"].get("knn_large_left_run")
-            if big:
-                f.write(f"""| kNN at 5x left (left=n/2) | — | — | — | {big['knn_efficiency']:.2f} (walls {big['knn_wall_lo']:.1f}s / {big['knn_wall_hi']:.1f}s) |
-""")
-            f.write(f"""
-{dj['scaling']['decomposition_note']}
-""")
-    print(json.dumps(result))
+    input_dir = prepare_input(os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    max_wait_s = float(os.environ.get("SPARK_GRAFT_BENCH_MAX_WAIT_S", "480"))
+    runs = [run_level(c, input_dir, max_wait_s) for c in ORDER]
+    answers = runs[0]["answers"]
+    for r in runs[1:]:
+        for job, want in answers.items():
+            if r["answers"][job] != want:
+                raise RuntimeError(f"{job}: answer {r['answers'][job]} at local[{r['cores']}] "
+                                   f"differs from {want} at local[{runs[0]['cores']}]")
+    walls = {c: {job: min(r["walls"][job] for r in runs if r["cores"] == c)
+                 for job in answers} for c in sorted(set(ORDER))}
+    lo, hi = min(ORDER), max(ORDER)
+    for w in walls.values():
+        w["total"] = round(sum(w.values()), 3)
+    eff = {job: round(walls[lo][job] / walls[hi][job] / (hi / lo), 3) for job in walls[lo]}
+    print(json.dumps({
+        "metric": f"scaling efficiency local[{lo}] -> local[{hi}] (same input, identical job)",
+        "rows": runs[0]["rows"],
+        "config": {"replication": REPLICATION, "partition_size": PARTITION_SIZE,
+                   "polygons": N_POLYGONS, "circles": N_CIRCLES,
+                   "rects_per_tier": N_RECTS_PER_TIER,
+                   "join_radius_m": JOIN_RADIUS_M, "knn_k": KNN_K,
+                   "knn_left_mod": KNN_LEFT_MOD},
+        "answers": answers,
+        "walls": {str(c): w for c, w in walls.items()},
+        "efficiency": eff,
+        "target": TARGET,
+        "pass": eff["total"] >= TARGET,
+        "runs": [{"cores": r["cores"], "walls": r["walls"], "witness": r["witness"]}
+                 for r in runs],
+        "kernel_ns_per_lookup": kernel_lookup_bench(input_dir),
+    }))
 
 
 if __name__ == "__main__":
