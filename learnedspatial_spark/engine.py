@@ -5,9 +5,8 @@ answers the query surface of ``core.SpatialQueryCore`` from it
 (SURVEY.md §3 "Spark lifecycle"):
 
 1. derive points (pure Column arithmetic, parquet scan prunes columns);
-2. assign ``cell_id`` — JVM Column expression where the scheme allows
-   (fixed grid, Morton, STR ranks) else a vectorized pandas UDF routing
-   kernel over the broadcast partitioner spec — and hash-partition the
+2. build the splitter and attach ``cell_id`` (``build_partitioner`` /
+   ``assign_cells`` in operators/partitioning.py) and hash-partition the
    relation by cell once;
 3. a query's routed cells are read from that relation behind an InSet /
    broadcast semi-join gate (``_probe_groups``), and each per-cell kernel
@@ -31,39 +30,15 @@ from pyspark.sql import functions as F
 
 from .core import CellStats, SpatialQueryCore, knots_by_cell
 from .operators import spline as spl
-from .operators.partitioning import (
-    AdaptiveGridPartitioner,
-    FixedGridPartitioner,
-    KdTreePartitioner,
-    MortonPartitioner,
-    Partitioner,
-    QuadtreePartitioner,
-    STRPartitioner,
-)
+from .operators.partitioning import assign_cells, build_partitioner
 from .session import local_frame
 from .sources import points as points_src
 
 DEFAULT_PARTITION_SIZE = 1000  # src/main.cpp:60-65
-MAX_CELLS_DEFAULT = 1_000_000
 #: Candidate-cell pruning switches from InSet literals to a broadcast
 #: left-semi join above this count (plan size stays bounded regardless
 #: of how many cells a production batch routes to).
 ISIN_MAX_CELLS = 10_000
-
-
-def effective_partition_size(n: int, partition_size: int, max_cells: int) -> int:
-    """Auto-coarsen the per-cell budget so #cells stays bounded.  The
-    cell-stats and model tables are O(#cells) driver/broadcast artifacts
-    by design (the reference's per-cell metadata, SURVEY.md §2.5); the
-    reference leaves ``partition_size`` to manual tuning (README.md:62-68).
-    At 100 TB a forgotten default (1000) would mean ~10^8 cells and
-    multi-GB driver collects — instead, a build whose n/partition_size
-    exceeds ``max_cells`` coarsens partition_size to ceil(n / max_cells).
-    Query RESULTS are partitioning-invariant; only cell granularity
-    changes."""
-    if max_cells and n > partition_size * max_cells:
-        return -(-n // max_cells)
-    return partition_size
 
 
 class SpatialEngine(SpatialQueryCore):
@@ -79,15 +54,10 @@ class SpatialEngine(SpatialQueryCore):
         refine: str = "learned",
         salt_rows: int | None = None,
         source: str = "lineitem",
-        build_sample: int | None = None,
-        exact_build_threshold: int = 2_000_000,
-        max_cells: int = MAX_CELLS_DEFAULT,
     ):
         self.spark = spark
         self.sf_dir = sf_dir
         self.scheme = scheme
-        # self.partition_size is set ONCE below, after the count is known,
-        # via effective_partition_size — no raw value is ever observable
         self.refine = refine
         # skew handling (north rule): cells with > salt_rows points are
         # sub-split by a deterministic salt; probes group on (cell_id, salt)
@@ -97,99 +67,14 @@ class SpatialEngine(SpatialQueryCore):
         # source: "lineitem" = harness derivation from sf_dir tables;
         #         "pages"   = sf_dir is a pages parquet path (url->pid hash)
         self.source = source
-        # splitter build — scale-safe by default: closed-form schemes
-        # (fixed grid / Morton / STR) need only (min, max, count), computed
-        # with ONE Spark aggregation (no point ever reaches the driver).
-        # Data-dependent schemes (adaptive grid / kd-tree / quadtree) build
-        # exact below ``exact_build_threshold`` rows (the harness scale —
-        # bit-reproducible against the oracle SQL literals) and switch to a
-        # bounded deterministic hash sample above it (the 100 TB path,
-        # SURVEY.md §7.3(d)): cell structure changes, query RESULTS do not
-        # (routing + refine stay exact for any partitioning).
-        # ``build_sample=k`` forces the sampled path at ~k rows.
-        agg = self.points().agg(F.min("x"), F.max("x"), F.count(F.lit(1))).collect()[0]
-        self._n = n = int(agg[2])
-        if n == 0:
-            raise ValueError(
-                f"empty point source: no points derived from {sf_dir!r} "
-                f"(source={source!r}) — nothing to index")
-        self._xmin, self._xmax = float(agg[0]), float(agg[1])
-        # O(#cells) guard: coarsen partition_size before any splitter build
-        self.partition_size = effective_partition_size(n, partition_size, max_cells)
-        if self.scheme in ("fixed_grid", "morton", "str"):
-            self.partitioner = self._build_closed_form(self._xmin, self._xmax, n)
-        else:
-            target = build_sample if build_sample is not None else exact_build_threshold
-            if n <= target:
-                _, x, y = self._points_np()
-                self.partitioner = self._build_partitioner(x, y)
-            else:
-                # ceil division: floor would give k=1 for n in (target,
-                # 2*target) and "sample" the whole corpus to the driver
-                k = max(1, -(-n // max(1, target)))
-                samp = (self.points()
-                        .where(F.pmod(F.xxhash64("pid"), F.lit(k)) == 0)
-                        .select("x", "y").collect())
-                xs = np.asarray([r["x"] for r in samp], dtype=np.float64)
-                ys = np.asarray([r["y"] for r in samp], dtype=np.float64)
-                # per-leaf budget shrinks by the sampling ratio so full-scale
-                # occupancy still targets partition_size (pipeline.py parity)
-                self.partitioner = self._build_partitioner(
-                    xs, ys, ps=max(1, self.partition_size // k))
+        # partition_size is the effective (auto-coarsened) budget
+        self.partitioner, self._n, self.partition_size = build_partitioner(
+            self.points(), "pid", scheme, partition_size)
         self._assigned: DataFrame | None = None
         self._stats: CellStats | None = None
         self._models: dict[int, tuple[np.ndarray, np.ndarray]] | None = None
 
     # ------------------------------------------------------------ build ---
-
-    def _build_closed_form(self, xmin: float, xmax: float, n: int) -> Partitioner:
-        """Schemes whose splitter is a pure function of (bbox, count) — no
-        point data touches the driver."""
-        ps = self.partition_size
-        if self.scheme == "fixed_grid":
-            return FixedGridPartitioner.build(xmin, xmax, n, ps)
-        if self.scheme == "morton":
-            level = max(1, min(12, int(math.ceil(math.log2(max(2.0, n / ps)) / 2))))
-            return MortonPartitioner(level=level)
-        if self.scheme == "str":
-            slice_cap, leaf = STRPartitioner.plan(n, ps)
-            return STRPartitioner(n=n, leaf=leaf, slice_cap=slice_cap, mbrs=[])
-        raise ValueError(f"not a closed-form scheme: {self.scheme}")
-
-    def _build_partitioner(self, x: np.ndarray, y: np.ndarray, ps: int | None = None) -> Partitioner:
-        ps = self.partition_size if ps is None else ps
-        if self.scheme == "adaptive_grid":
-            return AdaptiveGridPartitioner.build_from_sorted_x(np.sort(x), ps)
-        if self.scheme == "kd_tree":
-            return KdTreePartitioner.build_from_points(x, y, ps)
-        if self.scheme == "quadtree":
-            return QuadtreePartitioner.build_from_points(x, y, ps)
-        raise ValueError(f"unknown scheme {self.scheme}")
-
-    def _points_np(self):
-        if self.source == "pages":
-            # splitter build needs only (x, y); pid here is a DuckDB-local
-            # hash (the Spark-side pid is xxhash64(url) — never compared)
-            import duckdb
-
-            from .streaming.ingest import GEO_RE
-            con = duckdb.connect()
-            # SAME regex as the Spark extraction (extract.points_from_pages
-            # via GEO_RE) and TRY_CAST: a page whose text contains 'geo:'
-            # without a parsable coordinate pair passes the LIKE prefilter,
-            # regexp_extract returns '' there, and a plain cast('') raises
-            # — the Spark side drops such rows, so must this one
-            rel = con.sql(
-                "SELECT * FROM ("
-                "SELECT hash(url) AS pid, "
-                f"try_cast(regexp_extract(text, '{GEO_RE}', 1) as double) AS x, "
-                f"try_cast(regexp_extract(text, '{GEO_RE}', 2) as double) AS y "
-                f"FROM read_parquet('{self.sf_dir}/*.parquet') WHERE text LIKE '%geo:%'"
-                ") WHERE x IS NOT NULL AND y IS NOT NULL")
-            pid, x, y = rel.fetchnumpy().values()
-            con.close()
-            return pid.astype(np.int64), x.astype(np.float64), y.astype(np.float64)
-        return points_src.points_np(self.sf_dir)
 
     def points(self) -> DataFrame:
         if self.source == "pages":
@@ -200,33 +85,10 @@ class SpatialEngine(SpatialQueryCore):
         return points_src.points_df(self.spark, self.sf_dir)
 
     def assigned_points(self) -> DataFrame:
-        """points + cell_id.  JVM expression for closed-form schemes; Arrow
-        pandas UDF routing otherwise; STR is two window ranks (pure JVM)."""
+        """points + cell_id (``partitioning.assign_cells``)."""
         if self._assigned is not None:
             return self._assigned
-        df = self.points()
-        p = self.partitioner
-        if isinstance(p, (FixedGridPartitioner, MortonPartitioner)):
-            expr = p.assign_sql("x", "y") if isinstance(p, MortonPartitioner) else p.assign_sql("x")
-            out = df.withColumn("cell_id", F.expr(expr))
-        elif isinstance(p, STRPartitioner):
-            # two chained rankings with NO unpartitioned window: the global
-            # (x, y, pid) rank is bucketed two-phase (operators/ranking.py)
-            # so no single task ever sees the full row set
-            from .operators.ranking import str_cell_ids
-            cells_per_slice = math.ceil(p.slice_cap / p.leaf)
-            out = str_cell_ids(df, "pid", p.slice_cap, p.leaf, cells_per_slice)
-        else:
-            spec = p.to_spec()
-
-            def route(it):
-                part = Partitioner.from_spec(spec)
-                for pdf in it:
-                    pdf = pdf.copy()
-                    pdf["cell_id"] = part.assign_np(pdf["x"].to_numpy(), pdf["y"].to_numpy())
-                    yield pdf
-
-            out = df.mapInPandas(route, schema="pid bigint, x double, y double, cell_id bigint")
+        out = assign_cells(self.points(), self.partitioner, "pid")
         # hash-partition by cell_id once: every probe job (groupBy(cell_id)
         # .applyInPandas) reuses this partitioning with a sort only — no
         # per-query re-shuffle (verified in the physical plan); this is also

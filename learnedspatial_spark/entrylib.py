@@ -1052,11 +1052,7 @@ def _tile_assign_sql(scheme: str) -> str:
             f"  row_number() OVER (PARTITION BY slice_id ORDER BY y, x, pid) AS rank_y FROM s) "
             f"SELECT pid, slice_id * {cps} + (rank_y - 1) // {p.leaf} AS cell_id FROM w"
         )
-    if scheme in ("fixed_grid", "adaptive_grid"):
-        expr = eng_part.assign_sql("x")
-    else:
-        expr = eng_part.assign_sql("x", "y")
-    return f"WITH {POINTS_CTE} SELECT pid, {expr} AS cell_id FROM points"
+    return f"WITH {POINTS_CTE} SELECT pid, {eng_part.assign_sql('x', 'y')} AS cell_id FROM points"
 
 
 _PART_CACHE: dict[str, object] = {}

@@ -9,18 +9,23 @@ keeps overhead amortized).  The invariant: output text is byte-identical
 to the oracle extractor ``datagen.extract_text_bytes`` per url (tier-4
 test, SURVEY.md §5).
 
-Coordinate parse is Column-only (regexp_extract + cast) and shared with
-the streaming path (streaming/ingest.py) so batch and stream agree.
+The coordinate parse ``points_from_pages`` is Column-only (regexp_extract
++ cast); the streaming path (streaming/ingest.py) calls it too, so batch
+and stream agree.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .datagen import extract_text_bytes
-from .streaming.ingest import GEO_RE
+
+# geo:{lat},{lon} extraction — the pattern datagen.HTML_TEMPLATE embeds.
+# Coordinates are Python float reprs, so the exponent may follow the
+# integer part directly (``9e-06``), not only a fraction.
+_NUM_RE = r"-?[0-9]+(?:\.[0-9]*)?(?:[eE][+-]?[0-9]+)?"
+GEO_RE = rf"geo:({_NUM_RE}),({_NUM_RE})"
 
 
 def with_extracted_text(pages: DataFrame) -> DataFrame:
@@ -38,18 +43,18 @@ def with_extracted_text(pages: DataFrame) -> DataFrame:
     return pages.mapInPandas(fn, schema=schema)[cols]
 
 
-def points_from_pages(pages: DataFrame) -> DataFrame:
-    """pages -> (url, x, y): coordinate parse from extracted text.  Rows
-    without a geo tag drop out (a 100 TB crawl is mostly untagged — the
-    filter prunes early, before any shuffle)."""
+def points_from_pages(pages: DataFrame, *carry: str) -> DataFrame:
+    """pages (batch or stream) -> (url, *carry, x, y): coordinate parse
+    from extracted text.  Rows without a geo tag drop out (a 100 TB crawl
+    is mostly untagged — the filter prunes early, before any shuffle)."""
     return (
         pages.select(
-            "url",
+            "url", *carry,
             F.regexp_extract("text", GEO_RE, 1).alias("lat_s"),
             F.regexp_extract("text", GEO_RE, 2).alias("lon_s"),
         )
         .where((F.col("lat_s") != "") & (F.col("lon_s") != ""))
-        .select("url",
+        .select("url", *carry,
                 F.col("lat_s").cast("double").alias("x"),
                 F.col("lon_s").cast("double").alias("y"))
     )

@@ -29,6 +29,10 @@ Schemes:
   morton         H3/S2-style hierarchical quadkey (bit-interleaved lat/lon
                  grid at a fixed level) — new surface required by the north
                  rule; parent cell = child >> 2
+
+``build_partitioner`` and ``assign_cells`` are the one place a splitter is
+built from a point DataFrame and ``cell_id`` attached to it: the
+in-session engine, the tiled-index build and the stream all call them.
 """
 
 from __future__ import annotations
@@ -38,8 +42,11 @@ import math
 from dataclasses import dataclass, field
 
 import numpy as np
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from ..sqlcompat import flit
+from .ranking import str_cell_ids
 
 
 # ------------------------------------------------------------------ base ---
@@ -105,7 +112,7 @@ class FixedGridPartitioner(Partitioner):
         c = np.floor((x - self.xmin) / self.step).astype(np.int64)
         return np.clip(c, 0, self.n_cells - 1)
 
-    def assign_sql(self, x_expr: str) -> str:
+    def assign_sql(self, x_expr: str, y_expr: str | None = None) -> str:
         """The identical formula as SQL (used both as the Spark expression
         and the DuckDB oracle so tile assignment compares bit-exactly).
         The step==0 degenerate case is made explicit: 0/0 would be NaN,
@@ -181,7 +188,7 @@ class AdaptiveGridPartitioner(Partitioner):
     def assign_np(self, x, y=None):
         return np.searchsorted(np.asarray(self.separators), np.asarray(x, dtype=np.float64), side="right").astype(np.int64)
 
-    def assign_sql(self, x_expr: str) -> str:
+    def assign_sql(self, x_expr: str, y_expr: str | None = None) -> str:
         if not self.separators:
             return "cast(0 as bigint)"
         # balanced 8-ary grouping: a flat left-deep `a + b + c + ...` chain
@@ -545,3 +552,90 @@ class MortonPartitioner(Partitioner):
     @staticmethod
     def _from_spec(spec):
         return MortonPartitioner(level=spec["level"])
+
+
+# -------------------------------------------------------- build + assign ---
+
+#: Above this many points the tree schemes build their splitter from a
+#: deterministic hash sample of about this many rows (SURVEY.md §7.3(d));
+#: at or below it the build is exact, which the oracle twins rely on.
+BUILD_SAMPLE_ROWS = 2_000_000
+#: O(#cells) guard of every build (``effective_partition_size``).
+MAX_CELLS = 1_000_000
+
+
+def effective_partition_size(n: int, partition_size: int, max_cells: int) -> int:
+    """Auto-coarsen the per-cell budget so #cells stays bounded.  The
+    cell-stats and model tables are O(#cells) driver/broadcast artifacts
+    by design (the reference's per-cell metadata, SURVEY.md §2.5); the
+    reference leaves ``partition_size`` to manual tuning (README.md:62-68).
+    At 100 TB a forgotten default (1000) would mean ~10^8 cells and
+    multi-GB driver collects — instead, a build whose n/partition_size
+    exceeds ``max_cells`` coarsens partition_size to ceil(n / max_cells).
+    Query RESULTS are partitioning-invariant; only cell granularity
+    changes."""
+    if max_cells and n > partition_size * max_cells:
+        return -(-n // max_cells)
+    return partition_size
+
+
+def build_partitioner(points: DataFrame, id_col: str, scheme: str,
+                      partition_size: int) -> tuple[Partitioner, int, int]:
+    """The ``scheme`` splitter over ``points`` (columns x, y, ``id_col``)
+    -> (partitioner, #points, effective partition size).
+
+    One (min x, max x, count) aggregation; fixed grid, Morton and STR are
+    closed forms of it, so no point reaches the driver.  Adaptive grid,
+    kd-tree and quadtree build from the rows with
+    ``pmod(xxhash64(id_col), k) == 0``, ``k = ceil(n / BUILD_SAMPLE_ROWS)``,
+    and a per-leaf budget shrunk by k so full-scale occupancy still
+    targets the partition size; k = 1 is the exact build.  A sample
+    changes cell boundaries, never query results (routing and refine are
+    exact for any partitioning)."""
+    xmin, xmax, n = points.agg(F.min("x"), F.max("x"), F.count(F.lit(1))).collect()[0]
+    if n == 0:
+        raise ValueError("empty point source: the input derived zero (x, y) rows "
+                         "— nothing to index")
+    ps = effective_partition_size(n, partition_size, MAX_CELLS)
+    if scheme == "fixed_grid":
+        return FixedGridPartitioner.build(xmin, xmax, n, ps), n, ps
+    if scheme == "morton":
+        level = max(1, min(12, math.ceil(math.log2(max(2.0, n / ps)) / 2)))
+        return MortonPartitioner(level=level), n, ps
+    if scheme == "str":
+        slice_cap, leaf = STRPartitioner.plan(n, ps)
+        return STRPartitioner(n=n, leaf=leaf, slice_cap=slice_cap, mbrs=[]), n, ps
+    if scheme not in ("adaptive_grid", "kd_tree", "quadtree"):
+        raise ValueError(f"unknown scheme {scheme}")
+    k = -(-n // BUILD_SAMPLE_ROWS)
+    samp = points.where(F.pmod(F.xxhash64(id_col), F.lit(k)) == 0).select("x", "y").toArrow()
+    x, y = samp.column("x").to_numpy(), samp.column("y").to_numpy()
+    leaf = max(1, ps // k)
+    if scheme == "adaptive_grid":
+        return AdaptiveGridPartitioner.build_from_sorted_x(np.sort(x), leaf), n, ps
+    cls = KdTreePartitioner if scheme == "kd_tree" else QuadtreePartitioner
+    return cls.build_from_points(x, y, leaf), n, ps
+
+
+def assign_cells(points: DataFrame, partitioner: Partitioner, id_col: str) -> DataFrame:
+    """``points`` + ``cell_id``, batch or stream.  Fixed grid and Morton
+    are one JVM Column expression; STR is two chained rankings with no
+    unpartitioned window (operators/ranking.py; batch only); every other
+    scheme runs its ``assign_np`` kernel in one ``mapInPandas`` whose
+    task closure carries the O(#cells) spec."""
+    p = partitioner
+    if isinstance(p, (FixedGridPartitioner, MortonPartitioner)):
+        return points.withColumn("cell_id", F.expr(p.assign_sql("x", "y")))
+    if isinstance(p, STRPartitioner):
+        return str_cell_ids(points, id_col, p.slice_cap, p.leaf, math.ceil(p.slice_cap / p.leaf))
+    spec = p.to_spec()
+    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
+                       for f in points.schema.fields) + ", cell_id bigint"
+
+    def route(it):
+        part = Partitioner.from_spec(spec)
+        for pdf in it:
+            pdf["cell_id"] = part.assign_np(pdf["x"].to_numpy(), pdf["y"].to_numpy())
+            yield pdf
+
+    return points.mapInPandas(route, schema=schema)

@@ -16,27 +16,21 @@ Run via ``spark-submit --py-files learnedspatial_spark.zip run_pipeline.py``
 
 from __future__ import annotations
 
-import math
 import os
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import extract
 from .core import id_field
 from .operators import spline as spl
-from .operators.partitioning import (
-    AdaptiveGridPartitioner,
-    FixedGridPartitioner,
-    KdTreePartitioner,
-    MortonPartitioner,
-    Partitioner,
-    QuadtreePartitioner,
-)
+from .operators.partitioning import assign_cells, build_partitioner
 from .ops import storage
 from .ops.checkpoint import CheckpointManifest, run_resumable_cells
 from .ops.lineage import RunLog, cell_metrics
+
+#: Cells per model-fit job, the resume unit of phase 3.
+FIT_BATCH_CELLS = 256
 
 
 def build_tiled_index(
@@ -45,10 +39,7 @@ def build_tiled_index(
     out_root: str,
     scheme: str = "fixed_grid",
     partition_size: int = 1000,
-    fit_batch_cells: int = 256,
-    build_sample_rows: int = 250_000,
     points_df: DataFrame | None = None,
-    max_cells: int = 1_000_000,
 ) -> dict:
     """Materialize the tiled point table + model table from a pages table
     (or any pre-derived point DataFrame with x/y + an id column via
@@ -63,73 +54,8 @@ def build_tiled_index(
     # for derived point tables), the same rule the tiled engine reads
     id_col = id_field(points.schema).name
 
-    # partitioner from one stats pass (closed-form schemes need only bbox +
-    # count — no driver collect of data)
-    agg = points.agg(F.min("x"), F.max("x"), F.count(F.lit(1))).collect()[0]
-    n = int(agg[2])
-    if n == 0:
-        raise ValueError("empty point source: the pages/points input derived "
-                         "zero (x, y) rows — nothing to index")
-    xmin, xmax = float(agg[0]), float(agg[1])
-    # O(#cells) guard (engine.effective_partition_size): the model/stats
-    # tables and the checkpoint manifest are O(#cells) — coarsen rather
-    # than build 10^8 cells at 100 TB (recorded in lineage below)
-    from .engine import effective_partition_size
-    partition_size = effective_partition_size(n, partition_size, max_cells)
-    if scheme == "fixed_grid":
-        part: Partitioner = FixedGridPartitioner.build(xmin, xmax, n, partition_size)
-        assigned = points.withColumn("cell_id", F.expr(part.assign_sql("x")))
-    elif scheme == "morton":
-        level = max(1, min(12, int(math.ceil(math.log2(max(2.0, n / partition_size)) / 2))))
-        part = MortonPartitioner(level=level)
-        assigned = points.withColumn("cell_id", F.expr(part.assign_sql("x", "y")))
-    elif scheme == "str":
-        # Sort-Tile-Recursive as two chained rankings (pure JVM), paid ONCE
-        # at build; probes never re-rank (they read cell_id).  The global
-        # rank uses the bucketed two-phase plan (operators/ranking.py) so
-        # there is no single-task sort even at full corpus scale.
-        from .operators.partitioning import STRPartitioner
-        from .operators.ranking import str_cell_ids
-        slice_cap, leaf = STRPartitioner.plan(n, partition_size)
-        part = STRPartitioner(n=n, leaf=leaf, slice_cap=slice_cap, mbrs=[])
-        cells_per_slice = math.ceil(slice_cap / leaf)
-        assigned = str_cell_ids(points, id_col, slice_cap, leaf, cells_per_slice)
-    elif scheme in ("adaptive_grid", "kd_tree", "quadtree"):
-        # tree/equi-depth schemes at production scale: splitter from a
-        # BOUNDED deterministic sample (SURVEY.md §7.3(d)) — a hash-mod
-        # filter keeps the collect O(build_sample_rows) regardless of
-        # corpus size; per-leaf budget shrinks by the sampling ratio so the
-        # full-scale cell occupancy still targets partition_size.  Cell
-        # boundaries differ from an exact build; query RESULTS never do
-        # (routing + refine stay exact for any partitioning).
-        # ceil division (engine.py twin): floor would give k=1 for n in
-        # (budget, 2*budget) and "sample" the whole corpus to the driver
-        k = max(1, -(-n // max(1, build_sample_rows)))
-        samp = (points.where(F.pmod(F.xxhash64(id_col), F.lit(k)) == 0)
-                .select("x", "y").collect())
-        xs = np.asarray([r["x"] for r in samp])
-        ys = np.asarray([r["y"] for r in samp])
-        leaf = max(1, partition_size // k)
-        if scheme == "adaptive_grid":
-            part = AdaptiveGridPartitioner.build_from_sorted_x(np.sort(xs), leaf)
-        elif scheme == "kd_tree":
-            part = KdTreePartitioner.build_from_points(xs, ys, leaf)
-        else:
-            part = QuadtreePartitioner.build_from_points(xs, ys, leaf)
-        spec = part.to_spec()
-        out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                               for f in points.schema.fields) + ", cell_id bigint"
-
-        def route(it):
-            p = Partitioner.from_spec(spec)
-            for pdf in it:
-                pdf = pdf.copy()
-                pdf["cell_id"] = p.assign_np(pdf["x"].to_numpy(), pdf["y"].to_numpy())
-                yield pdf
-
-        assigned = points.mapInPandas(route, schema=out_schema)
-    else:
-        raise ValueError(f"unknown scheme {scheme}")
+    part, n, partition_size = build_partitioner(points, id_col, scheme, partition_size)
+    assigned = assign_cells(points, part, id_col)
 
     # phase 2: tiled table, partitioned by cell_id (idempotent overwrite).
     # Its own spec-keyed manifest makes the WRITE a resume unit too: a
@@ -168,7 +94,7 @@ def build_tiled_index(
         storage.write_table(batch_df, model_path,
                             mode="overwrite" if not manifest.done_cells else "append")
 
-    fitted = run_resumable_cells(manifest, cells, fit_batch, batch_size=fit_batch_cells)
+    fitted = run_resumable_cells(manifest, cells, fit_batch, batch_size=FIT_BATCH_CELLS)
 
     # phase 4: stats + lineage
     stats_path = os.path.join(out_root, "cell_stats")

@@ -26,10 +26,14 @@ def get_spark(
     cell-granular shuffles and splits skewed cells in the PIP candidate
     join (the reference's equi-width grids are count-skewed by
     construction, cf. include/partitioning_techniques/FixedGrid.hpp:11-29).
+    Master and shuffle partitions default to the host's CPU count;
+    ``SPARK_GRAFT_MASTER`` / ``SPARK_GRAFT_CPUS`` / ``SPARK_GRAFT_SHUFFLE``
+    override them for a deployment.
     """
-    master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
+    master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", os.cpu_count()))
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)

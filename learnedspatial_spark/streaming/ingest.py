@@ -6,9 +6,10 @@ files (or Kafka), the engine extracts coordinates, assigns tiles with the
 SAME partitioner spec used by the batch index (broadcast, lineage-hashed),
 and maintains watermarked per-tile/window counts for freshness monitoring.
 
-The streaming path shares the batch path's extraction SQL and partitioner
-specs, so a row processed by either path lands in the same cell (tested in
-tests/test_pages.py).
+The streaming path shares the batch path's extraction
+(``extract.points_from_pages``) and cell assignment
+(``partitioning.assign_cells``), so a row processed by either path lands
+in the same cell (tested in tests/test_pages.py).
 """
 
 from __future__ import annotations
@@ -16,61 +17,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.partitioning import (
-    FixedGridPartitioner,
-    MortonPartitioner,
-    Partitioner,
-)
+from ..extract import points_from_pages
 from ..session import local_frame
 
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
-
-# geo:{lat},{lon} extraction — same pattern the batch extractor embeds
-# (datagen.HTML_TEMPLATE); regexp shared between batch and stream and the
-# DuckDB derivation.  Coordinates are Python float reprs, so the exponent
-# may follow the integer part directly (``9e-06``), not only a fraction.
-_NUM_RE = r"-?[0-9]+(?:\.[0-9]*)?(?:[eE][+-]?[0-9]+)?"
-GEO_RE = rf"geo:({_NUM_RE}),({_NUM_RE})"
 
 
 def extract_points_stream(pages: DataFrame) -> DataFrame:
     """pages (batch OR stream) -> (url, warc_ts, x, y); rows without a geo
     tag are dropped.  Pure Column expressions — no UDF in the stream."""
-    return (
-        pages.select(
-            "url", "warc_ts",
-            F.regexp_extract("text", GEO_RE, 1).alias("lat_s"),
-            F.regexp_extract("text", GEO_RE, 2).alias("lon_s"),
-        )
-        .where((F.col("lat_s") != "") & (F.col("lon_s") != ""))
-        .select("url", "warc_ts",
-                F.col("lat_s").cast("double").alias("x"),
-                F.col("lon_s").cast("double").alias("y"))
-    )
-
-
-def assign_tiles_stream(points: DataFrame, partitioner: Partitioner) -> DataFrame:
-    """Attach cell_id with the broadcast partitioner spec — same spec, same
-    cell, batch or stream.  Closed-form schemes (fixed grid, Morton) stay
-    Column-only; tree/equi-depth schemes route through the identical
-    vectorized kernel the batch engine uses, via mapInPandas (supported on
-    streaming DataFrames; the spec rides the task closure, O(#cells))."""
-    if isinstance(partitioner, FixedGridPartitioner):
-        return points.withColumn("cell_id", F.expr(partitioner.assign_sql("x")))
-    if isinstance(partitioner, MortonPartitioner):
-        return points.withColumn("cell_id", F.expr(partitioner.assign_sql("x", "y")))
-    spec = partitioner.to_spec()
-    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                           for f in points.schema.fields) + ", cell_id bigint"
-
-    def route(it):
-        part = Partitioner.from_spec(spec)
-        for pdf in it:
-            pdf = pdf.copy()
-            pdf["cell_id"] = part.assign_np(pdf["x"].to_numpy(), pdf["y"].to_numpy())
-            yield pdf
-
-    return points.mapInPandas(route, schema=out_schema)
+    return points_from_pages(pages, "warc_ts")
 
 
 def windowed_tile_counts(points_with_cells: DataFrame, window: str = "10 minutes",

@@ -71,16 +71,30 @@ def _scale(monkeypatch, walls_by_run, answers_by_run):
 def test_scaling_efficiency_and_pass_follow_the_walls(monkeypatch):
     assert bench_scaling.ORDER == (1, 4, 4, 1)
     answers = {"pip": 7, "knn_join": 3}
-    # per level the better run counts: local[1] 40/20, local[4] 10/8
-    walls = [{"pip": 40.0, "knn_join": 20.0}, {"pip": 12.0, "knn_join": 8.0},
-             {"pip": 10.0, "knn_join": 9.0}, {"pip": 44.0, "knn_join": 21.0}]
+    # per level the better run counts: local[1] 40/20, local[4] 10/8;
+    # run totals 60, 18.5, 18.5, 65 put every pairing above 0.8
+    walls = [{"pip": 40.0, "knn_join": 20.0}, {"pip": 10.5, "knn_join": 8.0},
+             {"pip": 10.0, "knn_join": 8.5}, {"pip": 44.0, "knn_join": 21.0}]
     out = _scale(monkeypatch, walls, [answers] * 4)
     assert out["walls"]["1"] == {"pip": 40.0, "knn_join": 20.0, "total": 60.0}
     assert out["walls"]["4"] == {"pip": 10.0, "knn_join": 8.0, "total": 18.0}
     assert out["efficiency"] == {"pip": 1.0, "knn_join": 0.625,
                                  "total": round(60.0 / 18.0 / 4, 3)}
+    assert out["pairings"] == [
+        {"runs": [i, j], "efficiency": round(t1 / 18.5 / 4, 3)}
+        for i, t1 in ((0, 60.0), (3, 65.0)) for j in (1, 2)]
     assert out["pass"] is True and out["answers"] == answers
     assert [r["cores"] for r in out["runs"]] == [1, 4, 4, 1]
+
+    # pairings straddling 0.8 (0.75-0.86 for run totals 60, 20, 19, 65):
+    # the verdict is unresolved even though the best-of walls give 0.833
+    straddle = [{"pip": 40.0, "knn_join": 20.0}, {"pip": 12.0, "knn_join": 8.0},
+                {"pip": 10.0, "knn_join": 9.0}, {"pip": 44.0, "knn_join": 21.0}]
+    out = _scale(monkeypatch, straddle, [answers] * 4)
+    assert out["efficiency"]["total"] == round(60.0 / 18.0 / 4, 3) > 0.8
+    effs = sorted(p["efficiency"] for p in out["pairings"])
+    assert effs[0] < 0.8 <= effs[-1]
+    assert out["pass"] is None
 
     # slower local[4] walls: the same script must report a failure
     slow = [dict(w) for w in walls]

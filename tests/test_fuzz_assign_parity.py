@@ -52,10 +52,9 @@ def with_probes(x, y, bx, by):
     return np.concatenate(xs), np.concatenate(ys)
 
 
-def check(part, x, y, one_dim=False):
-    expr = part.assign_sql("x") if one_dim else part.assign_sql("x", "y")
+def check(part, x, y):
     want = part.assign_np(x, y)
-    got = duck_eval(expr, x, y)
+    got = duck_eval(part.assign_sql("x", "y"), x, y)
     np.testing.assert_array_equal(got, want)
 
 
@@ -67,7 +66,7 @@ def test_fixed_grid_sql_np_parity(tuples, psize):
     p = P.FixedGridPartitioner.build(float(x.min()), float(x.max()),
                                      x.shape[0], partition_size=psize)
     edges = [p.xmin + k * p.step for k in range(p.n_cells + 1)][:64]
-    check(p, *with_probes(x, y, edges, []), one_dim=True)
+    check(p, *with_probes(x, y, edges, []))
 
 
 @given(pts, sizes)
@@ -77,7 +76,7 @@ def test_adaptive_grid_sql_np_parity(tuples, psize):
     y = np.asarray([t[1] for t in tuples])
     p = P.AdaptiveGridPartitioner.build_from_sorted_x(np.sort(x),
                                                       partition_size=psize)
-    check(p, *with_probes(x, y, p.separators, []), one_dim=True)
+    check(p, *with_probes(x, y, p.separators, []))
 
 
 @given(pts, sizes)

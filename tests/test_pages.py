@@ -5,6 +5,7 @@ exact coordinate round-trip, batch/stream extraction equivalence."""
 import numpy as np
 
 from learnedspatial_spark import datagen
+from learnedspatial_spark.operators.partitioning import assign_cells
 from learnedspatial_spark.streaming import ingest
 
 
@@ -49,7 +50,7 @@ def test_streaming_windowed_counts(spark, tmp_path):
     pts = ingest.extract_points_stream(stream)
     from learnedspatial_spark.operators.partitioning import FixedGridPartitioner
     part = FixedGridPartitioner(xmin=-90.0, xmax=90.0, n_cells=8)
-    agg = ingest.windowed_tile_counts(ingest.assign_tiles_stream(pts, part), "1 minute", "5 minutes")
+    agg = ingest.windowed_tile_counts(assign_cells(pts, part, "url"), "1 minute", "5 minutes")
     # complete mode: append would hold back windows the watermark hasn't
     # passed at stream end (late-drop semantics still configured)
     q = (agg.writeStream.format("memory").queryName("tile_counts")
@@ -58,8 +59,8 @@ def test_streaming_windowed_counts(spark, tmp_path):
     got = {(r["win_start"], r["cell_id"]): r["cnt"]
            for r in spark.sql("select * from tile_counts").collect()}
     # batch equivalence
-    batch = ingest.assign_tiles_stream(
-        ingest.extract_points_stream(spark.read.parquet(src)), part)
+    batch = assign_cells(
+        ingest.extract_points_stream(spark.read.parquet(src)), part, "url")
     from pyspark.sql import functions as F
     want = {(r["win_start"], r["cell_id"]): r["cnt"] for r in (
         batch.groupBy(F.window("warc_ts", "1 minute").alias("win"), "cell_id")
@@ -119,7 +120,7 @@ def test_streaming_tree_scheme_tile_parity(spark, tmp_path):
     part = QuadtreePartitioner.build_from_points(x, y, partition_size=64)
 
     stream = ingest.read_pages_stream(spark, src)
-    assigned = ingest.assign_tiles_stream(ingest.extract_points_stream(stream), part)
+    assigned = assign_cells(ingest.extract_points_stream(stream), part, "url")
     q = (assigned.writeStream.format("memory").queryName("qt_assign")
          .outputMode("append").trigger(availableNow=True).start())
     q.awaitTermination(120)
@@ -148,15 +149,15 @@ def test_stateful_rolling_tile_counts(spark, tmp_path):
     datagen.pages_df(spark, 300, partitions=3).write.parquet(src)
     part = FixedGridPartitioner(xmin=-90.0, xmax=90.0, n_cells=6)
     stream = ingest.read_pages_stream(spark, src, max_files=1)  # multi-batch
-    assigned = ingest.assign_tiles_stream(ingest.extract_points_stream(stream), part)
+    assigned = assign_cells(ingest.extract_points_stream(stream), part, "url")
     rolled = stateful.rolling_tile_counts(assigned)
     q = (rolled.writeStream.format("memory").queryName("rolling_counts")
          .outputMode("append").trigger(availableNow=True).start())
     q.awaitTermination(120)
     rows = spark.sql("select * from rolling_counts").collect()
     # final totals == batch counts
-    batch_assigned = ingest.assign_tiles_stream(
-        ingest.extract_points_stream(spark.read.parquet(src)), part)
+    batch_assigned = assign_cells(
+        ingest.extract_points_stream(spark.read.parquet(src)), part, "url")
     want = {r["cell_id"]: r["count"] for r in batch_assigned.groupBy("cell_id").count().collect()}
     got_final = {}
     for r in rows:

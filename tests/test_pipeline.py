@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from learnedspatial_spark import datagen, pipeline
+from learnedspatial_spark.operators import partitioning
 from learnedspatial_spark.operators import spline as spl
 
 
@@ -58,7 +59,7 @@ def test_build_tiled_index_and_resume(spark, tmp_path):
     assert spark.read.parquet(res3["model_path"]).count() == res3["cells"]
 
 
-def test_build_tiled_index_tree_scheme_sampled(spark, tmp_path):
+def test_build_tiled_index_tree_scheme_sampled(spark, tmp_path, monkeypatch):
     """Tree-scheme materialization via the bounded sampled splitter build:
     the tiled table covers every row exactly once, the per-cell (y,x) order
     holds, and a full-scan range query over the tiled table matches the
@@ -67,10 +68,10 @@ def test_build_tiled_index_tree_scheme_sampled(spark, tmp_path):
     out_root = str(tmp_path / "index_t")
     datagen.pages_df(spark, 2500, partitions=4).write.parquet(pages_path)
 
-    # build_sample_rows < n forces the sampled path (k > 1)
+    # BUILD_SAMPLE_ROWS < n forces the sampled path (k > 1)
+    monkeypatch.setattr(partitioning, "BUILD_SAMPLE_ROWS", 500)
     res = pipeline.build_tiled_index(spark, pages_path, out_root,
-                                     scheme="quadtree", partition_size=200,
-                                     build_sample_rows=500)
+                                     scheme="quadtree", partition_size=200)
     assert res["rows"] == 2500
     assert res["cells"] > 3
     tiled = spark.read.parquet(res["tiled_path"])
@@ -83,8 +84,7 @@ def test_build_tiled_index_tree_scheme_sampled(spark, tmp_path):
     assert tiled.where(pred).count() == flat.where(pred).count()
     # resume is a no-op
     res2 = pipeline.build_tiled_index(spark, pages_path, out_root,
-                                      scheme="quadtree", partition_size=200,
-                                      build_sample_rows=500)
+                                      scheme="quadtree", partition_size=200)
     assert res2["fitted"] == 0
 
 
@@ -225,8 +225,58 @@ def test_tiled_engine_full_query_surface(spark, tmp_path):
     assert a == b
 
 
+def _writer_cells(spark, sf_dir, root, scheme):
+    """(engine, engine spec, engine cells, tiled spec, tiled cells) for one
+    scheme: the in-session engine and the tiled build over the same
+    derived points, cells as {pid: cell_id}."""
+    from learnedspatial_spark.engine import SpatialEngine
+    from learnedspatial_spark.ops.checkpoint import _spec_core
+    from learnedspatial_spark.sources.points import points_df
+    from learnedspatial_spark.tiled import TiledSpatialEngine
+    eng = SpatialEngine(spark, sf_dir, scheme=scheme)
+    pipeline.build_tiled_index(spark, None, root, scheme=scheme,
+                               points_df=points_df(spark, sf_dir))
+    tiled = spark.read.parquet(os.path.join(root, "points_tiled"))
+
+    def cells(df):
+        return {r["pid"]: r["cell_id"] for r in df.select("pid", "cell_id").collect()}
+    return (eng, _spec_core(eng.partitioner.to_spec()), cells(eng.tile_assignment()),
+            _spec_core(TiledSpatialEngine(spark, root).partitioner.to_spec()), cells(tiled))
+
+
+@pytest.mark.parametrize("scheme", ["fixed_grid", "adaptive_grid", "kd_tree",
+                                    "quadtree", "str", "morton"])
+def test_writers_build_identical_cells(spark, sf_dir, tmp_path, scheme):
+    """The in-session engine and the tiled build share one splitter build
+    and one cell assignment: equal specs and the same cell per pid.  For
+    the schemes with a routing kernel, the NumPy ``assign_np`` over the
+    driver-side corpus agrees too."""
+    from learnedspatial_spark.sources.points import points_np
+    eng, spec_e, cells_e, spec_t, cells_t = _writer_cells(
+        spark, sf_dir, str(tmp_path / "idx"), scheme)
+    assert spec_e == spec_t
+    assert cells_e == cells_t
+    pid, x, y = points_np(sf_dir)
+    assert len(cells_e) == pid.shape[0]
+    if scheme != "str":
+        assert cells_e == dict(zip(pid.tolist(), eng.partitioner.assign_np(x, y).tolist()))
+
+
+def test_writers_build_identical_sampled_cells(spark, sf_dir, tmp_path, monkeypatch):
+    """Below n, BUILD_SAMPLE_ROWS switches both writers to the same hash
+    sample: the spec differs from the exact build, and the two writers
+    still agree on spec and cells."""
+    exact = _writer_cells(spark, sf_dir, str(tmp_path / "exact"), "kd_tree")[1]
+    monkeypatch.setattr(partitioning, "BUILD_SAMPLE_ROWS", 2000)
+    _, spec_e, cells_e, spec_t, cells_t = _writer_cells(
+        spark, sf_dir, str(tmp_path / "sampled"), "kd_tree")
+    assert spec_e != exact
+    assert spec_e == spec_t
+    assert cells_e == cells_t
+
+
 def test_effective_partition_size_coarsens():
-    from learnedspatial_spark.engine import effective_partition_size
+    from learnedspatial_spark.operators.partitioning import effective_partition_size
     # within budget: unchanged
     assert effective_partition_size(60_000, 1000, 1_000_000) == 1000
     # over budget: coarsened to ceil(n / max_cells)
@@ -236,14 +286,14 @@ def test_effective_partition_size_coarsens():
     assert effective_partition_size(10**11, 1000, 0) == 1000
 
 
-def test_engine_auto_coarsens_cell_count(spark, sf_dir):
-    """A build whose partition_size would exceed max_cells cells must
+def test_engine_auto_coarsens_cell_count(spark, sf_dir, monkeypatch):
+    """A build whose partition_size would exceed MAX_CELLS cells must
     auto-coarsen (judge round-2 task: O(#cells) driver collects are
     bounded) and still answer queries correctly."""
     from learnedspatial_spark.engine import SpatialEngine
     from learnedspatial_spark.sources import workloads as wl
-    eng = SpatialEngine(spark, sf_dir, scheme="fixed_grid",
-                        partition_size=1, max_cells=100)
+    monkeypatch.setattr(partitioning, "MAX_CELLS", 100)
+    eng = SpatialEngine(spark, sf_dir, scheme="fixed_grid", partition_size=1)
     assert eng.partition_size >= eng._n // 100
     assert eng.partitioner.num_cells() <= 101
     ref = SpatialEngine(spark, sf_dir, scheme="fixed_grid")
@@ -279,14 +329,15 @@ def test_pipeline_empty_source_raises(spark, tmp_path):
                                    points_df=empty)
 
 
-def test_pipeline_auto_coarsens_cell_count(spark, tmp_path):
+def test_pipeline_auto_coarsens_cell_count(spark, tmp_path, monkeypatch):
     """build_tiled_index applies the same O(#cells) guard as the engine:
-    partition_size=1 with max_cells=50 must coarsen, not build 60k cells."""
+    partition_size=1 with MAX_CELLS=50 must coarsen, not build 60k cells."""
     from learnedspatial_spark.sources.points import points_df
+    monkeypatch.setattr(partitioning, "MAX_CELLS", 50)
     out = pipeline.build_tiled_index(
         spark, None, str(tmp_path / "idx_coarse"),
         points_df=points_df(spark, "/root/testdata/sf0.001"),
-        partition_size=1, max_cells=50)
+        partition_size=1)
     assert out["cells"] <= 51, out["cells"]
 
 
@@ -354,9 +405,8 @@ def test_spark_submit_cli_build_and_resume(tmp_path):
 
 def test_pages_exact_build_survives_unparsable_geo(spark, tmp_path):
     """A page whose text contains 'geo:' WITHOUT a parsable coordinate
-    pair passes the LIKE prefilter; the exact-build DuckDB derivation
-    must drop it like the Spark extraction does (a plain cast('') raised
-    ConversionException and aborted __init__)."""
+    pair must drop out of the extraction, and the exact kd-tree build
+    over the remaining points must not fail on it."""
     import datetime
 
     from pyspark.sql import types as T
@@ -373,19 +423,17 @@ def test_pages_exact_build_survives_unparsable_geo(spark, tmp_path):
     rows += [("https://x.example/poison1", ts, b"<html/>", "see geo: tags here", "en"),
              ("https://x.example/poison2", ts, b"<html/>", "geo:-.,-. broken", "en")]
     spark.createDataFrame(rows, schema).write.parquet(src)
-    # kd_tree with a tiny threshold forces the exact (DuckDB) build path
     eng = SpatialEngine(spark, src, source="pages", scheme="kd_tree")
-    assert eng.points().count() == 8          # Spark side drops the poison rows
-    _, x, _ = eng._points_np()                # DuckDB side must agree
-    assert x.shape[0] == 8
+    assert eng.points().count() == 8          # the poison rows are dropped
+    assert eng.tile_assignment().count() == 8
 
 
 def test_pages_parse_exponent_coordinates_exactly(spark, tmp_path):
     """Coordinates are Python float reprs, so an exponent can follow the
-    integer part directly (``9e-06``).  The Spark extraction and the
-    DuckDB derivation must both parse every form to the exact double —
-    a lat in that form must not drop the page, a lon in it must not read
-    as its mantissa — and both must still drop the unparsable rows."""
+    integer part directly (``9e-06``).  The extraction must parse every
+    form to the exact double — a lat in that form must not drop the page,
+    a lon in it must not read as its mantissa — and must still drop the
+    unparsable rows."""
     import datetime
 
     from pyspark.sql import types as T
@@ -407,8 +455,6 @@ def test_pages_parse_exponent_coordinates_exactly(spark, tmp_path):
     eng = SpatialEngine(spark, src, source="pages", scheme="kd_tree")
     want = sorted(coords)
     assert sorted((r["x"], r["y"]) for r in eng.points().collect()) == want
-    _, x, y = eng._points_np()
-    assert sorted(zip(x.tolist(), y.tolist())) == want
 
 
 @pytest.fixture(scope="module")

@@ -145,11 +145,13 @@ def test_knn_with_salting_parity(spark, sf_dir, corpus):
         assert got.get(qid, []) == orc.knn_euclidean(x, y, pid, qx, qy, k), qid
 
 
-def test_build_sample_results_identical(spark, sf_dir, corpus, rects):
+def test_build_sample_results_identical(spark, sf_dir, corpus, rects, monkeypatch):
     """Sampled splitter build (the 100 TB path) changes cell structure but
     never query results."""
+    from learnedspatial_spark.operators import partitioning
     pid, x, y = corpus
-    eng = SpatialEngine(spark, sf_dir, scheme="quadtree", build_sample=2000)
+    monkeypatch.setattr(partitioning, "BUILD_SAMPLE_ROWS", 2000)
+    eng = SpatialEngine(spark, sf_dir, scheme="quadtree")
     got = {r["query_id"]: r["cnt"] for r in eng.range_count(rects).collect()}
     for (qid, fx, fy, tx, ty) in rects:
         assert got[qid] == orc.range_count(x, y, fx, fy, tx, ty), qid
