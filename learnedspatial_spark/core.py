@@ -17,26 +17,23 @@ is that path, shared by both engines:
    the plan per job and unpickled per task, measured 0.3s/task at 18k
    rectangles);
 3. run one per-cell kernel (the module functions below) over the rows of
-   the routed cells;
+   the routed cells, in one ``mapInPandas`` probe for both sources;
 4. merge: zero-filled left join of per-query partial counts, the kNN
    per-query top-k merge, or the point-lookup broadcast equality join.
 
-A cell source supplies only what its storage has to answer:
+A cell source supplies only what its storage has to answer, in four
+hooks: ``cell_stats()`` -> :class:`CellStats`; ``_model_dict()`` -> the
+learned knots per cell; ``_id_column()`` -> the row id ``(name, type)``;
+``_cell_rows(cells)`` -> a DataFrame of those cells' rows with their
+``cell_id`` (the in-session engine filters its cached cell-partitioned
+relation, the tiled engine partition-prunes its parquet scan).
 
-* ``cell_stats()`` -> :class:`CellStats`; ``_model_dict()`` -> the
-  learned knots per cell; ``_id_column()`` -> the row id ``(name, type)``;
-* ``_cell_rows(cells)`` -> a DataFrame of those cells' rows;
-* ``_map_cells(cells, fn, schema)`` -> ``fn(cell_id, rows_pdf)`` run over
-  every routed cell's rows, concatenated (the in-session engine groups
-  its cached relation by cell, the tiled engine maps over a
-  partition-pruned scan).
-
-Kernels see each cell's rows possibly split: salted sub-groups in-session,
-several Arrow batches on the tiled index.  Every kernel is exact on any
-subset of a cell (counts and hits add up, per-subset top-k merges), and
-full-cell learned knots stay exact on a subset because
-``spline.learned_searchsorted`` repairs to the exact bound on any sorted
-array.
+Kernels see each cell's rows possibly split, in both sources: across
+Arrow batches, and across the salt partitions of a skewed in-session
+cell.  Every kernel is exact on any subset of a cell (counts and hits
+add up, per-subset top-k merges), and full-cell learned knots stay
+exact on a subset because ``spline.learned_searchsorted`` repairs to
+the exact bound on any sorted array.
 """
 
 from __future__ import annotations
@@ -234,15 +231,22 @@ class SpatialQueryCore:
         return self._models_bc
 
     def _probe(self, routing, payload, kernel, schema: str) -> DataFrame:
-        """Run ``kernel`` over every cell of a ``compact_routing`` table,
-        with the table and the query arrays in one broadcast."""
+        """Run ``kernel`` over every cell of a ``compact_routing`` table in
+        one ``mapInPandas`` over the source's ``_cell_rows``, with the
+        table and the query arrays in one broadcast."""
         bc = self.spark.sparkContext.broadcast((routing, payload))
 
-        def run(cell, pdf):
+        def probe(it):
             table, data = bc.value
-            qi = probes.routing_lookup(table, cell)
-            return None if qi is None else kernel(cell, pdf, qi, data)
-        return self._map_cells(routing[0], run, schema)
+            for pdf in it:
+                # a batch may hold several cells (a hash partition of the
+                # cached relation, or coalesced tiled file splits), and a
+                # cell may span batches: group per batch
+                for cell, grp in pdf.groupby("cell_id", sort=False):
+                    qi = probes.routing_lookup(table, int(cell))
+                    if qi is not None:
+                        yield kernel(int(cell), grp, qi, data)
+        return self._cell_rows(routing[0]).mapInPandas(probe, schema=schema)
 
     def _zero_filled(self, key: str, keys, parts: DataFrame, base=None) -> DataFrame:
         """Sum per-(key, cell) partial counts, left-joined onto the whole

@@ -9,9 +9,9 @@ answers the query surface of ``core.SpatialQueryCore`` from it
    ``assign_cells`` in operators/partitioning.py) and hash-partition the
    relation by cell once;
 3. a query's routed cells are read from that relation behind an InSet /
-   broadcast semi-join gate (``_probe_groups``), and each per-cell kernel
-   runs in ``groupBy(cell_id[, salt]).applyInPandas`` without a further
-   exchange.
+   broadcast semi-join gate (``_cell_rows``), and the core's one
+   ``mapInPandas`` probe runs each per-cell kernel over them without a
+   further exchange or sort.
 
 At 100 TB the same plan holds: step 2 is the only full-data shuffle and is
 also the natural Iceberg/parquet partition key for materialization; probes
@@ -24,7 +24,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -35,9 +34,10 @@ from .session import local_frame
 from .sources import points as points_src
 
 DEFAULT_PARTITION_SIZE = 1000  # src/main.cpp:60-65
-#: Candidate-cell pruning switches from InSet literals to a broadcast
-#: left-semi join above this count (plan size stays bounded regardless
-#: of how many cells a production batch routes to).
+#: ``_cell_rows`` prunes the cached relation to the routed cells with
+#: InSet literals up to this count and with a broadcast left-semi join
+#: above it (plan size stays bounded however many cells a production
+#: batch routes to).
 ISIN_MAX_CELLS = 10_000
 
 
@@ -59,10 +59,10 @@ class SpatialEngine(SpatialQueryCore):
         self.sf_dir = sf_dir
         self.scheme = scheme
         self.refine = refine
-        # skew handling (north rule): cells with > salt_rows points are
-        # sub-split by a deterministic salt; probes group on (cell_id, salt)
-        # so one skewed cell fans out over salt_k tasks, results re-aggregate
-        # on the logical cell/query key (count/topk partials are associative)
+        # skew handling (north rule): the one cell-keyed repartition also
+        # hashes a deterministic salt for cells with > salt_rows points, so
+        # one skewed cell spreads over ceil(count / salt_rows) tasks; the
+        # kernels are exact on any subset of a cell (core docstring)
         self.salt_rows = salt_rows
         # source: "lineitem" = harness derivation from sf_dir tables;
         #         "pages"   = sf_dir is a pages parquet path (url->pid hash)
@@ -89,12 +89,23 @@ class SpatialEngine(SpatialQueryCore):
         if self._assigned is not None:
             return self._assigned
         out = assign_cells(self.points(), self.partitioner, "pid")
-        # hash-partition by cell_id once: every probe job (groupBy(cell_id)
-        # .applyInPandas) reuses this partitioning with a sort only — no
-        # per-query re-shuffle (verified in the physical plan); this is also
-        # the Iceberg/parquet partition key at materialization time
+        # hash-partition by cell_id once: every probe job (the core's
+        # mapInPandas) reads this partitioning in place — no per-query
+        # re-shuffle or sort (tools_plan_audit.py); this is also the
+        # Iceberg/parquet partition key at materialization time
         n_shuffle = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        out = out.repartition(n_shuffle, "cell_id")
+        keys = [F.col("cell_id")]
+        if self.salt_rows:
+            # FixedGrid/Quadtree cells are count-skewed by construction
+            # (SURVEY.md §2.3 skew note): a skewed cell hashes with
+            # pmod(hash(pid), k) — an expression, so the schema is unchanged
+            big = {int(r["cell_id"]): int(math.ceil(r["count"] / self.salt_rows))
+                   for r in out.groupBy("cell_id").count().collect()
+                   if r["count"] > self.salt_rows}
+            if big:
+                mapping = F.create_map(*[F.lit(v) for kv in big.items() for v in kv])
+                keys.append(F.pmod(F.hash("pid"), F.coalesce(mapping[F.col("cell_id")], F.lit(1))))
+        out = out.repartition(n_shuffle, *keys)
         self._assigned = out
         return out
 
@@ -107,56 +118,6 @@ class SpatialEngine(SpatialQueryCore):
                 F.max("x").alias("maxx"), F.max("y").alias("maxy"),
                 F.count(F.lit(1)).alias("cnt")).collect(), count="cnt")
         return self._stats
-
-    def salted_points(self) -> DataFrame:
-        """assigned points + ``salt`` column: 0 for normal cells; skewed
-        cells (count > salt_rows) split into ceil(count/salt_rows) salts via
-        pmod(hash(pid), k) — deterministic, uniform.  FixedGrid/Quadtree
-        cells are count-skewed by construction (SURVEY.md §2.3 skew note)."""
-        df = self.assigned_points()
-        if not self.salt_rows:
-            return df.withColumn("salt", F.lit(0))
-        s = self.cell_stats()
-        big = {int(c): int(math.ceil(n / self.salt_rows))
-               for c, n in zip(s.ids, s.count) if n > self.salt_rows}
-        if not big:
-            return df.withColumn("salt", F.lit(0))
-        mapping = F.create_map(*[F.lit(v) for kv in big.items() for v in kv])
-        k = F.coalesce(mapping[F.col("cell_id")], F.lit(1))
-        return df.withColumn("salt", F.pmod(F.hash("pid"), k))
-
-    def _probe_groups(self, candidate_cells=None) -> tuple[DataFrame, list[str]]:
-        """Probe input + grouping keys.  ``candidate_cells`` prunes the
-        scan JVM-side BEFORE any Python worker sees a row — the in-session
-        analog of the tiled engine's partition pruning (the reference's
-        LookUp routing): a one-rect query feeds only its few candidate
-        cells through Arrow, not the whole corpus.  The filter preserves
-        the cached hash-partitioning on cell_id, so the probe still runs
-        without a fresh exchange."""
-        df, keys = ((self.salted_points(), ["cell_id", "salt"]) if self.salt_rows
-                    else (self.assigned_points(), ["cell_id"]))
-        if candidate_cells is not None:
-            # selectivity gate: a broad batch workload that routes to most
-            # cells gains nothing from the filter but still pays a full
-            # InSet scan of the corpus — only prune when the candidate set
-            # is actually selective
-            total = max(1, self.partitioner.num_cells())
-            cells = [int(c) for c in candidate_cells]
-            if len(cells) < 0.5 * total:
-                if len(cells) <= ISIN_MAX_CELLS:
-                    df = df.where(F.col("cell_id").isin(cells))
-                else:
-                    # a 100 TB corpus at partition_size=8000 has ~10^7
-                    # cells; a selective batch can still route to 10^5+ —
-                    # as InSet literals that many constants bloat the plan
-                    # (analysis/codegen cost grows with the literal list),
-                    # so large sets prune via a broadcast LEFT SEMI join
-                    # instead.  BroadcastHashJoin preserves the probe
-                    # side's cached hash-partitioning on cell_id, so the
-                    # downstream applyInPandas still runs exchange-free.
-                    cdf = local_frame(self.spark, {"cell_id": cells}, "cell_id bigint")
-                    df = df.join(F.broadcast(cdf), "cell_id", "left_semi")
-        return df, keys
 
     def model_table(self) -> DataFrame:
         """Fit the per-cell learned models ONCE as a DataFrame job (the
@@ -185,20 +146,34 @@ class SpatialEngine(SpatialQueryCore):
         return ("pid", "bigint")
 
     def _cell_rows(self, cells) -> DataFrame:
-        return self._probe_groups(cells)[0]
-
-    def _map_cells(self, cells, fn, schema: str) -> DataFrame:
-        """``fn`` per (cell, salt) group of the cached relation: the one
-        cell-keyed grouping reuses the relation's hash partitioning, so
-        no probe job adds an exchange."""
-        gdf, keys = self._probe_groups(cells)
-        empty = pd.DataFrame({c.split()[0]: pd.Series(dtype="float64" if c.endswith("double") else "int64")
-                              for c in schema.split(", ")})
-
-        def probe(key, pdf):
-            out = fn(int(key[0]), pdf)
-            return empty if out is None else out
-        return gdf.groupBy(*keys).applyInPandas(probe, schema=schema)
+        """The cached rows of ``cells``, pruned JVM-side BEFORE any Python
+        worker sees a row — the in-session analog of the tiled engine's
+        partition pruning (the reference's LookUp routing): a one-rect
+        query feeds only its few candidate cells through Arrow, not the
+        whole corpus.  The filter keeps the cached partitioning, so the
+        probe still runs without a fresh exchange."""
+        df = self.assigned_points()
+        # selectivity gate: a broad batch workload that routes to most
+        # cells gains nothing from the filter but still pays a full
+        # InSet scan of the corpus — only prune when the candidate set
+        # is actually selective
+        total = max(1, self.partitioner.num_cells())
+        cells = [int(c) for c in cells]
+        if len(cells) < 0.5 * total:
+            if len(cells) <= ISIN_MAX_CELLS:
+                df = df.where(F.col("cell_id").isin(cells))
+            else:
+                # a 100 TB corpus at partition_size=8000 has ~10^7
+                # cells; a selective batch can still route to 10^5+ —
+                # as InSet literals that many constants bloat the plan
+                # (analysis/codegen cost grows with the literal list),
+                # so large sets prune via a broadcast LEFT SEMI join
+                # instead.  BroadcastHashJoin preserves the probe
+                # side's cached partitioning, so the downstream
+                # mapInPandas still runs exchange-free.
+                cdf = local_frame(self.spark, {"cell_id": cells}, "cell_id bigint")
+                df = df.join(F.broadcast(cdf), "cell_id", "left_semi")
+        return df
 
     # ----------------------------------------------------- tile assignment ---
 

@@ -4,7 +4,7 @@ The north-star flow (BASELINE.json) as checkpointable phases, each a
 DataFrame job whose output is a materialized table (the resume unit):
 
   1. extract   pages parquet/Iceberg -> points(url, x, y)     [no shuffle]
-  2. key       + cell_id (+ salt)                             [1 shuffle]
+  2. key       + cell_id                                      [1 shuffle]
                materialized partitioned by cell_id
   3. fit       model table (cell_id, knots...)                [cell-granular,
                checkpoint manifest skips completed cells on restart]

@@ -11,10 +11,11 @@ and merges its partials; this source answers what storage has to:
   parquet PartitionFilter — Spark never opens non-candidate directories
   (the Iceberg/Hive partition-pruning analog of the reference's
   contiguous cell-range probe; asserted in tools_plan_audit.py);
-* a per-cell kernel over those rows: ``mapInPandas`` in place, every
-  Arrow batch coming from one cell's files, so probes run WITHOUT ANY
-  shuffle of point data (the in-session engine pays one cell-keyed
-  shuffle to group; here the layout already is the grouping);
+* those rows as read from storage: the core's one ``mapInPandas`` probe
+  runs each per-cell kernel over the pruned scan in place, so probes
+  run WITHOUT ANY shuffle of point data (the in-session engine pays one
+  cell-keyed shuffle when it caches its relation; here the layout
+  already is the grouping);
 * the cell stats, the learned model table (loaded once, shipped as a
   broadcast: O(#cells x #knots), SURVEY.md §2.5) and the id column.
 """
@@ -65,20 +66,7 @@ class TiledSpatialEngine(SpatialQueryCore):
             self._id_col = (f.name, f.dataType.simpleString())
         return self._id_col
 
-    def _pruned_scan(self, cells) -> DataFrame:
+    def _cell_rows(self, cells) -> DataFrame:
         # isin on the partition column -> PartitionFilters in the scan node:
         # non-candidate cell directories are never listed or opened
         return self._table("points_tiled").where(F.col("cell_id").isin([int(c) for c in cells]))
-
-    _cell_rows = _pruned_scan
-
-    def _map_cells(self, cells, fn, schema: str) -> DataFrame:
-        def probe(it):
-            for pdf in it:
-                # a batch belongs to one cell's files, but after split
-                # coalescing a task may interleave cells: group defensively
-                for cell, grp in pdf.groupby("cell_id", sort=False):
-                    out = fn(int(cell), grp)
-                    if out is not None:
-                        yield out
-        return self._pruned_scan(cells).mapInPandas(probe, schema=schema)

@@ -175,7 +175,7 @@ def test_tiled_engine_query_parity(spark, tmp_path):
     buf = io.StringIO()
     cells = eng.partitioner.cells_for_rect(*rects[1][1:])
     with redirect_stdout(buf):
-        eng._pruned_scan([int(c) for c in cells]).explain(True)
+        eng._cell_rows([int(c) for c in cells]).explain(True)
     assert "PartitionFilters" in buf.getvalue()
 
 
@@ -510,7 +510,7 @@ def test_tiled_queries_exact_when_cells_span_arrow_batches(spark, tiled_sf):
         def batch_sizes(it):
             for pdf in it:
                 yield pdf.groupby("cell_id").size().rename("n").reset_index()
-        per_batch = (eng._pruned_scan(list(eng.cell_stats().ids))
+        per_batch = (eng._cell_rows(list(eng.cell_stats().ids))
                      .mapInPandas(batch_sizes, "cell_id bigint, n bigint").collect())
         assert max(r["n"] for r in per_batch) <= 64
         batches_per_cell = {}

@@ -143,7 +143,7 @@ def test_route_contained_empty_inputs():
 def test_large_candidate_set_prunes_via_broadcast_semi_join(spark, sf_dir, monkeypatch):
     """Above ISIN_MAX_CELLS the probe pruning switches from InSet literals
     to a broadcast left-semi join; results are identical and the probe
-    input still reaches applyInPandas without a fresh exchange (the
+    input still reaches mapInPandas without a fresh exchange (the
     BroadcastHashJoin preserves the cached hash-partitioning)."""
     import io
     from contextlib import redirect_stdout
@@ -168,7 +168,7 @@ def test_large_candidate_set_prunes_via_broadcast_semi_join(spark, sf_dir, monke
     # a genuinely selective candidate set (the 0.5-of-total gate must let
     # the pruning run) routed through the forced join path
     n_sel = max(1, eng2.partitioner.num_cells() // 4)
-    pruned, _ = eng2._probe_groups(np.arange(n_sel, dtype=np.int64))
+    pruned = eng2._cell_rows(np.arange(n_sel, dtype=np.int64))
     buf = io.StringIO()
     with redirect_stdout(buf):
         pruned.explain("formatted")

@@ -5,8 +5,9 @@ Captures ``explain("formatted")`` for the engine's key jobs and asserts the
 plan properties the 100 TB design depends on:
 
 * parquet scans prune to the needed columns (ReadSchema);
-* the cell-keyed exchange is reused by probe jobs (no second Exchange
-  between the cached assignment and FlatMapGroupsInPandas);
+* every probe runs its per-cell kernels in one MapInPandas directly over
+  the cell rows (in session: the cached cell-keyed relation, with no
+  second Exchange and no Sort; tiled: the partition-pruned scan);
 * relational glue runs in WholeStageCodegen;
 * the small query/dimension sides are broadcast.
 """
@@ -17,16 +18,25 @@ import io
 import os
 import re
 import sys
+import tempfile
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def plan_of(df) -> str:
+    """The formatted plan, with temporary directory paths replaced by a
+    fixed placeholder so PLANS.md only changes when a plan does."""
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
-    return buf.getvalue()
+    return re.sub(re.escape(tempfile.gettempdir()) + r"/tmp\w+", "<tmpdir>", buf.getvalue())
+
+
+def plan_tree(plan: str) -> str:
+    """The node tree of a formatted plan (each node once, without the
+    per-node detail that follows it)."""
+    return plan.split("== Physical Plan ==")[-1].split("\n\n")[0]
 
 
 def literal_tables_local(plan: str) -> str:
@@ -35,6 +45,18 @@ def literal_tables_local(plan: str) -> str:
     job that has no Python kernel to run)."""
     if "LocalTableScan" in plan and "Scan ExistingRDD" not in plan:
         return "\n-- audit: literal-tables-local (query tables are LocalTableScans)\n"
+    return ""
+
+
+def probe_in_place(plan: str) -> str:
+    """Marker when the plan's one MapInPandas probe reads the cached
+    relation directly: only the InSet gate's Filter may sit between it
+    and the InMemoryTableScan, so no Sort or Exchange runs under it."""
+    nodes = re.findall(r"^[\s:|+*-]*(\w+)", plan_tree(plan), re.M)
+    if nodes.count("MapInPandas") == 1:
+        below = nodes[nodes.index("MapInPandas") + 1:]
+        if below[:1] == ["InMemoryTableScan"] or below[:2] == ["Filter", "InMemoryTableScan"]:
+            return "\n-- audit: probe-in-place (MapInPandas over the cached scan; no Sort, no Exchange)\n"
     return ""
 
 
@@ -66,9 +88,11 @@ def main() -> None:
     sections: list[tuple[str, str, list[str]]] = []
 
     p = plan_of(eng.range_count(rects))
+    p += probe_in_place(p)
     sections.append(("range_count (learned, fixed grid)", p, [
         "ReadSchema: struct<l_orderkey:bigint,l_partkey:bigint,l_suppkey:bigint,l_linenumber:int,l_quantity:double,l_extendedprice",
-        "FlatMapGroupsInPandas",
+        "MapInPandas",
+        "probe-in-place",
     ]))
     p2 = plan_of(eng.point_lookup(wl.point_queries(*__import__("learnedspatial_spark.sources.points", fromlist=["points_np"]).points_np(sf)[1:3], n_hits=5, n_misses=2)))
     p2 += literal_tables_local(p2)
@@ -85,8 +109,6 @@ def main() -> None:
     # tiled (build-once/query-many) path: candidate cells must prune at the
     # parquet scan (PartitionFilters) and the probe must be shuffle-free —
     # the ONLY Exchange in the plan is the final tiny per-query aggregation
-    import tempfile
-
     from learnedspatial_spark import datagen, pipeline
     from learnedspatial_spark.tiled import TiledSpatialEngine
     with tempfile.TemporaryDirectory() as td:
@@ -118,11 +140,9 @@ def main() -> None:
     # scan to (url, text) — html (the fat binary column) stays unread when
     # the stored text is used — and the coordinate parse must be pure
     # Column logic (no Python eval node of any kind in this plan)
-    import tempfile as _tf
-
     from learnedspatial_spark import datagen as _dg
     from learnedspatial_spark import extract as _ex
-    with _tf.TemporaryDirectory() as _td:
+    with tempfile.TemporaryDirectory() as _td:
         _pp = f"{_td}/pages"
         _dg.pages_df(spark, 500, partitions=2).write.parquet(_pp)
         p_pts = plan_of(_ex.points_from_pages(spark.read.parquet(_pp)))
@@ -136,18 +156,22 @@ def main() -> None:
             "column-only-parse",
         ]))
 
-    # kNN: per-cell partial top-ks merge per QUERY in one
-    # FlatMapGroupsInPandas (the associative reduce the partials were
-    # designed for) — never a Window row_number over the full partial set
-    # (that would shuffle-sort every partial through one global stage) and
-    # never a SinglePartition exchange
+    # kNN: the per-cell partial top-ks (the one MapInPandas probe) merge
+    # per QUERY in one FlatMapGroupsInPandas (the associative reduce the
+    # partials were designed for) — never a Window row_number over the
+    # full partial set (that would shuffle-sort every partial through one
+    # global stage) and never a SinglePartition exchange
     p_knn = plan_of(eng.knn(wl.knn_queries(n=8)))
-    if p_knn.count("FlatMapGroupsInPandas") >= 2 and "SinglePartition" not in p_knn \
-            and re.search(r"\bWindow\b", p_knn) is None:
-        p_knn += ("\n-- audit: partials-merge-no-window (per-cell top-k + per-query "
-                  "FlatMapGroupsInPandas merge; no global sort, no single partition)\n")
+    t_knn = plan_tree(p_knn)
+    if len(re.findall(r"\bMapInPandas\b", t_knn)) == 1 \
+            and len(re.findall(r"\bFlatMapGroupsInPandas\b", t_knn)) == 1 \
+            and "SinglePartition" not in p_knn and re.search(r"\bWindow\b", p_knn) is None:
+        p_knn += ("\n-- audit: partials-merge-no-window (one MapInPandas probe + one "
+                  "per-query FlatMapGroupsInPandas merge; no window, no single partition)\n")
+    p_knn += probe_in_place(p_knn)
     sections.append(("knn (stats-pruned cells, partial top-k merge)", p_knn, [
         "partials-merge-no-window",
+        "probe-in-place",
     ]))
 
     # STR assignment: the global (x, y, pid) rank must be the bucketed
