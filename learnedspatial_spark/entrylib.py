@@ -7,8 +7,9 @@ so every computed column is aliased identically on both sides, every
 float literal goes through sqlcompat.flit, and outputs avoid
 order-dependent float aggregations.
 
-Oracle SQL may use DuckDB dialect (it never runs on Spark); the *Spark*
-side never parses these strings.
+Both sides of an entry sit on one row of ``CONTRACT`` (end of module),
+so no entry exists without its twin.  Oracle SQL may use DuckDB dialect
+(it never runs on Spark); the *Spark* side never parses these strings.
 """
 
 from __future__ import annotations
@@ -23,10 +24,10 @@ from pyspark.sql import functions as F
 from .engine import SpatialEngine
 from .functions import text as tx
 from .functions.geo import haversine_m_sql
-from .operators import corpus, dedup, multimodal, similarity
+from .operators import corpus, dedup, multimodal, s2, similarity
 from .session import local_frame
 from .sources import workloads as wl
-from .sources.points import LAT_SQL, LON_SQL, POINTS_CTE
+from .sources.points import POINTS_CTE
 from .sqlcompat import flit
 
 ORACLE_SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
@@ -69,6 +70,10 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
+def _annq(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return similarity.query_vectors(spark, sf_dir, n=_ANN_NQ)
+
+
 # ------------------------------------------------------- spark callables ---
 
 _ENGINES: dict[tuple, SpatialEngine] = {}
@@ -89,70 +94,12 @@ def _eng(spark: SparkSession, sf_dir: str, scheme: str, refine: str = "learned",
     return e
 
 
-def _mk_range_count(scheme: str, refine: str) -> Callable:
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return _eng(spark, sf_dir, scheme, refine).range_count(_rects())
-    return fn
-
-
-def _range_materialize(spark, sf_dir):
-    eng = _eng(spark, sf_dir, "fixed_grid", "learned")
-    return eng.range_materialize(_rects())
-
-
-def _point_lookup(spark, sf_dir):
-    eng = _eng(spark, sf_dir, "adaptive_grid")
-    return eng.point_lookup(_point_queries(sf_dir))
-
-
-def _distance_count(spark, sf_dir):
-    eng = _eng(spark, sf_dir, "fixed_grid")
-    return eng.distance_count(_circles())
-
-
-def _distance_materialize(spark, sf_dir):
-    eng = _eng(spark, sf_dir, "adaptive_grid")
-    return eng.distance_materialize(_circles())
-
-
-def _point_lookup_quadtree(spark, sf_dir):
-    eng = _eng(spark, sf_dir, "quadtree")
-    return eng.point_lookup(_point_queries(sf_dir))
-
-
 def _range_count_salted(spark, sf_dir):
     """Skew-salted probe (north rule): oversized cells sub-split by a
     deterministic salt; results must be identical to the unsalted oracle
     (count partials re-aggregate on query_id)."""
     eng = _eng(spark, sf_dir, "fixed_grid", "learned", salt_rows=2000)
     return eng.range_count(_rects())
-
-
-def _pip_count(spark, sf_dir):
-    eng = _eng(spark, sf_dir, "quadtree")
-    return eng.pip(_polys())
-
-
-def _pip_pairs(spark, sf_dir):
-    eng = _eng(spark, sf_dir, "fixed_grid")
-    return eng.pip(_polys(), pairs=True)
-
-
-def _knn(spark, sf_dir):
-    eng = _eng(spark, sf_dir, "fixed_grid")
-    return eng.knn(_knnq())
-
-
-def _mk_tile_assign(scheme: str) -> Callable:
-    def fn(spark, sf_dir):
-        eng = _eng(spark, sf_dir, scheme)
-        return eng.tile_assignment()
-    return fn
-
-
-def _polygon_tiles(spark, sf_dir):
-    eng = _eng(spark, sf_dir, "fixed_grid")
-    return eng.polygon_tiles(_polys())
 
 
 def _morton_rollup(spark, sf_dir):
@@ -167,6 +114,15 @@ def _morton_rollup(spark, sf_dir):
             .agg(F.count(F.lit(1)).alias("cnt"),
                  F.min("x").alias("minx"), F.max("x").alias("maxx"),
                  F.min("y").alias("miny"), F.max("y").alias("maxy")))
+
+
+def _morton_rollup_sql() -> str:
+    morton_cell = _oracle_partitioner("morton").assign_sql("x", "y")
+    return (
+        f"WITH {POINTS_CTE}, a AS (SELECT ({morton_cell}) AS cell_id, x, y FROM points) "
+        "SELECT cell_id // 4 AS parent_id, count(*) AS cnt, "
+        "min(x) AS minx, max(x) AS maxx, min(y) AS miny, max(y) AS maxy "
+        "FROM a GROUP BY cell_id // 4")
 
 
 _TILED_ROOTS: dict[str, str] = {}
@@ -208,31 +164,11 @@ def _tiled_engine(spark, sf_dir, scheme: str = "fixed_grid"):
     return e
 
 
-def _range_count_tiled(spark, sf_dir):
-    return _tiled_engine(spark, sf_dir).range_count(_rects())
-
-
-def _knn_tiled(spark, sf_dir):
-    return _tiled_engine(spark, sf_dir).knn(_knnq())
-
-
 def _range_count_tiled_str(spark, sf_dir):
     """Tiled STR index end to end (regression guard for the empty-mbrs
     routing bug): the rank-tiled materialization must answer range counts
     identically to the full-scan oracle."""
     return _tiled_engine(spark, sf_dir, scheme="str").range_count(_rects())
-
-
-def _distance_materialize_tiled(spark, sf_dir):
-    return _tiled_engine(spark, sf_dir).distance_materialize(_circles())
-
-
-def _pip_pairs_tiled(spark, sf_dir):
-    return _tiled_engine(spark, sf_dir).pip(_polys(), pairs=True)
-
-
-def _dedup_exact(spark, sf_dir):
-    return dedup.dedup_exact(_docs(spark, sf_dir))
 
 
 def _corpus_clean_keeplist(spark, sf_dir):
@@ -256,6 +192,15 @@ def _corpus_clean_keeplist(spark, sf_dir):
     return kept.select("doc_id")
 
 
+def _corpus_clean_keeplist_sql() -> str:
+    return (
+        "WITH rep AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)) "
+        "SELECT d.doc_id AS doc_id FROM documents d JOIN rep USING (doc_id) "
+        f"WHERE ({tx.langid_sql('d.text')}) = 'en' "
+        f"AND ({tx.token_count_sql('d.text')}) BETWEEN 20 AND 2000 "
+        f"AND ({tx.quality_score_sql('d.text')}) >= {flit(25.0)}")
+
+
 def _token_count(spark, sf_dir):
     """Token counting both ways: whitespace tokens AND a BPE-ish regex
     tokenizer (contraction / letter-run / digit-run / punct-run classes,
@@ -266,25 +211,11 @@ def _token_count(spark, sf_dir):
         F.expr(tx.token_count_bpe_spark_sql("text")).cast("bigint").alias("n_bpe_tokens"))
 
 
-def _quality_score(spark, sf_dir):
-    return _docs(spark, sf_dir).select(
-        "doc_id", F.expr(tx.quality_score_sql("text")).alias("score"))
-
-
-def _langid(spark, sf_dir):
-    return _docs(spark, sf_dir).select(
-        "doc_id", F.expr(tx.langid_sql("text")).alias("lang_pred"))
-
-
-def _fingerprint(spark, sf_dir):
-    return _docs(spark, sf_dir).select(
-        "doc_id", F.expr(tx.fingerprint_md5_sql("text")).alias("fp"))
-
-
-def _ann_topk(spark, sf_dir):
-    emb = _emb(spark, sf_dir)
-    q = similarity.query_vectors(spark, sf_dir, n=_ANN_NQ)
-    return similarity.brute_cosine_topk(emb, q, k=_ANN_K)
+def _token_count_sql() -> str:
+    return (
+        f"SELECT doc_id, cast({tx.token_count_sql('text')} as bigint) AS n_tokens, "
+        f"cast({tx.token_count_bpe_duckdb_sql('text')} as bigint) AS n_bpe_tokens "
+        "FROM documents")
 
 
 def _events_window(spark, sf_dir):
@@ -299,6 +230,13 @@ def _events_window(spark, sf_dir):
     )
 
 
+def _events_window_sql() -> str:
+    return (
+        "SELECT cast(floor(epoch(ts) / 3600) as bigint) AS window_id, event_type, "
+        "count(*) AS cnt, min(value) AS vmin, max(value) AS vmax "
+        "FROM events GROUP BY 1, 2")
+
+
 def _events_sessionize(spark, sf_dir):
     """Sessionization: per-user sessions with a 30-minute inactivity gap —
     Spark's session_window (the streaming-capable state machine) checked
@@ -308,6 +246,21 @@ def _events_sessionize(spark, sf_dir):
     return (ev.groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
             .agg(F.count(F.lit(1)).alias("n_events"), F.max("value").alias("vmax"))
             .select("user_id", F.col("w.start").alias("session_start"), "n_events", "vmax"))
+
+
+def _events_sessionize_sql() -> str:
+    return (
+        # Spark session_window semantics: an event extends its session's
+        # window to ts+gap; the NEXT event joins iff its ts < that end, so
+        # a gap >= 30 min starts a new session — reconstructed with
+        # lag + running sum
+        "WITH o AS (SELECT user_id, event_id, ts, value, case when lag(ts) OVER w IS NULL "
+        "  OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE then 1 else 0 end AS new_s "
+        "  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)), "
+        "s AS (SELECT user_id, ts, value, sum(new_s) OVER "
+        "  (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS sid FROM o) "
+        "SELECT user_id, min(ts) AS session_start, count(*) AS n_events, "
+        "max(value) AS vmax FROM s GROUP BY user_id, sid")
 
 
 def _events_window_stream(spark, sf_dir):
@@ -364,10 +317,6 @@ def _ngram_jaccard(spark, sf_dir):
     return dedup.minhash_md5_pairs(_docs(spark, sf_dir), **_NGRAM_CFG)
 
 
-def _simhash_md5(spark, sf_dir):
-    return dedup.simhash_md5_table(_docs(spark, sf_dir))
-
-
 def _neardup_clusters(spark, sf_dir):
     """Corpus-level near-dup clustering: connected components over the
     minhash_md5_pairs edge set (iterative min-label propagation with
@@ -376,10 +325,18 @@ def _neardup_clusters(spark, sf_dir):
     return dedup.neardup_clusters(_docs(spark, sf_dir), **_MINHASH_CFG)
 
 
-def _lsh_ann(spark, sf_dir):
-    emb = _emb(spark, sf_dir)
-    q = similarity.query_vectors(spark, sf_dir, n=_ANN_NQ)
-    return similarity.lsh_bucket_topk(emb, q, k=_ANN_K)
+def _neardup_clusters_sql() -> str:
+    # transitive closure of the SAME pair set (recursive CTE) -> per-doc
+    # min reachable id == the Spark label-propagation fixpoint
+    return (
+        f"WITH RECURSIVE mp AS (SELECT doc_a, doc_b FROM ({_minhash_sql(**_MINHASH_CFG)}) q), "
+        "e AS (SELECT doc_a AS u, doc_b AS v FROM mp "
+        "  UNION ALL SELECT doc_b, doc_a FROM mp), "
+        "reach(u, v) AS (SELECT u, v FROM e "
+        "  UNION SELECT r.u, e2.v FROM reach r JOIN e e2 ON r.v = e2.u) "
+        "SELECT d.doc_id AS doc_id, "
+        "cast(least(d.doc_id, coalesce(min(r.v), d.doc_id)) as bigint) AS cluster_id "
+        "FROM documents d LEFT JOIN reach r ON r.u = d.doc_id GROUP BY d.doc_id")
 
 
 _NEARDUP_T = 0.35  # sits >2e-5 from every pair's cosine at sf<=0.01 (no
@@ -392,8 +349,12 @@ def _emb_neardup(spark, sf_dir):
     return similarity.embedding_neardup_pairs(_emb(spark, sf_dir), threshold=_NEARDUP_T)
 
 
-def _emb_neardup_lsh(spark, sf_dir):
-    return similarity.embedding_neardup_lsh(_emb(spark, sf_dir), threshold=_NEARDUP_T)
+def _emb_neardup_sql() -> str:
+    return (
+        f"WITH a AS (SELECT vec_id, cast(embedding AS double[]) AS e FROM embeddings) "
+        f"SELECT x.vec_id AS vec_id_a, y.vec_id AS vec_id_b "
+        f"FROM a x JOIN a y ON x.vec_id < y.vec_id "
+        f"WHERE {_duck_cos('x.e', 'y.e')} >= {flit(_NEARDUP_T)}")
 
 
 _IVF_CENTROIDS: dict[str, list] = {}
@@ -416,12 +377,6 @@ def _ivf_centroids(sf_dir: str, n_centroids: int = 16, sample_rows: int = 4096):
     return _IVF_CENTROIDS[key]
 
 
-def _ivf_ann(spark, sf_dir):
-    emb = _emb(spark, sf_dir)
-    q = similarity.query_vectors(spark, sf_dir, n=_ANN_NQ)
-    return similarity.ivf_topk(emb, q, k=_ANN_K, centroids=_ivf_centroids(sf_dir))
-
-
 def _multimodal(spark, sf_dir):
     """Real decode: BMP/WAV payloads are genuinely parsed (pure-Python
     codecs, operators/multimodal.py); the synthetic corpus parameters are
@@ -431,9 +386,65 @@ def _multimodal(spark, sf_dir):
     return multimodal.extract_features(media)
 
 
-def _multimodal_resize(spark, sf_dir):
-    media = multimodal.attach_fake_media(_docs(spark, sf_dir))
-    return multimodal.resize_images(media, max_dim=32).select("doc_id", "out_w", "out_h")
+# closed forms of the synthetic media parameters (multimodal.
+# _media_params); the Spark side reaches the same numbers by DECODING
+# the real BMP/WAV/AVI payloads it generated.  AVI parameters:
+# n = d%4+1 frames of (d%8+16) x (d%6+12), frame f solid color
+# (avi_frame_rgb); byte size is multimodal.avi_size_bytes's closed
+# form; the whole-video mean is an exact integer sum / one division,
+# so it rounds identically to NumPy's .mean() over the decoded array.
+_AVI_W, _AVI_H, _AVI_N = "(doc_id % 8 + 16)", "(doc_id % 6 + 12)", "(doc_id % 4 + 1)"
+
+
+def _avi_fsum(f: str) -> str:
+    return (f"(doc_id + 11 * {f}) % 256 + (doc_id * 7 + 23 * {f}) % 256 "
+            f"+ (doc_id * 13 + 37 * {f}) % 256")
+
+
+def _multimodal_sql() -> str:
+    # whole-video pixel-mean: exact integer sum over the n = d%4+1 frames
+    # (n <= 4, so the sum unrolls as a CASE — DuckDB's generate_series
+    # table function cannot take lateral column arguments) / one division
+    avi_mean = ("(case (doc_id % 4) "
+                + " ".join(
+                    f"when {k} then {' + '.join(_avi_fsum(str(f)) for f in range(k + 1))}"
+                    for k in range(4))
+                + f" end) / cast(3 * {_AVI_N} as double)")
+    return (
+        "SELECT doc_id, "
+        "case when doc_id % 3 = 0 then 'image/bmp' "
+        "  when doc_id % 3 = 1 then 'audio/wav' "
+        "  when doc_id % 12 = 2 then 'video/mp4' else 'video/avi' end AS media_type, "
+        "cast(case when doc_id % 3 = 0 "
+        "  then 54 + (doc_id % 48 + 1) * (((doc_id % 64 + 1) * 3 + 3) // 4 * 4) "
+        "  when doc_id % 3 = 1 then 44 + (doc_id % 100 + 1) * 2 "
+        # strlen = BYTE length (Spark side measures the utf-8 payload);
+        # length() counts characters and would diverge on multibyte text
+        "  when doc_id % 12 = 2 then strlen(text) "
+        f"  else 232 + {_AVI_N} * (24 + (({_AVI_W} * 3 + 3) // 4 * 4) * {_AVI_H}) "
+        "  end as bigint) AS n_bytes, "
+        "cast(case when doc_id % 3 = 0 then doc_id % 64 + 1 "
+        "  when doc_id % 3 = 1 then doc_id % 100 + 1 "
+        f"  when doc_id % 12 = 2 then -1 else {_AVI_W} end as int) AS width, "
+        "cast(case when doc_id % 3 = 0 then doc_id % 48 + 1 "
+        "  when doc_id % 3 = 1 then 8000 "
+        f"  when doc_id % 12 = 2 then -1 else {_AVI_H} end as int) AS height, "
+        "case when doc_id % 3 = 0 "
+        "  then ((doc_id % 256) + ((doc_id * 7) % 256) + ((doc_id * 13) % 256)) "
+        "    / cast(3 as double) "
+        "  when doc_id % 3 = 1 then cast(doc_id % 20000 - 10000 as double) "
+        f"  when doc_id % 12 = 2 then cast(-1 as double) else {avi_mean} end AS mean_v "
+        "FROM documents")
+
+
+def _multimodal_resize_sql() -> str:
+    return (
+        "WITH m AS (SELECT doc_id, cast(doc_id % 64 + 1 as int) AS w, "
+        "cast(doc_id % 48 + 1 as int) AS h FROM documents WHERE doc_id % 3 = 0), "
+        "s AS (SELECT doc_id, w, h, "
+        "least(cast(1 as double), cast(32 as double) / greatest(w, h)) AS sc FROM m) "
+        "SELECT doc_id, cast(greatest(1, floor(w * sc)) as int) AS out_w, "
+        "cast(greatest(1, floor(h * sc)) as int) AS out_h FROM s")
 
 
 def _multimodal_frames(spark, sf_dir):
@@ -446,6 +457,16 @@ def _multimodal_frames(spark, sf_dir):
     identically on both sides)."""
     media = multimodal.attach_fake_media(_docs(spark, sf_dir))
     return multimodal.video_frame_features(media)
+
+
+def _multimodal_frames_sql() -> str:
+    # decoded per-frame features of the real AVI rows: frame colors are
+    # closed-form in (doc_id, frame_idx); 1000 // AVI_FPS = 250 ms step
+    return (
+        "SELECT doc_id, frame_idx, frame_idx * 250 AS frame_ts_ms, "
+        f"cast({_avi_fsum('frame_idx')} as double) / cast(3 as double) AS mean_v "
+        "FROM (SELECT doc_id, unnest(generate_series(0, cast(doc_id % 4 as bigint))) "
+        "AS frame_idx FROM documents WHERE doc_id % 3 = 2 AND doc_id % 12 <> 2) q")
 
 
 def _multimodal_frame_plan(spark, sf_dir):
@@ -464,6 +485,20 @@ def _contamination(spark, sf_dir):
     return corpus.contamination_hits(_docs(spark, sf_dir))
 
 
+def _contamination_sql() -> str:
+    g, mh = corpus.CONTAM_GRAM, corpus.CONTAM_MIN_HITS
+    em, er = corpus.EVAL_MOD, corpus.EVAL_REM
+    gram_tbl = (
+        f"SELECT doc_id, substring(text, i, {g}) AS g FROM documents, "
+        f"unnest(range(1, greatest(length(text) - {g - 1}, 1) + 1)) t(i)")
+    return (
+        f"WITH ev AS (SELECT DISTINCT g FROM ({gram_tbl} WHERE doc_id % {em} = {er}) e), "
+        f"tr AS ({gram_tbl} WHERE doc_id % {em} <> {er}) "
+        f"SELECT tr.doc_id AS doc_id, count(DISTINCT tr.g) AS n_hit_grams "
+        f"FROM tr JOIN ev USING (g) GROUP BY tr.doc_id "
+        f"HAVING count(DISTINCT tr.g) >= {mh}")
+
+
 def _contamination_words(spark, sf_dir):
     """Word-level decontamination — the 100 TB scale path: the generate
     step explodes one row per WORD position (vs per char position in
@@ -473,6 +508,23 @@ def _contamination_words(spark, sf_dir):
     return corpus.contamination_hits_words(_docs(spark, sf_dir))
 
 
+def _contamination_words_sql() -> str:
+    # word-level twin: same join shape over the shared word tokenization
+    wn, wmh = corpus.CONTAM_WORDS, corpus.CONTAM_WORDS_MIN_HITS
+    em, er = corpus.EVAL_MOD, corpus.EVAL_REM
+    wgram_tbl = (
+        f"SELECT doc_id, array_to_string(list_slice(ws, i, i + {wn - 1}), ' ') AS g "
+        f"FROM (SELECT doc_id, {corpus.words_duckdb_sql('text')} AS ws FROM documents) w, "
+        f"unnest(range(1, greatest(len(ws) - {wn - 1}, 1) + 1)) t(i)")
+    return (
+        f"WITH wg AS ({wgram_tbl}), "
+        f"ev AS (SELECT DISTINCT g FROM wg WHERE doc_id % {em} = {er}), "
+        f"tr AS (SELECT doc_id, g FROM wg WHERE doc_id % {em} <> {er}) "
+        f"SELECT tr.doc_id AS doc_id, count(DISTINCT tr.g) AS n_hit_grams "
+        f"FROM tr JOIN ev USING (g) GROUP BY tr.doc_id "
+        f"HAVING count(DISTINCT tr.g) >= {wmh}")
+
+
 def _tile_assign_s2(spark, sf_dir):
     """SPHERICAL cell assignment (S2-style cube-face gnomonic projection +
     Morton-in-face quadkey, operators/s2.py) graded end-to-end: the NumPy
@@ -480,7 +532,6 @@ def _tile_assign_s2(spark, sf_dir):
     DuckDB twin (s2.s2_cell_sql) — soundness rests on the measured bitwise
     identity of NumPy and DuckDB radians/sin/cos over the corpus
     (tests/test_s2.py guards it)."""
-    from .operators import s2
     from .sources.points import points_df
     return s2.assign_s2(points_df(spark, sf_dir)).select("pid", "cell_id")
 
@@ -518,6 +569,20 @@ def _events_window_stream_files(spark, sf_dir):
     return spark.createDataFrame(rows, schema)
 
 
+def _events_window_stream_files_sql() -> str:
+    # append-mode file sink: the batch windows the FINAL watermark
+    # (max event time - STREAM_FILES_WATERMARK_S) has passed — a window is
+    # emitted exactly when its end <= watermark (Spark holds the open tail
+    # back by design; tests/test_pages.py proves both inclusion
+    # directions).  The delay constant is shared with the Spark entry.
+    return (
+        f"WITH b AS ({_events_window_sql()}), "
+        "mx AS (SELECT max(epoch(ts)) AS m FROM events) "
+        "SELECT b.window_id AS window_id, b.event_type AS event_type, "
+        "b.cnt AS cnt, b.vmin AS vmin, b.vmax AS vmax "
+        f"FROM b, mx WHERE (b.window_id + 1) * 3600 <= mx.m - {STREAM_FILES_WATERMARK_S}")
+
+
 def _events_late_drop(spark, sf_dir):
     """Watermark LATE-DATA DROP witness (VERDICT r4 #4): the fixture
     replays poisoned copies of the earliest events in a SECOND micro-batch
@@ -545,10 +610,35 @@ def _vocab_topk(spark, sf_dir):
     return corpus.vocab_stats_topk(_docs(spark, sf_dir))
 
 
+def _vocab_topk_sql() -> str:
+    return (
+        "SELECT tok, count(*) AS cnt, count(DISTINCT doc_id) AS df FROM ("
+        "SELECT doc_id, unnest(string_split_regex(lower(text), '\\s+')) AS tok "
+        "FROM documents) q WHERE tok <> '' "
+        "GROUP BY tok ORDER BY cnt DESC, tok ASC LIMIT 100")
+
+
 def _mix_sample(spark, sf_dir):
     """Deterministic stratified training-mix sample (language x length
     band strata, md5-bucket keep rule — shuffle-free, RNG-free)."""
     return corpus.mix_sample(_docs(spark, sf_dir))
+
+
+def _mix_sample_sql() -> str:
+    return (
+        f"SELECT doc_id, lang, band, bucket FROM ("
+        f"SELECT doc_id, lang, {corpus.MIX_BAND_SQL} AS band, "
+        f"{corpus.mix_bucket_sql('h')} AS bucket, "
+        f"cast({corpus.MIX_RATE_SQL} as bigint) AS rate "
+        f"FROM (SELECT doc_id, lang, n_chars, md5(cast(doc_id as varchar)) AS h "
+        f"FROM documents) q) w WHERE bucket < rate")
+
+
+def _words_cte() -> str:
+    # shared word tokenization of the repetition/span twins (the DuckDB
+    # render of corpus._words(): NULL-coalesced, explicit-class stripped
+    # and split — see corpus.WS_CLS for why not \s)
+    return f"w AS (SELECT doc_id, {corpus.words_duckdb_sql('text')} AS ws FROM documents)"
 
 
 def _repetition_stats(spark, sf_dir):
@@ -557,16 +647,40 @@ def _repetition_stats(spark, sf_dir):
     return corpus.repetition_stats(_docs(spark, sf_dir), n=2)
 
 
+def _repetition_stats_sql() -> str:
+    return (
+        f"WITH {_words_cte()}, "
+        f"gt AS (SELECT doc_id, array_to_string(list_slice(ws, i, i + 1), ' ') AS g "
+        f"FROM w, unnest(range(1, greatest(len(ws) - 1, 1) + 1)) t(i)), "
+        f"c AS (SELECT doc_id, g, count(*) AS c FROM gt GROUP BY doc_id, g) "
+        f"SELECT doc_id, cast(sum(c) as bigint) AS n_grams, "
+        f"cast(max(c) as bigint) AS top_gram_cnt, "
+        f"cast(sum(CASE WHEN c >= 2 THEN c ELSE 0 END) as bigint) AS dup_gram_cnt "
+        f"FROM c GROUP BY doc_id")
+
+
 def _span_dedup(spark, sf_dir):
     """Cross-document span dedup signals: 16-word non-overlapping chunk
     md5s, corpus-wide occurrence window on the digest, per-doc dup counts."""
     return corpus.span_dedup_stats(_docs(spark, sf_dir))
 
 
+def _span_dedup_sql() -> str:
+    sw = corpus.SPAN_W
+    return (
+        f"WITH {_words_cte()}, "
+        f"ch AS (SELECT doc_id, md5(array_to_string("
+        f"list_slice(ws, k * {sw} + 1, k * {sw} + {sw}), ' ')) AS gh "
+        f"FROM w, unnest(range(0, greatest((len(ws) + {sw - 1}) // {sw}, 1))) t(k)), "
+        f"fl AS (SELECT doc_id, count(*) OVER (PARTITION BY gh) AS cg FROM ch) "
+        f"SELECT doc_id, cast(count(*) as bigint) AS n_chunks, "
+        f"cast(sum(CASE WHEN cg > 1 THEN 1 ELSE 0 END) as bigint) AS n_dup_chunks "
+        f"FROM fl GROUP BY doc_id")
+
+
 def _dup_stats(spark, sf_dir):
     """P7 duplicate statistics (GetAllTheStatistics, src/main.cpp:257-294):
     total, distinct x, distinct y, distinct (x,y)."""
-    from .engine import SpatialEngine
     eng = SpatialEngine(spark, sf_dir)
     return eng.points().agg(
         F.count(F.lit(1)).alias("n"),
@@ -577,7 +691,6 @@ def _dup_stats(spark, sf_dir):
 
 def _bbox(spark, sf_dir):
     """P3 bounding-box aggregate (GetBoundingBox, Utils.hpp:59-82)."""
-    from .engine import SpatialEngine
     eng = SpatialEngine(spark, sf_dir)
     return eng.points().agg(
         F.min("x").alias("minx"), F.min("y").alias("miny"),
@@ -587,7 +700,6 @@ def _bbox(spark, sf_dir):
 def _cells_touched(spark, sf_dir):
     """Q6 index-probe instrumentation (IndexLookup, SURVEY.md §2.4): number
     of fixed-grid cells each query rectangle routes to."""
-    from .engine import SpatialEngine
     eng = SpatialEngine(spark, sf_dir, scheme="fixed_grid")
     rects = _rects()
     return local_frame(spark, {
@@ -596,11 +708,18 @@ def _cells_touched(spark, sf_dir):
                   for (_, fx, fy, tx, ty) in rects]}, "query_id bigint, cells bigint")
 
 
+def _cells_touched_sql() -> str:
+    lo, hi = _fg_cell_sql("t.fx"), _fg_cell_sql("t.tx")
+    return (
+        f"SELECT t.query_id AS query_id, "
+        f"(case when t.tx < t.fx then 0 else {hi} - {lo} + 1 end) AS cells "
+        f"FROM {_rect_values()}")
+
+
 def _points_decimated(spark, sf_dir):
     """P6 modulo decimation (FilterPoints, src/main.cpp:296-309) as a real
     operator: keep every Nth point by the stable pid (the reference keeps
     every Nth by file position; pid is the distributed-stable analog)."""
-    from .engine import SpatialEngine
     eng = SpatialEngine(spark, sf_dir)
     return eng.points().where(F.col("pid") % 10 == 0).select("pid", "x", "y")
 
@@ -612,7 +731,6 @@ def _scan_overhead(spark, sf_dir):
     candidate run the in-cell probe walks), ``wrongly_scanned`` = scanned
     points failing the x predicate.  Pure JVM join/agg over the assigned
     points — the probe's work, measured declaratively."""
-    from .engine import SpatialEngine
     eng = SpatialEngine(spark, sf_dir, scheme="fixed_grid")
     p = eng.partitioner
     rows = []
@@ -638,6 +756,20 @@ def _scan_overhead(spark, sf_dir):
                     F.coalesce("scanned", F.lit(0)).cast("bigint").alias("scanned"),
                     (F.coalesce("scanned", F.lit(0)) - F.coalesce("hits", F.lit(0)))
                     .cast("bigint").alias("wrongly_scanned")))
+
+
+def _scan_overhead_sql() -> str:
+    cell, lo, hi = _fg_cell_sql("p.x"), _fg_cell_sql("t.fx"), _fg_cell_sql("t.tx")
+    in_cells = f"{cell} >= {lo} AND {cell} <= {hi}"
+    in_y = "p.y >= t.fy AND p.y <= t.ty"
+    in_x = "p.x >= t.fx AND p.x <= t.tx"
+    return (
+        f"WITH {POINTS_CTE} "
+        f"SELECT t.query_id AS query_id, "
+        f"count(case when {in_cells} AND {in_y} then 1 end) AS scanned, "
+        f"count(case when {in_cells} AND {in_y} then 1 end) - "
+        f"count(case when {in_cells} AND {in_y} AND {in_x} then 1 end) AS wrongly_scanned "
+        f"FROM {_rect_values()} CROSS JOIN points p GROUP BY t.query_id")
 
 
 _FILE_WORKLOAD_DIRS: dict[str, str] = {}
@@ -696,6 +828,17 @@ def _spatial_from_files(spark, sf_dir):
     return rc.unionByName(dc).unionByName(pc)
 
 
+def _spatial_from_files_sql() -> str:
+    # the parsed workloads round-trip to the generator tuples exactly
+    # (repr floats), so the three in-memory oracles compose
+    return (
+        f"SELECT 'range' AS kind, query_id AS qid, cnt AS val FROM ({_range_count_sql()}) "
+        "UNION ALL "
+        f"SELECT 'distance' AS kind, query_id AS qid, cnt AS val FROM ({_distance_count_sql()}) "
+        "UNION ALL "
+        f"SELECT 'pip' AS kind, polygon_id AS qid, cnt AS val FROM ({_pip_count_sql()})")
+
+
 #: Radius for the table x table distance-join entry: 25 km pairs 187
 #: derived points at sf0.001 and ~23k at sf0.01 — big enough to exercise
 #: every blocking band, small enough for the O(n^2)-free DuckDB twin.
@@ -719,15 +862,10 @@ def _distance_join_sql() -> str:
     # The lat prefilter is mathematically implied by the radius
     # (haversine >= R * |delta lat|), rendered with the same SAFETY
     # inflation as the engine's band height; it exists so DuckDB plans an
-    # IEJoin instead of a full cross product.  The haversine expression
-    # mirrors probes.haversine_m exactly (same parity basis as the graded
-    # distance_count/materialize twins).
+    # IEJoin instead of a full cross product.
     from .operators.distjoin import band_deg
     bd = flit(band_deg(DISTANCE_JOIN_RADIUS_M))
-    pi = "pi()"
-    hav = haversine_m_sql(
-        f"(l.x / cast(180 as double)) * {pi}", f"(l.y / cast(180 as double)) * {pi}",
-        f"(r.x / cast(180 as double)) * {pi}", f"(r.y / cast(180 as double)) * {pi}")
+    hav = _hav_deg_sql("l.x", "l.y", "r.x", "r.y")
     return (
         f"WITH {POINTS_CTE} "
         f"SELECT l.pid AS l_pid, r.pid AS r_pid "
@@ -759,10 +897,7 @@ def _knn_join(spark, sf_dir):
 def _knn_join_sql() -> str:
     from .operators.distjoin import band_deg
     bd = flit(band_deg(KNN_JOIN_RADIUS_M))
-    pi = "pi()"
-    hav = haversine_m_sql(
-        f"(l.x / cast(180 as double)) * {pi}", f"(l.y / cast(180 as double)) * {pi}",
-        f"(r.x / cast(180 as double)) * {pi}", f"(r.y / cast(180 as double)) * {pi}")
+    hav = _hav_deg_sql("l.x", "l.y", "r.x", "r.y")
     return (
         f"WITH {POINTS_CTE} "
         f"SELECT l_pid, r_pid FROM ("
@@ -782,147 +917,6 @@ def _rolling_fp(spark, sf_dir):
     return _docs(spark, sf_dir).select(
         "doc_id",
         F.expr(tx.rolling_fingerprint_spark_expr("text")).cast("bigint").alias("fp"))
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Insertion order is the driver's GRADING order (it grades the FIRST
-    50 keys); everything below the explicit boundary comment already has a
-    green driver CORRECTNESS row from an earlier round.
-
-    Round-5 rotation, stated exactly.  TEN entries enter the window:
-    four NEW keys with no driver row — ``events_late_drop_stream`` (the
-    watermark late-data-drop witness, VERDICT r4 #4),
-    ``multimodal_frame_plan`` (the stub-format sampling plan, split out
-    of the old ``multimodal_frames`` which is now the REAL AVI frame
-    decode, VERDICT r4 #7), and the round-5 table x table spatial joins
-    ``distance_join_pairs`` / ``knn_join_radius``
-    (operators/distjoin.py; property-tested vs an O(n^2) oracle in
-    tests/test_distjoin.py, graded here so the new capabilities carry a
-    driver row) — and six entries whose only driver evidence was round
-    2, rotated back through per VERDICT r4 #5 (free greens):
-    ``dup_stats``, ``bbox``, ``points_decimated``,
-    ``scan_overhead_fixed_grid``, ``range_count_fixed_grid_salted``,
-    ``events_json_kv``.  Exactly ten round-4-green entries leave to
-    keep the window at 50, each with an in-window cousin covering the
-    same machinery: ``range_materialize`` (same cell-pruning + refine
-    machinery as in-window ``range_count_fixed_grid`` /
-    ``range_count_tiled``, emitting rows instead of counts),
-    ``polygon_tiles`` (polygon->tile-set = the ``cells_for_rect``
-    machinery graded directly by in-window ``cells_touched_fixed_grid``
-    plus the six ``tile_assign_*``), ``contamination_hits`` (char-gram variant; the scale
-    path ``contamination_hits_words`` stays), ``events_window_stats_stream``
-    (memory-sink bridge; the file-sink twin AND the new late-drop witness
-    exercise the same aggregation + watermark harder),
-    ``embedding_neardup_pairs`` (exact all-pairs twin; the graded scale
-    path ``embedding_neardup_lsh`` stays), ``ann_cosine_topk`` (exact
-    twin; ``lsh_ann_topk`` + ``ivf_ann_topk`` stay),
-    ``ngram_jaccard_pairs`` (same candidate+Jaccard-refine machinery as
-    in-window ``minhash_dedup_pairs``), ``distance_materialize_tiled``
-    and ``pip_pairs_tiled`` (tiled variants; ``range_count_tiled`` +
-    ``knn_tiled`` keep the tiled engine in-window and ``distance_count``
-    / ``pip_count`` keep the probe kernels), ``morton_rollup``
-    (``tile_assign_morton`` + ``polygon_tiles`` keep the Morton keys and
-    tile outputs).  Note ``multimodal_features`` / ``multimodal_frames``
-    changed SHAPE this round (real AVI corpus) and stay in-window for
-    fresh grading.  Every other key keeps its relative order.
-
-    Still r2-only after this rotation (each with its in-window cousin):
-    ``range_count_adaptive_grid``/``kd_tree`` (same probe path as the
-    graded fixed_grid range counts + their tile_assign twins),
-    ``simhash_md5_table`` (built inside in-window
-    ``simhash_neardup_pairs``), ``point_lookup_quadtree``
-    (``point_lookup``), ``distance_materialize`` (``distance_count``),
-    ``pip_pairs`` (``pip_count``).
-
-    Round-4 rotation, for the audit trail: ``contamination_hits_words``
-    / ``tile_assign_s2`` / ``events_window_stats_stream_files`` /
-    ``events_dedup_stream`` entered at positions 1-4;
-    ``multimodal_resize`` / ``range_count_fixed_grid_binsearch_x`` /
-    ``fingerprint_md5`` / ``events_window_stats`` left (all r3-green,
-    cousins in-window).  Rounds 2 -> 3 displaced the per-scheme
-    ``range_count_*`` variants beyond fixed_grid and the r2 batch
-    onboarding set (all green in round 2)."""
-    out: dict[str, Callable] = {}
-    # --- round-5 entries (no driver row yet -> lead the window) ---
-    out["events_late_drop_stream"] = _events_late_drop
-    out["multimodal_frame_plan"] = _multimodal_frame_plan
-    out["distance_join_pairs"] = _distance_join_pairs
-    out["knn_join_radius"] = _knn_join
-    # --- r2-green entries rotated back in (VERDICT r4 #5) ---
-    out["dup_stats"] = _dup_stats
-    out["bbox"] = _bbox
-    out["points_decimated"] = _points_decimated
-    out["scan_overhead_fixed_grid"] = _scan_overhead
-    out["range_count_fixed_grid_salted"] = _range_count_salted
-    out["events_json_kv"] = _events_json_kv
-    # --- entries first graded in round 4 ---
-    out["contamination_hits_words"] = _contamination_words
-    out["tile_assign_s2"] = _tile_assign_s2
-    out["events_window_stats_stream_files"] = _events_window_stream_files
-    out["events_dedup_stream"] = _events_dedup_stream
-    # --- entries first graded in round 3 (multimodal re-graded: AVI) ---
-    out["ivf_ann_topk"] = _ivf_ann
-    out["embedding_neardup_lsh"] = _emb_neardup_lsh
-    out["multimodal_features"] = _multimodal
-    out["multimodal_frames"] = _multimodal_frames
-    out["rolling_fingerprint"] = _rolling_fp
-    out["spatial_from_files"] = _spatial_from_files
-    # --- spatial core ---
-    out["range_count_fixed_grid"] = _mk_range_count("fixed_grid", "learned")
-    out["range_count_fixed_grid_binsearch"] = _mk_range_count("fixed_grid", "binsearch")
-    for scheme in SCHEMES:
-        out[f"tile_assign_{scheme}"] = _mk_tile_assign(scheme)
-    out["point_lookup"] = _point_lookup
-    out["distance_count"] = _distance_count
-    out["range_count_tiled"] = _range_count_tiled
-    out["knn_tiled"] = _knn_tiled
-    out["pip_count"] = _pip_count
-    out["knn"] = _knn
-    # --- training-data / streaming surface ---
-    out["dedup_exact"] = _dedup_exact
-    out["corpus_clean_keeplist"] = _corpus_clean_keeplist
-    out["token_count"] = _token_count
-    out["quality_score"] = _quality_score
-    out["langid"] = _langid
-    out["events_sessionize"] = _events_sessionize
-    out["vocab_topk"] = _vocab_topk
-    out["mix_sample"] = _mix_sample
-    out["repetition_stats"] = _repetition_stats
-    out["span_dedup_stats"] = _span_dedup
-    out["pip_count_stream"] = _pip_count_stream
-    out["cells_touched_fixed_grid"] = _cells_touched
-    out["minhash_dedup_pairs"] = _minhash_pairs
-    out["simhash_neardup_pairs"] = _simhash_neardup
-    out["neardup_clusters"] = _neardup_clusters
-    out["lsh_ann_topk"] = _lsh_ann
-    # ---------------- grading-window boundary (position 50) ----------------
-    # everything below already has a green round-2/3/4 CORRECTNESS row
-    # (the most redundant green slots — see the docstring for the
-    # per-entry displacement rationale)
-    out["range_materialize"] = _range_materialize          # green r4
-    out["polygon_tiles"] = _polygon_tiles                  # green r4
-    out["contamination_hits"] = _contamination            # green r4
-    out["events_window_stats_stream"] = _events_window_stream  # green r4
-    out["embedding_neardup_pairs"] = _emb_neardup          # green r4
-    out["ann_cosine_topk"] = _ann_topk                     # green r4
-    out["ngram_jaccard_pairs"] = _ngram_jaccard            # green r4
-    out["distance_materialize_tiled"] = _distance_materialize_tiled  # green r4
-    out["pip_pairs_tiled"] = _pip_pairs_tiled              # green r4
-    out["morton_rollup"] = _morton_rollup                  # green r4
-    out["multimodal_resize"] = _multimodal_resize          # green r3
-    out["range_count_fixed_grid_binsearch_x"] = _mk_range_count(
-        "fixed_grid", "binsearch_x")                       # green r3 (dead-in-ref C3)
-    out["fingerprint_md5"] = _fingerprint                  # green r3
-    out["events_window_stats"] = _events_window            # green r3 (stream twin in-window)
-    for scheme in SCHEMES:
-        if scheme != "fixed_grid":
-            out[f"range_count_{scheme}"] = _mk_range_count(scheme, "learned")
-    out["range_count_tiled_str"] = _range_count_tiled_str
-    out["simhash_md5_table"] = _simhash_md5
-    out["point_lookup_quadtree"] = _point_lookup_quadtree
-    out["distance_materialize"] = _distance_materialize
-    out["pip_pairs"] = _pip_pairs
-    return out
 
 
 # -------------------------------------------------------------- oracles ---
@@ -960,12 +954,16 @@ def _point_lookup_sql() -> str:
     )
 
 
+def _hav_deg_sql(x1: str, y1: str, x2: str, y2: str) -> str:
+    """Haversine metres between two degree-valued points, mirroring
+    probes.haversine_m exactly (the one parity basis of every distance
+    twin)."""
+    return haversine_m_sql(*(f"({c} / cast(180 as double)) * pi()" for c in (x1, y1, x2, y2)))
+
+
 def _distance_count_sql() -> str:
     vals = wl.values_clause(_circles(), ["query_id", "qx", "qy", "r"])
-    pi = "pi()"
-    hav = haversine_m_sql(
-        f"(t.qx / cast(180 as double)) * {pi}", f"(t.qy / cast(180 as double)) * {pi}",
-        f"(p.x / cast(180 as double)) * {pi}", f"(p.y / cast(180 as double)) * {pi}")
+    hav = _hav_deg_sql("t.qx", "t.qy", "p.x", "p.y")
     return (
         f"WITH {POINTS_CTE} "
         f"SELECT t.query_id AS query_id, "
@@ -977,10 +975,7 @@ def _distance_count_sql() -> str:
 
 def _distance_materialize_sql() -> str:
     vals = wl.values_clause(_circles(), ["query_id", "qx", "qy", "r"])
-    pi = "pi()"
-    hav = haversine_m_sql(
-        f"(t.qx / cast(180 as double)) * {pi}", f"(t.qy / cast(180 as double)) * {pi}",
-        f"(p.x / cast(180 as double)) * {pi}", f"(p.y / cast(180 as double)) * {pi}")
+    hav = _hav_deg_sql("t.qx", "t.qy", "p.x", "p.y")
     return (
         f"WITH {POINTS_CTE} "
         f"SELECT t.query_id AS query_id, p.pid AS pid "
@@ -1084,14 +1079,19 @@ def _oracle_partitioner(scheme: str):
     return _PART_CACHE[scheme]
 
 
-def _polygon_tiles_sql() -> str:
+def _fg_cell_sql(col: str) -> str:
+    """The oracle fixed grid's clamped cell id of an x-valued column."""
     p = _oracle_partitioner("fixed_grid")
+    return (f"least(greatest(cast(floor(({col} - {flit(p.xmin)}) / {flit(p.step)}) as bigint), 0), "
+            f"{p.n_cells - 1})")
+
+
+def _polygon_tiles_sql() -> str:
     rows = []
     for gid, (vx, vy) in _polys().items():
         rows.append((gid, min(vx), max(vx)))
     vals = wl.values_clause(rows, ["polygon_id", "bfx", "btx"])
-    lo = f"least(greatest(cast(floor((t.bfx - {flit(p.xmin)}) / {flit(p.step)}) as bigint), 0), {p.n_cells - 1})"
-    hi = f"least(greatest(cast(floor((t.btx - {flit(p.xmin)}) / {flit(p.step)}) as bigint), 0), {p.n_cells - 1})"
+    lo, hi = _fg_cell_sql("t.bfx"), _fg_cell_sql("t.btx")
     return (
         f"SELECT t.polygon_id AS polygon_id, unnest(generate_series({lo}, {hi})) AS cell_id "
         f"FROM {vals}"
@@ -1187,7 +1187,6 @@ def _duck_bucket_expr(col: str, planes: list[list[float]]) -> str:
     return f"cast({terms} as bigint)"
 
 
-
 def _duck_cos(e1: str, e2: str) -> str:
     """Guarded cosine, the DuckDB render of similarity._cosine_guarded: the
     SAME fold/sqrt/divide arithmetic (bit-identical ranks) with the same
@@ -1199,19 +1198,25 @@ def _duck_cos(e1: str, e2: str) -> str:
             f"ELSE -2 END)")
 
 
+# the ANN twins' query set (_annq) and their shared top-k tail over `scored`
+_ANN_Q_CTE = (f"q AS (SELECT vec_id AS query_id, cast(embedding AS double[]) AS qv "
+              f"  FROM embeddings ORDER BY vec_id LIMIT {_ANN_NQ})")
+_ANN_TOPK = (
+    "ranked AS (SELECT query_id, vec_id, "
+    "  row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rnk FROM scored) "
+    f"SELECT query_id, cast(rnk AS bigint) AS rnk, vec_id FROM ranked WHERE rnk <= {_ANN_K}")
+
+
 def _lsh_ann_sql() -> str:
     planes = similarity._hyperplanes(64, 8, 8128).tolist()
     return (
         "WITH eb AS (SELECT vec_id, cast(embedding AS double[]) AS e FROM embeddings), "
         f"ebb AS (SELECT vec_id, e, {_duck_bucket_expr('e', planes)} AS bucket FROM eb), "
-        f"q AS (SELECT vec_id AS query_id, cast(embedding AS double[]) AS qv "
-        f"  FROM embeddings ORDER BY vec_id LIMIT {_ANN_NQ}), "
+        f"{_ANN_Q_CTE}, "
         f"qb AS (SELECT query_id, qv, {_duck_bucket_expr('qv', planes)} AS bucket FROM q), "
         "scored AS (SELECT qb.query_id, ebb.vec_id, "
         f"  {_duck_cos('ebb.e', 'qb.qv')} AS cos FROM ebb JOIN qb USING (bucket)), "
-        "ranked AS (SELECT query_id, vec_id, "
-        "  row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rnk FROM scored) "
-        f"SELECT query_id, cast(rnk AS bigint) AS rnk, vec_id FROM ranked WHERE rnk <= {_ANN_K}")
+        + _ANN_TOPK)
 
 
 def _emb_neardup_lsh_sql() -> str:
@@ -1233,8 +1238,7 @@ def _ivf_ann_sql(n_centroids: int = 16, n_probe: int = 4) -> str:
         f"sc AS (SELECT vec_id, e, {scores} AS scores FROM eb), "
         "el AS (SELECT vec_id, e, "
         "  cast(list_position(scores, list_aggregate(scores, 'max')) - 1 as bigint) AS list_id FROM sc), "
-        f"q AS (SELECT vec_id AS query_id, cast(embedding AS double[]) AS qv "
-        f"  FROM embeddings ORDER BY vec_id LIMIT {_ANN_NQ}), "
+        f"{_ANN_Q_CTE}, "
         f"qs AS (SELECT query_id, qv, {qscores} AS scores FROM q), "
         f"qj AS (SELECT query_id, qv, t.c AS c, scores[t.c + 1] AS s "
         f"  FROM qs, LATERAL unnest(generate_series(0, {n_centroids - 1})) AS t(c)), "
@@ -1243,311 +1247,168 @@ def _ivf_ann_sql(n_centroids: int = 16, n_probe: int = 4) -> str:
         f"  WHERE r <= {n_probe}), "
         "scored AS (SELECT ql.query_id, el.vec_id, "
         f"  {_duck_cos('el.e', 'ql.qv')} AS cos FROM el JOIN ql USING (list_id)), "
-        "ranked AS (SELECT query_id, vec_id, "
-        "  row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rnk FROM scored) "
-        f"SELECT query_id, cast(rnk AS bigint) AS rnk, vec_id FROM ranked WHERE rnk <= {_ANN_K}")
+        + _ANN_TOPK)
 
 
 def _ann_sql() -> str:
     return (
-        f"WITH q AS (SELECT vec_id AS query_id, cast(embedding AS double[]) AS qv "
-        f"  FROM embeddings ORDER BY vec_id LIMIT {_ANN_NQ}), "
+        f"WITH {_ANN_Q_CTE}, "
         f"scored AS (SELECT q.query_id, e.vec_id, "
         f"  {_duck_cos('cast(e.embedding AS double[])', 'q.qv')} AS cos "
         f"  FROM embeddings e CROSS JOIN q), "
-        f"ranked AS (SELECT query_id, vec_id, "
-        f"  row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rnk FROM scored) "
-        f"SELECT query_id, cast(rnk AS bigint) AS rnk, vec_id FROM ranked WHERE rnk <= {_ANN_K}"
-    )
+        + _ANN_TOPK)
 
 
-def oracle_sql() -> dict[str, str]:
-    out: dict[str, str] = {}
-    rc = _range_count_sql()
-    for scheme in SCHEMES:
-        out[f"range_count_{scheme}"] = rc
-        out[f"tile_assign_{scheme}"] = _tile_assign_sql(scheme)
-    out["range_count_fixed_grid_binsearch"] = rc
-    out["range_count_fixed_grid_binsearch_x"] = rc
-    # spherical S2-style assignment: full-trig DuckDB twin of the NumPy
-    # kernel (sound because NumPy/DuckDB radians+sin+cos are measured
-    # bitwise-identical over the corpus — tests/test_s2.py guards it)
-    from .operators import s2 as _s2
-    out["tile_assign_s2"] = (
-        f"WITH {POINTS_CTE} SELECT p.pid AS pid, "
-        f"{_s2.s2_cell_sql('p.x', 'p.y')} AS cell_id FROM points p")
-    out["range_materialize"] = _range_materialize_sql()
-    out["point_lookup"] = _point_lookup_sql()
-    out["point_lookup_quadtree"] = _point_lookup_sql()
-    out["range_count_fixed_grid_salted"] = rc
-    out["range_count_tiled"] = rc
-    out["range_count_tiled_str"] = rc
-    out["knn_tiled"] = _knn_sql()
-    out["distance_materialize_tiled"] = _distance_materialize_sql()
-    out["pip_pairs_tiled"] = _pip_pairs_sql()
-    out["distance_count"] = _distance_count_sql()
-    out["distance_materialize"] = _distance_materialize_sql()
-    out["pip_count"] = _pip_count_sql()
-    # streaming twin: complete-mode over the bounded source == batch join
-    out["pip_count_stream"] = _pip_count_sql()
-    out["pip_pairs"] = _pip_pairs_sql()
-    out["knn"] = _knn_sql()
-    out["polygon_tiles"] = _polygon_tiles_sql()
-    morton_cell = _oracle_partitioner("morton").assign_sql("x", "y")
-    out["morton_rollup"] = (
-        f"WITH {POINTS_CTE}, a AS (SELECT ({morton_cell}) AS cell_id, x, y FROM points) "
-        "SELECT cell_id // 4 AS parent_id, count(*) AS cnt, "
-        "min(x) AS minx, max(x) AS maxx, min(y) AS miny, max(y) AS maxy "
-        "FROM a GROUP BY cell_id // 4")
-    # md5 grouping mirrors dedup.dedup_exact's digest-keyed shuffle
-    out["dedup_exact"] = ("SELECT min(doc_id) AS rep_doc_id, count(*) AS n_dups "
-                          "FROM documents GROUP BY md5(text)")
-    out["corpus_clean_keeplist"] = (
-        "WITH rep AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)) "
-        "SELECT d.doc_id AS doc_id FROM documents d JOIN rep USING (doc_id) "
-        f"WHERE ({tx.langid_sql('d.text')}) = 'en' "
-        f"AND ({tx.token_count_sql('d.text')}) BETWEEN 20 AND 2000 "
-        f"AND ({tx.quality_score_sql('d.text')}) >= {flit(25.0)}")
-    out["token_count"] = (
-        f"SELECT doc_id, cast({tx.token_count_sql('text')} as bigint) AS n_tokens, "
-        f"cast({tx.token_count_bpe_duckdb_sql('text')} as bigint) AS n_bpe_tokens "
-        "FROM documents")
-    out["quality_score"] = f"SELECT doc_id, {tx.quality_score_sql('text')} AS score FROM documents"
-    out["langid"] = f"SELECT doc_id, {tx.langid_sql('text')} AS lang_pred FROM documents"
-    out["fingerprint_md5"] = f"SELECT doc_id, {tx.fingerprint_md5_sql('text')} AS fp FROM documents"
-    out["ann_cosine_topk"] = _ann_sql()
-    out["embedding_neardup_pairs"] = (
-        f"WITH a AS (SELECT vec_id, cast(embedding AS double[]) AS e FROM embeddings) "
-        f"SELECT x.vec_id AS vec_id_a, y.vec_id AS vec_id_b "
-        f"FROM a x JOIN a y ON x.vec_id < y.vec_id "
-        f"WHERE {_duck_cos('x.e', 'y.e')} >= {flit(_NEARDUP_T)}")
-    g, mh = corpus.CONTAM_GRAM, corpus.CONTAM_MIN_HITS
-    em, er = corpus.EVAL_MOD, corpus.EVAL_REM
-    gram_tbl = (
-        f"SELECT doc_id, substring(text, i, {g}) AS g FROM documents, "
-        f"unnest(range(1, greatest(length(text) - {g - 1}, 1) + 1)) t(i)")
-    out["contamination_hits"] = (
-        f"WITH ev AS (SELECT DISTINCT g FROM ({gram_tbl} WHERE doc_id % {em} = {er}) e), "
-        f"tr AS ({gram_tbl} WHERE doc_id % {em} <> {er}) "
-        f"SELECT tr.doc_id AS doc_id, count(DISTINCT tr.g) AS n_hit_grams "
-        f"FROM tr JOIN ev USING (g) GROUP BY tr.doc_id "
-        f"HAVING count(DISTINCT tr.g) >= {mh}")
-    # word-level twin: same join shape over the shared word tokenization
-    wn, wmh = corpus.CONTAM_WORDS, corpus.CONTAM_WORDS_MIN_HITS
-    wgram_tbl = (
-        f"SELECT doc_id, array_to_string(list_slice(ws, i, i + {wn - 1}), ' ') AS g "
-        f"FROM (SELECT doc_id, {corpus.words_duckdb_sql('text')} AS ws FROM documents) w, "
-        f"unnest(range(1, greatest(len(ws) - {wn - 1}, 1) + 1)) t(i)")
-    out["contamination_hits_words"] = (
-        f"WITH wg AS ({wgram_tbl}), "
-        f"ev AS (SELECT DISTINCT g FROM wg WHERE doc_id % {em} = {er}), "
-        f"tr AS (SELECT doc_id, g FROM wg WHERE doc_id % {em} <> {er}) "
-        f"SELECT tr.doc_id AS doc_id, count(DISTINCT tr.g) AS n_hit_grams "
-        f"FROM tr JOIN ev USING (g) GROUP BY tr.doc_id "
-        f"HAVING count(DISTINCT tr.g) >= {wmh}")
-    out["vocab_topk"] = (
-        "SELECT tok, count(*) AS cnt, count(DISTINCT doc_id) AS df FROM ("
-        "SELECT doc_id, unnest(string_split_regex(lower(text), '\\s+')) AS tok "
-        "FROM documents) q WHERE tok <> '' "
-        "GROUP BY tok ORDER BY cnt DESC, tok ASC LIMIT 100")
-    out["mix_sample"] = (
-        f"SELECT doc_id, lang, band, bucket FROM ("
-        f"SELECT doc_id, lang, {corpus.MIX_BAND_SQL} AS band, "
-        f"{corpus.mix_bucket_sql('h')} AS bucket, "
-        f"cast({corpus.MIX_RATE_SQL} as bigint) AS rate "
-        f"FROM (SELECT doc_id, lang, n_chars, md5(cast(doc_id as varchar)) AS h "
-        f"FROM documents) q) w WHERE bucket < rate")
-    # shared word tokenization of the repetition/span twins (the DuckDB
-    # render of corpus._words(): NULL-coalesced, explicit-class stripped
-    # and split — see corpus.WS_CLS for why not \s)
-    words_cte = (f"w AS (SELECT doc_id, {corpus.words_duckdb_sql('text')} AS ws "
-                 f"FROM documents)")
-    out["repetition_stats"] = (
-        f"WITH {words_cte}, "
-        f"gt AS (SELECT doc_id, array_to_string(list_slice(ws, i, i + 1), ' ') AS g "
-        f"FROM w, unnest(range(1, greatest(len(ws) - 1, 1) + 1)) t(i)), "
-        f"c AS (SELECT doc_id, g, count(*) AS c FROM gt GROUP BY doc_id, g) "
-        f"SELECT doc_id, cast(sum(c) as bigint) AS n_grams, "
-        f"cast(max(c) as bigint) AS top_gram_cnt, "
-        f"cast(sum(CASE WHEN c >= 2 THEN c ELSE 0 END) as bigint) AS dup_gram_cnt "
-        f"FROM c GROUP BY doc_id")
-    sw = corpus.SPAN_W
-    out["span_dedup_stats"] = (
-        f"WITH {words_cte}, "
-        f"ch AS (SELECT doc_id, md5(array_to_string("
-        f"list_slice(ws, k * {sw} + 1, k * {sw} + {sw}), ' ')) AS gh "
-        f"FROM w, unnest(range(0, greatest((len(ws) + {sw - 1}) // {sw}, 1))) t(k)), "
-        f"fl AS (SELECT doc_id, count(*) OVER (PARTITION BY gh) AS cg FROM ch) "
-        f"SELECT doc_id, cast(count(*) as bigint) AS n_chunks, "
-        f"cast(sum(CASE WHEN cg > 1 THEN 1 ELSE 0 END) as bigint) AS n_dup_chunks "
-        f"FROM fl GROUP BY doc_id")
-    out["dup_stats"] = (
-        f"WITH {POINTS_CTE} SELECT count(*) AS n, count(distinct x) AS n_x, "
-        f"count(distinct y) AS n_y, count(distinct (x, y)) AS n_xy FROM points")
-    out["bbox"] = (
-        f"WITH {POINTS_CTE} SELECT min(x) AS minx, min(y) AS miny, "
-        f"max(x) AS maxx, max(y) AS maxy FROM points")
-    fg = _oracle_partitioner("fixed_grid")
-    lo = f"least(greatest(cast(floor((t.fx - {flit(fg.xmin)}) / {flit(fg.step)}) as bigint), 0), {fg.n_cells - 1})"
-    hi = f"least(greatest(cast(floor((t.tx - {flit(fg.xmin)}) / {flit(fg.step)}) as bigint), 0), {fg.n_cells - 1})"
-    out["cells_touched_fixed_grid"] = (
-        f"SELECT t.query_id AS query_id, "
-        f"(case when t.tx < t.fx then 0 else {hi} - {lo} + 1 end) AS cells "
-        f"FROM {_rect_values()}")
-    cell = (f"least(greatest(cast(floor((p.x - {flit(fg.xmin)}) / {flit(fg.step)}) as bigint), 0), "
-            f"{fg.n_cells - 1})")
-    in_cells = f"{cell} >= {lo} AND {cell} <= {hi}"
-    in_y = "p.y >= t.fy AND p.y <= t.ty"
-    in_x = "p.x >= t.fx AND p.x <= t.tx"
-    out["scan_overhead_fixed_grid"] = (
-        f"WITH {POINTS_CTE} "
-        f"SELECT t.query_id AS query_id, "
-        f"count(case when {in_cells} AND {in_y} then 1 end) AS scanned, "
-        f"count(case when {in_cells} AND {in_y} then 1 end) - "
-        f"count(case when {in_cells} AND {in_y} AND {in_x} then 1 end) AS wrongly_scanned "
-        f"FROM {_rect_values()} CROSS JOIN points p GROUP BY t.query_id")
-    out["points_decimated"] = (
-        f"WITH {POINTS_CTE} SELECT pid, x, y FROM points WHERE pid % 10 = 0")
-    out["multimodal_resize"] = (
-        "WITH m AS (SELECT doc_id, cast(doc_id % 64 + 1 as int) AS w, "
-        "cast(doc_id % 48 + 1 as int) AS h FROM documents WHERE doc_id % 3 = 0), "
-        "s AS (SELECT doc_id, w, h, "
-        "least(cast(1 as double), cast(32 as double) / greatest(w, h)) AS sc FROM m) "
-        "SELECT doc_id, cast(greatest(1, floor(w * sc)) as int) AS out_w, "
-        "cast(greatest(1, floor(h * sc)) as int) AS out_h FROM s")
-    # closed forms of the synthetic media parameters (multimodal.
-    # _media_params); the Spark side reaches the same numbers by DECODING
-    # the real BMP/WAV/AVI payloads it generated.  AVI parameters:
-    # n = d%4+1 frames of (d%8+16) x (d%6+12), frame f solid color
-    # (avi_frame_rgb); byte size is multimodal.avi_size_bytes's closed
-    # form; the whole-video mean is an exact integer sum / one division,
-    # so it rounds identically to NumPy's .mean() over the decoded array.
-    _avi_w, _avi_h, _avi_n = "(doc_id % 8 + 16)", "(doc_id % 6 + 12)", "(doc_id % 4 + 1)"
+# ------------------------------------------------------------ the contract ---
 
-    def _avi_fsum(f: str) -> str:
-        return (f"(doc_id + 11 * {f}) % 256 + (doc_id * 7 + 23 * {f}) % 256 "
-                f"+ (doc_id * 13 + 37 * {f}) % 256")
-
-    # whole-video pixel-mean: exact integer sum over the n = d%4+1 frames
-    # (n <= 4, so the sum unrolls as a CASE — DuckDB's generate_series
-    # table function cannot take lateral column arguments) / one division
-    _avi_mean = ("(case (doc_id % 4) "
-                 + " ".join(
-                     f"when {k} then {' + '.join(_avi_fsum(str(f)) for f in range(k + 1))}"
-                     for k in range(4))
-                 + f" end) / cast(3 * {_avi_n} as double)")
-    out["multimodal_features"] = (
-        "SELECT doc_id, "
-        "case when doc_id % 3 = 0 then 'image/bmp' "
-        "  when doc_id % 3 = 1 then 'audio/wav' "
-        "  when doc_id % 12 = 2 then 'video/mp4' else 'video/avi' end AS media_type, "
-        "cast(case when doc_id % 3 = 0 "
-        "  then 54 + (doc_id % 48 + 1) * (((doc_id % 64 + 1) * 3 + 3) // 4 * 4) "
-        "  when doc_id % 3 = 1 then 44 + (doc_id % 100 + 1) * 2 "
-        # strlen = BYTE length (Spark side measures the utf-8 payload);
-        # length() counts characters and would diverge on multibyte text
-        "  when doc_id % 12 = 2 then strlen(text) "
-        f"  else 232 + {_avi_n} * (24 + (({_avi_w} * 3 + 3) // 4 * 4) * {_avi_h}) "
-        "  end as bigint) AS n_bytes, "
-        "cast(case when doc_id % 3 = 0 then doc_id % 64 + 1 "
-        "  when doc_id % 3 = 1 then doc_id % 100 + 1 "
-        f"  when doc_id % 12 = 2 then -1 else {_avi_w} end as int) AS width, "
-        "cast(case when doc_id % 3 = 0 then doc_id % 48 + 1 "
-        "  when doc_id % 3 = 1 then 8000 "
-        f"  when doc_id % 12 = 2 then -1 else {_avi_h} end as int) AS height, "
-        "case when doc_id % 3 = 0 "
-        "  then ((doc_id % 256) + ((doc_id * 7) % 256) + ((doc_id * 13) % 256)) "
-        "    / cast(3 as double) "
-        "  when doc_id % 3 = 1 then cast(doc_id % 20000 - 10000 as double) "
-        f"  when doc_id % 12 = 2 then cast(-1 as double) else {_avi_mean} end AS mean_v "
-        "FROM documents")
-    # decoded per-frame features of the real AVI rows: frame colors are
-    # closed-form in (doc_id, frame_idx); 1000 // AVI_FPS = 250 ms step
-    out["multimodal_frames"] = (
-        "SELECT doc_id, frame_idx, frame_idx * 250 AS frame_ts_ms, "
-        f"cast({_avi_fsum('frame_idx')} as double) / cast(3 as double) AS mean_v "
-        "FROM (SELECT doc_id, unnest(generate_series(0, cast(doc_id % 4 as bigint))) "
-        "AS frame_idx FROM documents WHERE doc_id % 3 = 2 AND doc_id % 12 <> 2) q")
-    # sampling PLAN for the stub-format (mp4) rows — pure Column math twin
-    out["multimodal_frame_plan"] = (
-        "SELECT doc_id, unnest(generate_series(0, cast(doc_id % 60000 as bigint), 1000)) "
-        "AS frame_ts_ms FROM documents WHERE doc_id % 12 = 2")
-    out["simhash_md5_table"] = (
-        f"WITH {_simhash_md5_core_sql()} SELECT doc_id, sim_lo, sim_hi FROM sim")
-    out["simhash_neardup_pairs"] = _simhash_neardup_sql()
-    out["minhash_dedup_pairs"] = _minhash_sql(**_MINHASH_CFG)
-    # transitive closure of the SAME pair set (recursive CTE) -> per-doc
-    # min reachable id == the Spark label-propagation fixpoint
-    out["neardup_clusters"] = (
-        f"WITH RECURSIVE mp AS (SELECT doc_a, doc_b FROM ({_minhash_sql(**_MINHASH_CFG)}) q), "
-        "e AS (SELECT doc_a AS u, doc_b AS v FROM mp "
-        "  UNION ALL SELECT doc_b, doc_a FROM mp), "
-        "reach(u, v) AS (SELECT u, v FROM e "
-        "  UNION SELECT r.u, e2.v FROM reach r JOIN e e2 ON r.v = e2.u) "
-        "SELECT d.doc_id AS doc_id, "
-        "cast(least(d.doc_id, coalesce(min(r.v), d.doc_id)) as bigint) AS cluster_id "
-        "FROM documents d LEFT JOIN reach r ON r.u = d.doc_id GROUP BY d.doc_id")
-    out["ngram_jaccard_pairs"] = _minhash_sql(**_NGRAM_CFG)
-    out["lsh_ann_topk"] = _lsh_ann_sql()
-    out["ivf_ann_topk"] = _ivf_ann_sql()
-    out["embedding_neardup_lsh"] = _emb_neardup_lsh_sql()
-    out["rolling_fingerprint"] = (
-        f"SELECT doc_id, cast({tx.rolling_fingerprint_duckdb_sql('text')} as bigint) AS fp "
-        "FROM documents")
-    out["events_window_stats"] = (
-        "SELECT cast(floor(epoch(ts) / 3600) as bigint) AS window_id, event_type, "
-        "count(*) AS cnt, min(value) AS vmin, max(value) AS vmax "
-        "FROM events GROUP BY 1, 2")
-    # the streaming variant's complete-mode aggregation over the bounded
-    # source equals the batch aggregation — same oracle grades both paths
-    out["events_window_stats_stream"] = out["events_window_stats"]
-    # stateful streaming dedup: the kept key set == batch DISTINCT (the
-    # deterministic projection of first-seen dedup)
-    out["events_dedup_stream"] = (
-        "SELECT DISTINCT user_id, event_type FROM events")
-    # append-mode file sink: the batch windows the FINAL watermark
-    # (max event time - STREAM_FILES_WATERMARK_S) has passed — a window is
-    # emitted exactly when its end <= watermark (Spark holds the open tail
-    # back by design; tests/test_pages.py proves both inclusion
-    # directions).  The delay constant is shared with the Spark entry.
-    out["events_window_stats_stream_files"] = (
-        f"WITH b AS ({out['events_window_stats']}), "
-        "mx AS (SELECT max(epoch(ts)) AS m FROM events) "
-        "SELECT b.window_id AS window_id, b.event_type AS event_type, "
-        "b.cnt AS cnt, b.vmin AS vmin, b.vmax AS vmax "
-        f"FROM b, mx WHERE (b.window_id + 1) * 3600 <= mx.m - {STREAM_FILES_WATERMARK_S}")
+#: One row per driver-contract entry: (name, Spark job, DuckDB twin).  The
+#: twin is a zero-argument callable because several twins read
+#: ORACLE_SF_DIR data when built; queries() never calls it.  Row order is
+#: the driver's GRADING order: it grades the FIRST 50 rows, so entries
+#: without a green driver CORRECTNESS row lead, and the rows past the
+#: position-50 boundary are green slots whose machinery an in-window
+#: cousin already covers (VERDICT.md and CHANGES.md keep the per-round
+#: rotation).  Append a new entry at the end only if it needs no driver row.
+#: Row lambdas name the Spark job's (spark, sf_dir) arguments (s, d).
+CONTRACT: list[tuple[str, Callable[[SparkSession, str], DataFrame], Callable[[], str]]] = [
+    # --- round-5 entries (no driver row yet -> lead the window) ---
     # late-drop witness: the fixture's poisoned batch-B rows are all below
     # the post-batch-A watermark, so the emitted windows must equal the
     # BASE table's closed windows — the same filter as the file-sink twin;
     # a non-dropping engine emits poisoned vmin/cnt and fails the hash
-    out["events_late_drop_stream"] = out["events_window_stats_stream_files"]
-    out["events_sessionize"] = (
-        # Spark session_window semantics: an event extends its session's
-        # window to ts+gap; the NEXT event joins iff its ts < that end, so
-        # a gap >= 30 min starts a new session — reconstructed with
-        # lag + running sum
-        "WITH o AS (SELECT user_id, event_id, ts, value, case when lag(ts) OVER w IS NULL "
-        "  OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE then 1 else 0 end AS new_s "
-        "  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)), "
-        "s AS (SELECT user_id, ts, value, sum(new_s) OVER "
-        "  (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS sid FROM o) "
-        "SELECT user_id, min(ts) AS session_start, count(*) AS n_events, "
-        "max(value) AS vmax FROM s GROUP BY user_id, sid")
-    out["events_json_kv"] = (
-        "SELECT event_id, cast(json_extract_string(props, '$.k') as bigint) AS k FROM events")
-    # file-reader entry: the parsed workloads round-trip to the generator
-    # tuples exactly (repr floats), so the three in-memory oracles compose
-    out["spatial_from_files"] = (
-        f"SELECT 'range' AS kind, query_id AS qid, cnt AS val FROM ({_range_count_sql()}) "
-        "UNION ALL "
-        f"SELECT 'distance' AS kind, query_id AS qid, cnt AS val FROM ({_distance_count_sql()}) "
-        "UNION ALL "
-        f"SELECT 'pip' AS kind, polygon_id AS qid, cnt AS val FROM ({_pip_count_sql()})")
-    out["distance_join_pairs"] = _distance_join_sql()
-    out["knn_join_radius"] = _knn_join_sql()
-    # every queries() entry now carries a DuckDB twin: the md5-hash pattern
-    # (md5 + integer arithmetic both engines evaluate identically) covers
-    # the sketches, and the JVM sequential folds match DuckDB's
-    # list_inner_product bit-for-bit (all cosine twins go through
-    # _duck_cos, the guarded mirror of similarity._cosine_guarded).
-    return out
+    ("events_late_drop_stream", _events_late_drop, _events_window_stream_files_sql),
+    ("multimodal_frame_plan", _multimodal_frame_plan, lambda: (
+        "SELECT doc_id, unnest(generate_series(0, cast(doc_id % 60000 as bigint), 1000)) "
+        "AS frame_ts_ms FROM documents WHERE doc_id % 12 = 2")),
+    ("distance_join_pairs", _distance_join_pairs, _distance_join_sql),
+    ("knn_join_radius", _knn_join, _knn_join_sql),
+    # --- r2-green entries rotated back in (VERDICT r4 #5) ---
+    ("dup_stats", _dup_stats, lambda: (
+        f"WITH {POINTS_CTE} SELECT count(*) AS n, count(distinct x) AS n_x, "
+        f"count(distinct y) AS n_y, count(distinct (x, y)) AS n_xy FROM points")),
+    ("bbox", _bbox, lambda: (
+        f"WITH {POINTS_CTE} SELECT min(x) AS minx, min(y) AS miny, "
+        f"max(x) AS maxx, max(y) AS maxy FROM points")),
+    ("points_decimated", _points_decimated,
+     lambda: f"WITH {POINTS_CTE} SELECT pid, x, y FROM points WHERE pid % 10 = 0"),
+    ("scan_overhead_fixed_grid", _scan_overhead, _scan_overhead_sql),
+    ("range_count_fixed_grid_salted", _range_count_salted, _range_count_sql),
+    ("events_json_kv", _events_json_kv, lambda: (
+        "SELECT event_id, cast(json_extract_string(props, '$.k') as bigint) AS k FROM events")),
+    # --- entries first graded in round 4 ---
+    ("contamination_hits_words", _contamination_words, _contamination_words_sql),
+    ("tile_assign_s2", _tile_assign_s2, lambda: (
+        f"WITH {POINTS_CTE} SELECT p.pid AS pid, "
+        f"{s2.s2_cell_sql('p.x', 'p.y')} AS cell_id FROM points p")),
+    ("events_window_stats_stream_files", _events_window_stream_files,
+     _events_window_stream_files_sql),
+    ("events_dedup_stream", _events_dedup_stream,
+     lambda: "SELECT DISTINCT user_id, event_type FROM events"),
+    # --- entries first graded in round 3 (multimodal re-graded: AVI) ---
+    ("ivf_ann_topk", lambda s, d: similarity.ivf_topk(
+        _emb(s, d), _annq(s, d), k=_ANN_K, centroids=_ivf_centroids(d)), _ivf_ann_sql),
+    ("embedding_neardup_lsh", lambda s, d: similarity.embedding_neardup_lsh(
+        _emb(s, d), threshold=_NEARDUP_T), _emb_neardup_lsh_sql),
+    ("multimodal_features", _multimodal, _multimodal_sql),
+    ("multimodal_frames", _multimodal_frames, _multimodal_frames_sql),
+    ("rolling_fingerprint", _rolling_fp, lambda: (
+        f"SELECT doc_id, cast({tx.rolling_fingerprint_duckdb_sql('text')} as bigint) AS fp "
+        "FROM documents")),
+    ("spatial_from_files", _spatial_from_files, _spatial_from_files_sql),
+    # --- spatial core ---
+    ("range_count_fixed_grid",
+     lambda s, d: _eng(s, d, "fixed_grid", "learned").range_count(_rects()), _range_count_sql),
+    ("range_count_fixed_grid_binsearch",
+     lambda s, d: _eng(s, d, "fixed_grid", "binsearch").range_count(_rects()), _range_count_sql),
+    *[(f"tile_assign_{sc}", lambda s, d, sc=sc: _eng(s, d, sc).tile_assignment(),
+       lambda sc=sc: _tile_assign_sql(sc)) for sc in SCHEMES],
+    ("point_lookup", lambda s, d: _eng(s, d, "adaptive_grid").point_lookup(_point_queries(d)),
+     _point_lookup_sql),
+    ("distance_count", lambda s, d: _eng(s, d, "fixed_grid").distance_count(_circles()),
+     _distance_count_sql),
+    ("range_count_tiled", lambda s, d: _tiled_engine(s, d).range_count(_rects()),
+     _range_count_sql),
+    ("knn_tiled", lambda s, d: _tiled_engine(s, d).knn(_knnq()), _knn_sql),
+    ("pip_count", lambda s, d: _eng(s, d, "quadtree").pip(_polys()), _pip_count_sql),
+    ("knn", lambda s, d: _eng(s, d, "fixed_grid").knn(_knnq()), _knn_sql),
+    # --- training-data / streaming surface ---
+    # md5 grouping mirrors dedup.dedup_exact's digest-keyed shuffle
+    ("dedup_exact", lambda s, d: dedup.dedup_exact(_docs(s, d)), lambda: (
+        "SELECT min(doc_id) AS rep_doc_id, count(*) AS n_dups "
+        "FROM documents GROUP BY md5(text)")),
+    ("corpus_clean_keeplist", _corpus_clean_keeplist, _corpus_clean_keeplist_sql),
+    ("token_count", _token_count, _token_count_sql),
+    ("quality_score", lambda s, d: _docs(s, d).select(
+        "doc_id", F.expr(tx.quality_score_sql("text")).alias("score")),
+     lambda: f"SELECT doc_id, {tx.quality_score_sql('text')} AS score FROM documents"),
+    ("langid", lambda s, d: _docs(s, d).select(
+        "doc_id", F.expr(tx.langid_sql("text")).alias("lang_pred")),
+     lambda: f"SELECT doc_id, {tx.langid_sql('text')} AS lang_pred FROM documents"),
+    ("events_sessionize", _events_sessionize, _events_sessionize_sql),
+    ("vocab_topk", _vocab_topk, _vocab_topk_sql),
+    ("mix_sample", _mix_sample, _mix_sample_sql),
+    ("repetition_stats", _repetition_stats, _repetition_stats_sql),
+    ("span_dedup_stats", _span_dedup, _span_dedup_sql),
+    # streaming twin: complete-mode over the bounded source == batch join
+    ("pip_count_stream", _pip_count_stream, _pip_count_sql),
+    ("cells_touched_fixed_grid", _cells_touched, _cells_touched_sql),
+    ("minhash_dedup_pairs", _minhash_pairs, lambda: _minhash_sql(**_MINHASH_CFG)),
+    ("simhash_neardup_pairs", _simhash_neardup, _simhash_neardup_sql),
+    ("neardup_clusters", _neardup_clusters, _neardup_clusters_sql),
+    ("lsh_ann_topk", lambda s, d: similarity.lsh_bucket_topk(_emb(s, d), _annq(s, d), k=_ANN_K),
+     _lsh_ann_sql),
+    # ---------------- grading-window boundary (position 50) ----------------
+    # everything below already has a green CORRECTNESS row: round 4 down to
+    # morton_rollup, round 3 down to events_window_stats, round 2 after
+    ("range_materialize",
+     lambda s, d: _eng(s, d, "fixed_grid", "learned").range_materialize(_rects()),
+     _range_materialize_sql),
+    ("polygon_tiles", lambda s, d: _eng(s, d, "fixed_grid").polygon_tiles(_polys()),
+     _polygon_tiles_sql),
+    ("contamination_hits", _contamination, _contamination_sql),
+    # the stream's complete-mode aggregation over the bounded source equals
+    # the batch aggregation — same oracle grades both paths
+    ("events_window_stats_stream", _events_window_stream, _events_window_sql),
+    ("embedding_neardup_pairs", _emb_neardup, _emb_neardup_sql),
+    ("ann_cosine_topk",
+     lambda s, d: similarity.brute_cosine_topk(_emb(s, d), _annq(s, d), k=_ANN_K), _ann_sql),
+    ("ngram_jaccard_pairs", _ngram_jaccard, lambda: _minhash_sql(**_NGRAM_CFG)),
+    ("distance_materialize_tiled",
+     lambda s, d: _tiled_engine(s, d).distance_materialize(_circles()),
+     _distance_materialize_sql),
+    ("pip_pairs_tiled", lambda s, d: _tiled_engine(s, d).pip(_polys(), pairs=True),
+     _pip_pairs_sql),
+    ("morton_rollup", _morton_rollup, _morton_rollup_sql),
+    ("multimodal_resize", lambda s, d: multimodal.resize_images(
+        multimodal.attach_fake_media(_docs(s, d)), max_dim=32).select("doc_id", "out_w", "out_h"),
+     _multimodal_resize_sql),
+    ("range_count_fixed_grid_binsearch_x",  # dead code in the reference (C3)
+     lambda s, d: _eng(s, d, "fixed_grid", "binsearch_x").range_count(_rects()),
+     _range_count_sql),
+    ("fingerprint_md5", lambda s, d: _docs(s, d).select(
+        "doc_id", F.expr(tx.fingerprint_md5_sql("text")).alias("fp")),
+     lambda: f"SELECT doc_id, {tx.fingerprint_md5_sql('text')} AS fp FROM documents"),
+    ("events_window_stats", _events_window, _events_window_sql),
+    *[(f"range_count_{sc}", lambda s, d, sc=sc: _eng(s, d, sc, "learned").range_count(_rects()),
+       _range_count_sql) for sc in SCHEMES if sc != "fixed_grid"],
+    ("range_count_tiled_str", _range_count_tiled_str, _range_count_sql),
+    ("simhash_md5_table", lambda s, d: dedup.simhash_md5_table(_docs(s, d)),
+     lambda: f"WITH {_simhash_md5_core_sql()} SELECT doc_id, sim_lo, sim_hi FROM sim"),
+    ("point_lookup_quadtree",
+     lambda s, d: _eng(s, d, "quadtree").point_lookup(_point_queries(d)), _point_lookup_sql),
+    ("distance_materialize",
+     lambda s, d: _eng(s, d, "adaptive_grid").distance_materialize(_circles()),
+     _distance_materialize_sql),
+    ("pip_pairs", lambda s, d: _eng(s, d, "fixed_grid").pip(_polys(), pairs=True),
+     _pip_pairs_sql),
+]
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """The Spark side of CONTRACT, in grading order."""
+    return {name: job for name, job, _ in CONTRACT}
+
+
+def oracle_sql() -> dict[str, str]:
+    """The DuckDB side of CONTRACT, each twin built now."""
+    return {name: sql() for name, _, sql in CONTRACT}

@@ -2,8 +2,9 @@
 
 This is the engine's analog of the reference's ``SplineCell``
 (include/partition_cells/Spline.hpp) and its spline utilities
-(include/utils/SplineUtil.h), re-expressed as batched NumPy kernels meant
-to run inside ``applyInPandas`` over one grid cell at a time:
+(include/utils/SplineUtil.h), re-expressed as batched NumPy kernels that
+run over one grid cell at a time (the fit inside ``applyInPandas``, the
+probes inside ``core._probe``'s one ``mapInPandas``):
 
 * CDF: one knot per *distinct* y at that run's LAST index — mirrors
   ``CdfOnTheFlyInterfaceY`` (include/utils/SplineUtil.h:170-213);

@@ -51,13 +51,6 @@ def test_contract(spark, duck, name):
         assert g == w, (name, i, g, w)
 
 
-@pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
-def test_rows_only_queries_run(spark, name):
-    df = QUERIES[name](spark, SF)
-    assert df.count() >= 0
-    assert len(df.schema.fields) > 0
-
-
 def test_entry_smoke(spark):
     import __spark_entry__ as e
     df = e.entry(spark)
@@ -66,7 +59,7 @@ def test_entry_smoke(spark):
 
 def test_grading_window_matches_rotation_docstring():
     """The driver grades the FIRST 50 queries() keys; the round-5 rotation
-    (queries() docstring) pins exactly which entries are inside.  This
+    (CHANGES.md, VERDICT.md) pins exactly which entries are inside.  This
     fails if a future edit silently reorders the window or drops a twin."""
     q = list(QUERIES)
     window = set(q[:50])
@@ -88,3 +81,41 @@ def test_grading_window_matches_rotation_docstring():
     assert not (must_be_out & window), must_be_out & window
     # every key has a DuckDB twin (the rows-only tier stays empty)
     assert set(q) == set(ORACLES)
+
+
+GRADING_ORDER = [
+    "events_late_drop_stream", "multimodal_frame_plan", "distance_join_pairs",
+    "knn_join_radius", "dup_stats", "bbox", "points_decimated",
+    "scan_overhead_fixed_grid", "range_count_fixed_grid_salted", "events_json_kv",
+    "contamination_hits_words", "tile_assign_s2", "events_window_stats_stream_files",
+    "events_dedup_stream", "ivf_ann_topk", "embedding_neardup_lsh",
+    "multimodal_features", "multimodal_frames", "rolling_fingerprint",
+    "spatial_from_files", "range_count_fixed_grid", "range_count_fixed_grid_binsearch",
+    "tile_assign_fixed_grid", "tile_assign_adaptive_grid", "tile_assign_kd_tree",
+    "tile_assign_quadtree", "tile_assign_str", "tile_assign_morton", "point_lookup",
+    "distance_count", "range_count_tiled", "knn_tiled", "pip_count", "knn",
+    "dedup_exact", "corpus_clean_keeplist", "token_count", "quality_score", "langid",
+    "events_sessionize", "vocab_topk", "mix_sample", "repetition_stats",
+    "span_dedup_stats", "pip_count_stream", "cells_touched_fixed_grid",
+    "minhash_dedup_pairs", "simhash_neardup_pairs", "neardup_clusters", "lsh_ann_topk",
+    # grading-window boundary (position 50)
+    "range_materialize", "polygon_tiles", "contamination_hits",
+    "events_window_stats_stream", "embedding_neardup_pairs", "ann_cosine_topk",
+    "ngram_jaccard_pairs", "distance_materialize_tiled", "pip_pairs_tiled",
+    "morton_rollup", "multimodal_resize", "range_count_fixed_grid_binsearch_x",
+    "fingerprint_md5", "events_window_stats", "range_count_adaptive_grid",
+    "range_count_kd_tree", "range_count_quadtree", "range_count_str",
+    "range_count_morton", "range_count_tiled_str", "simhash_md5_table",
+    "point_lookup_quadtree", "distance_materialize", "pip_pairs",
+]
+
+
+def test_contract_order_pinned_and_twins_lazy(monkeypatch):
+    """queries() is the 74 contract rows in the exact grading order, and it
+    builds without reading oracle data: the DuckDB column is only called by
+    oracle_sql() (which does fail on a missing data directory)."""
+    assert list(QUERIES) == GRADING_ORDER
+    monkeypatch.setattr(entrylib, "ORACLE_SF_DIR", "/nonexistent/oracle_sf")
+    assert list(entrylib.queries()) == GRADING_ORDER
+    with pytest.raises(duckdb.Error):
+        entrylib.oracle_sql()

@@ -25,12 +25,14 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def plan_of(df) -> str:
-    """The formatted plan, with temporary directory paths replaced by a
-    fixed placeholder so PLANS.md only changes when a plan does."""
+    """The formatted plan, with temporary directory paths and exchange
+    plan ids (a session-wide counter) replaced by fixed placeholders so
+    PLANS.md only changes when a plan does."""
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
-    return re.sub(re.escape(tempfile.gettempdir()) + r"/tmp\w+", "<tmpdir>", buf.getvalue())
+    plan = re.sub(re.escape(tempfile.gettempdir()) + r"/tmp\w+", "<tmpdir>", buf.getvalue())
+    return re.sub(r"\[plan_id=\d+\]", "[plan_id=<n>]", plan)
 
 
 def plan_tree(plan: str) -> str:
