@@ -27,7 +27,7 @@ from .functions.geo import haversine_m_sql
 from .operators import corpus, dedup, multimodal, s2, similarity
 from .session import local_frame
 from .sources import workloads as wl
-from .sources.points import POINTS_CTE
+from .sources.points import POINTS_CTE, points_df
 from .sqlcompat import flit
 
 ORACLE_SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
@@ -145,7 +145,6 @@ def _tiled_engine(spark, sf_dir, scheme: str = "fixed_grid"):
     import tempfile
 
     from .pipeline import build_tiled_index
-    from .sources.points import points_df
     from .tiled import TiledSpatialEngine
     rkey = f"{sf_dir}:{scheme}"
     root = _TILED_ROOTS.get(rkey)
@@ -532,7 +531,6 @@ def _tile_assign_s2(spark, sf_dir):
     DuckDB twin (s2.s2_cell_sql) — soundness rests on the measured bitwise
     identity of NumPy and DuckDB radians/sin/cos over the corpus
     (tests/test_s2.py guards it)."""
-    from .sources.points import points_df
     return s2.assign_s2(points_df(spark, sf_dir)).select("pid", "cell_id")
 
 
@@ -681,8 +679,7 @@ def _span_dedup_sql() -> str:
 def _dup_stats(spark, sf_dir):
     """P7 duplicate statistics (GetAllTheStatistics, src/main.cpp:257-294):
     total, distinct x, distinct y, distinct (x,y)."""
-    eng = SpatialEngine(spark, sf_dir)
-    return eng.points().agg(
+    return points_df(spark, sf_dir).agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("x").alias("n_x"),
         F.countDistinct("y").alias("n_y"),
@@ -691,8 +688,7 @@ def _dup_stats(spark, sf_dir):
 
 def _bbox(spark, sf_dir):
     """P3 bounding-box aggregate (GetBoundingBox, Utils.hpp:59-82)."""
-    eng = SpatialEngine(spark, sf_dir)
-    return eng.points().agg(
+    return points_df(spark, sf_dir).agg(
         F.min("x").alias("minx"), F.min("y").alias("miny"),
         F.max("x").alias("maxx"), F.max("y").alias("maxy"))
 
@@ -700,7 +696,7 @@ def _bbox(spark, sf_dir):
 def _cells_touched(spark, sf_dir):
     """Q6 index-probe instrumentation (IndexLookup, SURVEY.md §2.4): number
     of fixed-grid cells each query rectangle routes to."""
-    eng = SpatialEngine(spark, sf_dir, scheme="fixed_grid")
+    eng = _eng(spark, sf_dir, "fixed_grid")
     rects = _rects()
     return local_frame(spark, {
         "query_id": [r[0] for r in rects],
@@ -720,8 +716,7 @@ def _points_decimated(spark, sf_dir):
     """P6 modulo decimation (FilterPoints, src/main.cpp:296-309) as a real
     operator: keep every Nth point by the stable pid (the reference keeps
     every Nth by file position; pid is the distributed-stable analog)."""
-    eng = SpatialEngine(spark, sf_dir)
-    return eng.points().where(F.col("pid") % 10 == 0).select("pid", "x", "y")
+    return points_df(spark, sf_dir).where(F.col("pid") % 10 == 0).select("pid", "x", "y")
 
 
 def _scan_overhead(spark, sf_dir):
@@ -731,7 +726,7 @@ def _scan_overhead(spark, sf_dir):
     candidate run the in-cell probe walks), ``wrongly_scanned`` = scanned
     points failing the x predicate.  Pure JVM join/agg over the assigned
     points — the probe's work, measured declaratively."""
-    eng = SpatialEngine(spark, sf_dir, scheme="fixed_grid")
+    eng = _eng(spark, sf_dir, "fixed_grid")
     p = eng.partitioner
     rows = []
     for (qid, fx, fy, tx, ty) in _rects():
@@ -853,7 +848,6 @@ def _distance_join_pairs(spark, sf_dir):
     wrap, equi-join on the block key, exact Arrow-batched NumPy
     haversine refine — never an all-pairs join."""
     from .operators.distjoin import distance_join_pairs
-    from .sources.points import points_df
     pts = points_df(spark, sf_dir)
     return distance_join_pairs(pts, DISTANCE_JOIN_RADIUS_M)
 
@@ -888,7 +882,6 @@ def _knn_join(spark, sf_dir):
     WindowGroupLimit top-k; the radius bound is what keeps the join
     exact under blocking (and what a dedup/enrichment pass wants)."""
     from .operators.distjoin import knn_join
-    from .sources.points import points_df
     pts = points_df(spark, sf_dir)
     return knn_join(pts.where(F.col("pid") % 10 == 0), pts,
                     KNN_JOIN_K, KNN_JOIN_RADIUS_M)

@@ -13,6 +13,8 @@ from typing import Mapping
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
+_PKG_DIR = os.path.dirname(os.path.abspath(__file__))
+
 
 def get_spark(
     app_name: str = "learnedspatial_spark",
@@ -29,6 +31,15 @@ def get_spark(
     Master and shuffle partitions default to the host's CPU count;
     ``SPARK_GRAFT_MASTER`` / ``SPARK_GRAFT_CPUS`` / ``SPARK_GRAFT_SHUFFLE``
     override them for a deployment.
+
+    For a ``local`` master whose package was imported from a directory
+    (not from a ``--py-files`` zip), Python workers start through
+    ``learnedspatial_spark.worker``, which pays the worker's import-cache
+    invalidation and its heap walk once per worker instead of once per
+    task.  The package's parent directory joins the workers'
+    ``PYTHONPATH`` (after any the caller passes), so the daemon module
+    resolves from any cwd.  Elsewhere the module is not importable before
+    the first task's files arrive, and stock ``pyspark.daemon`` runs.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
@@ -46,9 +57,14 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            b = b.config(k, v)
+    conf = dict(extra_conf or {})
+    if (master.partition("[")[0] == "local"
+            and os.path.isfile(os.path.join(_PKG_DIR, "worker.py"))):
+        key = "spark.executorEnv.PYTHONPATH"
+        conf[key] = os.pathsep.join(p for p in (conf.get(key), os.path.dirname(_PKG_DIR)) if p)
+        conf.setdefault("spark.python.daemon.module", "learnedspatial_spark.worker")
+    for k, v in conf.items():
+        b = b.config(k, v)
     return b.getOrCreate()
 
 
