@@ -18,8 +18,16 @@ is that path, shared by both engines:
    rectangles);
 3. run one per-cell kernel (the module functions below) over the rows of
    the routed cells, in one ``mapInPandas`` probe for both sources;
-4. merge: zero-filled left join of per-query partial counts, the kNN
-   per-query top-k merge, or the point-lookup broadcast equality join.
+4. merge with one aggregation: per-query counts sum the kernel
+   partials together with one ``(key, base)`` row per query (so a query
+   with no hits reports its routed base, 0 if none); a point lookup is a
+   range materialize over the degenerate rectangle [x, x] x [y, y] whose
+   hits take ``min(id)`` beside one NULL row per query; kNN keeps its
+   per-query top-k merge.  Neither count nor point merge joins, so an
+   interactive query runs one probe and one exchange.
+
+Query ids must be unique within a batch (the merges key on them);
+a batch that repeats one raises ``ValueError`` on the driver.
 
 A cell source supplies only what its storage has to answer, in four
 hooks: ``cell_stats()`` -> :class:`CellStats`; ``_model_dict()`` -> the
@@ -101,11 +109,18 @@ def knots_by_cell(model_rows) -> dict[int, tuple[np.ndarray, np.ndarray]]:
             for r in model_rows if not r["linear_scan"]}
 
 
-def _rects_np(rects) -> tuple[np.ndarray, np.ndarray]:
-    """A rectangle batch as its (N, 4) float64 corner array and int64
-    query ids, built once per job."""
-    arr = np.asarray([r[1:5] for r in rects], dtype=np.float64).reshape(len(rects), 4)
-    return arr, np.asarray([r[0] for r in rects], dtype=np.int64)
+def _batch_np(batch, width: int) -> tuple[np.ndarray, np.ndarray]:
+    """A query batch of ``(query_id, v1, ..., v<width>)`` tuples as its
+    (N, width) float64 array and unique int64 query ids, built once per
+    job.  A repeated id raises: the per-query merges key on it, so two
+    queries sharing one would silently pool their answers."""
+    arr = np.asarray([r[1:1 + width] for r in batch], dtype=np.float64).reshape(len(batch), width)
+    qids = np.asarray([r[0] for r in batch], dtype=np.int64)
+    uniq, counts = np.unique(qids, return_counts=True)
+    if uniq.size != qids.size:
+        raise ValueError(f"query ids must be unique within a batch; repeated: "
+                         f"{uniq[counts > 1][:10].tolist()}")
+    return arr, qids
 
 
 # ------------------------------------------------------ per-cell kernels ---
@@ -249,14 +264,14 @@ class SpatialQueryCore:
         return self._cell_rows(routing[0]).mapInPandas(probe, schema=schema)
 
     def _zero_filled(self, key: str, keys, parts: DataFrame, base=None) -> DataFrame:
-        """Sum per-(key, cell) partial counts, left-joined onto the whole
-        key list so keys with no hits report 0 (plus any count the
-        routing already resolved in ``base``)."""
-        agg = parts.groupBy(key).agg(F.sum("cnt").alias("cnt"))
+        """Sum per-(key, cell) partial counts in ONE aggregation over the
+        partials and one ``(key, base)`` row per key, so a key with no
+        hits reports its base (the count routing already resolved, else
+        0) — one exchange, no join."""
         base = np.zeros(len(keys), dtype=np.int64) if base is None else base
-        kdf = local_frame(self.spark, {key: keys, "base": base}, f"{key} bigint, base bigint")
-        return kdf.join(agg, key, "left").select(
-            key, (F.coalesce(F.col("cnt"), F.lit(0)) + F.col("base")).cast("bigint").alias("cnt"))
+        kdf = local_frame(self.spark, {key: keys, "cnt": base}, f"{key} bigint, cnt bigint")
+        return parts.unionByName(kdf).groupBy(key).agg(
+            F.sum("cnt").cast("bigint").alias("cnt"))
 
     # ------------------------------------------------------------- range ---
 
@@ -271,7 +286,7 @@ class SpatialQueryCore:
         rectangle contributes its stats count without being read; only
         boundary cells are probed (a whole-domain query probes nothing)."""
         s = self.cell_stats()
-        q, qids = _rects_np(rects)
+        q, qids = _batch_np(rects, 4)
         base, routing = probes.route_contained(
             q, *self._rect_candidates_flat(q), s.ids, s.minx, s.miny, s.maxx, s.maxy, s.count)
         parts = self._probe(routing, (q, qids), self._range_kernel(False),
@@ -281,7 +296,9 @@ class SpatialQueryCore:
     def range_materialize(self, rects: list[tuple]) -> DataFrame:
         """Q1 range materialize (src/main.cpp:101-132): every
         (query_id, <id>, x, y) hit; order unspecified."""
-        q, qids = _rects_np(rects)
+        return self._range_hits(*_batch_np(rects, 4))
+
+    def _range_hits(self, q: np.ndarray, qids: np.ndarray) -> DataFrame:
         id_col, id_type = self._id_column()
         return self._probe(probes.compact_routing(*self._rect_candidates_flat(q)), (q, qids),
                            self._range_kernel(True),
@@ -290,25 +307,22 @@ class SpatialQueryCore:
     # ------------------------------------------------------ point lookup ---
 
     def point_lookup(self, pts: list[tuple]) -> DataFrame:
-        """Q3 point lookup (src/main.cpp:416-450), entirely JVM: candidate
-        cells' rows broadcast-joined to the routed points on cell_id and
-        exact (x, y), canonical fetch-one = min(id).  Output
-        (query_id, <id>); a miss is -1 for a numeric pid, NULL otherwise."""
-        xy = np.asarray([p[1:3] for p in pts], dtype=np.float64).reshape(len(pts), 2)
-        cells, qi = self._rect_candidates_flat(np.hstack([xy, xy]))
-        qdf = local_frame(self.spark, probes.point_routing(pts, cells, qi),
-                          probes.POINT_ROUTING_SCHEMA)
+        """Q3 point lookup (src/main.cpp:416-450) as the range materialize
+        of the degenerate inclusive rectangle [x, x] x [y, y]: the same
+        routing and probe as a range, exact (x, y) equality in the cell
+        kernel, canonical fetch-one = min(id) beside one NULL row per
+        query.  Output (query_id, <id>); a miss is -1 for a numeric pid,
+        NULL otherwise."""
+        xy, qids = _batch_np(pts, 2)
         id_col, id_type = self._id_column()
-        hit = (self._cell_rows(np.unique(cells))
-               .join(F.broadcast(qdf), "cell_id")
-               .where((F.col("x") == F.col("qx")) & (F.col("y") == F.col("qy")))
-               .groupBy("query_id").agg(F.min(id_col).alias(id_col)))
-        alldf = local_frame(self.spark, {"query_id": [p[0] for p in pts]}, "query_id bigint")
-        found = F.col(id_col)
+        hits = self._range_hits(np.hstack([xy, xy]), qids).select("query_id", id_col)
+        misses = local_frame(self.spark, {"query_id": qids}, "query_id bigint").select(
+            "query_id", F.lit(None).cast(id_type).alias(id_col))
+        found = F.min(id_col)
         if id_col == "pid":
             found = F.coalesce(found, F.lit(-1))
-        return alldf.join(hit, "query_id", "left").select(
-            "query_id", found.cast(id_type).alias(id_col))
+        return hits.unionByName(misses).groupBy("query_id").agg(
+            found.cast(id_type).alias(id_col))
 
     # ---------------------------------------------------------- distance ---
 
@@ -325,8 +339,7 @@ class SpatialQueryCore:
         return self._distance(circles, materialize=True)
 
     def _distance(self, circles: list[tuple], materialize: bool) -> DataFrame:
-        c = np.asarray([c[1:4] for c in circles], dtype=np.float64).reshape(len(circles), 3)
-        qids = np.asarray([c[0] for c in circles], dtype=np.int64)
+        c, qids = _batch_np(circles, 3)
         mnla, mxla, mnlo, mxlo = geo.circle_bbox_radians_np(
             (c[:, 0] / 180.0) * math.pi, (c[:, 1] / 180.0) * math.pi, c[:, 2])
         # 8-ulp conservative margin: the bbox math amplifies rounding past
@@ -385,11 +398,10 @@ class SpatialQueryCore:
         partials and one per-query merge keeps the global top-k — the
         associative reduce the partials are built for, not a window sort
         of every partial.  (query_id, rnk, <id>)."""
+        qarr, qids = _batch_np(queries, 3)
         s = self.cell_stats()
         routing = probes.compact_routing(*probes.knn_candidate_cells(
             s.ids, s.minx, s.miny, s.maxx, s.maxy, s.count, queries))
-        qarr = np.asarray([q[1:4] for q in queries], dtype=np.float64).reshape(len(queries), 3)
-        qids = np.asarray([q[0] for q in queries], dtype=np.int64)
         id_col, id_type = self._id_column()
         parts = self._probe(routing, (qarr, qids), partial(_knn_cell, id_col=id_col),
                             f"query_id bigint, {id_col} {id_type}, d2 double, px double, py double")

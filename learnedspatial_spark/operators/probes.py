@@ -103,19 +103,6 @@ def flatten_cell_lists(cells_per_query) -> tuple[np.ndarray, np.ndarray]:
     return cells, qidx
 
 
-POINT_ROUTING_SCHEMA = "query_id bigint, qx double, qy double, cell_id bigint"
-
-
-def point_routing(pts, cells: np.ndarray, qi: np.ndarray) -> dict[str, np.ndarray]:
-    """Point-lookup routing rows as columns: one (query_id, qx, qy,
-    cell_id) row per flat (cell, point index) candidate pair of the
-    ``(query_id, x, y)`` points — the broadcast side of the exact-match
-    join."""
-    xy = np.asarray([(p[1], p[2]) for p in pts], dtype=np.float64).reshape(len(pts), 2)
-    qids = np.asarray([p[0] for p in pts], dtype=np.int64)
-    return {"query_id": qids[qi], "qx": xy[qi, 0], "qy": xy[qi, 1], "cell_id": cells}
-
-
 def compact_routing(cells_flat: np.ndarray, qidx_flat: np.ndarray):
     """(cells, qidx) pairs -> (unique_cells_sorted, offsets, qidx_grouped):
     the broadcastable columnar routing table.  Probe-side lookup is one

@@ -3,7 +3,8 @@ production.
 
 Every materialized engine artifact (the tiled point table, the model
 table, the cell-stats table) goes through these functions — the single
-point where the table format is chosen:
+point where the table format is chosen.  Both writers compress with
+zstd, Iceberg's default Parquet codec:
 
 * sandbox (this container): hive-partitioned parquet directories; the
   partition column becomes directory structure, so candidate-cell
@@ -47,12 +48,12 @@ def write_partitioned(df: DataFrame, path: str, partition_col: str,
     """Materialize ``df`` partitioned by ``partition_col`` (the engine's
     cell key — the unit of pruning, checkpoint resume, and co-located
     joins)."""
-    df.write.mode(mode).partitionBy(partition_col).parquet(path)
+    df.write.mode(mode).option("compression", "zstd").partitionBy(partition_col).parquet(path)
 
 
 def write_table(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Materialize an unpartitioned artifact table (models, stats)."""
-    df.write.mode(mode).parquet(path)
+    df.write.mode(mode).option("compression", "zstd").parquet(path)
 
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:

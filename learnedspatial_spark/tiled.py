@@ -18,6 +18,12 @@ and merges its partials; this source answers what storage has to:
   already is the grouping);
 * the cell stats, the learned model table (loaded once, shipped as a
   broadcast: O(#cells x #knots), SURVEY.md §2.5) and the id column.
+
+An engine opens each index table once and keeps it: the file listing,
+like the stats and the model broadcast, is the index as it was when the
+engine first read it, so a query lists no files.  After
+``build_tiled_index`` rewrites the root, open a new engine to see the
+new rows.
 """
 
 from __future__ import annotations
@@ -44,9 +50,14 @@ class TiledSpatialEngine(SpatialQueryCore):
             self.partitioner = Partitioner.from_spec(json.load(f)["partitioner_spec"])
         self._stats: CellStats | None = None
         self._id_col: tuple[str, str] | None = None
+        self._tables: dict[str, DataFrame] = {}
 
     def _table(self, name: str) -> DataFrame:
-        return storage.read_table(self.spark, os.path.join(self.root, name))
+        """The index table ``name``, opened (and its files listed) once
+        per engine."""
+        if name not in self._tables:
+            self._tables[name] = storage.read_table(self.spark, os.path.join(self.root, name))
+        return self._tables[name]
 
     def cell_stats(self) -> CellStats:
         """Memoized O(#cells) stats from the persisted stats table."""

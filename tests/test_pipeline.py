@@ -468,6 +468,22 @@ def tiled_sf(spark, sf_dir, tmp_path_factory):
     return root, points_np(sf_dir)
 
 
+def test_tiled_index_tables_are_zstd_compressed(tiled_sf):
+    """Every column chunk of the point, model and stats tables is written
+    with zstd (Iceberg's default Parquet codec)."""
+    import glob
+
+    import pyarrow.parquet as pq
+    root, _ = tiled_sf
+    for table in ("points_tiled", "models", "cell_stats"):
+        files = glob.glob(os.path.join(root, table, "**", "*.parquet"), recursive=True)
+        assert files, table
+        codecs = {md.row_group(g).column(c).compression
+                  for md in (pq.ParquetFile(f).metadata for f in files)
+                  for g in range(md.num_row_groups) for c in range(md.num_columns)}
+        assert codecs == {"ZSTD"}, (table, codecs)
+
+
 def test_tiled_binsearch_x_and_polygon_tiles(spark, tiled_sf):
     """The tiled source answers ``refine="binsearch_x"`` (the C3
     BinarySearchXCell kernel) and ``polygon_tiles`` through the shared

@@ -41,3 +41,27 @@ def test_py_files_zip_matches_working_tree():
         assert not differing, (
             f"zip content stale for {differing} — "
             f"rebuild: python tools_make_zip.py")
+
+
+def test_zip_build_is_reproducible(tmp_path, monkeypatch):
+    """Two builds of the same sources give the same bytes, whatever the
+    files' mtimes, so rebuilding the tracked zip on an unchanged tree
+    leaves it unchanged."""
+    import shutil
+
+    import tools_make_zip
+
+    src = tmp_path / "src"
+    for pkg in PACKAGES:
+        shutil.copytree(os.path.join(REPO, pkg), src / pkg,
+                        ignore=shutil.ignore_patterns("__pycache__"))
+    monkeypatch.setattr(tools_make_zip, "ROOT", str(src))
+    a, b = tmp_path / "a.zip", tmp_path / "b.zip"
+    tools_make_zip.build(str(a))
+    os.utime(src / "learnedspatial_spark" / "__init__.py", (0, 0))
+    tools_make_zip.build(str(b))
+    assert a.read_bytes() == b.read_bytes()
+    with zipfile.ZipFile(a) as z:
+        names = z.namelist()
+        assert names == sorted(names) and len(names) == len(set(_tree_py_files()))
+        assert {i.date_time for i in z.infolist()} == {tools_make_zip.DATE_TIME}

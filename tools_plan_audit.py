@@ -8,8 +8,9 @@ plan properties the 100 TB design depends on:
 * every probe runs its per-cell kernels in one MapInPandas directly over
   the cell rows (in session: the cached cell-keyed relation, with no
   second Exchange and no Sort; tiled: the partition-pruned scan);
+* count and point merges are one aggregation (one exchange, no join);
 * relational glue runs in WholeStageCodegen;
-* the small query/dimension sides are broadcast.
+* the small dimension sides are broadcast.
 """
 
 from __future__ import annotations
@@ -62,6 +63,26 @@ def probe_in_place(plan: str) -> str:
     return ""
 
 
+def one_exchange_merge(plan: str) -> str:
+    """Marker when the query's own plan tree (a cached relation's build
+    plan excluded) holds exactly one Exchange and no join or broadcast:
+    the probe's partials merge in one aggregation."""
+    names, skip = [], None
+    for line in plan_tree(plan).splitlines():
+        col = re.match(r"[\s:|+*-]*", line).end()
+        if skip is not None and col > skip:
+            continue
+        skip = None
+        name = re.match(r"\w*", line[col:]).group(0)
+        if name == "InMemoryRelation":
+            skip = col
+        names.append(name)
+    if (names.count("Exchange") == 1 and "BroadcastExchange" not in names
+            and not any(n.endswith("Join") for n in names)):
+        return "\n-- audit: one-exchange-merge (one aggregation merges the probe; no join, no broadcast)\n"
+    return ""
+
+
 def probe_shuffle_free(plan: str, merges: int) -> str:
     """Marker when the plan's only shuffle Exchanges are its ``merges``
     per-query merges: the probe itself reads the pruned scan in place.
@@ -90,16 +111,20 @@ def main() -> None:
     sections: list[tuple[str, str, list[str]]] = []
 
     p = plan_of(eng.range_count(rects))
-    p += probe_in_place(p)
+    p += probe_in_place(p) + one_exchange_merge(p)
     sections.append(("range_count (learned, fixed grid)", p, [
         "ReadSchema: struct<l_orderkey:bigint,l_partkey:bigint,l_suppkey:bigint,l_linenumber:int,l_quantity:double,l_extendedprice",
         "MapInPandas",
         "probe-in-place",
+        "one-exchange-merge",
     ]))
-    p2 = plan_of(eng.point_lookup(wl.point_queries(*__import__("learnedspatial_spark.sources.points", fromlist=["points_np"]).points_np(sf)[1:3], n_hits=5, n_misses=2)))
-    p2 += literal_tables_local(p2)
-    sections.append(("point_lookup (broadcast candidate join)", p2, [
-        "BroadcastHashJoin", "codegen id", "literal-tables-local"]))
+    # a point lookup is the range probe over degenerate rectangles, merged
+    # by one min(id) aggregation beside the query table
+    from learnedspatial_spark.sources.points import points_np
+    p2 = plan_of(eng.point_lookup(wl.point_queries(*points_np(sf)[1:3], n_hits=5, n_misses=2)))
+    p2 += one_exchange_merge(p2) + literal_tables_local(p2)
+    sections.append(("point_lookup (degenerate range probe, one aggregation)", p2, [
+        "MapInPandas", "one-exchange-merge", "literal-tables-local"]))
     p3 = plan_of(similarity.brute_cosine_topk(
         spark.read.parquet(f"{sf}/embeddings.parquet"),
         similarity.query_vectors(spark, sf, n=4), k=5))
@@ -120,11 +145,13 @@ def main() -> None:
         teng = TiledSpatialEngine(spark, f"{td}/idx")
         p5 = plan_of(teng.range_count([(0, -60.0, -120.0, 30.0, 45.0),
                                        (1, 5.0, -170.0, 80.0, 170.0)]))
-        p5 += probe_shuffle_free(p5, merges=1) + literal_tables_local(p5)
+        p5 += (probe_shuffle_free(p5, merges=1) + one_exchange_merge(p5)
+               + literal_tables_local(p5))
         sections.append(("tiled range_count (materialized index, pruned scan)", p5, [
             "PartitionFilters",
             "MapInPandas",
             "probe-shuffle-free",
+            "one-exchange-merge",
             "literal-tables-local",
         ]))
         # every family on the tiled source stays shuffle-free: kNN's one
