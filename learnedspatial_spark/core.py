@@ -275,9 +275,10 @@ class SpatialQueryCore:
 
     # ------------------------------------------------------------- range ---
 
-    def _range_kernel(self, materialize: bool):
-        models_bc = self._models_broadcast() if self.refine == "learned" else None
-        return partial(_range_cell, refine=self.refine, models_bc=models_bc,
+    def _range_kernel(self, materialize: bool, refine: str | None = None):
+        refine = refine or self.refine
+        models_bc = self._models_broadcast() if refine == "learned" else None
+        return partial(_range_cell, refine=refine, models_bc=models_bc,
                        id_col=self._id_column()[0], materialize=materialize)
 
     def range_count(self, rects: list[tuple]) -> DataFrame:
@@ -285,8 +286,8 @@ class SpatialQueryCore:
         empty queries.  A candidate cell whose data bbox lies inside the
         rectangle contributes its stats count without being read; only
         boundary cells are probed (a whole-domain query probes nothing)."""
-        s = self.cell_stats()
         q, qids = _batch_np(rects, 4)
+        s = self.cell_stats()
         base, routing = probes.route_contained(
             q, *self._rect_candidates_flat(q), s.ids, s.minx, s.miny, s.maxx, s.maxy, s.count)
         parts = self._probe(routing, (q, qids), self._range_kernel(False),
@@ -298,10 +299,10 @@ class SpatialQueryCore:
         (query_id, <id>, x, y) hit; order unspecified."""
         return self._range_hits(*_batch_np(rects, 4))
 
-    def _range_hits(self, q: np.ndarray, qids: np.ndarray) -> DataFrame:
+    def _range_hits(self, q: np.ndarray, qids: np.ndarray, refine: str | None = None) -> DataFrame:
         id_col, id_type = self._id_column()
         return self._probe(probes.compact_routing(*self._rect_candidates_flat(q)), (q, qids),
-                           self._range_kernel(True),
+                           self._range_kernel(True, refine),
                            f"query_id bigint, {id_col} {id_type}, x double, y double")
 
     # ------------------------------------------------------ point lookup ---
@@ -312,10 +313,12 @@ class SpatialQueryCore:
         routing and probe as a range, exact (x, y) equality in the cell
         kernel, canonical fetch-one = min(id) beside one NULL row per
         query.  Output (query_id, <id>); a miss is -1 for a numeric pid,
-        NULL otherwise."""
+        NULL otherwise.  The cells always refine by binary search: on a
+        degenerate rectangle it returns the model's rows, without a
+        model fit or the knots broadcast."""
         xy, qids = _batch_np(pts, 2)
         id_col, id_type = self._id_column()
-        hits = self._range_hits(np.hstack([xy, xy]), qids).select("query_id", id_col)
+        hits = self._range_hits(np.hstack([xy, xy]), qids, "binsearch").select("query_id", id_col)
         misses = local_frame(self.spark, {"query_id": qids}, "query_id bigint").select(
             "query_id", F.lit(None).cast(id_type).alias(id_col))
         found = F.min(id_col)

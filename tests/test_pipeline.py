@@ -358,9 +358,11 @@ def test_spark_submit_cli_build_and_resume(tmp_path):
     if spark_submit is None:
         pytest.skip("spark-submit not on PATH")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    subprocess.run([sys.executable, os.path.join(repo, "tools_make_zip.py")],
+    # build into tmp so the run never rewrites the tracked zip, which
+    # test_zip_freshness checks as committed
+    zip_path = str(tmp_path / "learnedspatial_spark.zip")
+    subprocess.run([sys.executable, os.path.join(repo, "tools_make_zip.py"), zip_path],
                    check=True, capture_output=True, cwd=repo)
-    zip_path = os.path.join(repo, "learnedspatial_spark.zip")
 
     pages_path = str(tmp_path / "pages.parquet")
     # Spark's parquet reader rejects TIMESTAMP(NANOS) — write micros

@@ -11,26 +11,16 @@ oracle change (same commit).
 import os
 import zipfile
 
+import tools_make_zip
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 ZIP = os.path.join(REPO, "learnedspatial_spark.zip")
-PACKAGES = ("learnedspatial_spark", "oracle")  # tools_make_zip.py's set
-
-
-def _tree_py_files():
-    for pkg in PACKAGES:
-        for dirpath, _, files in os.walk(os.path.join(REPO, pkg)):
-            if "__pycache__" in dirpath:
-                continue
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(dirpath, f)
-                    yield os.path.relpath(full, REPO)
 
 
 def test_py_files_zip_matches_working_tree():
     with zipfile.ZipFile(ZIP) as z:
         in_zip = {n for n in z.namelist() if n.endswith(".py")}
-        in_tree = set(_tree_py_files())
+        in_tree = set(tools_make_zip.sources())
         missing = sorted(in_tree - in_zip)
         extra = sorted(in_zip - in_tree)
         assert not missing and not extra, (
@@ -49,10 +39,8 @@ def test_zip_build_is_reproducible(tmp_path, monkeypatch):
     leaves it unchanged."""
     import shutil
 
-    import tools_make_zip
-
     src = tmp_path / "src"
-    for pkg in PACKAGES:
+    for pkg in tools_make_zip.PACKAGES:
         shutil.copytree(os.path.join(REPO, pkg), src / pkg,
                         ignore=shutil.ignore_patterns("__pycache__"))
     monkeypatch.setattr(tools_make_zip, "ROOT", str(src))
@@ -62,6 +50,5 @@ def test_zip_build_is_reproducible(tmp_path, monkeypatch):
     tools_make_zip.build(str(b))
     assert a.read_bytes() == b.read_bytes()
     with zipfile.ZipFile(a) as z:
-        names = z.namelist()
-        assert names == sorted(names) and len(names) == len(set(_tree_py_files()))
+        assert z.namelist() == tools_make_zip.sources()
         assert {i.date_time for i in z.infolist()} == {tools_make_zip.DATE_TIME}
