@@ -843,10 +843,10 @@ DISTANCE_JOIN_RADIUS_M = 25000.0
 def _distance_join_pairs(spark, sf_dir):
     """Table x table within-radius join (operators/distjoin.py): the
     generalization of the reference's query-list distance workload
-    (distance.h:25-45) to two distributed sides.  Lat-band x lon-cell
-    blocking in closed form, one-sided 3x3 stencil with antimeridian
-    wrap, equi-join on the block key, exact Arrow-batched NumPy
-    haversine refine — never an all-pairs join."""
+    (distance.h:25-45) to two distributed sides.  Closed-form latitude
+    bands, one exchange on the band, and a NumPy kernel that searches
+    each band's longitude window (antimeridian wrap) and refines on the
+    exact haversine — never an all-pairs join."""
     from .operators.distjoin import distance_join_pairs
     pts = points_df(spark, sf_dir)
     return distance_join_pairs(pts, DISTANCE_JOIN_RADIUS_M)
@@ -878,9 +878,9 @@ KNN_JOIN_RADIUS_M = 100000.0
 def _knn_join(spark, sf_dir):
     """Radius-bounded kNN join (operators/distjoin.py): for each
     decimated point, its 3 nearest corpus points within 100 km — the
-    blocked-candidate machinery of ``distance_join_pairs`` plus a
-    WindowGroupLimit top-k; the radius bound is what keeps the join
-    exact under blocking (and what a dedup/enrichment pass wants)."""
+    band-window kernel of ``distance_join_pairs`` with the top k taken
+    in the kernel; the radius bound is what keeps the join exact under
+    banding (and what a dedup/enrichment pass wants)."""
     from .operators.distjoin import knn_join
     pts = points_df(spark, sf_dir)
     return knn_join(pts.where(F.col("pid") % 10 == 0), pts,

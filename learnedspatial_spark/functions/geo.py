@@ -85,10 +85,10 @@ def haversine_s2_col(lat1r: Column, lon1r: Column, lat2r: Column, lon2r: Column)
     """The haversine's s^2 term (sin^2(dlat/2) + cos*cos*sin^2(dlon/2))
     as a pure Column expression — monotone in great-circle distance and
     well-conditioned (no asin amplification near the antipode), which is
-    what conservative distance GATES should compare on (see
-    operators/distjoin._prefilter_expr).  The products associate left to
-    right exactly as in :func:`haversine_m_sql` and the NumPy kernels, so
-    :func:`haversine_m_col` is bit-identical to the SQL form."""
+    what conservative distance GATES should compare on.  The products
+    associate left to right exactly as in :func:`haversine_m_sql` and the
+    NumPy kernels, so :func:`haversine_m_col` is bit-identical to the SQL
+    form."""
     u = F.sin((lat2r - lat1r) / F.lit(2.0))
     v = F.sin((lon2r - lon1r) / F.lit(2.0))
     return u * u + F.cos(lat1r) * F.cos(lat2r) * v * v

@@ -1,4 +1,4 @@
-"""Table-vs-table within-radius distance JOIN (grid-blocked, exact refine).
+"""Table-vs-table within-radius distance JOIN (band-co-located, exact refine).
 
 The reference answers distance queries from a driver-side query LIST
 (include/queries/distance.h:25-45 haversine; src/main.cpp distance
@@ -8,63 +8,81 @@ great-circle meters (:func:`distance_join_pairs`), and the k nearest
 right-table points within the radius per left-table point
 (:func:`knn_join`) — both without an all-pairs join.
 
-Scale design (the part that must survive 100 TB):
+Plan (one per join): the JVM computes only a latitude band per row,
+``band = floor((lat + 90) / band_deg(r))``; one ``repartition`` on the
+band co-locates every band with its neighbours' copies, a
+``sortWithinPartitions`` on it makes each band one contiguous run, and
+one ``mapInPandas`` kernel finds, refines and (for kNN) ranks the pairs.
+No join, no broadcast and no window runs.
 
-- **Blocking** is a latitude-band x longitude-cell grid derived in
-  closed form from the radius.  Band height is the exact latitude bound
-  (haversine(a, b) >= R * |delta lat|, with equality at delta lon = 0),
-  and each band's longitude cell width is the exact longitude bound at
-  the band's most poleward reachable latitude
-  (``2 * asin(sin(r / 2R) / cos(phi_max))``) — bands near a pole where
-  that bound exceeds the full circle collapse to ONE cell per band.
-  Both bounds are inflated by ``SAFETY`` so floating-point rounding of
-  the thresholds can only ever ADD candidates, never drop a true pair.
-- **One stencil side.**  The right side emits its single (band, cell)
-  key; the left side emits the 3 x 3 neighborhood (its band +-1, each
-  with THAT band's own cell width, cells +-1 modulo the band's cell
-  count so antimeridian pairs meet).  A closed-form filter keeps one
-  representative per distinct key when a polar band has fewer than 3
-  cells, so no pair can surface twice and no shuffle is spent on
-  dedup.  The join is then a plain equi-join on (band, cell):
-  shuffle keyed by block, AQE skew-split applies to hot blocks, and the
-  shuffled rows carry only (pid, x, y) — never a payload column.
-- **Exact refine** runs as an Arrow-batched NumPy kernel
-  (:func:`operators.probes.haversine_m` — the same kernel the graded
-  distance queries use, so the DuckDB oracle parity rests on the same
-  measured NumPy==DuckDB trig identity).  Spark's JVM trig carries no
-  such guarantee, which is why the refine is NOT a Column expression.
+- **Adjacent bands, from the latitude bound.**  Band height is the exact
+  latitude bound (haversine(a, b) >= R * |delta lat|, with equality at
+  delta lon = 0), inflated by ``SAFETY``, so a pair within the radius
+  sits in the same band or in two adjacent ones.  The self-join sends
+  each point to its band and, as a copy, to band + 1; the kNN join sends
+  left points to their band and right points to bands b - 1, b and
+  b + 1.
+- **The per-band longitude window.**  Inside band b's group every pair's
+  latitudes lie in ``[lo(b - 1), hi(b)]`` (self-join) or
+  ``[lo(b - 1), hi(b + 1)]`` (kNN), so their WRAPPED longitude
+  difference is at most the exact bound at that interval's most poleward
+  latitude, ``2 * asin(sin(r / 2R) / cos(phi_max))``, SAFETY-inflated
+  (:func:`_window_deg`, the NumPy form of :func:`_w_expr`).  Where that
+  bound reaches 180 degrees the window is the whole band.  The kernel
+  searches the window vectorised across every band of a chunk: one
+  sorted composite key ``band * KEY_STRIDE + canonical lon``, with the
+  targets near the 0/360 seam copied one turn around where the window is
+  narrower than the band, and an absolute margin of a few ulps of the
+  key, so rounding can only ADD candidates, never drop a true pair.
+- **Exactly once.**  The self-join's band-b group holds its own points
+  and the copies of band b - 1.  Own x own pairs are met from both ends
+  and keep ``l_pid < r_pid``; own x copy pairs are met once, in the
+  higher band's group, and are emitted as ``(least, greatest)``; copy x
+  copy pairs belong to band b - 1's own group and are never emitted.
+  The kNN join meets each (left point, right point) pair once, in the
+  left point's band, and keeps the top k per left point by
+  ``(dist_m, r_pid)``.
+- **Exact refine** uses :func:`operators.probes.haversine_m` — the same
+  kernel the graded distance queries use, so the DuckDB oracle parity
+  rests on the same measured NumPy==DuckDB trig identity.  Spark's JVM
+  trig carries no such guarantee, which is why the refine is not a
+  Column expression.  The window is NumPy too, so no trig tree enters a
+  Catalyst plan (the former stencil put one into ~10 analysed trees).
+- **Unit of work: one latitude band** (before: one (band, longitude
+  cell) block).  A task holds at most one band plus one Arrow batch: the
+  kernel carries each batch's last, possibly open band into the next
+  batch (:func:`_whole_bands`).  A band that is hot for its radius is
+  one task's work; the join-size pre-flight of ROADMAP item 5 (open) is
+  the planned guard.
 
-Correctness of the blocking (proved, then property-tested against an
-O(n^2) NumPy oracle in tests/test_distjoin.py):
-
-- ``dist <= r  =>  |delta lat| <= band_deg``, so the pair's bands differ
-  by at most 1 (floor of values at most ``band_deg`` apart, and the
-  inflation keeps the boundary case strict).
-- For a pair whose right point sits in band b, both latitudes lie in
-  ``[lo(b - 1), hi(b + 1)]``; the band-b cell width covers the longitude
-  bound over exactly that interval, so the WRAPPED longitude difference
-  is at most one cell width.  The fractional last cell is merged into
-  cell ``n - 1`` (``n = floor(360 / w)``, cell index clamped), which
-  makes every cell at least ``w`` wide — without the merge, a seam pair
-  could land 2 cells apart across the narrow sliver.
+Correctness is property-tested against an O(n^2) NumPy oracle in
+tests/test_distjoin.py (seam, poles, bands split across Arrow batches,
+distance ties).
 
 Input domain: latitudes must be geographic ([-90, 90] degrees);
 longitudes of ANY convention (0..360, unwrapped) are canonicalized into
-the key grid by the pmod in :func:`_cell_expr`, while the exact refine
-always evaluates the RAW coordinates (haversine is exactly periodic in
-longitude), so the wrap can never change a result — only route it.
+[0, 360) for the window only, while the exact refine always evaluates
+the RAW coordinates (haversine is exactly periodic in longitude), so the
+wrap can never change a result — only route it.  Rows with a null or NaN
+coordinate are within no radius of anything; they are dropped before
+the exchange.
+
+:func:`block_key_cols` and :func:`stencil_keys` are the former 3 x 3
+(band, cell) blocking, kept as public helpers: perfbench counts its
+candidates in a traced run.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.geo import EARTH_RADIUS_M
+from . import probes
 
 #: Multiplicative inflation applied to every blocking threshold.  The
 #: closed-form bounds are exact in real arithmetic; one ulp of rounding
@@ -72,6 +90,14 @@ from ..functions.geo import EARTH_RADIUS_M
 #: on the radius.  2^-10 is ~10^9 ulps of margin at these magnitudes and
 #: costs <0.1% extra candidates.
 SAFETY = 1.0 + 2.0**-10
+
+#: Composite-key distance between adjacent bands.  A band's keys,
+#: seam copies included, span (-180, 540) past its base, so a stride of
+#: 2000 keeps every window (at most WHOLE_BAND wide on either side) inside
+#: its own band.
+KEY_STRIDE = 2000.0
+#: Half-window that covers a whole band's keys and none of a neighbour's.
+WHOLE_BAND = 1000.0
 
 
 def band_deg(radius_m: float) -> float:
@@ -190,103 +216,135 @@ def stencil_keys(base: DataFrame, radius_m: float) -> DataFrame:
 
 
 def _normalize(points: DataFrame, id_col: str, lat_col: str, lon_col: str) -> DataFrame:
-    return points.select(
-        F.col(id_col).alias("pid"),
-        F.col(lat_col).cast("double").alias("x"),
-        F.col(lon_col).cast("double").alias("y"),
-    )
+    """(pid, x, y) rows with both coordinates set: a null or NaN
+    coordinate is within no radius of anything, and its band key must not
+    reach the kernel."""
+    x, y = F.col(lat_col).cast("double"), F.col(lon_col).cast("double")
+    return points.select(F.col(id_col).alias("pid"), x.alias("x"), y.alias("y")).where(
+        F.col("x").isNotNull() & F.col("y").isNotNull()
+        & ~F.isnan(F.col("x")) & ~F.isnan(F.col("y")))
 
 
-def _blocked_candidates(left: DataFrame, right: DataFrame, radius_m: float) -> DataFrame:
-    """Candidate (l, r) rows whose great-circle distance MAY be within
-    ``radius_m``: the left side fans its stencil keys, the right side its
-    single key, and the equi-join on (band, cell) meets every true pair
-    exactly once (the stencil keys of one point are distinct, the right
-    key unique)."""
-    l = stencil_keys(left, radius_m).select(
-        F.col("pid").alias("l_pid"),
-        F.col("x").alias("l_x"),
-        F.col("y").alias("l_y"),
-        "band", "cell",
-    )
-    r = right.select(
-        F.col("pid").alias("r_pid"),
-        F.col("x").alias("r_x"),
-        F.col("y").alias("r_y"),
-        *block_key_cols(radius_m),
-    )
-    return l.join(r, on=["band", "cell"], how="inner")
+def _window_deg(band: np.ndarray, radius_m: float, above: int) -> np.ndarray:
+    """Longitude window (degrees, wrapped difference) of band ``band``'s
+    group whose latitudes span ``[lo(band - 1), hi(band + above)]``: the
+    NumPy form of :func:`_w_expr` (which is this with ``above=1``).  360
+    where the bound reaches the antipode — the whole band."""
+    bd = band_deg(radius_m)
+    sinr = math.sin(radius_m / (2.0 * EARTH_RADIUS_M))
+    b = band.astype(np.float64)
+    reach = np.minimum(
+        np.maximum(np.abs((b - 1) * bd - 90.0), np.abs((b + 1 + above) * bd - 90.0)), 90.0)
+    cosmin = np.cos(np.radians(reach))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        w = np.degrees(2.0 * np.arcsin(sinr / cosmin)) * SAFETY
+    return np.where(cosmin <= sinr, 360.0, np.minimum(w, 360.0))
 
 
-#: Multiplicative slack on the JVM pre-filter threshold.  JVM and NumPy
-#: trig agree to a few ulps (~1e-15 relative); 2^-20 (~1e-6) is ~10^9x
-#: that margin, and costs only a sliver of extra survivors.
-PREFILTER_SLACK = 1.0 + 2.0**-20
+def _window_candidates(band: np.ndarray, lon: np.ndarray, query: np.ndarray,
+                       target: np.ndarray, window: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(query row, target row) index pairs of one chunk of whole bands:
+    every target in the query's band group whose wrapped longitude
+    difference is within the group's ``window``.  Conservative: the
+    margin of a few ulps of the composite key only adds candidates."""
+    q, t = np.flatnonzero(query), np.flatnonzero(target)
+    if q.size == 0 or t.size == 0:
+        return q[:0], t[:0]
+    c = np.mod(lon + 180.0, 360.0)
+    key = band * KEY_STRIDE + c
+    half = window + 4.0 * np.spacing(np.abs(key).max() + KEY_STRIDE)
+    whole = half >= 180.0
+    half = np.where(whole, WHOLE_BAND, half)
+    # seam copies, one turn around, only where the window is narrower than
+    # the band (so no window can hold a target and its copy)
+    west = t[~whole[t] & (c[t] > 360.0 - half[t])]
+    east = t[~whole[t] & (c[t] < half[t])]
+    keys = np.concatenate([key[t], key[west] - 360.0, key[east] + 360.0])
+    rows = np.concatenate([t, west, east])
+    order = np.argsort(keys, kind="stable")
+    keys, rows = keys[order], rows[order]
+    start = np.searchsorted(keys, key[q] - half[q], "left")
+    n = np.searchsorted(keys, key[q] + half[q], "right") - start
+    at = np.repeat(start - (np.cumsum(n) - n), n) + np.arange(n.sum())
+    return np.repeat(q, n), rows[at]
 
 
-def _prefilter_expr(radius_m: float) -> Column:
-    """Conservative JVM-side haversine gate, evaluated in whole-stage
-    codegen BEFORE any row crosses into Python.
-
-    Why it exists (measured): the blocked candidates outnumber true
-    pairs ~8x, and each candidate costs 48 Arrow bytes for ONE haversine
-    — the lowest compute-per-byte stage in the engine, which saturates a
-    single socket's bandwidth long before its cores (the 4->16 walls
-    barely divided).  This filter keeps only near-matches, so the Arrow
-    stream carries ~the true pairs.
-
-    Why it cannot change a result: the EXACT decision stays with the
-    NumPy kernel downstream (the DuckDB-parity basis; Spark's JVM trig
-    carries no such guarantee).  The gate compares the haversine's s^2
-    term — monotone in distance, well-conditioned (products of sins and
-    cosines; no asin amplification near the antipode) — against
-    sin(r/2R)^2 inflated by ``PREFILTER_SLACK``: a true pair's JVM s^2
-    can exceed its NumPy value only by ulp-scale error, ~10^9x smaller
-    than the slack, so no true pair is ever dropped.  Radii >= pi*R
-    degenerate to keep-everything (the min() clamp)."""
-    from ..functions.geo import haversine_s2_col
-
-    s2 = haversine_s2_col(
-        F.col("l_x") / 180.0 * math.pi, F.col("l_y") / 180.0 * math.pi,
-        F.col("r_x") / 180.0 * math.pi, F.col("r_y") / 180.0 * math.pi)
-    sinr = math.sin(min(radius_m / (2.0 * EARTH_RADIUS_M), math.pi / 2.0))
-    return s2 <= F.lit((sinr * PREFILTER_SLACK) ** 2)
+def _whole_bands(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Regroup band-sorted Arrow batches into chunks of whole bands.  Each
+    batch's last band may continue in the next batch, so it is carried
+    over: a task holds at most one band plus one batch."""
+    open_: list[pd.DataFrame] = []
+    for pdf in batches:
+        if len(pdf) == 0:
+            continue
+        band = pdf["band"].to_numpy()
+        cut = int(np.searchsorted(band, band[-1], "left"))
+        if cut > 0 or (open_ and open_[0]["band"].iat[0] != band[-1]):
+            done = [*open_, pdf.iloc[:cut]] if cut else open_
+            yield pd.concat(done, ignore_index=True) if len(done) > 1 else done[0]
+            open_ = []
+        open_.append(pdf.iloc[cut:])
+    if open_:
+        yield pd.concat(open_, ignore_index=True)
 
 
-def _refine_dist(cand: DataFrame, radius_m: float) -> DataFrame:
-    """Exact haversine over the candidates, Arrow-batched NumPy (the same
-    kernel — and so the same DuckDB parity basis — as the graded distance
-    queries); emits ``(l_pid, r_pid, dist_m)`` for pairs within radius.
-    A conservative JVM pre-filter (:func:`_prefilter_expr`) trims the
-    candidates codegen-side so the Arrow boundary carries ~only true
-    pairs."""
+def _dist_m(x: np.ndarray, y: np.ndarray, qi: np.ndarray, ti: np.ndarray) -> np.ndarray:
+    """Exact haversine meters between rows ``qi`` and ``ti`` (degrees in)."""
+    return probes.haversine_m(probes.deg2rad(x[qi]), probes.deg2rad(y[qi]),
+                              probes.deg2rad(x[ti]), probes.deg2rad(y[ti]))
 
-    def refine(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from . import probes
 
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            la1 = (pdf["l_x"].to_numpy() / 180.0) * np.pi
-            lo1 = (pdf["l_y"].to_numpy() / 180.0) * np.pi
-            la2 = (pdf["r_x"].to_numpy() / 180.0) * np.pi
-            lo2 = (pdf["r_y"].to_numpy() / 180.0) * np.pi
-            d = probes.haversine_m(la1, lo1, la2, lo2)
-            keep = d <= radius_m
-            if keep.any():
-                out = pdf.loc[keep, ["l_pid", "r_pid"]].copy()
-                out["dist_m"] = d[keep]
-                yield out
+Kernel = Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]
 
-    # the id columns pass through untouched, so the output schema carries
-    # whatever type the caller's id_col has (string/uuid ids work too)
-    lt = cand.schema["l_pid"].dataType.simpleString()
-    rt = cand.schema["r_pid"].dataType.simpleString()
-    return (
-        cand.select("l_pid", "l_x", "l_y", "r_pid", "r_x", "r_y")
-        .where(_prefilter_expr(radius_m))
-        .mapInPandas(refine, schema=f"l_pid {lt}, r_pid {rt}, dist_m double")
-    )
+
+def _pairs_kernel(radius_m: float) -> Kernel:
+    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in _whole_bands(it):
+            band, pid = pdf["band"].to_numpy(), pdf["pid"].to_numpy()
+            copy = pdf["copy"].to_numpy() != 0
+            x, y = pdf["x"].to_numpy(), pdf["y"].to_numpy()
+            qi, ti = _window_candidates(band, y, ~copy, np.ones_like(copy),
+                                        _window_deg(band, radius_m, 0))
+            pq, pt = pid[qi], pid[ti]
+            keep = np.where(copy[ti], pq != pt, pq < pt)
+            qi, ti, pq, pt = qi[keep], ti[keep], pq[keep], pt[keep]
+            d = _dist_m(x, y, qi, ti)
+            m = d <= radius_m
+            if m.any():
+                pq, pt = pq[m], pt[m]
+                lt = pq < pt
+                yield pd.DataFrame({"l_pid": np.where(lt, pq, pt), "r_pid": np.where(lt, pt, pq)})
+    return kernel
+
+
+def _knn_kernel(k: int, radius_m: float, exclude_same_id: bool) -> Kernel:
+    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in _whole_bands(it):
+            band, pid = pdf["band"].to_numpy(), pdf["pid"].to_numpy()
+            left = pdf["left"].to_numpy() != 0
+            x, y = pdf["x"].to_numpy(), pdf["y"].to_numpy()
+            qi, ti = _window_candidates(band, y, left, ~left, _window_deg(band, radius_m, 1))
+            if exclude_same_id:
+                keep = pid[qi] != pid[ti]
+                qi, ti = qi[keep], ti[keep]
+            d = _dist_m(x, y, qi, ti)
+            m = d <= radius_m
+            qi, ti, d = qi[m], ti[m], d[m]
+            order = np.lexsort((pid[ti], d, qi))
+            qi, ti = qi[order], ti[order]
+            first = np.r_[True, qi[1:] != qi[:-1]]
+            rank = np.arange(qi.size) - np.maximum.accumulate(np.where(first, np.arange(qi.size), 0))
+            top = rank < k
+            if top.any():
+                yield pd.DataFrame({"l_pid": pid[qi[top]], "r_pid": pid[ti[top]]})
+    return kernel
+
+
+def _band_colocated(rows: DataFrame, kernel: Kernel, id_type: str) -> DataFrame:
+    """The one plan shape of both joins: one exchange on the band, the
+    band as one contiguous run per partition, one NumPy kernel."""
+    return (rows.repartition("band").sortWithinPartitions("band")
+            .mapInPandas(kernel, schema=f"l_pid {id_type}, r_pid {id_type}"))
 
 
 def distance_join_pairs(
@@ -299,19 +357,19 @@ def distance_join_pairs(
     """All unordered point pairs within ``radius_m`` great-circle meters:
     ``(l_pid, r_pid)`` with ``l_pid < r_pid``, each pair exactly once.
 
-    Self-join dedup: the blocked candidates meet each (l, r) exactly
-    once; ``l.pid < r.pid`` then keeps one orientation of the two
-    symmetric meetings.
+    Each point goes to its band and, as a copy, to band + 1; the kernel
+    emits a pair of two own points once, by ``l_pid < r_pid``, and an own
+    x copy pair (met only in the higher band) as ``(least, greatest)``.
 
     Precondition: ``id_col`` is unique.  Two points sharing an id never
-    pair (``l.pid < r.pid`` is false for them), whatever their distance.
-    The DuckDB twin has the same semantics.
+    pair, whatever their distance.  The DuckDB twin has the same
+    semantics.
     """
     base = _normalize(points, id_col, lat_col, lon_col)
-    cand = _blocked_candidates(base, base, radius_m).where(
-        F.col("l_pid") < F.col("r_pid")
-    )
-    return _refine_dist(cand, radius_m).select("l_pid", "r_pid")
+    band = _band(F.col("x"), radius_m)
+    rows = base.select("pid", "x", "y", F.posexplode(F.array(band, band + 1)).alias("copy", "band"))
+    return _band_colocated(rows, _pairs_kernel(radius_m),
+                           base.schema["pid"].dataType.simpleString())
 
 
 def knn_join(
@@ -336,32 +394,25 @@ def knn_join(
     physical points), or an id collision would silently drop a
     legitimate cross-table neighbor.
 
-    The radius bound is what makes the join EXACT under blocking (an
+    The radius bound is what makes the join EXACT under banding (an
     unbounded kNN would need expanding re-probes for isolated points);
     it is also what a production dedup/enrichment pass wants — a
-    neighbor beyond the radius is no neighbor.  The top-k runs as a
-    row_number window over (l_pid, dist): Spark 4 plans it as a
-    WindowGroupLimit (per-partition partial top-k BEFORE the shuffle),
-    and the window partition count per key is bounded by the points
-    within the radius — data density, not corpus-frequency skew.  Ties
-    break on (dist_m, r_pid), deterministic on both engines.
+    neighbor beyond the radius is no neighbor.  Left points go to their
+    band and right points to bands b - 1, b and b + 1, so every
+    candidate of a left point sits in its band's group and the kernel
+    takes the top k there: no second exchange, no window.  Ties break on
+    (dist_m, r_pid), deterministic on both engines.
 
-    Precondition: ``id_col`` is unique within ``left``.  The top-k
-    window partitions by the left id, so left points sharing an id merge
-    into one neighbor set of k rows.  The DuckDB twin has the same
-    semantics.
+    Precondition: ``id_col`` is unique within ``left``; the top k is
+    taken per left ROW.  The DuckDB twin partitions by the left id.
+    Both sides' ids share one column in the exchange, so they must have
+    types Spark can union; the output ids take the union's type.
     """
     l = _normalize(left, id_col, lat_col, lon_col)
     r = _normalize(right, id_col, lat_col, lon_col)
-    cand = _blocked_candidates(l, r, radius_m)
-    if exclude_same_id:
-        cand = cand.where(F.col("l_pid") != F.col("r_pid"))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("l_pid").orderBy("dist_m", "r_pid")
-    return (
-        _refine_dist(cand, radius_m)
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("l_pid", "r_pid")
-    )
+    band = _band(F.col("x"), radius_m)
+    rows = l.select("pid", "x", "y", band.alias("band"), F.lit(1).alias("left")).unionByName(
+        r.select("pid", "x", "y", F.explode(F.array(band - 1, band, band + 1)).alias("band"),
+                 F.lit(0).alias("left")))
+    return _band_colocated(rows, _knn_kernel(k, radius_m, exclude_same_id),
+                           rows.schema["pid"].dataType.simpleString())

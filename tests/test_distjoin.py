@@ -12,7 +12,7 @@ import numpy as np
 import pytest
 
 from learnedspatial_spark.operators.distjoin import (
-    band_deg, distance_join_pairs, knn_join)
+    _window_deg, band_deg, distance_join_pairs, knn_join)
 from learnedspatial_spark.operators.probes import haversine_m
 
 
@@ -95,7 +95,11 @@ def _brute_knn(lat_l, lon_l, pid_l, lat_r, lon_r, pid_r, k, radius_m):
     return out
 
 
-@pytest.mark.parametrize("k,radius_m", [(3, 150_000.0), (5, 1_500_000.0)])
+@pytest.mark.parametrize("k,radius_m", [
+    (3, 150_000.0),
+    (5, 1_500_000.0),
+    (600, 150_000.0),    # k above every left point's neighbour count
+])
 def test_knn_join_matches_brute_force(spark, k, radius_m):
     lat, lon = _corpus(13, 500)
     pid = np.arange(500, dtype=np.int64)
@@ -228,3 +232,118 @@ def test_haversine_col_bit_identical_to_sql(spark, sf_dir):
     assert np.array_equal(s2, values(F.expr(geo.haversine_s2_sql(*names))))
     assert np.array_equal(values(geo.haversine_m_col(*cols)),
                           values(F.expr(geo.haversine_m_sql(*names))))
+
+
+def _frame(spark, lat, lon):
+    return spark.createDataFrame(
+        [(i, float(lat[i]), float(lon[i])) for i in range(len(lat))],
+        "pid long, x double, y double")
+
+
+def _knn_rows(df):
+    rows = [(r.l_pid, r.r_pid) for r in df.collect()]
+    assert len(rows) == len(set(rows)), "duplicate kNN rows emitted"
+    return set(rows)
+
+
+@pytest.mark.parametrize("batch", [1, 7])
+def test_bands_split_across_arrow_batches(spark, batch):
+    """The kernel carries a band's rows from one Arrow batch into the
+    next; with tiny batches almost every band spans several."""
+    lat, lon = _corpus(11, 400)
+    pid = np.arange(400, dtype=np.int64)
+    df = _frame(spark, lat, lon)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(batch))
+    try:
+        got = {(r.l_pid, r.r_pid) for r in distance_join_pairs(df, 400_000.0).collect()}
+        got_knn = _knn_rows(knn_join(df.where("pid % 3 = 0"), df, 4, 400_000.0))
+    finally:
+        spark.conf.set(key, old)
+    assert got == _brute_pairs(lat, lon, 400_000.0)
+    sel = pid % 3 == 0
+    assert got_knn == _brute_knn(lat[sel], lon[sel], pid[sel], lat, lon, pid, 4, 400_000.0)
+
+
+def test_polar_bands_search_the_whole_band(spark):
+    """Near a pole the longitude bound passes 180 degrees: the window is
+    the whole band, and pairs on opposite sides of the pole still meet."""
+    rng = np.random.default_rng(17)
+    lat = np.concatenate([rng.uniform(89.6, 90.0, 120), rng.uniform(-90.0, -89.6, 120)])
+    lon = rng.uniform(-180.0, 180.0, 240)
+    pid = np.arange(240, dtype=np.int64)
+    r = 30_000.0
+    top = np.floor((np.array([89.9]) + 90.0) / band_deg(r)).astype(np.int64)
+    assert _window_deg(top, r, 0)[0] == 360.0 and _window_deg(top, r, 1)[0] == 360.0
+    df = _frame(spark, lat, lon)
+    got = {(r_.l_pid, r_.r_pid) for r_ in distance_join_pairs(df, r).collect()}
+    assert got == _brute_pairs(lat, lon, r)
+    sel = pid % 4 == 0
+    assert _knn_rows(knn_join(df.where("pid % 4 = 0"), df, 3, r)) == _brute_knn(
+        lat[sel], lon[sel], pid[sel], lat, lon, pid, 3, r)
+
+
+def test_knn_join_exact_distance_ties_break_on_r_pid(spark):
+    # four right points at exactly the same distance (dlat = +-0.1 or
+    # dlon = +-0.1 at the equator give bit-equal haversines), two
+    # duplicates of the left point at distance 0, and one farther point
+    left = spark.createDataFrame([(1, 0.0, 0.0)], "pid long, x double, y double")
+    pts = [(40, 0.1, 0.0), (20, -0.1, 0.0), (30, 0.0, 0.1), (10, 0.0, -0.1),
+           (70, 0.0, 0.0), (60, 0.0, 0.0), (50, 0.2, 0.0)]
+    right = spark.createDataFrame(pts, "pid long, x double, y double")
+    lat_r = np.array([p[1] for p in pts])
+    lon_r = np.array([p[2] for p in pts])
+    pid_r = np.array([p[0] for p in pts])
+    d = haversine_m(0.0, 0.0, (lat_r / 180.0) * np.pi, (lon_r / 180.0) * np.pi)
+    assert len(set(d[:4].tolist())) == 1  # the four really tie
+    for k in (1, 3, 5, 7):
+        got = _knn_rows(knn_join(left, right, k, 50_000.0))
+        want = _brute_knn(np.array([0.0]), np.array([0.0]), np.array([1]),
+                          lat_r, lon_r, pid_r, k, 50_000.0)
+        assert got == want, k
+    assert _knn_rows(knn_join(left, right, 3, 50_000.0)) == {(1, 60), (1, 70), (1, 10)}
+
+
+@pytest.mark.parametrize("side", ["left", "right", "both"])
+def test_empty_side_joins_nothing(spark, side):
+    lat, lon = _corpus(7, 100)
+    df = _frame(spark, lat, lon)
+    empty = df.where("pid < 0")
+    left = empty if side in ("left", "both") else df
+    right = empty if side in ("right", "both") else df
+    assert knn_join(left, right, 3, 500_000.0).collect() == []
+    if side == "both":
+        assert distance_join_pairs(empty, 500_000.0).collect() == []
+
+
+def test_null_and_nan_coordinates_are_dropped(spark):
+    """A row with a null or NaN latitude or longitude pairs with nothing,
+    in both joins and in their DuckDB twins."""
+    import duckdb
+
+    from learnedspatial_spark import entrylib
+    from learnedspatial_spark.sources.points import POINTS_CTE
+
+    nan = float("nan")
+    rows = [(10, 10.0, 20.0), (20, 10.0, 20.1), (30, None, 20.0), (40, 10.0, None),
+            (50, nan, 20.0), (60, 10.0, nan)]
+    df = spark.createDataFrame(rows, "pid long, x double, y double")
+    pairs = sorted(tuple(r) for r in distance_join_pairs(
+        df, entrylib.DISTANCE_JOIN_RADIUS_M).collect())
+    knn = sorted(tuple(r) for r in knn_join(
+        df, df, entrylib.KNN_JOIN_K, entrylib.KNN_JOIN_RADIUS_M).collect())
+    assert pairs == [(10, 20)]
+    assert knn == [(10, 20), (20, 10)]
+
+    def sql_value(v):
+        if v is None:
+            return "NULL"
+        return "'NaN'::DOUBLE" if v != v else f"{v!r}::DOUBLE"
+
+    values = ", ".join(f"({p}, {sql_value(x)}, {sql_value(y)})" for p, x, y in rows)
+    frame = f"points AS (SELECT * FROM (VALUES {values}) v(pid, x, y))"
+    con = duckdb.connect()
+    for sql, want in ((entrylib._distance_join_sql(), pairs), (entrylib._knn_join_sql(), knn)):
+        assert POINTS_CTE in sql
+        assert sorted(con.sql(sql.replace(POINTS_CTE, frame)).fetchall()) == want

@@ -2,7 +2,8 @@
 probe and one aggregation (2 Spark jobs, one exchange) over an index it
 listed once; count and point merges plan no join in either engine; and
 the point lookup, now a degenerate range, keeps its defined answers for
-hits, misses, duplicate coordinates and empty batches."""
+hits, misses, duplicate coordinates and empty batches.  Each table join
+is one band-co-located plan of two jobs."""
 
 import numpy as np
 import pandas as pd
@@ -10,6 +11,7 @@ import pytest
 
 from learnedspatial_spark import pipeline
 from learnedspatial_spark.engine import ISIN_MAX_CELLS, SpatialEngine
+from learnedspatial_spark.operators.distjoin import distance_join_pairs, knn_join
 from learnedspatial_spark.tiled import TiledSpatialEngine
 from oracle import oracle as orc
 
@@ -158,6 +160,29 @@ def test_count_and_point_merges_plan_one_exchange_no_join(corpus, engine, family
     assert not [d for name, d in nodes if name == "BroadcastExchange" or name.endswith("Join")
                 or "LeftOuter" in d], nodes
     df.collect()
+
+
+@pytest.mark.parametrize("join", ["pairs", "knn_join"])
+def test_table_joins_plan_one_band_exchange_and_one_kernel(spark, corpus, join):
+    """Each table join is one band-co-located plan over the cached points:
+    one hash exchange on the latitude band, one MapInPandas kernel, and no
+    join, broadcast or window; it runs one shuffle-map job and one result
+    job."""
+    pts = corpus["session"].assigned_points()
+    if join == "pairs":
+        df = distance_join_pairs(pts, 200_000.0)
+    else:
+        df = knn_join(pts.where("pid % 8 = 0"), pts, 5, 500_000.0)
+    nodes = _plan_nodes(df)
+    names = [name for name, _ in nodes]
+    exchanges = [d for name, d in nodes if name == "Exchange"]
+    assert len(exchanges) == 1 and "hashpartitioning(band" in exchanges[0], nodes
+    assert names.count("MapInPandas") == 1, nodes
+    assert not [name for name in names if name.endswith("Join") or name in (
+        "BroadcastExchange", "Window", "WindowGroupLimit")], nodes
+    rows = []
+    assert _jobs_of(spark, f"join-{join}", lambda: rows.extend(df.collect())) == 2
+    assert rows  # the radius pairs real neighbours
 
 
 def _jobs_of(spark, group, action) -> int:

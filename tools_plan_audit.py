@@ -9,6 +9,8 @@ plan properties the 100 TB design depends on:
   the cell rows (in session: the cached cell-keyed relation, with no
   second Exchange and no Sort; tiled: the partition-pruned scan);
 * count and point merges are one aggregation (one exchange, no join);
+* the table x table joins are one band-co-located kernel (one exchange
+  on the latitude band, no join, no window);
 * relational glue runs in WholeStageCodegen;
 * the small dimension sides are broadcast.
 """
@@ -90,6 +92,21 @@ def probe_shuffle_free(plan: str, merges: int) -> str:
     BroadcastExchange of a small query table is not a shuffle."""
     if len(re.findall(r"\bExchange", plan)) == 2 * merges:
         return "\n-- audit: probe-shuffle-free (only the per-query merge exchanges)\n"
+    return ""
+
+
+def band_colocated(plan: str) -> str:
+    """Marker when a table join is one band-co-located plan: exactly one
+    Exchange, hash-partitioned on the band key, feeding one MapInPandas
+    kernel, with no join, no BroadcastExchange and no Window or
+    WindowGroupLimit."""
+    nodes = re.findall(r"^[\s:|+*-]*(\w+)", plan_tree(plan), re.M)
+    if (nodes.count("Exchange") == 1 and nodes.count("MapInPandas") == 1
+            and re.search(r"Arguments: hashpartitioning\(band#\d+", plan)
+            and not any(n.endswith("Join") or n in ("BroadcastExchange", "Window", "WindowGroupLimit")
+                        for n in nodes)):
+        return ("\n-- audit: band-colocated (one hash exchange on the latitude band, one "
+                "MapInPandas kernel; no join, no broadcast, no window)\n")
     return ""
 
 
@@ -346,36 +363,23 @@ def main() -> None:
         "HashAggregate",
     ]))
 
-    # distance join (round 5): blocked table x table within-radius join —
-    # the candidate set must form via an EQUI-join on the (band, cell)
-    # block key (never a cross/nested-loop join), the refine must be the
-    # Arrow-batched NumPy kernel (MapInPandas), and the stencil fan-out
-    # must keep the trig-bearing width tree inside a Generate output
-    # (the 9-struct literal form broke the 64KB codegen method limit)
-    from learnedspatial_spark.operators.distjoin import distance_join_pairs
+    # table x table joins: each is one band-co-located kernel — the JVM
+    # computes only the latitude band, one exchange co-locates each band
+    # with its neighbours' copies, and the NumPy kernel searches, refines
+    # and (kNN) ranks; no blocked equi-join, no broadcast, no window
+    from learnedspatial_spark.operators.distjoin import distance_join_pairs, knn_join
     from learnedspatial_spark.sources.points import points_df as _points_df
-    p16 = plan_of(distance_join_pairs(_points_df(spark, sf), 25000.0))
-    if (re.search(r"BroadcastNestedLoopJoin|CartesianProduct", p16) is None
-            and re.search(r"BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin", p16)
-            and p16.count("Generate") >= 2):
-        p16 += ("\n-- audit: blocked-equi-join (band x cell key, two-stage "
-                "stencil Generate, no cross join)\n")
-    sections.append(("distance_join_pairs (blocked within-radius join)", p16, [
-        "blocked-equi-join",
+    _pdf = _points_df(spark, sf)
+    p16 = plan_of(distance_join_pairs(_pdf, 25000.0))
+    p16 += band_colocated(p16)
+    sections.append(("distance_join_pairs (band-co-located within-radius join)", p16, [
+        "band-colocated",
         "MapInPandas",
     ]))
-    # radius-bounded kNN join: same blocked candidates, then the per-left
-    # top-k must plan as WindowGroupLimit (partial per-partition top-k
-    # BEFORE the window shuffle — never a full sort of all candidates)
-    from learnedspatial_spark.operators.distjoin import knn_join
-    _pdf = _points_df(spark, sf)
     p17 = plan_of(knn_join(_pdf.where(F.col("pid") % 10 == 0), _pdf, 3, 100000.0))
-    if (re.search(r"BroadcastNestedLoopJoin|CartesianProduct", p17) is None
-            and "WindowGroupLimit" in p17):
-        p17 += ("\n-- audit: partial-topk-window (WindowGroupLimit prunes "
-                "candidates before the per-left shuffle; no cross join)\n")
-    sections.append(("knn_join_radius (blocked kNN join, partial top-k)", p17, [
-        "partial-topk-window",
+    p17 += band_colocated(p17)
+    sections.append(("knn_join_radius (band-co-located kNN join, in-kernel top-k)", p17, [
+        "band-colocated",
         "MapInPandas",
     ]))
 
