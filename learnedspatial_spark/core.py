@@ -11,20 +11,28 @@ is that path, shared by both engines:
    otherwise), kNN through ``probes.knn_candidate_cells``; range counts
    resolve fully-contained cells from the stats table at routing
    (``probes.route_contained``, the Spline.hpp:67-75 shortcut);
-2. ship the (cell -> query indices) table of ``probes.compact_routing``
-   and the query arrays as ONE broadcast, never as closure state (a
-   production batch's routing is MBs: as a closure it is re-pickled into
-   the plan per job and unpickled per task, measured 0.3s/task at 18k
-   rectangles);
+2. size the batch: its routed rows are the ``cell_stats`` counts of
+   the routed boundary cells, known before any job runs;
 3. run one per-cell kernel (the module functions below) over the rows of
    the routed cells, in one ``mapInPandas`` probe for both sources;
-4. merge with one aggregation: per-query counts sum the kernel
-   partials together with one ``(key, base)`` row per query (so a query
-   with no hits reports its routed base, 0 if none); a point lookup is a
-   range materialize over the degenerate rectangle [x, x] x [y, y] whose
-   hits take ``min(id)`` beside one NULL row per query; kNN keeps its
-   per-query top-k merge.  Neither count nor point merge joins, so an
-   interactive query runs one probe and one exchange.
+4. merge.  Each family has one merge, written twice with the same rows:
+   per-query counts sum the kernel partials with a routed base (the
+   counts of fully-contained cells, else 0); a point lookup is a range
+   materialize over the degenerate rectangle [x, x] x [y, y] whose hits
+   take ``min(id)``, -1 (pid) or NULL on a miss; kNN keeps each query's
+   top k ordered (d2, x, y, id).  A batch whose routed rows fit
+   :data:`ONE_TASK_MAX_ROWS` probes and merges in ONE task
+   (``coalesce(1).mapInPandas``, the NumPy merge): one Spark job, no
+   exchange, and the routing rides in the closure.  A larger batch
+   ships the (cell -> query indices) table of ``probes.compact_routing``
+   and the query arrays as one broadcast (as a closure a production
+   batch's MBs of routing would be re-pickled per task, measured
+   0.3s/task at 18k rectangles), probes in parallel and merges with one
+   aggregation (counts and points: a union with one row per query, no
+   join) or the per-query kNN merge: two jobs, one exchange.  A batch
+   that routes no cell is its merge of zero partials, a local table
+   (no Spark job).  A materializing query has no merge: its broadcast
+   probe is its answer, one job.
 
 Query ids must be unique within a batch (the merges key on them);
 a batch that repeats one raises ``ValueError`` on the driver.
@@ -61,6 +69,19 @@ from .operators.partitioning import FixedGridPartitioner, STRPartitioner
 from .session import local_frame
 
 _ID_CANDIDATES = ("pid", "url", "doc_id")
+
+#: Routed rows up to which a count, point or kNN batch probes and merges
+#: in one task (module docstring, step 4): the measured wall crossover
+#: against the parallel probe.  Tiled fixed grid of 1.6M uniform points in
+#: 160 cells of 10k rows, local[4] on a 4-vCPU host with the benchmark's
+#: session settings, range counts of 1 and 16 queries, medians of 10
+#: interleaved runs: up to ~170k routed rows the one task is faster
+#: (0.27 against 0.31 s at 170k), from ~190k to 250k the two tie within
+#: 0.01 s, and from 260k the one task is slower (0.40 against 0.34 s at
+#: 260k, 1.98 against 1.42 s at 1.6M).  Its process-tree CPU is 35-50 %
+#: lower at every size (0.46 against 0.78 CPU-s at 230k), so the bound
+#: sits at the end of the tie.
+ONE_TASK_MAX_ROWS = 250_000
 
 
 def id_field(schema):
@@ -203,6 +224,54 @@ def _knn_cell(cell, pdf, qi, payload, id_col):
     return pd.concat(frames)
 
 
+# ---------------------------------------------------------- merges ---
+# merge(partials) -> the family's answer rows, equal to its Spark merge
+# (kNN's applies this one per query): run inside the one task of a small
+# batch, or on the driver over zero partials when a batch routes no cell.
+
+def _merge_counts(parts, key, keys, base):
+    """Per-key counts: the routed ``base`` plus every partial ``cnt``."""
+    cnt = base.copy()
+    if parts:
+        p = pd.concat(parts)
+        order = np.argsort(keys)
+        pos = order[np.searchsorted(keys, p[key].to_numpy(), sorter=order)]
+        np.add.at(cnt, pos, p["cnt"].to_numpy())
+    return pd.DataFrame({key: keys, "cnt": cnt})
+
+
+def _merge_first_id(parts, qids, id_col, miss):
+    """Per query the least hit id, ``miss`` (-1 or None) without a hit."""
+    found = np.full(qids.shape[0], miss, dtype=object if miss is None else np.int64)
+    if parts:
+        first = pd.concat(parts).sort_values(["query_id", id_col]).drop_duplicates("query_id")
+        order = np.argsort(qids)
+        found[order[np.searchsorted(qids, first["query_id"].to_numpy(), sorter=order)]] = \
+            first[id_col].to_numpy()
+    return pd.DataFrame({"query_id": qids, id_col: found})
+
+
+def _merge_topk(parts, kmap, id_col):
+    """Per query the first k partials by (d2, x, y, id), ranked from 1."""
+    if not parts:
+        return pd.DataFrame({"query_id": np.empty(0, dtype=np.int64),
+                             "rnk": np.empty(0, dtype=np.int64), id_col: []})
+    return pd.concat([probes.knn_merge_topk(g, int(q), kmap.get(int(q), 0), id_col)
+                      for q, g in pd.concat(parts).groupby("query_id", sort=False)])
+
+
+def _probe_cells(table, data, kernel, batches):
+    """Run ``kernel`` over each routed cell of a stream of row batches.  A
+    batch may hold several cells (a hash partition of the cached relation,
+    or coalesced tiled file splits), and a cell may span batches: group
+    per batch."""
+    for pdf in batches:
+        for cell, grp in pdf.groupby("cell_id", sort=False):
+            qi = probes.routing_lookup(table, int(cell))
+            if qi is not None:
+                yield kernel(int(cell), grp, qi, data)
+
+
 # ------------------------------------------------------------------ core ---
 
 class SpatialQueryCore:
@@ -247,31 +316,63 @@ class SpatialQueryCore:
 
     def _probe(self, routing, payload, kernel, schema: str) -> DataFrame:
         """Run ``kernel`` over every cell of a ``compact_routing`` table in
-        one ``mapInPandas`` over the source's ``_cell_rows``, with the
-        table and the query arrays in one broadcast."""
+        one parallel ``mapInPandas`` over the source's ``_cell_rows``, with
+        the table and the query arrays in one broadcast."""
         bc = self.spark.sparkContext.broadcast((routing, payload))
 
         def probe(it):
             table, data = bc.value
-            for pdf in it:
-                # a batch may hold several cells (a hash partition of the
-                # cached relation, or coalesced tiled file splits), and a
-                # cell may span batches: group per batch
-                for cell, grp in pdf.groupby("cell_id", sort=False):
-                    qi = probes.routing_lookup(table, int(cell))
-                    if qi is not None:
-                        yield kernel(int(cell), grp, qi, data)
+            yield from _probe_cells(table, data, kernel, it)
         return self._cell_rows(routing[0]).mapInPandas(probe, schema=schema)
 
-    def _zero_filled(self, key: str, keys, parts: DataFrame, base=None) -> DataFrame:
-        """Sum per-(key, cell) partial counts in ONE aggregation over the
-        partials and one ``(key, base)`` row per key, so a key with no
-        hits reports its base (the count routing already resolved, else
-        0) — one exchange, no join."""
+    def _routing(self, cells: np.ndarray, qidx: np.ndarray):
+        """The ``compact_routing`` table of the candidate (cell, query
+        index) pairs whose cell holds rows.  A cell without a stats row
+        has nothing to probe, and an empty probe is not always a task:
+        over an uncached in-session relation, adaptive execution drops
+        the one-task stage of an empty shuffle, and its merged rows."""
+        keep = np.isin(cells, self.cell_stats().ids)
+        return probes.compact_routing(cells[keep], qidx[keep])
+
+    def _routed_rows(self, cells: np.ndarray) -> int:
+        """The stats-table rows of routed ``cells``: what a probe reads."""
+        s = self.cell_stats()
+        return int(s.count[np.searchsorted(s.ids, cells)].sum())
+
+    def _probe_merged(self, routing, payload, kernel, schema: str, merge, aggregate,
+                      out_schema: str) -> DataFrame:
+        """The merged answer of a probe: ``merge`` (NumPy, over the list of
+        kernel partials) and ``aggregate`` (Spark, over the partials
+        DataFrame of ``schema``) both give its ``out_schema`` rows.  No
+        routed cell: the merge of no partials, as a local table.  Routed
+        rows within :data:`ONE_TASK_MAX_ROWS`: one task probes every
+        cell and merges, with the routing in the closure.  Otherwise the
+        parallel probe and the aggregation."""
+        cells = routing[0]
+        if cells.size == 0:
+            return local_frame(self.spark, merge([]), out_schema)
+        if self._routed_rows(cells) > ONE_TASK_MAX_ROWS:
+            return aggregate(self._probe(routing, payload, kernel, schema))
+
+        def stage(it):
+            yield merge(list(_probe_cells(routing, payload, kernel, it)))
+        return self._cell_rows(cells).coalesce(1).mapInPandas(stage, schema=out_schema)
+
+    def _probe_counts(self, key: str, keys, routing, payload, kernel, base=None) -> DataFrame:
+        """Per-key counts, (key, cnt), from a counting kernel's partials
+        and the routed ``base`` (0 without one).  The aggregation sums the
+        partials together with one ``(key, base)`` row per key, so a key
+        with no hits reports its base: one exchange, no join."""
         base = np.zeros(len(keys), dtype=np.int64) if base is None else base
-        kdf = local_frame(self.spark, {key: keys, "cnt": base}, f"{key} bigint, cnt bigint")
-        return parts.unionByName(kdf).groupBy(key).agg(
-            F.sum("cnt").cast("bigint").alias("cnt"))
+        schema = f"{key} bigint, cnt bigint"
+
+        def aggregate(parts):
+            kdf = local_frame(self.spark, {key: keys, "cnt": base}, schema)
+            return parts.unionByName(kdf).groupBy(key).agg(
+                F.sum("cnt").cast("bigint").alias("cnt"))
+        return self._probe_merged(routing, payload, kernel, schema,
+                                  partial(_merge_counts, key=key, keys=keys, base=base),
+                                  aggregate, schema)
 
     # ------------------------------------------------------------- range ---
 
@@ -290,19 +391,16 @@ class SpatialQueryCore:
         s = self.cell_stats()
         base, routing = probes.route_contained(
             q, *self._rect_candidates_flat(q), s.ids, s.minx, s.miny, s.maxx, s.maxy, s.count)
-        parts = self._probe(routing, (q, qids), self._range_kernel(False),
-                            "query_id bigint, cnt bigint")
-        return self._zero_filled("query_id", qids, parts, base)
+        return self._probe_counts("query_id", qids, routing, (q, qids),
+                                  self._range_kernel(False), base)
 
     def range_materialize(self, rects: list[tuple]) -> DataFrame:
         """Q1 range materialize (src/main.cpp:101-132): every
         (query_id, <id>, x, y) hit; order unspecified."""
-        return self._range_hits(*_batch_np(rects, 4))
-
-    def _range_hits(self, q: np.ndarray, qids: np.ndarray, refine: str | None = None) -> DataFrame:
+        q, qids = _batch_np(rects, 4)
         id_col, id_type = self._id_column()
-        return self._probe(probes.compact_routing(*self._rect_candidates_flat(q)), (q, qids),
-                           self._range_kernel(True, refine),
+        return self._probe(self._routing(*self._rect_candidates_flat(q)), (q, qids),
+                           self._range_kernel(True),
                            f"query_id bigint, {id_col} {id_type}, x double, y double")
 
     # ------------------------------------------------------ point lookup ---
@@ -311,21 +409,28 @@ class SpatialQueryCore:
         """Q3 point lookup (src/main.cpp:416-450) as the range materialize
         of the degenerate inclusive rectangle [x, x] x [y, y]: the same
         routing and probe as a range, exact (x, y) equality in the cell
-        kernel, canonical fetch-one = min(id) beside one NULL row per
-        query.  Output (query_id, <id>); a miss is -1 for a numeric pid,
-        NULL otherwise.  The cells always refine by binary search: on a
-        degenerate rectangle it returns the model's rows, without a
-        model fit or the knots broadcast."""
+        kernel, canonical fetch-one = min(id) per query.  Output
+        (query_id, <id>); a miss is -1 for a numeric pid, NULL otherwise.
+        The cells always refine by binary search: on a degenerate
+        rectangle it returns the model's rows, without a model fit or the
+        knots broadcast."""
         xy, qids = _batch_np(pts, 2)
+        q = np.hstack([xy, xy])
         id_col, id_type = self._id_column()
-        hits = self._range_hits(np.hstack([xy, xy]), qids, "binsearch").select("query_id", id_col)
-        misses = local_frame(self.spark, {"query_id": qids}, "query_id bigint").select(
-            "query_id", F.lit(None).cast(id_type).alias(id_col))
-        found = F.min(id_col)
-        if id_col == "pid":
-            found = F.coalesce(found, F.lit(-1))
-        return hits.unionByName(misses).groupBy("query_id").agg(
-            found.cast(id_type).alias(id_col))
+        out_schema = f"query_id bigint, {id_col} {id_type}"
+        miss = -1 if id_col == "pid" else None
+
+        def aggregate(hits):
+            misses = local_frame(self.spark, {"query_id": qids}, "query_id bigint").select(
+                "query_id", F.lit(None).cast(id_type).alias(id_col))
+            found = F.min(id_col) if miss is None else F.coalesce(F.min(id_col), F.lit(miss))
+            return hits.select("query_id", id_col).unionByName(misses).groupBy("query_id").agg(
+                found.cast(id_type).alias(id_col))
+        return self._probe_merged(
+            self._routing(*self._rect_candidates_flat(q)), (q, qids),
+            self._range_kernel(True, "binsearch"),
+            f"{out_schema}, x double, y double",
+            partial(_merge_first_id, qids=qids, id_col=id_col, miss=miss), aggregate, out_schema)
 
     # ---------------------------------------------------------- distance ---
 
@@ -351,15 +456,13 @@ class SpatialQueryCore:
         r2d = 180.0 / math.pi
         fx, tx = probes.widen_ulps(mnla * r2d, mxla * r2d)
         fy, ty = probes.widen_ulps(mnlo * r2d, mxlo * r2d)
-        routing = probes.compact_routing(
-            *self._rect_candidates_flat(np.stack([fx, fy, tx, ty], axis=1)))
+        routing = self._routing(*self._rect_candidates_flat(np.stack([fx, fy, tx, ty], axis=1)))
         id_col, id_type = self._id_column()
         kernel = partial(_distance_cell, id_col=id_col, materialize=materialize)
         payload = (c[:, 0], c[:, 1], c[:, 2], qids)
         if materialize:
             return self._probe(routing, payload, kernel, f"query_id bigint, {id_col} {id_type}")
-        parts = self._probe(routing, payload, kernel, "query_id bigint, cnt bigint")
-        return self._zero_filled("query_id", qids, parts)
+        return self._probe_counts("query_id", qids, routing, payload, kernel)
 
     # --------------------------------------------------------- PIP join ---
 
@@ -376,14 +479,13 @@ class SpatialQueryCore:
         (polygon_id, <id>) containment rows when ``pairs``."""
         gids = np.asarray(list(polygons), dtype=np.int64)
         polys = [(np.asarray(vx), np.asarray(vy)) for vx, vy in polygons.values()]
-        routing = probes.compact_routing(*self._polygon_candidates(polygons))
+        routing = self._routing(*self._polygon_candidates(polygons))
         id_col, id_type = self._id_column()
         kernel = partial(_pip_cell, id_col=id_col, materialize=pairs)
         if pairs:
             return self._probe(routing, (polys, gids), kernel,
                                f"polygon_id bigint, {id_col} {id_type}")
-        parts = self._probe(routing, (polys, gids), kernel, "polygon_id bigint, cnt bigint")
-        return self._zero_filled("polygon_id", gids, parts)
+        return self._probe_counts("polygon_id", gids, routing, (polys, gids), kernel)
 
     def polygon_tiles(self, polygons: dict[int, tuple[list[float], list[float]]]) -> DataFrame:
         """polygon -> candidate tile set (the Q5 filter mapping as data)."""
@@ -406,13 +508,11 @@ class SpatialQueryCore:
         routing = probes.compact_routing(*probes.knn_candidate_cells(
             s.ids, s.minx, s.miny, s.maxx, s.maxy, s.count, queries))
         id_col, id_type = self._id_column()
-        parts = self._probe(routing, (qarr, qids), partial(_knn_cell, id_col=id_col),
-                            f"query_id bigint, {id_col} {id_type}, d2 double, px double, py double")
-        kmap = {int(q[0]): int(q[3]) for q in queries}
-
-        def merge(key, pdf):
-            qid = int(key[0])
-            return probes.knn_merge_topk(pdf, qid, kmap.get(qid, 0), id_col)
-
-        return parts.groupBy("query_id").applyInPandas(
-            merge, schema=f"query_id bigint, rnk bigint, {id_col} {id_type}")
+        out_schema = f"query_id bigint, rnk bigint, {id_col} {id_type}"
+        merge = partial(_merge_topk, kmap={int(q[0]): int(q[3]) for q in queries}, id_col=id_col)
+        return self._probe_merged(
+            routing, (qarr, qids), partial(_knn_cell, id_col=id_col),
+            f"query_id bigint, {id_col} {id_type}, d2 double, px double, py double", merge,
+            lambda parts: parts.groupBy("query_id").applyInPandas(
+                lambda _, pdf: merge([pdf]), schema=out_schema),
+            out_schema)

@@ -33,18 +33,6 @@ MAX_LON_R = np.pi
 
 # ---------------------------------------------------------------- NumPy ---
 
-def haversine_m_np(lat1r, lon1r, lat2r, lon2r):
-    """Vectorized great-circle distance in meters over radian inputs.
-
-    Mirrors HaversineD (include/queries/distance.h:25-30):
-    ``2 R asin(sqrt(u^2 + cos(lat1) cos(lat2) v^2))``.
-    """
-    u = np.sin((lat2r - lat1r) / 2.0)
-    v = np.sin((lon2r - lon1r) / 2.0)
-    s = np.sqrt(u * u + np.cos(lat1r) * np.cos(lat2r) * v * v)
-    return 2.0 * EARTH_RADIUS_M * np.arcsin(np.clip(s, 0.0, 1.0))
-
-
 def circle_bbox_radians_np(latr, lonr, radius_m):
     """Matuschek bounding box (radians) for circle centers, vectorized.
 

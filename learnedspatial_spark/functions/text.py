@@ -5,9 +5,9 @@ SURVEY.md §2.8); required as first-class components for the 100 TB
 training-data use case: language ID, quality scoring, token counting,
 document fingerprinting.
 
-Design rule: everything here is either (a) pure built-in Column
-expressions (JVM, whole-stage codegen) or (b) batched NumPy inside pandas
-UDFs.  The Column variants use only replace/length arithmetic so the
+Design rule: everything here is either (a) a SQL expression of built-in
+functions (JVM, whole-stage codegen) or (b) batched NumPy inside pandas
+UDFs.  The SQL variants use only replace/length arithmetic so the
 DuckDB oracle computes bit-identical values.
 """
 
@@ -15,8 +15,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 # language marker tokens: per-language function-word hit scores.  Scores
 # are raw length deltas (multiples of marker length) — integer-exact in
@@ -44,10 +42,6 @@ def token_count_sql(text_expr: str) -> str:
     """Whitespace token count = #single-space splits (split keeps empty
     strings in both engines — verified identical)."""
     return f"({occurrence_score_sql(text_expr, ' ')} + 1)"
-
-
-def token_count_col(text: Column) -> Column:
-    return F.size(F.split(text, " ", -1))
 
 
 # BPE-ish tokenizer classes (GPT-2-style: contraction suffixes, space-
@@ -169,10 +163,3 @@ def rolling_hash_np(texts: pd.Series, window: int = ROLLING_WINDOW,
         h = (b[idx] * powers[None, :]).sum(axis=1) % mod
         out[i] = int(h.min())
     return out
-
-
-def char_ngrams(text: str, n: int = 3) -> set[str]:
-    """Character shingles for Jaccard/minhash dedup."""
-    if len(text) < n:
-        return {text}
-    return {text[i:i + n] for i in range(len(text) - n + 1)}

@@ -190,9 +190,6 @@ def s2_cell_sql(lat_expr: str, lon_expr: str, level: int = DEFAULT_LEVEL) -> str
             f"FROM (SELECT {face} AS face, {i} AS i, {j} AS j) ij)")
 
 
-S2_SCHEMA = "cell_id bigint"
-
-
 def assign_s2(df: DataFrame, level: int = DEFAULT_LEVEL,
               lat_col: str = "x", lon_col: str = "y") -> DataFrame:
     """Attach the spherical cell id to a (batch or streaming) DataFrame via

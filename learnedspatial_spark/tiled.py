@@ -11,11 +11,13 @@ and merges its partials; this source answers what storage has to:
   parquet PartitionFilter — Spark never opens non-candidate directories
   (the Iceberg/Hive partition-pruning analog of the reference's
   contiguous cell-range probe; asserted in tools_plan_audit.py);
-* those rows as read from storage: the core's one ``mapInPandas`` probe
+* those rows as read from storage: the core's ``mapInPandas`` probe
   runs each per-cell kernel over the pruned scan in place, so probes
   run WITHOUT ANY shuffle of point data (the in-session engine pays one
   cell-keyed shuffle when it caches its relation; here the layout
-  already is the grouping);
+  already is the grouping).  A single query's probe coalesces the
+  pruned splits into one task that also merges: one job, no exchange;
+  a large batch probes in parallel and exchanges only its partials;
 * the cell stats, the learned model table (loaded once, shipped as a
   broadcast: O(#cells x #knots), SURVEY.md §2.5) and the id column.
 

@@ -1,15 +1,19 @@
-"""One job shape for interactive queries: a tiled single query runs one
-probe and one aggregation (2 Spark jobs, one exchange) over an index it
-listed once; count and point merges plan no join in either engine; and
-the point lookup, now a degenerate range, keeps its defined answers for
-hits, misses, duplicate coordinates and empty batches.  Each table join
+"""One job shape per query size: a small batch (a single query) probes and
+merges in one task (1 Spark job, no exchange, no broadcast) over an index
+listed once; a batch over ``core.ONE_TASK_MAX_ROWS`` probes in parallel
+and merges with one aggregation (2 jobs, one exchange, no join); a batch
+that routes no cell runs no job.  Both paths give the same rows, and the
+point lookup, a degenerate range, keeps its defined answers for hits,
+misses, duplicate coordinates and empty batches on each.  Each table join
 is one band-co-located plan of two jobs."""
+
+import os
 
 import numpy as np
 import pandas as pd
 import pytest
 
-from learnedspatial_spark import pipeline
+from learnedspatial_spark import core, pipeline
 from learnedspatial_spark.engine import ISIN_MAX_CELLS, SpatialEngine
 from learnedspatial_spark.operators.distjoin import distance_join_pairs, knn_join
 from learnedspatial_spark.tiled import TiledSpatialEngine
@@ -53,6 +57,15 @@ def corpus(spark, tmp_path_factory):
     cached.unpersist()
 
 
+def _each_path(monkeypatch):
+    """Yield each query path's name with the module bound set for it: the
+    one-task stage (every batch of this corpus fits the bound) and the
+    parallel probe with its aggregation (a bound no batch fits)."""
+    for name, bound in (("one-task", core.ONE_TASK_MAX_ROWS), ("parallel", -1)):
+        monkeypatch.setattr(core, "ONE_TASK_MAX_ROWS", bound)
+        yield name
+
+
 def _point_batch(c):
     """(query_id, x, y): each duplicated coordinate, single hits, misses
     far from any point, and misses 1e-7 away from a real point (their
@@ -66,29 +79,67 @@ def _point_batch(c):
 
 
 @pytest.mark.parametrize("engine", ["session", "tiled"])
-def test_point_lookup_hits_misses_duplicates(corpus, engine):
+def test_point_lookup_hits_misses_duplicates(corpus, engine, monkeypatch):
     pts = _point_batch(corpus)
-    got = {r["query_id"]: r["pid"] for r in corpus[engine].point_lookup(pts).collect()}
     want = {q: orc.point_lookup(corpus["x"], corpus["y"], corpus["pid"], qx, qy)
             for (q, qx, qy) in pts}
-    assert got == {q: -1 if w is None else w for q, w in want.items()}
-    # the repeated coordinates really repeat, and the answer is their min id
-    for q in range(DUPS):
-        m = (corpus["x"] == pts[q][1]) & (corpus["y"] == pts[q][2])
-        assert m.sum() == 4 and got[q] == corpus["pid"][m].min()
+    for path in _each_path(monkeypatch):
+        got = {r["query_id"]: r["pid"] for r in corpus[engine].point_lookup(pts).collect()}
+        assert got == {q: -1 if w is None else w for q, w in want.items()}, path
+        # the repeated coordinates really repeat, and the answer is their min id
+        for q in range(DUPS):
+            m = (corpus["x"] == pts[q][1]) & (corpus["y"] == pts[q][2])
+            assert m.sum() == 4 and got[q] == corpus["pid"][m].min(), path
 
 
-def test_point_lookup_url_ids_miss_is_null(corpus):
+def test_point_lookup_url_ids_miss_is_null(corpus, monkeypatch):
     pts = _point_batch(corpus)
-    rows = corpus["tiled_url"].point_lookup(pts).collect()
-    got = {r["query_id"]: r["url"] for r in rows}
     lat, lon, urls = corpus["lat"], corpus["lon"], corpus["urls"]
     want = {}
     for (q, qx, qy) in pts:
         m = (lat == qx) & (lon == qy)
         want[q] = min(urls[m]) if m.any() else None
-    assert got == want
-    assert got[100] is None and got[0] == urls[0]  # min url of a repeated coordinate
+    assert want[100] is None and want[0] == urls[0]  # min url of a repeated coordinate
+    for path in _each_path(monkeypatch):
+        rows = corpus["tiled_url"].point_lookup(pts).collect()
+        assert {r["query_id"]: r["url"] for r in rows} == want, path
+
+
+@pytest.mark.parametrize("engine", ["session", "tiled"])
+def test_knn_ties_break_by_x_y_id(corpus, engine, monkeypatch):
+    """kNN at a coordinate held by 4 points (4 exact d2 = 0 ties, broken by
+    id) and with k cutting through the tied run, on both paths."""
+    x, y, pid, lat, lon = (corpus[k] for k in ("x", "y", "pid", "lat", "lon"))
+    queries = [(q, float(lat[q]), float(lon[q]), k) for q, k in ((0, 6), (1, 2), (2, 4), (3, 1))]
+    want = {q: orc.knn_euclidean(x, y, pid, qx, qy, k) for (q, qx, qy, k) in queries}
+    for q, qx, qy, _ in queries:
+        assert ((x == qx) & (y == qy)).sum() == 4
+    for path in _each_path(monkeypatch):
+        got = {}
+        for r in sorted(corpus[engine].knn(queries).collect(), key=lambda r: (r[0], r[1])):
+            got.setdefault(r["query_id"], []).append(r["pid"])
+        assert got == want, path
+
+
+@pytest.mark.parametrize("engine", ["session", "tiled", "tiled_url"])
+def test_one_task_and_parallel_paths_agree(corpus, engine, monkeypatch):
+    """Every merged family gives the same rows on both paths."""
+    eng, lat, lon = corpus[engine], corpus["lat"], corpus["lon"]
+    calls = {
+        "range_count": lambda: eng.range_count(
+            [(q, lat[q] - 4, lon[q] - 9, lat[q] + 4, lon[q] + 9) for q in range(12)]),
+        "distance_count": lambda: eng.distance_count(
+            [(q, float(lat[q]), float(lon[q]), 400_000.0 * (q + 1)) for q in range(6)]),
+        "pip": lambda: eng.pip({g: ([lat[g] - 6, lat[g] + 6, lat[g], lat[g] - 6],
+                                    [lon[g] - 6, lon[g] - 6, lon[g] + 9, lon[g] - 6])
+                                for g in range(5)}),
+        "point_lookup": lambda: eng.point_lookup(_point_batch(corpus)),
+        "knn": lambda: eng.knn([(q, float(lat[q]), float(lon[q]), 3 + q) for q in range(8)]),
+    }
+    for family, call in calls.items():
+        rows = {path: sorted(tuple(r) for r in call().collect())
+                for path in _each_path(monkeypatch)}
+        assert rows["one-task"] == rows["parallel"] and rows["one-task"], family
 
 
 @pytest.mark.parametrize("engine", ["session", "tiled", "tiled_url"])
@@ -97,19 +148,78 @@ def test_point_lookup_empty_batch(corpus, engine):
 
 
 @pytest.mark.parametrize("engine", ["session", "tiled"])
-def test_counts_without_hits_report_routed_base(corpus, engine):
+def test_counts_without_hits_report_routed_base(corpus, engine, monkeypatch):
     """A query that probes nothing still gets its row: its routed base
     (the counts of fully-contained cells), else 0."""
     eng, n = corpus[engine], len(corpus["pid"])
     lat, lon = corpus["lat"], corpus["lon"]
     rects = [(0, -90.0, -180.0, 90.0, 180.0),                # every cell contained
-             (1, 200.0, 300.0, 210.0, 310.0),                 # routes to no cell
+             (1, 200.0, 300.0, 210.0, 310.0),                 # beyond every point
              (2, lat[7] + 1e-7, lon[7], lat[7] + 2e-7, lon[7])]  # routed cell, no hit
-    assert {r["query_id"]: r["cnt"] for r in eng.range_count(rects).collect()} == {0: n, 1: 0, 2: 0}
     circles = [(7, 89.99, 179.99, 1.0)]
-    assert [(r["query_id"], r["cnt"]) for r in eng.distance_count(circles).collect()] == [(7, 0)]
     polys = {9: ([89.0, 89.5, 89.5], [179.0, 179.0, 179.5])}
-    assert [(r["polygon_id"], r["cnt"]) for r in eng.pip(polys).collect()] == [(9, 0)]
+    for path in _each_path(monkeypatch):
+        assert {r["query_id"]: r["cnt"] for r in eng.range_count(rects).collect()} == \
+            {0: n, 1: 0, 2: 0}, path
+        assert [tuple(r) for r in eng.distance_count(circles).collect()] == [(7, 0)], path
+        assert [tuple(r) for r in eng.pip(polys).collect()] == [(9, 0)], path
+
+
+@pytest.mark.parametrize("engine", ["session", "tiled"])
+def test_batch_routing_no_cell_is_answered_without_a_job(spark, corpus, engine, monkeypatch):
+    """A batch whose routing leaves no cell to probe (every candidate cell
+    contained, or an inverted rectangle) is the merge of zero partials on
+    the driver: its rows, and no Spark job on either path."""
+    eng, n = corpus[engine], len(corpus["pid"])
+    everything, inverted = (0, -90.0, -180.0, 90.0, 180.0), (1, 10.0, 10.0, 5.0, 5.0)
+    for path in _each_path(monkeypatch):
+        for batch, want in (([everything], [(0, n)]), ([inverted], [(1, 0)]),
+                            ([everything, inverted], [(0, n), (1, 0)])):
+            rows = []
+            jobs = _jobs_of(spark, f"no-cell-{engine}-{path}",
+                            lambda: rows.extend(eng.range_count(batch).collect()))
+            assert sorted(tuple(r) for r in rows) == want and jobs == 0, (path, batch)
+
+
+@pytest.fixture(scope="module")
+def gap(spark, tmp_path_factory):
+    """Engines over points in two latitude clusters, so the fixed grid's
+    middle stripes are cells without rows.  The in-session relation is
+    not cached."""
+    d = tmp_path_factory.mktemp("gap")
+    rng = np.random.default_rng(9)
+    lat = np.concatenate([rng.uniform(-80, -60, 60), rng.uniform(60, 80, 60)])
+    lon = rng.uniform(-170, 170, lat.size)
+    pages = str(d / "pages.parquet")
+    _write_pages(pages, lat, lon, "gap")
+    session = SpatialEngine(spark, pages, scheme="fixed_grid", partition_size=10,
+                            source="pages")
+    pipeline.build_tiled_index(spark, None, str(d / "pid"), partition_size=10,
+                               points_df=session.points())
+    return {"session": session, "tiled": TiledSpatialEngine(spark, str(d / "pid"))}
+
+
+@pytest.mark.parametrize("engine", ["session", "tiled"])
+def test_query_routed_to_cells_without_rows_runs_no_job(spark, gap, engine, monkeypatch):
+    """A query whose candidate cells hold no rows probes nothing: its
+    merged row comes from the driver, on both paths.  (Probed, such a cell
+    is an empty shuffle on the uncached in-session relation, and adaptive
+    execution would drop the one-task stage with its row.)"""
+    eng = gap[engine]
+    eng.point_lookup([(0, 70.0, 0.0)]).collect()  # first use: stats and table opening
+    routed = eng.partitioner.cells_for_rect(0.0, 0.0, 0.5, 0.5)
+    assert routed.size and not np.isin(routed, eng.cell_stats().ids).any()
+    queries = {
+        "point_lookup": (lambda: eng.point_lookup([(3, 0.25, 0.25)]), [(3, -1)]),
+        "distance_count": (lambda: eng.distance_count([(4, 0.25, 0.25, 100.0)]), [(4, 0)]),
+        "pip": (lambda: eng.pip({5: ([0.1, 0.4, 0.4, 0.1], [0.1, 0.1, 0.4, 0.1])}), [(5, 0)]),
+    }
+    for path in _each_path(monkeypatch):
+        for family, (call, want) in queries.items():
+            rows = []
+            jobs = _jobs_of(spark, f"empty-cell-{engine}-{family}-{path}",
+                            lambda: rows.extend(call().collect()))
+            assert [tuple(r) for r in rows] == want and jobs == 0, (family, path)
 
 
 @pytest.mark.parametrize("call", [
@@ -143,23 +253,30 @@ def _plan_nodes(df) -> list[tuple[str, str]]:
     return out
 
 
-@pytest.mark.parametrize("family", ["range_count", "point_lookup"])
+@pytest.mark.parametrize("family", ["range_count", "point_lookup", "knn"])
 @pytest.mark.parametrize("engine", ["session", "tiled"])
-def test_count_and_point_merges_plan_one_exchange_no_join(corpus, engine, family):
+def test_count_and_point_merges_plan_one_exchange_no_join(spark, corpus, engine, family,
+                                                           monkeypatch):
+    """A batch over the one-task bound probes in parallel and merges with
+    one exchange, no join: two Spark jobs."""
+    monkeypatch.setattr(core, "ONE_TASK_MAX_ROWS", -1)
     eng = corpus[engine]
     lat, lon = corpus["lat"], corpus["lon"]
     if family == "range_count":
         df = eng.range_count([(q, lat[q] - 5, lon[q] - 5, lat[q] + 5, lon[q] + 5)
                               for q in range(20)])
-    else:
+    elif family == "point_lookup":
         df = eng.point_lookup(_point_batch(corpus))
+    else:
+        df = eng.knn([(q, float(lat[q]), float(lon[q]), 4) for q in range(20)])
     assert len(eng.partitioner.cells_for_rect(-90.0, -180.0, 90.0, 180.0)) <= ISIN_MAX_CELLS
     nodes = _plan_nodes(df)
     names = [name for name, _ in nodes]
     assert names.count("Exchange") == 1 and names.count("MapInPandas") == 1, nodes
+    assert "Coalesce" not in names, nodes
     assert not [d for name, d in nodes if name == "BroadcastExchange" or name.endswith("Join")
                 or "LeftOuter" in d], nodes
-    df.collect()
+    assert _jobs_of(spark, f"parallel-{engine}-{family}", df.collect) == 2
 
 
 @pytest.mark.parametrize("join", ["pairs", "knn_join"])
@@ -195,24 +312,57 @@ def _jobs_of(spark, group, action) -> int:
         sc.setLocalProperty("spark.jobGroup.id", None)
 
 
-def test_tiled_single_query_runs_two_jobs_and_lists_no_files(spark, corpus):
-    """Each family's single tiled query is one probe job plus one merge
-    job (the exchange's two stages), and after the first query the index
-    is never listed again."""
-    eng = corpus["tiled"]
-    lat, lon = corpus["lat"], corpus["lon"]
-    queries = {
+def _single_queries(eng, lat, lon):
+    return {
         "range": lambda i: eng.range_count([(i, lat[i] - 3, lon[i] - 3, lat[i] + 3, lon[i] + 3)]),
         "point": lambda i: eng.point_lookup([(i, float(lat[i]), float(lon[i]))]),
         "knn": lambda i: eng.knn([(i, float(lat[i]), float(lon[i]), 5)]),
+        "distance": lambda i: eng.distance_count([(i, float(lat[i]), float(lon[i]), 300_000.0)]),
+        "pip": lambda i: eng.pip({i: ([lat[i] - 3, lat[i] + 3, lat[i], lat[i] - 3],
+                                      [lon[i] - 3, lon[i] - 3, lon[i] + 3, lon[i] - 3])}),
     }
+
+
+@pytest.mark.parametrize("engine", ["session", "tiled"])
+def test_single_query_runs_one_job_without_exchange(spark, corpus, engine):
+    """Each family's single query probes and merges in one Spark job of
+    one task: a ``Coalesce 1`` under one MapInPandas, with no exchange and
+    no broadcast; and after the first query a tiled index is never listed
+    again."""
+    eng = corpus[engine]
+    sc = spark.sparkContext
     files = spark._jvm.org.apache.spark.metrics.source.HiveCatalogMetrics.METRIC_FILES_DISCOVERED()
-    for fam, query in queries.items():
+    for fam, query in _single_queries(eng, corpus["lat"], corpus["lon"]).items():
         query(0).collect()  # first use: stats, models and the table listing
+        df = query(1)
+        names = [name for name, _ in _plan_nodes(df)]
+        assert names.count("MapInPandas") == 1 and "Coalesce" in names, (fam, names)
+        assert not [n for n in names if n.endswith("Exchange")], (fam, names)
         before = files.getCount()
-        jobs = _jobs_of(spark, f"shape-{fam}", lambda: query(1).collect())
-        assert jobs == 2, fam
+        group = f"shape-{engine}-{fam}"
+        assert _jobs_of(spark, group, df.collect) == 1, fam
+        (job,) = sc.statusTracker().getJobIdsForGroup(group)
+        # a cached relation's build stage is listed, skipped, with 0 tasks run
+        tasks = [sc.statusTracker().getStageInfo(st).numCompletedTasks
+                 for st in sc.statusTracker().getJobInfo(job).stageIds]
+        assert sum(tasks) == 1, (fam, tasks)
         assert files.getCount() == before, fam
+
+
+def test_single_queries_leave_no_broadcast_file(spark, corpus):
+    """Single queries make no per-query broadcast: 20 of them add no file
+    to the driver's pyspark temp dir."""
+    eng = corpus["tiled"]
+    queries = _single_queries(eng, corpus["lat"], corpus["lon"])
+    for query in queries.values():
+        query(0).collect()  # first use: the engine-lifetime model broadcast
+
+    def n_files():
+        return sum(len(fs) for _, _, fs in os.walk(spark.sparkContext._temp_dir))
+    before = n_files()
+    for i in range(20):
+        list(queries.values())[i % len(queries)](i).collect()
+    assert n_files() == before
 
 
 def test_engine_opened_after_rebuild_sees_new_rows(spark, corpus):

@@ -8,7 +8,11 @@ plan properties the 100 TB design depends on:
 * every probe runs its per-cell kernels in one MapInPandas directly over
   the cell rows (in session: the cached cell-keyed relation, with no
   second Exchange and no Sort; tiled: the partition-pruned scan);
-* count and point merges are one aggregation (one exchange, no join);
+* a batch whose routed rows fit ``core.ONE_TASK_MAX_ROWS`` (a single
+  query) probes and merges in one task: one MapInPandas over a
+  ``Coalesce 1`` of the cell rows, with no exchange of any kind;
+* over that bound, count and point merges are one aggregation (one
+  exchange, no join) and kNN one per-query merge;
 * the table x table joins are one band-co-located kernel (one exchange
   on the latitude band, no join, no window);
 * relational glue runs in WholeStageCodegen;
@@ -22,7 +26,7 @@ import os
 import re
 import sys
 import tempfile
-from contextlib import redirect_stdout
+from contextlib import contextmanager, redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -53,6 +57,49 @@ def literal_tables_local(plan: str) -> str:
     return ""
 
 
+@contextmanager
+def over_bound():
+    """Plan the queries inside as batches over the one-task bound (the
+    audit's inputs are too small to exceed it)."""
+    from learnedspatial_spark import core
+    bound = core.ONE_TASK_MAX_ROWS
+    core.ONE_TASK_MAX_ROWS = -1
+    try:
+        yield
+    finally:
+        core.ONE_TASK_MAX_ROWS = bound
+
+
+def query_nodes(plan: str) -> list[str]:
+    """Node names of the query's own plan tree, in tree order: a cached
+    relation's build plan is skipped."""
+    names, skip = [], None
+    for line in plan_tree(plan).splitlines():
+        col = re.match(r"[\s:|+*-]*", line).end()
+        if skip is not None and col > skip:
+            continue
+        skip = None
+        name = re.match(r"\w*", line[col:]).group(0)
+        if name == "InMemoryRelation":
+            skip = col
+        names.append(name)
+    return names
+
+
+def one_task_stage(plan: str) -> str:
+    """Marker when a merged query is one stage: its one MapInPandas reads
+    a ``Coalesce 1`` of the cell rows, and the query's own plan has no
+    Exchange, not even a broadcast."""
+    nodes = query_nodes(plan)
+    if (nodes.count("MapInPandas") == 1
+            and nodes[nodes.index("MapInPandas") + 1:][:1] == ["Coalesce"]
+            and re.search(r"\) Coalesce\nInput [^\n]*\nArguments: 1\n", plan)
+            and not any(n.endswith("Exchange") for n in nodes)):
+        return ("\n-- audit: one-task-stage (one MapInPandas over Coalesce 1 probes and "
+                "merges; no exchange, no broadcast)\n")
+    return ""
+
+
 def probe_in_place(plan: str) -> str:
     """Marker when the plan's one MapInPandas probe reads the cached
     relation directly: only the InSet gate's Filter may sit between it
@@ -69,16 +116,7 @@ def one_exchange_merge(plan: str) -> str:
     """Marker when the query's own plan tree (a cached relation's build
     plan excluded) holds exactly one Exchange and no join or broadcast:
     the probe's partials merge in one aggregation."""
-    names, skip = [], None
-    for line in plan_tree(plan).splitlines():
-        col = re.match(r"[\s:|+*-]*", line).end()
-        if skip is not None and col > skip:
-            continue
-        skip = None
-        name = re.match(r"\w*", line[col:]).group(0)
-        if name == "InMemoryRelation":
-            skip = col
-        names.append(name)
+    names = query_nodes(plan)
     if (names.count("Exchange") == 1 and "BroadcastExchange" not in names
             and not any(n.endswith("Join") for n in names)):
         return "\n-- audit: one-exchange-merge (one aggregation merges the probe; no join, no broadcast)\n"
@@ -127,9 +165,14 @@ def main() -> None:
     rects = wl.rectangles(n_per_tier=5)
     sections: list[tuple[str, str, list[str]]] = []
 
-    p = plan_of(eng.range_count(rects))
+    p1 = plan_of(eng.range_count(rects[:1]))
+    p1 += one_task_stage(p1)
+    sections.append(("range_count single query (one task: probe and merge)", p1, [
+        "one-task-stage"]))
+    with over_bound():
+        p = plan_of(eng.range_count(rects))
     p += probe_in_place(p) + one_exchange_merge(p)
-    sections.append(("range_count (learned, fixed grid)", p, [
+    sections.append(("range_count over the one-task bound (learned, fixed grid)", p, [
         "ReadSchema: struct<l_orderkey:bigint,l_partkey:bigint,l_suppkey:bigint,l_linenumber:int,l_quantity:double,l_extendedprice",
         "MapInPandas",
         "probe-in-place",
@@ -138,9 +181,12 @@ def main() -> None:
     # a point lookup is the range probe over degenerate rectangles, merged
     # by one min(id) aggregation beside the query table
     from learnedspatial_spark.sources.points import points_np
-    p2 = plan_of(eng.point_lookup(wl.point_queries(*points_np(sf)[1:3], n_hits=5, n_misses=2)))
+    with over_bound():
+        p2 = plan_of(eng.point_lookup(
+            wl.point_queries(*points_np(sf)[1:3], n_hits=5, n_misses=2)))
     p2 += one_exchange_merge(p2) + literal_tables_local(p2)
-    sections.append(("point_lookup (degenerate range probe, one aggregation)", p2, [
+    sections.append(("point_lookup over the one-task bound (degenerate range probe, "
+                     "one aggregation)", p2, [
         "MapInPandas", "one-exchange-merge", "literal-tables-local"]))
     p3 = plan_of(similarity.brute_cosine_topk(
         spark.read.parquet(f"{sf}/embeddings.parquet"),
@@ -151,8 +197,9 @@ def main() -> None:
     sections.append(("dedup_exact (hash aggregate)", p4, ["HashAggregate", "ReadSchema: struct<doc_id:bigint,text:string>"]))
 
     # tiled (build-once/query-many) path: candidate cells must prune at the
-    # parquet scan (PartitionFilters) and the probe must be shuffle-free —
-    # the ONLY Exchange in the plan is the final tiny per-query aggregation
+    # parquet scan (PartitionFilters) and the probe must be shuffle-free:
+    # a single query is one task, and over the bound the ONLY Exchange in
+    # the plan is the final tiny per-query merge
     from learnedspatial_spark import datagen, pipeline
     from learnedspatial_spark.tiled import TiledSpatialEngine
     with tempfile.TemporaryDirectory() as td:
@@ -160,11 +207,21 @@ def main() -> None:
         datagen.pages_df(spark, 3000, partitions=4).write.parquet(pp)
         pipeline.build_tiled_index(spark, pp, f"{td}/idx", partition_size=200)
         teng = TiledSpatialEngine(spark, f"{td}/idx")
-        p5 = plan_of(teng.range_count([(0, -60.0, -120.0, 30.0, 45.0),
-                                       (1, 5.0, -170.0, 80.0, 170.0)]))
+        for fam, single in (("range_count", teng.range_count([(0, -60.0, -120.0, 30.0, 45.0)])),
+                            ("point_lookup", teng.point_lookup([(0, 10.0, 20.0)])),
+                            ("knn", teng.knn([(0, 10.0, 20.0, 5)]))):
+            p5s = plan_of(single)
+            p5s += one_task_stage(p5s)
+            sections.append((f"tiled {fam} single query (one task over the pruned scan)", p5s, [
+                "PartitionFilters", "one-task-stage"]))
+        with over_bound():
+            p5 = plan_of(teng.range_count([(0, -60.0, -120.0, 30.0, 45.0),
+                                           (1, 5.0, -170.0, 80.0, 170.0)]))
+            p5k = plan_of(teng.knn(wl.knn_queries(n=4)))
         p5 += (probe_shuffle_free(p5, merges=1) + one_exchange_merge(p5)
                + literal_tables_local(p5))
-        sections.append(("tiled range_count (materialized index, pruned scan)", p5, [
+        sections.append(("tiled range_count over the one-task bound (materialized index, "
+                         "pruned scan)", p5, [
             "PartitionFilters",
             "MapInPandas",
             "probe-shuffle-free",
@@ -173,9 +230,8 @@ def main() -> None:
         ]))
         # every family on the tiled source stays shuffle-free: kNN's one
         # exchange is its per-query top-k merge, distance_materialize has none
-        p5k = plan_of(teng.knn(wl.knn_queries(n=4)))
         p5k += probe_shuffle_free(p5k, merges=1)
-        sections.append(("tiled knn (pruned scan, per-query merge)", p5k, [
+        sections.append(("tiled knn over the one-task bound (pruned scan, per-query merge)", p5k, [
             "PartitionFilters", "MapInPandas", "probe-shuffle-free"]))
         p5d = plan_of(teng.distance_materialize(wl.distance_queries(n=4)))
         p5d += probe_shuffle_free(p5d, merges=0)
@@ -202,12 +258,13 @@ def main() -> None:
             "column-only-parse",
         ]))
 
-    # kNN: the per-cell partial top-ks (the one MapInPandas probe) merge
-    # per QUERY in one FlatMapGroupsInPandas (the associative reduce the
-    # partials were designed for) — never a Window row_number over the
-    # full partial set (that would shuffle-sort every partial through one
-    # global stage) and never a SinglePartition exchange
-    p_knn = plan_of(eng.knn(wl.knn_queries(n=8)))
+    # kNN over the one-task bound: the per-cell partial top-ks (the one
+    # MapInPandas probe) merge per QUERY in one FlatMapGroupsInPandas (the
+    # associative reduce the partials were designed for) — never a Window
+    # row_number over the full partial set (that would shuffle-sort every
+    # partial through one global stage) and never a SinglePartition exchange
+    with over_bound():
+        p_knn = plan_of(eng.knn(wl.knn_queries(n=8)))
     t_knn = plan_tree(p_knn)
     if len(re.findall(r"\bMapInPandas\b", t_knn)) == 1 \
             and len(re.findall(r"\bFlatMapGroupsInPandas\b", t_knn)) == 1 \
@@ -215,7 +272,8 @@ def main() -> None:
         p_knn += ("\n-- audit: partials-merge-no-window (one MapInPandas probe + one "
                   "per-query FlatMapGroupsInPandas merge; no window, no single partition)\n")
     p_knn += probe_in_place(p_knn)
-    sections.append(("knn (stats-pruned cells, partial top-k merge)", p_knn, [
+    sections.append(("knn over the one-task bound (stats-pruned cells, partial top-k merge)",
+                     p_knn, [
         "partials-merge-no-window",
         "probe-in-place",
     ]))
