@@ -32,7 +32,8 @@ is that path, shared by both engines:
    join) or the per-query kNN merge: two jobs, one exchange.  A batch
    that routes no cell is its merge of zero partials, a local table
    (no Spark job).  A materializing query has no merge: its broadcast
-   probe is its answer, one job.
+   probe is its answer, one job, and without a routed cell its answer
+   is an empty local table (no Spark job).
 
 Query ids must be unique within a batch (the merges key on them);
 a batch that repeats one raises ``ValueError`` on the driver.
@@ -62,6 +63,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .functions import geo
 from .operators import probes
@@ -80,7 +82,16 @@ _ID_CANDIDATES = ("pid", "url", "doc_id")
 #: 0.01 s, and from 260k the one task is slower (0.40 against 0.34 s at
 #: 260k, 1.98 against 1.42 s at 1.6M).  Its process-tree CPU is 35-50 %
 #: lower at every size (0.46 against 0.78 CPU-s at 230k), so the bound
-#: sits at the end of the tie.
+#: sits at the end of the tie.  The table joins of ``operators.distjoin``
+#: take the same bound on the rows entering their one task (left + right
+#: for kNN).  Cached sf0.1 points, local[4], 4 shuffle partitions, the
+#: benchmark's join radii, medians of 3 after a warm-up, one task against
+#: the band exchange (wall s / process-tree CPU-s): pairs 0.19/0.46 vs
+#: 0.34/0.91 at 50k points, 0.28/0.42 vs 0.45/1.18 at 200k, 0.82/0.93 vs
+#: 1.01/2.72 at 600k; kNN join (left = 1/8) 0.23/0.58 vs 0.42/0.96 at
+#: 50k, 0.49/0.96 vs 0.71/1.81 at 200k, 1.93/2.43 vs 2.12/5.03 at 600k.
+#: The joins' crossover lies above the bound; it is kept, so one task
+#: never holds more input rows than a query batch's.
 ONE_TASK_MAX_ROWS = 250_000
 
 
@@ -215,13 +226,14 @@ def _knn_cell(cell, pdf, qi, payload, id_col):
     """Per-cell exact top-k partials, ordered (d2, x, y, id)."""
     qarr, qids = payload
     xs, ys, ids = pdf["x"].to_numpy(), pdf["y"].to_numpy(), pdf[id_col].to_numpy()
-    frames = []
+    sels, d2s = [], []
     for t in qi:
         sel, d2 = probes.knn_local_topk(xs, ys, ids, qarr[t, 0], qarr[t, 1], qarr[t, 2])
-        frames.append(pd.DataFrame({
-            "query_id": np.full(sel.shape[0], qids[t], dtype=np.int64),
-            id_col: ids[sel], "d2": d2[sel], "px": xs[sel], "py": ys[sel]}))
-    return pd.concat(frames)
+        sels.append(sel)
+        d2s.append(d2[sel])
+    sel = np.concatenate(sels)
+    return pd.DataFrame({"query_id": np.repeat(qids[qi], [s.size for s in sels]),
+                         id_col: ids[sel], "d2": np.concatenate(d2s), "px": xs[sel], "py": ys[sel]})
 
 
 # ---------------------------------------------------------- merges ---
@@ -317,7 +329,11 @@ class SpatialQueryCore:
     def _probe(self, routing, payload, kernel, schema: str) -> DataFrame:
         """Run ``kernel`` over every cell of a ``compact_routing`` table in
         one parallel ``mapInPandas`` over the source's ``_cell_rows``, with
-        the table and the query arrays in one broadcast."""
+        the table and the query arrays in one broadcast.  No routed cell:
+        an empty local table of ``schema`` (no Spark job)."""
+        if routing[0].size == 0:
+            names = StructType.fromDDL(schema).names
+            return local_frame(self.spark, dict.fromkeys(names, np.empty(0, dtype=object)), schema)
         bc = self.spark.sparkContext.broadcast((routing, payload))
 
         def probe(it):

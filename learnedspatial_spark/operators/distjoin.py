@@ -8,12 +8,25 @@ great-circle meters (:func:`distance_join_pairs`), and the k nearest
 right-table points within the radius per left-table point
 (:func:`knn_join`) — both without an all-pairs join.
 
-Plan (one per join): the JVM computes only a latitude band per row,
-``band = floor((lat + 90) / band_deg(r))``; one ``repartition`` on the
-band co-locates every band with its neighbours' copies, a
-``sortWithinPartitions`` on it makes each band one contiguous run, and
-one ``mapInPandas`` kernel finds, refines and (for kNN) ranks the pairs.
-No join, no broadcast and no window runs.
+Plan: one of two shapes, chosen on the driver.  Both hand the same
+band-sorted rows to the same ``mapInPandas`` kernel, which finds, refines
+and (for kNN) ranks the pairs; neither runs a join, a broadcast or a
+window.
+
+- **One task**, when the normalized (pid, x, y) inputs have a known row
+  bound (:func:`row_bound`: Catalyst's row statistics, e.g. a
+  materialized cache) and the rows entering the task (left + right for
+  kNN) fit ``core.ONE_TASK_MAX_ROWS``: ``coalesce(1).mapInPandas``
+  computes ``band = floor((lat + 90) / band_deg(r))``, builds the band
+  copies and sorts them by band in NumPy (:func:`_one_task`).  One Spark
+  job, no exchange, and n (pairs) or n + left (kNN) rows through Arrow.
+- **Band exchange**, for any other input: the JVM computes only the band
+  per row and builds the copies, one ``repartition`` on the band
+  co-locates every band with its neighbours' copies, and a
+  ``sortWithinPartitions`` on it makes each band one contiguous run.
+  Two Spark jobs, and 2n (pairs) or 3n + left (kNN) rows through Arrow.
+
+The blocking and the kernel, in both shapes:
 
 - **Adjacent bands, from the latitude bound.**  Band height is the exact
   latitude bound (haversine(a, b) >= R * |delta lat|, with equality at
@@ -49,11 +62,14 @@ No join, no broadcast and no window runs.
   Column expression.  The window is NumPy too, so no trig tree enters a
   Catalyst plan (the former stencil put one into ~10 analysed trees).
 - **Unit of work: one latitude band** (before: one (band, longitude
-  cell) block).  A task holds at most one band plus one Arrow batch: the
-  kernel carries each batch's last, possibly open band into the next
-  batch (:func:`_whole_bands`).  A band that is hot for its radius is
-  one task's work; the join-size pre-flight of ROADMAP item 5 (open) is
-  the planned guard.
+  cell) block).  The kernel sees band-sorted chunks of one Arrow batch
+  each and carries each chunk's last, possibly open band into the next
+  (:func:`_whole_bands`), so it holds at most one band plus one batch.
+  Under the band exchange a task is one partition's bands, and a band
+  that is hot for its radius is one task's work; the join-size
+  pre-flight of ROADMAP item 5 (open) is the planned guard.  The one
+  task holds the whole input and its copies, at most
+  ``ONE_TASK_MAX_ROWS`` input rows.
 
 Correctness is property-tested against an O(n^2) NumPy oracle in
 tests/test_distjoin.py (seam, poles, bands split across Arrow batches,
@@ -65,7 +81,7 @@ longitudes of ANY convention (0..360, unwrapped) are canonicalized into
 the RAW coordinates (haversine is exactly periodic in longitude), so the
 wrap can never change a result — only route it.  Rows with a null or NaN
 coordinate are within no radius of anything; they are dropped before
-the exchange.
+either shape sees them.
 
 :func:`block_key_cols` and :func:`stencil_keys` are the former 3 x 3
 (band, cell) blocking, kept as public helpers: perfbench counts its
@@ -81,6 +97,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .. import core
 from ..functions.geo import EARTH_RADIUS_M
 from . import probes
 
@@ -340,11 +357,93 @@ def _knn_kernel(k: int, radius_m: float, exclude_same_id: bool) -> Kernel:
     return kernel
 
 
-def _band_colocated(rows: DataFrame, kernel: Kernel, id_type: str) -> DataFrame:
-    """The one plan shape of both joins: one exchange on the band, the
-    band as one contiguous run per partition, one NumPy kernel."""
+def row_bound(df: DataFrame) -> int | None:
+    """An upper bound on ``df``'s rows from Catalyst's statistics of its
+    optimized plan, or None when the plan does not know one: the top
+    node's ``rowCount`` or ``maxRows``, walking through ``Filter`` and
+    ``Project`` nodes (which never add rows, but drop the row count).  A
+    materialized cache and a local table know theirs; a file scan does
+    not.  The byte-size estimate is not a row bound (parquet estimates
+    ~5 B per row)."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    while True:
+        for rows in (plan.stats().rowCount(), plan.maxRows()):
+            if rows.isDefined():
+                return int(str(rows.get()))
+        if plan.nodeName() not in ("Filter", "Project"):
+            return None
+        plan = plan.child()
+
+
+def _fits_one_task(*inputs: DataFrame) -> bool:
+    """Whether the normalized ``inputs`` together have a known row bound
+    within the one-task bound (``core.ONE_TASK_MAX_ROWS``)."""
+    bounds = [row_bound(df) for df in inputs]
+    return None not in bounds and sum(bounds) <= core.ONE_TASK_MAX_ROWS
+
+
+def _band_np(lat: np.ndarray, radius_m: float) -> np.ndarray:
+    """:func:`_band` in NumPy, with the same IEEE operations."""
+    return np.floor((lat + 90.0) / band_deg(radius_m)).astype(np.int64)
+
+
+def _band_sorted(pdf: pd.DataFrame, band: np.ndarray, rows: np.ndarray,
+                 **cols: np.ndarray) -> pd.DataFrame:
+    """The band-sorted kernel input: row ``rows[i]`` of ``pdf`` placed in
+    band ``band[i]``, with the extra per-copy ``cols``."""
+    order = np.argsort(band, kind="stable")
+    out = pdf.iloc[rows[order]].reset_index(drop=True)
+    out["band"] = band[order]
+    for name, col in cols.items():
+        out[name] = col[order]
+    return out
+
+
+def _pairs_copies(pdf: pd.DataFrame, radius_m: float) -> pd.DataFrame:
+    """Each point in its band and, as a copy, in band + 1."""
+    n, band = len(pdf), _band_np(pdf["x"].to_numpy(), radius_m)
+    return _band_sorted(pdf, np.concatenate([band, band + 1]), np.tile(np.arange(n), 2),
+                        copy=np.repeat(np.array([0, 1], dtype=np.int32), n))
+
+
+def _knn_copies(pdf: pd.DataFrame, radius_m: float) -> pd.DataFrame:
+    """Left points in their band, right points in bands b - 1, b, b + 1."""
+    band = _band_np(pdf["x"].to_numpy(), radius_m)
+    left = pdf["left"].to_numpy() != 0
+    li, ri = np.flatnonzero(left), np.flatnonzero(~left)
+    return _band_sorted(pdf, np.concatenate([band[li], band[ri] - 1, band[ri], band[ri] + 1]),
+                        np.concatenate([li, ri, ri, ri]))
+
+
+def _pair_schema(rows: DataFrame) -> str:
+    """Both joins' output schema, in the input's id type."""
+    id_type = rows.schema["pid"].dataType.simpleString()
+    return f"l_pid {id_type}, r_pid {id_type}"
+
+
+def _one_task(rows: DataFrame, kernel: Kernel,
+              copies: Callable[[pd.DataFrame, float], pd.DataFrame], radius_m: float) -> DataFrame:
+    """The plan shape of a join whose input fits the one-task bound: one
+    ``coalesce(1).mapInPandas`` task holds every input row, builds the
+    band copies and sorts them by band in NumPy, and hands the band-sorted
+    rows to ``kernel`` in chunks of the input's Arrow batch size, as the
+    exchange would.  No exchange and no JVM sort or explode."""
+    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        batches = [pdf for pdf in it if len(pdf)]
+        if not batches:
+            return
+        size = max(len(pdf) for pdf in batches)
+        banded = copies(pd.concat(batches, ignore_index=True), radius_m)
+        yield from kernel(banded.iloc[i:i + size] for i in range(0, len(banded), size))
+    return rows.coalesce(1).mapInPandas(run, schema=_pair_schema(rows))
+
+
+def _band_colocated(rows: DataFrame, kernel: Kernel) -> DataFrame:
+    """The plan shape of a join whose input has no row bound within the
+    one-task bound: one exchange on the band, the band as one contiguous
+    run per partition, one NumPy kernel."""
     return (rows.repartition("band").sortWithinPartitions("band")
-            .mapInPandas(kernel, schema=f"l_pid {id_type}, r_pid {id_type}"))
+            .mapInPandas(kernel, schema=_pair_schema(rows)))
 
 
 def distance_join_pairs(
@@ -366,10 +465,12 @@ def distance_join_pairs(
     semantics.
     """
     base = _normalize(points, id_col, lat_col, lon_col)
+    kernel = _pairs_kernel(radius_m)
+    if _fits_one_task(base):
+        return _one_task(base, kernel, _pairs_copies, radius_m)
     band = _band(F.col("x"), radius_m)
     rows = base.select("pid", "x", "y", F.posexplode(F.array(band, band + 1)).alias("copy", "band"))
-    return _band_colocated(rows, _pairs_kernel(radius_m),
-                           base.schema["pid"].dataType.simpleString())
+    return _band_colocated(rows, kernel)
 
 
 def knn_join(
@@ -410,9 +511,12 @@ def knn_join(
     """
     l = _normalize(left, id_col, lat_col, lon_col)
     r = _normalize(right, id_col, lat_col, lon_col)
+    kernel = _knn_kernel(k, radius_m, exclude_same_id)
+    if _fits_one_task(l, r):
+        rows = l.withColumn("left", F.lit(1)).unionByName(r.withColumn("left", F.lit(0)))
+        return _one_task(rows, kernel, _knn_copies, radius_m)
     band = _band(F.col("x"), radius_m)
     rows = l.select("pid", "x", "y", band.alias("band"), F.lit(1).alias("left")).unionByName(
         r.select("pid", "x", "y", F.explode(F.array(band - 1, band, band + 1)).alias("band"),
                  F.lit(0).alias("left")))
-    return _band_colocated(rows, _knn_kernel(k, radius_m, exclude_same_id),
-                           rows.schema["pid"].dataType.simpleString())
+    return _band_colocated(rows, kernel)

@@ -1,4 +1,4 @@
-"""distance_join_pairs vs an O(n^2) NumPy brute-force oracle.
+"""distance_join_pairs and knn_join vs O(n^2) NumPy brute-force oracles.
 
 The adversarial inputs are the ones the blocking proof worries about:
 points piled on the antimeridian seam (wrap adjacency, including the
@@ -6,14 +6,53 @@ merged fractional last cell), points near the poles (collapsed
 single-cell bands), and radii large enough that the longitude bound
 saturates.  Exact set equality, every time — the blocking is allowed to
 over-generate candidates, never to drop a pair.
+
+Every join runs on both plan shapes (:func:`_each_path`): the one task
+of an input whose row bound fits ``core.ONE_TASK_MAX_ROWS`` (the test
+tables are local tables, so their bound is known), and the band
+exchange of one that does not.
 """
 
 import numpy as np
 import pytest
 
+from learnedspatial_spark import core
+from learnedspatial_spark.operators import distjoin
 from learnedspatial_spark.operators.distjoin import (
-    _window_deg, band_deg, distance_join_pairs, knn_join)
+    _window_deg, band_deg, distance_join_pairs, knn_join, row_bound)
 from learnedspatial_spark.operators.probes import haversine_m
+from learnedspatial_spark.session import local_frame
+
+SCHEMA = "pid long, x double, y double"
+
+
+def _each_path(monkeypatch):
+    """Yield each join plan shape's name with the one-task bound set for
+    it; planning the other shape fails the test."""
+    def other_shape(*args):
+        raise AssertionError("the join planned the other shape")
+    for name, bound, unused in (("one-task", core.ONE_TASK_MAX_ROWS, "_band_colocated"),
+                                ("exchange", -1, "_one_task")):
+        with monkeypatch.context() as m:
+            m.setattr(core, "ONE_TASK_MAX_ROWS", bound)
+            m.setattr(distjoin, unused, other_shape)
+            yield name
+
+
+def _table(spark, rows, schema=SCHEMA):
+    """``rows`` as a local table (a known row bound)."""
+    names = [f.split()[0] for f in schema.split(",")]
+    return local_frame(spark, {n: [r[i] for r in rows] for i, n in enumerate(names)}, schema)
+
+
+def _frame(spark, lat, lon):
+    return _table(spark, [(i, float(lat[i]), float(lon[i])) for i in range(len(lat))])
+
+
+def _pair_rows(df):
+    rows = [(r.l_pid, r.r_pid) for r in df.collect()]
+    assert len(rows) == len(set(rows)), "duplicate rows emitted"
+    return set(rows)
 
 
 def _corpus(seed: int, n: int) -> tuple[np.ndarray, np.ndarray]:
@@ -51,19 +90,15 @@ def _brute_pairs(lat: np.ndarray, lon: np.ndarray, radius_m: float) -> set[tuple
     (7, 2_000_000.0),    # huge radius: polar bands collapse, wide cells
     (11, 400_000.0),
 ])
-def test_distance_join_matches_brute_force(spark, seed, radius_m):
+def test_distance_join_matches_brute_force(spark, seed, radius_m, monkeypatch):
     lat, lon = _corpus(seed, 600)
-    df = spark.createDataFrame(
-        [(int(i), float(lat[i]), float(lon[i])) for i in range(len(lat))],
-        "pid long, x double, y double",
-    )
-    rows = distance_join_pairs(df, radius_m).collect()
-    got = [(r.l_pid, r.r_pid) for r in rows]
-    assert len(got) == len(set(got)), "duplicate pairs emitted"
-    assert set(got) == _brute_pairs(lat, lon, radius_m)
+    df = _frame(spark, lat, lon)
+    want = _brute_pairs(lat, lon, radius_m)
+    for path in _each_path(monkeypatch):
+        assert _pair_rows(distance_join_pairs(df, radius_m)) == want, path
 
 
-def test_seam_and_pole_pairs_survive_blocking(spark):
+def test_seam_and_pole_pairs_survive_blocking(spark, monkeypatch):
     # hand-built adversarial pairs: across the antimeridian at several
     # latitudes (incl. inside the merged last lon cell), and across the
     # pole-adjacent collapsed bands.
@@ -74,12 +109,13 @@ def test_seam_and_pole_pairs_survive_blocking(spark):
         (6, -89.95, 55.0), (7, -89.95, -125.0),       # antipodal lons at S pole
         (8, 45.0, 0.0), (9, 45.0, 2.0),               # plain mid-lat control
     ]
-    df = spark.createDataFrame(pts, "pid long, x double, y double")
+    df = _table(spark, pts)
     lat = np.array([p[1] for p in pts])
     lon = np.array([p[2] for p in pts])
-    for radius_m in (30_000.0, 200_000.0):
-        got = {(r.l_pid, r.r_pid) for r in distance_join_pairs(df, radius_m).collect()}
-        assert got == _brute_pairs(lat, lon, radius_m)
+    for path in _each_path(monkeypatch):
+        for radius_m in (30_000.0, 200_000.0):
+            assert _pair_rows(distance_join_pairs(df, radius_m)) == \
+                _brute_pairs(lat, lon, radius_m), path
 
 
 def _brute_knn(lat_l, lon_l, pid_l, lat_r, lon_r, pid_r, k, radius_m):
@@ -100,72 +136,56 @@ def _brute_knn(lat_l, lon_l, pid_l, lat_r, lon_r, pid_r, k, radius_m):
     (5, 1_500_000.0),
     (600, 150_000.0),    # k above every left point's neighbour count
 ])
-def test_knn_join_matches_brute_force(spark, k, radius_m):
+def test_knn_join_matches_brute_force(spark, k, radius_m, monkeypatch):
     lat, lon = _corpus(13, 500)
     pid = np.arange(500, dtype=np.int64)
-    df = spark.createDataFrame(
-        [(int(pid[i]), float(lat[i]), float(lon[i])) for i in range(500)],
-        "pid long, x double, y double",
-    )
-    left = df.where("pid % 5 = 0")  # left table also present on the right
-    rows = knn_join(left, df, k, radius_m).collect()
-    got = [(r.l_pid, r.r_pid) for r in rows]
-    assert len(got) == len(set(got)), "duplicate kNN rows emitted"
+    df = _frame(spark, lat, lon)
     sel = pid % 5 == 0
-    assert set(got) == _brute_knn(
-        lat[sel], lon[sel], pid[sel], lat, lon, pid, k, radius_m)
+    want = _brute_knn(lat[sel], lon[sel], pid[sel], lat, lon, pid, k, radius_m)
+    for path in _each_path(monkeypatch):
+        # left table also present on the right
+        assert _pair_rows(knn_join(df.where("pid % 5 = 0"), df, k, radius_m)) == want, path
 
 
-def test_knn_join_two_distinct_tables(spark):
+def test_knn_join_two_distinct_tables(spark, monkeypatch):
     # left ids disjoint from right ids: no self-exclusion interplay
     rng = np.random.default_rng(3)
     lat_r = rng.uniform(-60, 60, 200); lon_r = rng.uniform(-179, 179, 200)
-    right = spark.createDataFrame(
-        [(int(1000 + j), float(lat_r[j]), float(lon_r[j])) for j in range(200)],
-        "pid long, x double, y double")
-    left = spark.createDataFrame(
-        [(1, 10.0, 20.0), (2, -45.0, 170.0)], "pid long, x double, y double")
+    right = _table(spark, [(int(1000 + j), float(lat_r[j]), float(lon_r[j])) for j in range(200)])
+    left = _table(spark, [(1, 10.0, 20.0), (2, -45.0, 170.0)])
     k, r_m = 4, 3_000_000.0
-    got = {(r.l_pid, r.r_pid) for r in knn_join(left, right, k, r_m).collect()}
     want = _brute_knn(np.array([10.0, -45.0]), np.array([20.0, 170.0]),
                       np.array([1, 2]), lat_r, lon_r,
                       np.arange(1000, 1200), k, r_m)
-    assert got == want
+    for path in _each_path(monkeypatch):
+        assert _pair_rows(knn_join(left, right, k, r_m)) == want, path
 
 
-def test_knn_join_colliding_id_spaces_needs_optout(spark):
+def test_knn_join_colliding_id_spaces_needs_optout(spark, monkeypatch):
     # two DIFFERENT tables that reuse the same id values for different
     # physical points: exclude_same_id=False must keep the (5, 5) pair,
     # the default must drop exactly the equal-id rows and nothing else.
-    left = spark.createDataFrame(
-        [(5, 10.0, 20.0)], "pid long, x double, y double")
-    right = spark.createDataFrame(
-        [(5, 10.0, 20.3), (6, 10.0, 20.1), (7, 10.0, 25.0)],
-        "pid long, x double, y double")
+    left = _table(spark, [(5, 10.0, 20.0)])
+    right = _table(spark, [(5, 10.0, 20.3), (6, 10.0, 20.1), (7, 10.0, 25.0)])
     k, r_m = 2, 100_000.0
-    got = {(r.l_pid, r.r_pid)
-           for r in knn_join(left, right, k, r_m,
-                             exclude_same_id=False).collect()}
-    assert got == {(5, 6), (5, 5)}  # hotel "5" is a legitimate neighbor
-    got_default = {(r.l_pid, r.r_pid)
-                   for r in knn_join(left, right, k, r_m).collect()}
-    assert got_default == {(5, 6)}
+    for path in _each_path(monkeypatch):
+        # hotel "5" is a legitimate neighbor
+        assert _pair_rows(knn_join(left, right, k, r_m, exclude_same_id=False)) == \
+            {(5, 6), (5, 5)}, path
+        assert _pair_rows(knn_join(left, right, k, r_m)) == {(5, 6)}, path
 
 
-def test_string_id_columns_pass_through(spark):
+def test_string_id_columns_pass_through(spark, monkeypatch):
     # the refine schema derives from the caller's id type: string ids work
-    df = spark.createDataFrame(
-        [("a", 10.0, 20.0), ("b", 10.0, 20.2), ("c", -40.0, 100.0)],
-        "doc string, x double, y double")
-    got = {(r.l_pid, r.r_pid)
-           for r in distance_join_pairs(df, 50_000.0, id_col="doc").collect()}
-    assert got == {("a", "b")}
-    got_knn = {(r.l_pid, r.r_pid)
-               for r in knn_join(df, df, 1, 50_000.0, id_col="doc").collect()}
-    assert got_knn == {("a", "b"), ("b", "a")}
+    df = _table(spark, [("a", 10.0, 20.0), ("b", 10.0, 20.2), ("c", -40.0, 100.0)],
+                "doc string, x double, y double")
+    for path in _each_path(monkeypatch):
+        assert _pair_rows(distance_join_pairs(df, 50_000.0, id_col="doc")) == {("a", "b")}, path
+        assert _pair_rows(knn_join(df, df, 1, 50_000.0, id_col="doc")) == \
+            {("a", "b"), ("b", "a")}, path
 
 
-def test_0_360_longitude_convention_pairs_survive_blocking(spark):
+def test_0_360_longitude_convention_pairs_survive_blocking(spark, monkeypatch):
     # climate/ocean convention: lon in [0, 360).  The pmod in _cell_expr
     # must route seam-straddling pairs (359.9 vs 0.1) into adjacent key
     # cells; the brute oracle uses the raw values (haversine is periodic).
@@ -177,28 +197,25 @@ def test_0_360_longitude_convention_pairs_survive_blocking(spark):
         359.0 + rng.uniform(0.0, 1.0, 50),   # east edge of the 0/360 seam
         rng.uniform(0.0, 1.0, 50),           # west edge
     ])
-    df = spark.createDataFrame(
-        [(int(i), float(lat[i]), float(lon[i])) for i in range(n)],
-        "pid long, x double, y double")
-    for radius_m in (100_000.0, 1_000_000.0):
-        got = {(r.l_pid, r.r_pid)
-               for r in distance_join_pairs(df, radius_m).collect()}
-        assert got == _brute_pairs(lat, lon, radius_m)
+    df = _frame(spark, lat, lon)
+    for path in _each_path(monkeypatch):
+        for radius_m in (100_000.0, 1_000_000.0):
+            assert _pair_rows(distance_join_pairs(df, radius_m)) == \
+                _brute_pairs(lat, lon, radius_m), path
 
 
-def test_boundary_distance_exactly_radius_is_kept(spark):
+def test_boundary_distance_exactly_radius_is_kept(spark, monkeypatch):
     # a pair at exactly the band-height latitude separation (the
     # boundary the SAFETY inflation exists for)
     r = 50_000.0
     dlat = band_deg(r) / (1.0 + 2.0**-10)  # un-inflated exact bound
-    df = spark.createDataFrame(
-        [(0, 10.0, 20.0), (1, 10.0 + dlat, 20.0)], "pid long, x double, y double")
+    df = _table(spark, [(0, 10.0, 20.0), (1, 10.0 + dlat, 20.0)])
     la = (np.array([10.0, 10.0 + dlat]) / 180.0) * np.pi
     lo = (np.array([20.0, 20.0]) / 180.0) * np.pi
     d = float(haversine_m(la[0], lo[0], la[1], lo[1]))
-    got = {(r_.l_pid, r_.r_pid) for r_ in distance_join_pairs(df, r).collect()}
-    assert got == ({(0, 1)} if d <= r else set())
     assert abs(d - r) < 1.0  # the fixture really does sit on the boundary
+    for path in _each_path(monkeypatch):
+        assert _pair_rows(distance_join_pairs(df, r)) == ({(0, 1)} if d <= r else set()), path
 
 
 def test_haversine_col_bit_identical_to_sql(spark, sf_dir):
@@ -234,39 +251,30 @@ def test_haversine_col_bit_identical_to_sql(spark, sf_dir):
                           values(F.expr(geo.haversine_m_sql(*names))))
 
 
-def _frame(spark, lat, lon):
-    return spark.createDataFrame(
-        [(i, float(lat[i]), float(lon[i])) for i in range(len(lat))],
-        "pid long, x double, y double")
-
-
-def _knn_rows(df):
-    rows = [(r.l_pid, r.r_pid) for r in df.collect()]
-    assert len(rows) == len(set(rows)), "duplicate kNN rows emitted"
-    return set(rows)
-
-
 @pytest.mark.parametrize("batch", [1, 7])
-def test_bands_split_across_arrow_batches(spark, batch):
+def test_bands_split_across_arrow_batches(spark, batch, monkeypatch):
     """The kernel carries a band's rows from one Arrow batch into the
-    next; with tiny batches almost every band spans several."""
+    next; with tiny batches almost every band spans several (the one task
+    hands its band-sorted rows over in chunks of the input's batch size)."""
     lat, lon = _corpus(11, 400)
     pid = np.arange(400, dtype=np.int64)
     df = _frame(spark, lat, lon)
+    sel = pid % 3 == 0
+    want = _brute_pairs(lat, lon, 400_000.0)
+    want_knn = _brute_knn(lat[sel], lon[sel], pid[sel], lat, lon, pid, 4, 400_000.0)
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
     spark.conf.set(key, str(batch))
     try:
-        got = {(r.l_pid, r.r_pid) for r in distance_join_pairs(df, 400_000.0).collect()}
-        got_knn = _knn_rows(knn_join(df.where("pid % 3 = 0"), df, 4, 400_000.0))
+        for path in _each_path(monkeypatch):
+            assert _pair_rows(distance_join_pairs(df, 400_000.0)) == want, path
+            assert _pair_rows(knn_join(df.where("pid % 3 = 0"), df, 4, 400_000.0)) == \
+                want_knn, path
     finally:
         spark.conf.set(key, old)
-    assert got == _brute_pairs(lat, lon, 400_000.0)
-    sel = pid % 3 == 0
-    assert got_knn == _brute_knn(lat[sel], lon[sel], pid[sel], lat, lon, pid, 4, 400_000.0)
 
 
-def test_polar_bands_search_the_whole_band(spark):
+def test_polar_bands_search_the_whole_band(spark, monkeypatch):
     """Near a pole the longitude bound passes 180 degrees: the window is
     the whole band, and pairs on opposite sides of the pole still meet."""
     rng = np.random.default_rng(17)
@@ -277,47 +285,50 @@ def test_polar_bands_search_the_whole_band(spark):
     top = np.floor((np.array([89.9]) + 90.0) / band_deg(r)).astype(np.int64)
     assert _window_deg(top, r, 0)[0] == 360.0 and _window_deg(top, r, 1)[0] == 360.0
     df = _frame(spark, lat, lon)
-    got = {(r_.l_pid, r_.r_pid) for r_ in distance_join_pairs(df, r).collect()}
-    assert got == _brute_pairs(lat, lon, r)
     sel = pid % 4 == 0
-    assert _knn_rows(knn_join(df.where("pid % 4 = 0"), df, 3, r)) == _brute_knn(
-        lat[sel], lon[sel], pid[sel], lat, lon, pid, 3, r)
+    for path in _each_path(monkeypatch):
+        assert _pair_rows(distance_join_pairs(df, r)) == _brute_pairs(lat, lon, r), path
+        assert _pair_rows(knn_join(df.where("pid % 4 = 0"), df, 3, r)) == _brute_knn(
+            lat[sel], lon[sel], pid[sel], lat, lon, pid, 3, r), path
 
 
-def test_knn_join_exact_distance_ties_break_on_r_pid(spark):
+def test_knn_join_exact_distance_ties_break_on_r_pid(spark, monkeypatch):
     # four right points at exactly the same distance (dlat = +-0.1 or
     # dlon = +-0.1 at the equator give bit-equal haversines), two
     # duplicates of the left point at distance 0, and one farther point
-    left = spark.createDataFrame([(1, 0.0, 0.0)], "pid long, x double, y double")
+    left = _table(spark, [(1, 0.0, 0.0)])
     pts = [(40, 0.1, 0.0), (20, -0.1, 0.0), (30, 0.0, 0.1), (10, 0.0, -0.1),
            (70, 0.0, 0.0), (60, 0.0, 0.0), (50, 0.2, 0.0)]
-    right = spark.createDataFrame(pts, "pid long, x double, y double")
+    right = _table(spark, pts)
     lat_r = np.array([p[1] for p in pts])
     lon_r = np.array([p[2] for p in pts])
     pid_r = np.array([p[0] for p in pts])
     d = haversine_m(0.0, 0.0, (lat_r / 180.0) * np.pi, (lon_r / 180.0) * np.pi)
     assert len(set(d[:4].tolist())) == 1  # the four really tie
-    for k in (1, 3, 5, 7):
-        got = _knn_rows(knn_join(left, right, k, 50_000.0))
-        want = _brute_knn(np.array([0.0]), np.array([0.0]), np.array([1]),
-                          lat_r, lon_r, pid_r, k, 50_000.0)
-        assert got == want, k
-    assert _knn_rows(knn_join(left, right, 3, 50_000.0)) == {(1, 60), (1, 70), (1, 10)}
+    for path in _each_path(monkeypatch):
+        for k in (1, 3, 5, 7):
+            got = _pair_rows(knn_join(left, right, k, 50_000.0))
+            want = _brute_knn(np.array([0.0]), np.array([0.0]), np.array([1]),
+                              lat_r, lon_r, pid_r, k, 50_000.0)
+            assert got == want, (path, k)
+        assert _pair_rows(knn_join(left, right, 3, 50_000.0)) == \
+            {(1, 60), (1, 70), (1, 10)}, path
 
 
 @pytest.mark.parametrize("side", ["left", "right", "both"])
-def test_empty_side_joins_nothing(spark, side):
+def test_empty_side_joins_nothing(spark, side, monkeypatch):
     lat, lon = _corpus(7, 100)
     df = _frame(spark, lat, lon)
     empty = df.where("pid < 0")
     left = empty if side in ("left", "both") else df
     right = empty if side in ("right", "both") else df
-    assert knn_join(left, right, 3, 500_000.0).collect() == []
-    if side == "both":
-        assert distance_join_pairs(empty, 500_000.0).collect() == []
+    for path in _each_path(monkeypatch):
+        assert knn_join(left, right, 3, 500_000.0).collect() == [], path
+        if side == "both":
+            assert distance_join_pairs(empty, 500_000.0).collect() == [], path
 
 
-def test_null_and_nan_coordinates_are_dropped(spark):
+def test_null_and_nan_coordinates_are_dropped(spark, monkeypatch):
     """A row with a null or NaN latitude or longitude pairs with nothing,
     in both joins and in their DuckDB twins."""
     import duckdb
@@ -328,13 +339,14 @@ def test_null_and_nan_coordinates_are_dropped(spark):
     nan = float("nan")
     rows = [(10, 10.0, 20.0), (20, 10.0, 20.1), (30, None, 20.0), (40, 10.0, None),
             (50, nan, 20.0), (60, 10.0, nan)]
-    df = spark.createDataFrame(rows, "pid long, x double, y double")
-    pairs = sorted(tuple(r) for r in distance_join_pairs(
-        df, entrylib.DISTANCE_JOIN_RADIUS_M).collect())
-    knn = sorted(tuple(r) for r in knn_join(
-        df, df, entrylib.KNN_JOIN_K, entrylib.KNN_JOIN_RADIUS_M).collect())
-    assert pairs == [(10, 20)]
-    assert knn == [(10, 20), (20, 10)]
+    df = _table(spark, rows)
+    for path in _each_path(monkeypatch):
+        pairs = sorted(tuple(r) for r in distance_join_pairs(
+            df, entrylib.DISTANCE_JOIN_RADIUS_M).collect())
+        knn = sorted(tuple(r) for r in knn_join(
+            df, df, entrylib.KNN_JOIN_K, entrylib.KNN_JOIN_RADIUS_M).collect())
+        assert pairs == [(10, 20)], path
+        assert knn == [(10, 20), (20, 10)], path
 
     def sql_value(v):
         if v is None:
@@ -347,3 +359,21 @@ def test_null_and_nan_coordinates_are_dropped(spark):
     for sql, want in ((entrylib._distance_join_sql(), pairs), (entrylib._knn_join_sql(), knn)):
         assert POINTS_CTE in sql
         assert sorted(con.sql(sql.replace(POINTS_CTE, frame)).fetchall()) == want
+
+
+def test_row_bound_of_cache_filter_and_parquet(spark, sf_dir):
+    """The one-task decision's row bound: a materialized cache knows its
+    rows, a filter over it keeps that bound, and an uncached parquet scan
+    has none."""
+    from pyspark.sql import functions as F
+
+    from learnedspatial_spark.sources.points import points_df
+
+    assert row_bound(points_df(spark, sf_dir)) is None
+    cached = points_df(spark, sf_dir).cache()
+    try:
+        n = cached.count()
+        assert n > 0 and row_bound(cached) == n
+        assert row_bound(cached.where(F.pmod(F.col("pid"), F.lit(8)) == 0)) == n
+    finally:
+        cached.unpersist()

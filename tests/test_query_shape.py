@@ -4,8 +4,10 @@ listed once; a batch over ``core.ONE_TASK_MAX_ROWS`` probes in parallel
 and merges with one aggregation (2 jobs, one exchange, no join); a batch
 that routes no cell runs no job.  Both paths give the same rows, and the
 point lookup, a degenerate range, keeps its defined answers for hits,
-misses, duplicate coordinates and empty batches on each.  Each table join
-is one band-co-located plan of two jobs."""
+misses, duplicate coordinates and empty batches on each.  A table join
+over inputs with a known row bound within the one-task bound is one task
+(1 job, no exchange); any other is one band-co-located plan of two
+jobs."""
 
 import os
 
@@ -222,6 +224,29 @@ def test_query_routed_to_cells_without_rows_runs_no_job(spark, gap, engine, monk
             assert [tuple(r) for r in rows] == want and jobs == 0, (family, path)
 
 
+@pytest.mark.parametrize("engine", ["session", "tiled"])
+def test_materializing_query_routed_to_no_rows_runs_no_job(spark, gap, engine):
+    """A materializing query whose routing leaves no cell to probe is an
+    empty local table of its schema: no Spark job, no rows."""
+    eng = gap[engine]
+    eng.point_lookup([(0, 70.0, 0.0)]).collect()  # first use: stats and table opening
+    queries = {
+        "range_materialize": (lambda: eng.range_materialize([(3, 0.0, 0.0, 0.5, 0.5)]),
+                              [("query_id", "bigint"), ("pid", "bigint"),
+                               ("x", "double"), ("y", "double")]),
+        "distance_materialize": (lambda: eng.distance_materialize([(4, 0.25, 0.25, 100.0)]),
+                                 [("query_id", "bigint"), ("pid", "bigint")]),
+        "pip_pairs": (lambda: eng.pip({5: ([0.1, 0.4, 0.4, 0.1], [0.1, 0.1, 0.4, 0.1])},
+                                      pairs=True), [("polygon_id", "bigint"), ("pid", "bigint")]),
+    }
+    for family, (call, dtypes) in queries.items():
+        rows, df = [], call()
+        assert df.dtypes == dtypes, family
+        assert _jobs_of(spark, f"empty-materialize-{engine}-{family}",
+                        lambda: rows.extend(df.collect())) == 0, family
+        assert rows == [], family
+
+
 @pytest.mark.parametrize("call", [
     lambda e: e.range_count([(1, 0.0, 0.0, 1.0, 1.0), (1, 2.0, 2.0, 3.0, 3.0)]),
     lambda e: e.range_materialize([(4, 0.0, 0.0, 1.0, 1.0), (4, 0.0, 0.0, 1.0, 1.0)]),
@@ -280,26 +305,40 @@ def test_count_and_point_merges_plan_one_exchange_no_join(spark, corpus, engine,
 
 
 @pytest.mark.parametrize("join", ["pairs", "knn_join"])
-def test_table_joins_plan_one_band_exchange_and_one_kernel(spark, corpus, join):
-    """Each table join is one band-co-located plan over the cached points:
-    one hash exchange on the latitude band, one MapInPandas kernel, and no
-    join, broadcast or window; it runs one shuffle-map job and one result
-    job."""
+def test_table_joins_plan_one_task_or_one_band_exchange(spark, corpus, join, monkeypatch):
+    """Over the cached points (a known row bound) each table join is one
+    task: one MapInPandas over ``Coalesce 1`` and no exchange, one job.
+    With a one-task bound no input fits, it is one band-co-located plan:
+    one hash exchange on the latitude band under one MapInPandas kernel,
+    one shuffle-map job and one result job.  Neither shape has a join, a
+    broadcast or a window, and both give the same rows."""
     pts = corpus["session"].assigned_points()
-    if join == "pairs":
-        df = distance_join_pairs(pts, 200_000.0)
-    else:
-        df = knn_join(pts.where("pid % 8 = 0"), pts, 5, 500_000.0)
-    nodes = _plan_nodes(df)
-    names = [name for name, _ in nodes]
-    exchanges = [d for name, d in nodes if name == "Exchange"]
-    assert len(exchanges) == 1 and "hashpartitioning(band" in exchanges[0], nodes
-    assert names.count("MapInPandas") == 1, nodes
-    assert not [name for name in names if name.endswith("Join") or name in (
-        "BroadcastExchange", "Window", "WindowGroupLimit")], nodes
-    rows = []
-    assert _jobs_of(spark, f"join-{join}", lambda: rows.extend(df.collect())) == 2
-    assert rows  # the radius pairs real neighbours
+
+    def join_df():
+        if join == "pairs":
+            return distance_join_pairs(pts, 200_000.0)
+        return knn_join(pts.where("pid % 8 = 0"), pts, 5, 500_000.0)
+    rows = {}
+    for path, bound in (("one-task", core.ONE_TASK_MAX_ROWS), ("exchange", -1)):
+        monkeypatch.setattr(core, "ONE_TASK_MAX_ROWS", bound)
+        df = join_df()
+        nodes = _plan_nodes(df)
+        names = [name for name, _ in nodes]
+        exchanges = [d for name, d in nodes if name.endswith("Exchange")]
+        assert names.count("MapInPandas") == 1, nodes
+        assert not [name for name in names if name.endswith("Join") or name in (
+            "Window", "WindowGroupLimit")], nodes
+        if path == "one-task":
+            assert not exchanges and names[names.index("MapInPandas") + 1] == "Coalesce", nodes
+            assert [d for name, d in nodes if name == "Coalesce"] == ["Coalesce 1"], nodes
+        else:
+            assert len(exchanges) == 1 and "hashpartitioning(band" in exchanges[0], nodes
+            assert "Coalesce" not in names, nodes
+        got = []
+        assert _jobs_of(spark, f"join-{join}-{path}", lambda: got.extend(df.collect())) == \
+            (1 if path == "one-task" else 2), path
+        rows[path] = sorted(tuple(r) for r in got)
+    assert rows["one-task"] == rows["exchange"] and rows["one-task"]  # real neighbours
 
 
 def _jobs_of(spark, group, action) -> int:

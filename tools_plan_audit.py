@@ -13,8 +13,10 @@ plan properties the 100 TB design depends on:
   ``Coalesce 1`` of the cell rows, with no exchange of any kind;
 * over that bound, count and point merges are one aggregation (one
   exchange, no join) and kNN one per-query merge;
-* the table x table joins are one band-co-located kernel (one exchange
-  on the latitude band, no join, no window);
+* a table x table join over inputs with a known row bound within that
+  bound is one task (one MapInPandas over a ``Coalesce 1``, no exchange);
+  any other is one band-co-located kernel (one exchange on the latitude
+  band, no join, no window);
 * relational glue runs in WholeStageCodegen;
 * the small dimension sides are broadcast.
 """
@@ -59,8 +61,8 @@ def literal_tables_local(plan: str) -> str:
 
 @contextmanager
 def over_bound():
-    """Plan the queries inside as batches over the one-task bound (the
-    audit's inputs are too small to exceed it)."""
+    """Plan the queries and joins inside as work over the one-task bound
+    (the audit's inputs are too small to exceed it)."""
     from learnedspatial_spark import core
     bound = core.ONE_TASK_MAX_ROWS
     core.ONE_TASK_MAX_ROWS = -1
@@ -421,20 +423,32 @@ def main() -> None:
         "HashAggregate",
     ]))
 
-    # table x table joins: each is one band-co-located kernel — the JVM
-    # computes only the latitude band, one exchange co-locates each band
-    # with its neighbours' copies, and the NumPy kernel searches, refines
-    # and (kNN) ranks; no blocked equi-join, no broadcast, no window
+    # table x table joins: over inputs with a known row bound within the
+    # one-task bound (the cached points), each join is one task that bands,
+    # expands and refines in NumPy; any other input is one band-co-located
+    # kernel — the JVM computes only the latitude band, one exchange
+    # co-locates each band with its neighbours' copies, and the NumPy
+    # kernel searches, refines and (kNN) ranks; no blocked equi-join, no
+    # broadcast, no window, in either shape
     from learnedspatial_spark.operators.distjoin import distance_join_pairs, knn_join
     from learnedspatial_spark.sources.points import points_df as _points_df
+    p16s = plan_of(distance_join_pairs(pts, 25000.0))
+    p16s += one_task_stage(p16s)
+    sections.append(("distance_join_pairs over a small cached input (one task)", p16s, [
+        "one-task-stage"]))
+    p17s = plan_of(knn_join(pts.where(F.col("pid") % 10 == 0), pts, 3, 100000.0))
+    p17s += one_task_stage(p17s)
+    sections.append(("knn_join_radius over a small cached input (one task)", p17s, [
+        "one-task-stage"]))
     _pdf = _points_df(spark, sf)
-    p16 = plan_of(distance_join_pairs(_pdf, 25000.0))
+    with over_bound():
+        p16 = plan_of(distance_join_pairs(_pdf, 25000.0))
+        p17 = plan_of(knn_join(_pdf.where(F.col("pid") % 10 == 0), _pdf, 3, 100000.0))
     p16 += band_colocated(p16)
     sections.append(("distance_join_pairs (band-co-located within-radius join)", p16, [
         "band-colocated",
         "MapInPandas",
     ]))
-    p17 = plan_of(knn_join(_pdf.where(F.col("pid") % 10 == 0), _pdf, 3, 100000.0))
     p17 += band_colocated(p17)
     sections.append(("knn_join_radius (band-co-located kNN join, in-kernel top-k)", p17, [
         "band-colocated",
