@@ -236,7 +236,6 @@ def main() -> None:
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     timed("q_dedup_exact", lambda: dedup.dedup_exact(docs).count())
-    timed("q_minhash_pairs", lambda: dedup.minhash_dedup_pairs(docs, threshold=0.5, broadcast_texts=True).count())
     timed("q_minhash_md5_pairs", lambda: dedup.minhash_md5_pairs(docs, threshold=0.5).count())
     timed("q_simhash_neardup", lambda: dedup.simhash_neardup_pairs(docs).count())
     timed("q_neardup_clusters", lambda: dedup.neardup_clusters(docs, threshold=0.5).count())

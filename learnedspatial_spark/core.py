@@ -125,13 +125,14 @@ class CellStats:
     count: np.ndarray
 
     @classmethod
-    def from_rows(cls, rows, count: str) -> CellStats:
+    def from_rows(cls, rows) -> CellStats:
+        """From ``ops.lineage.cell_metrics`` rows (any order)."""
         rows = sorted(rows, key=lambda r: r["cell_id"])
 
         def col(name, dtype=None):
             return np.asarray([r[name] for r in rows], dtype=dtype)
         return cls(col("cell_id", np.int64), col("minx"), col("miny"),
-                   col("maxx"), col("maxy"), col(count, np.int64))
+                   col("maxx"), col("maxy"), col("rows_in_cell", np.int64))
 
 
 def knots_by_cell(model_rows) -> dict[int, tuple[np.ndarray, np.ndarray]]:

@@ -31,11 +31,21 @@ HTML_TEMPLATE = (
 )
 
 
+MASK64 = np.uint64(0xFFFFFFFFFFFFFFFF)
+
+
+def _mix64(h: np.ndarray) -> np.ndarray:
+    """splitmix64 finalizer — deterministic 64-bit mixer."""
+    h = h.astype(np.uint64)
+    h = (h ^ (h >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9) & MASK64
+    h = (h ^ (h >> np.uint64(27))) * np.uint64(0x94D049BB133111EB) & MASK64
+    return h ^ (h >> np.uint64(31))
+
+
 def _hash_unit(ids: np.ndarray, salt: int, seed: int) -> np.ndarray:
     """Counter-based uniform(0,1) per id: splitmix64(id ^ salt ^ seed) —
     a pure function of the id, so distributed generation over any
     partitioning is identical to a single-node run (no RNG stream offsets)."""
-    from .functions.sketches import _mix64
     mixer = (salt * 0xD1B54A32D192ED03 + seed) & 0xFFFFFFFFFFFFFFFF
     h = _mix64(ids.astype(np.uint64) * np.uint64(0x9E3779B97F4A7C15)
                ^ np.uint64(mixer))

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from .core import CellStats, SpatialQueryCore, knots_by_cell
 from .operators import spline as spl
 from .operators.partitioning import assign_cells, build_partitioner
+from .ops.lineage import cell_metrics
 from .session import local_frame
 from .sources import points as points_src
 
@@ -110,13 +111,11 @@ class SpatialEngine(SpatialQueryCore):
         return out
 
     def cell_stats(self) -> CellStats:
-        """Per-cell MBR + count (one aggregation job; the model/stats table
-        of SURVEY.md §2.5 — O(#cells), broadcastable)."""
+        """Per-cell MBR + count (one aggregation job, the same
+        ``cell_metrics`` the tiled build writes; the model/stats table of
+        SURVEY.md §2.5 — O(#cells), broadcastable)."""
         if self._stats is None:
-            self._stats = CellStats.from_rows(self.assigned_points().groupBy("cell_id").agg(
-                F.min("x").alias("minx"), F.min("y").alias("miny"),
-                F.max("x").alias("maxx"), F.max("y").alias("maxy"),
-                F.count(F.lit(1)).alias("cnt")).collect(), count="cnt")
+            self._stats = CellStats.from_rows(cell_metrics(self.assigned_points()).collect())
         return self._stats
 
     def model_table(self) -> DataFrame:

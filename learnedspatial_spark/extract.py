@@ -30,7 +30,8 @@ GEO_RE = rf"geo:({_NUM_RE}),({_NUM_RE})"
 
 def with_extracted_text(pages: DataFrame) -> DataFrame:
     """Recompute ``text`` from ``html`` (replaces the stored column; the
-    two must agree byte-for-byte — tested)."""
+    two agree byte-for-byte per url —
+    tests/test_pages.py::test_arrow_extraction_udf_byte_identical_per_url)."""
     cols = pages.columns
 
     def fn(it):

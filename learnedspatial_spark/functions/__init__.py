@@ -1,1 +1,1 @@
-"""Scalar/vector function library: geo math, text analysis, sketches."""
+"""Scalar/vector function library: geo math and text analysis."""

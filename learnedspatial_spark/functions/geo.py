@@ -1,4 +1,4 @@
-"""Geodesic math — NumPy kernels and Spark Column expressions.
+"""Geodesic math — NumPy kernels and ANSI-SQL strings.
 
 Semantics mirror the reference exactly:
 
@@ -21,8 +21,6 @@ Convention throughout (reference include/ds/geography/DataTypes.hpp:13-15):
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 EARTH_RADIUS_M = 6378137.0  # include/queries/distance.h:8
 MIN_LAT_R = -np.pi / 2
@@ -67,30 +65,15 @@ def circle_bbox_radians_np(latr, lonr, radius_m):
     return min_lat, max_lat, min_lon, max_lon
 
 
-# ------------------------------------------------------- Spark Columns ---
-
-def haversine_s2_col(lat1r: Column, lon1r: Column, lat2r: Column, lon2r: Column) -> Column:
-    """The haversine's s^2 term (sin^2(dlat/2) + cos*cos*sin^2(dlon/2))
-    as a pure Column expression — monotone in great-circle distance and
-    well-conditioned (no asin amplification near the antipode), which is
-    what conservative distance GATES should compare on.  The products
-    associate left to right exactly as in :func:`haversine_m_sql` and the
-    NumPy kernels, so :func:`haversine_m_col` is bit-identical to the SQL
-    form."""
-    u = F.sin((lat2r - lat1r) / F.lit(2.0))
-    v = F.sin((lon2r - lon1r) / F.lit(2.0))
-    return u * u + F.cos(lat1r) * F.cos(lat2r) * v * v
-
-
-def haversine_m_col(lat1r: Column, lon1r: Column, lat2r: Column, lon2r: Column) -> Column:
-    """Haversine meters as a pure Column expression (whole-stage codegen;
-    stays JVM-side — preferred over any UDF in the hot path)."""
-    s = F.sqrt(haversine_s2_col(lat1r, lon1r, lat2r, lon2r))
-    return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(F.least(s, F.lit(1.0)))
-
+# ------------------------------------------------------------------ SQL ---
 
 def haversine_s2_sql(lat1r: str, lon1r: str, lat2r: str, lon2r: str) -> str:
-    """:func:`haversine_s2_col` as an ANSI-SQL string."""
+    """The haversine's s^2 term (sin^2(dlat/2) + cos*cos*sin^2(dlon/2))
+    as an ANSI-SQL string — monotone in great-circle distance and
+    well-conditioned (no asin amplification near the antipode), which is
+    what conservative distance GATES should compare on.  The products
+    associate left to right exactly as in the NumPy kernel
+    (``probes.haversine_m``), so both engines round alike."""
     two = "cast(2 as double)"
     u = f"sin(({lat2r} - ({lat1r})) / {two})"
     v = f"sin(({lon2r} - ({lon1r})) / {two})"

@@ -1,8 +1,11 @@
 """Deduplication operators over the ``documents`` table.
 
 Web-scale training-data surface (new vs the reference, which has no string
-ops — SURVEY.md §2.8): exact dedup, MinHash+LSH near-dup, SimHash near-dup,
-exact n-gram Jaccard verification.
+ops — SURVEY.md §2.8): exact dedup, MinHash+LSH near-dup pairs and
+clusters, SimHash near-dup, exact n-gram Jaccard verification.  Each
+operator has one implementation, built from JVM Column expressions over
+md5 digests (whole-stage codegen, no Python UDF), and each has a DuckDB
+twin in ``entrylib.CONTRACT``.
 
 Scale shape: exact dedup is one hash-shuffle groupBy (map-side partial
 aggregation; Catalyst handles skew via AQE).  MinHash-LSH is the canonical
@@ -15,32 +18,8 @@ shuffles keyed by content hashes — no driver-side state.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..functions import sketches as sk
-
-#: Row ceiling for the opt-in driver-resident text map (``broadcast_texts``):
-#: that path drives ``toPandas()`` over the FULL corpus text — right for
-#: benchmark corpora, catastrophic pointed at a production table.  Mirrors
-#: similarity.ALL_PAIRS_MAX_ROWS / _guard_all_pairs.
-BROADCAST_TEXTS_MAX_ROWS = 100_000
-
-
-def _guard_broadcast_texts(docs: DataFrame, force: bool) -> None:
-    """Refuse to collect a production-size corpus to the driver.  The probe
-    is a LIMIT-bounded count (CollectLimit short-circuits after ceiling+1
-    rows, so the guard is cheap on exactly the inputs it refuses);
-    ``force=True`` is the explicit operator override."""
-    if force:
-        return
-    if docs.limit(BROADCAST_TEXTS_MAX_ROWS + 1).count() > BROADCAST_TEXTS_MAX_ROWS:
-        raise ValueError(
-            f"broadcast_texts=True collects the full (doc_id -> text) map "
-            f"to the driver: refusing > {BROADCAST_TEXTS_MAX_ROWS} rows.  "
-            f"Use the default join path (the 100 TB shape), or pass "
-            f"force=True to insist.")
 
 
 def dedup_exact(docs: DataFrame) -> DataFrame:
@@ -59,43 +38,10 @@ def dedup_exact(docs: DataFrame) -> DataFrame:
     )
 
 
-def _minhash_map(num_perm: int, bands: int, ngram: int, shingler: str):
-    def fn(it):
-        for pdf in it:
-            ids = pdf["doc_id"].to_numpy()
-            sigs = [sk.minhash_signature(t, num_perm, ngram, shingler) for t in pdf["text"].to_numpy()]
-            rows_id, rows_band, rows_key = [], [], []
-            for i, sig in enumerate(sigs):
-                keys = sk.band_keys(sig, bands)
-                for b, kkey in enumerate(keys):
-                    rows_id.append(ids[i])
-                    rows_band.append(b)
-                    rows_key.append(np.int64(np.uint64(kkey) >> np.uint64(1)))  # fit int64
-            yield pd.DataFrame({"doc_id": rows_id, "band": rows_band, "bucket": rows_key})
-    return fn
-
-
-def minhash_candidates(docs: DataFrame, num_perm: int = 64, bands: int = 16, ngram: int = 4, shingler: str = "token") -> DataFrame:
-    """LSH candidate pairs: docs sharing any band bucket.  Returns distinct
-    (doc_a, doc_b), doc_a < doc_b.
-
-    One shuffle on (band, bucket): signatures are computed ONCE, pairs are
-    emitted from each bucket's collected id list with a JVM higher-order
-    expression (a self-join here would re-run the signature mapInPandas for
-    both sides and shuffle twice).  Bucket membership lists are tiny by
-    LSH design (same-bucket = probable near-dups), so collect_list per
-    bucket is bounded; a pathological all-equal corpus degenerates to
-    O(n^2) pairs in ANY formulation — that cost lands in the explode, not
-    in driver memory."""
-    bands_df = docs.select("doc_id", "text").mapInPandas(
-        _minhash_map(num_perm, bands, ngram, shingler), schema="doc_id bigint, band int, bucket bigint")
-    return bucket_pairs(bands_df, ["band", "bucket"])
-
-
 def bucket_pairs(bands_df: DataFrame, key_cols: list[str]) -> DataFrame:
     """Distinct candidate (doc_a, doc_b) pairs from same-bucket membership
-    — the shared tail of every banded LSH path (splitmix minhash, md5
-    minhash, simhash): collect each bucket's id list and emit unordered
+    — the shared tail of both banded LSH paths (md5 minhash, simhash):
+    collect each bucket's id list and emit unordered
     pairs with one JVM higher-order expression (i is 0-based, slice is
     1-based, so i+2 = 'strictly after a').  Duplicate doc_ids in one
     bucket would yield degenerate a==a pairs (the old self-join's strict
@@ -112,86 +58,6 @@ def bucket_pairs(bands_df: DataFrame, key_cols: list[str]) -> DataFrame:
             .where(F.col("p.doc_a") != F.col("p.doc_b"))
             .select("p.doc_a", "p.doc_b")
             .distinct())
-
-
-def minhash_dedup_pairs(docs: DataFrame, threshold: float = 0.8, num_perm: int = 64,
-                        bands: int = 16, ngram: int = 4, shingler: str = "token",
-                        broadcast_texts: bool = False, force: bool = False) -> DataFrame:
-    """Near-duplicate pairs: LSH candidates refined by exact shingle
-    Jaccard >= threshold.  The refine re-shingles both sides of each
-    candidate pair inside a pandas UDF — candidate count, not corpus count,
-    bounds the work.
-
-    ``broadcast_texts``: ship the (doc_id -> text) map in the UDF closure
-    instead of two text joins — right when the corpus fits the driver
-    (benchmark corpora); the join path is the 100 TB default.  Guarded by
-    a row ceiling (:func:`_guard_broadcast_texts`, ``force=True``
-    overrides) since it drives ``toPandas()`` over the full corpus text.
-    """
-    cand = minhash_candidates(docs, num_perm, bands, ngram, shingler)
-    if broadcast_texts:
-        _guard_broadcast_texts(docs, force)
-        txt_map = dict(docs.select("doc_id", "text").toPandas().itertuples(index=False, name=None))
-
-        def refine_bc(it):
-            cache: dict[int, np.ndarray] = {}
-
-            def sh(did: int) -> np.ndarray:
-                v = cache.get(did)
-                if v is None:
-                    v = sk.get_shingles(txt_map[did], ngram, shingler)
-                    cache[did] = v
-                return v
-
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                jac = np.array([sk.jaccard(sh(int(a)), sh(int(b)))
-                                for a, b in zip(pdf["doc_a"], pdf["doc_b"])])
-                keep = jac >= threshold
-                yield pd.DataFrame({"doc_a": pdf["doc_a"].to_numpy()[keep],
-                                    "doc_b": pdf["doc_b"].to_numpy()[keep],
-                                    "jaccard": jac[keep]})
-
-        return cand.mapInPandas(refine_bc, schema="doc_a bigint, doc_b bigint, jaccard double")
-
-    txt = docs.select("doc_id", "text")
-    pairs = (
-        cand.join(txt.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("text", "text_a"), "doc_a")
-        .join(txt.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("text", "text_b"), "doc_b")
-    )
-
-    def refine(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            jac = np.array([
-                sk.jaccard(sk.get_shingles(ta, ngram, shingler), sk.get_shingles(tb, ngram, shingler))
-                for ta, tb in zip(pdf["text_a"].to_numpy(), pdf["text_b"].to_numpy())
-            ])
-            keep = jac >= threshold
-            yield pd.DataFrame({
-                "doc_a": pdf["doc_a"].to_numpy()[keep],
-                "doc_b": pdf["doc_b"].to_numpy()[keep],
-                "jaccard": jac[keep],
-            })
-
-    return pairs.mapInPandas(refine, schema="doc_a bigint, doc_b bigint, jaccard double")
-
-
-def simhash_table(docs: DataFrame, ngram: int = 3) -> DataFrame:
-    """(doc_id, simhash) — the FULL 64-bit SimHash, stored as the
-    two's-complement int64 reinterpretation (bit-preserving: XOR/popcount
-    Hamming distance works unchanged on the signed value; an earlier
-    version stored ``>> 1`` to fit int64, silently collapsing bit-0-only
-    neighbors to Hamming 0).  Near-dups = small Hamming distance;
-    bucketing by 16-bit bands gives the scale path."""
-    def fn(it):
-        for pdf in it:
-            vals = np.array([sk.simhash(t, ngram) for t in pdf["text"].to_numpy()],
-                            dtype=np.uint64).astype(np.int64)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].to_numpy(), "simhash": vals})
-    return docs.select("doc_id", "text").mapInPandas(fn, schema="doc_id bigint, simhash bigint")
 
 
 # Shared Spark/DuckDB SQL fragment: given hex digest column ``h`` and bit
@@ -268,10 +134,11 @@ def simhash_md5_table(docs: DataFrame, ngram: int = 3) -> DataFrame:
     over 2^24-1 shingles (~16.7M chars) would overflow a lane; chunk such
     documents upstream.
 
-    Cross-engine-checkable (``entrylib`` carries the DuckDB twin), unlike
-    :func:`simhash_table` whose splitmix mixing needs uint64 wraparound
-    SQL can't express.  At 100 TB this is a single wide scan -> one hash
-    aggregation keyed by doc_id; no driver state."""
+    Cross-engine-checkable: ``entrylib`` carries the DuckDB twin, which
+    the md5 digest and integer arithmetic make possible (a splitmix-style
+    mixer needs uint64 wraparound SQL can't express).  At 100 TB this is
+    a single wide scan -> one hash aggregation keyed by doc_id; no driver
+    state."""
     g = (docs
          .select("doc_id",
                  F.expr(f"explode(sequence(1, greatest(length(text) - {ngram - 1}, 1))) AS i"),
@@ -308,11 +175,10 @@ def simhash_md5_table(docs: DataFrame, ngram: int = 3) -> DataFrame:
 
 # -------------------------------------------- md5 MinHash (oracle-checkable) ---
 #
-# Same shingle->signature->band->bucket pipeline as the splitmix variant
-# above, but every step is a JVM Column expression built from md5 + integer
-# arithmetic that DuckDB evaluates bit-identically — so the LSH candidate
-# set AND the exact-Jaccard refine have a full SQL twin (the driver's
-# rows+schema+hash gate).  Shingles are hashed (md5 48-bit prefix mod p);
+# The shingle->signature->band->bucket pipeline, every step a JVM Column
+# expression built from md5 + integer arithmetic that DuckDB evaluates
+# bit-identically — so the LSH candidate set AND the exact-Jaccard refine
+# have a full SQL twin (the driver's rows+schema+hash gate).  Shingles are hashed (md5 48-bit prefix mod p);
 # Jaccard is computed over the hashed shingle sets on BOTH sides, so the
 # two engines agree exactly.
 

@@ -6,7 +6,9 @@ workload).  These operators are the table x table generalizations a
 production pipeline needs: every unordered pair within ``radius_m``
 great-circle meters (:func:`distance_join_pairs`), and the k nearest
 right-table points within the radius per left-table point
-(:func:`knn_join`) — both without an all-pairs join.
+(:func:`knn_join`) — both without an all-pairs join.  Inputs carry
+latitude in ``x`` and longitude in ``y`` (degrees, the engine's point
+convention) plus an id column.
 
 Plan: one of two shapes, chosen on the driver.  Both hand the same
 band-sorted rows to the same ``mapInPandas`` kernel, which finds, refines
@@ -232,11 +234,11 @@ def stencil_keys(base: DataFrame, radius_m: float) -> DataFrame:
     )
 
 
-def _normalize(points: DataFrame, id_col: str, lat_col: str, lon_col: str) -> DataFrame:
+def _normalize(points: DataFrame, id_col: str) -> DataFrame:
     """(pid, x, y) rows with both coordinates set: a null or NaN
     coordinate is within no radius of anything, and its band key must not
     reach the kernel."""
-    x, y = F.col(lat_col).cast("double"), F.col(lon_col).cast("double")
+    x, y = F.col("x").cast("double"), F.col("y").cast("double")
     return points.select(F.col(id_col).alias("pid"), x.alias("x"), y.alias("y")).where(
         F.col("x").isNotNull() & F.col("y").isNotNull()
         & ~F.isnan(F.col("x")) & ~F.isnan(F.col("y")))
@@ -450,8 +452,6 @@ def distance_join_pairs(
     points: DataFrame,
     radius_m: float,
     id_col: str = "pid",
-    lat_col: str = "x",
-    lon_col: str = "y",
 ) -> DataFrame:
     """All unordered point pairs within ``radius_m`` great-circle meters:
     ``(l_pid, r_pid)`` with ``l_pid < r_pid``, each pair exactly once.
@@ -464,7 +464,7 @@ def distance_join_pairs(
     pair, whatever their distance.  The DuckDB twin has the same
     semantics.
     """
-    base = _normalize(points, id_col, lat_col, lon_col)
+    base = _normalize(points, id_col)
     kernel = _pairs_kernel(radius_m)
     if _fits_one_task(base):
         return _one_task(base, kernel, _pairs_copies, radius_m)
@@ -479,8 +479,6 @@ def knn_join(
     k: int,
     radius_m: float,
     id_col: str = "pid",
-    lat_col: str = "x",
-    lon_col: str = "y",
     exclude_same_id: bool = True,
 ) -> DataFrame:
     """Radius-bounded kNN join: for each left point, the ``k`` nearest
@@ -509,8 +507,8 @@ def knn_join(
     Both sides' ids share one column in the exchange, so they must have
     types Spark can union; the output ids take the union's type.
     """
-    l = _normalize(left, id_col, lat_col, lon_col)
-    r = _normalize(right, id_col, lat_col, lon_col)
+    l = _normalize(left, id_col)
+    r = _normalize(right, id_col)
     kernel = _knn_kernel(k, radius_m, exclude_same_id)
     if _fits_one_task(l, r):
         rows = l.withColumn("left", F.lit(1)).unionByName(r.withColumn("left", F.lit(0)))

@@ -299,7 +299,7 @@ def _decode(payload: bytes, media_type: str) -> dict:
     raise NotImplementedError(f"no decoder for {media_type}")
 
 
-def extract_features(media: DataFrame, batch_size_hint: int = 1024) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """decode -> typed features, Arrow-batched.  Output: (doc_id,
     media_type, n_bytes, width, height, mean_v); undecodable media (the
     stubbed compressed formats) carry the sentinel -1 triple."""

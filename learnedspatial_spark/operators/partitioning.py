@@ -458,13 +458,8 @@ class STRPartitioner(Partitioner):
         s = max(1, math.ceil(math.sqrt(p)))
         return s * partition_size, partition_size  # (slice_cap, leaf)
 
-    def assign_np(self, x, y):  # rank-based; use assign_ranked instead
-        raise NotImplementedError("STR assigns by global rank; use str_cell_from_ranks")
-
-    @staticmethod
-    def cell_from_ranks(rank_x: np.ndarray, rank_in_slice: np.ndarray, slice_cap: int, leaf: int, cells_per_slice: int) -> np.ndarray:
-        sl = (rank_x - 1) // slice_cap
-        return sl * cells_per_slice + (rank_in_slice - 1) // leaf
+    def assign_np(self, x, y):  # rank-based: assign_cells ranks with str_cell_ids
+        raise NotImplementedError("STR assigns by global rank; use assign_cells")
 
     def cells_for_rect(self, fx, fy, tx, ty):
         if not self.mbrs:

@@ -13,9 +13,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from ..functions import geo
 from . import spline as spl
-
-EARTH_R_M = 6378137.0  # include/queries/distance.h:8
 
 
 def deg2rad(a):
@@ -191,7 +190,7 @@ def haversine_m(lat1r, lon1r, lat2r, lon2r):
     u = np.sin((lat2r - lat1r) / 2.0)
     v = np.sin((lon2r - lon1r) / 2.0)
     s = np.sqrt(u * u + np.cos(lat1r) * np.cos(lat2r) * v * v)
-    return 2.0 * EARTH_R_M * np.arcsin(np.clip(s, 0.0, 1.0))
+    return 2.0 * geo.EARTH_RADIUS_M * np.arcsin(np.clip(s, 0.0, 1.0))
 
 
 def distance_mask_cell(xs_deg, ys_deg, qlat_deg, qlon_deg, radius_m) -> np.ndarray:

@@ -43,12 +43,11 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 
 
-def write_partitioned(df: DataFrame, path: str, partition_col: str,
-                      mode: str = "overwrite") -> None:
+def write_partitioned(df: DataFrame, path: str, partition_col: str) -> None:
     """Materialize ``df`` partitioned by ``partition_col`` (the engine's
     cell key — the unit of pruning, checkpoint resume, and co-located
-    joins)."""
-    df.write.mode(mode).option("compression", "zstd").partitionBy(partition_col).parquet(path)
+    joins), replacing any table at ``path``."""
+    df.write.mode("overwrite").option("compression", "zstd").partitionBy(partition_col).parquet(path)
 
 
 def write_table(df: DataFrame, path: str, mode: str = "overwrite") -> None:

@@ -6,9 +6,11 @@ DataFrame job whose output is a materialized table (the resume unit):
   1. extract   pages parquet/Iceberg -> points(url, x, y)     [no shuffle]
   2. key       + cell_id                                      [1 shuffle]
                materialized partitioned by cell_id
-  3. fit       model table (cell_id, knots...)                [cell-granular,
+  3. stats     per-cell MBR/count table, collected once: the
+               fit's cell list and STR's routing MBRs
+  4. fit       model table (cell_id, knots...)                [cell-granular,
                checkpoint manifest skips completed cells on restart]
-  4. stats     per-cell MBR/count table + lineage record
+               + lineage record
 
 Run via ``spark-submit --py-files learnedspatial_spark.zip run_pipeline.py``
 (see repo-root run_pipeline.py; ``python tools_make_zip.py`` builds the zip).
@@ -28,8 +30,9 @@ from .operators.partitioning import assign_cells, build_partitioner
 from .ops import storage
 from .ops.checkpoint import CheckpointManifest, run_resumable_cells
 from .ops.lineage import RunLog, cell_metrics
+from .session import local_frame
 
-#: Cells per model-fit job, the resume unit of phase 3.
+#: Cells per model-fit job, the resume unit of phase 4.
 FIT_BATCH_CELLS = 256
 
 
@@ -79,9 +82,25 @@ def build_tiled_index(
         tile_manifest.flush()
 
     tiled = storage.read_table(spark, tiled_path)
-    cells = [r["cell_id"] for r in tiled.select("cell_id").distinct().collect()]
 
-    # phase 3: model fit, cell-granular resume
+    # phase 3: per-cell stats, one aggregation over the tiled table.  Its
+    # O(#cells) rows are written as the stats table (one file) and give
+    # both the fit's cell list and, for STR, the per-cell MBRs that route
+    # queries (rank-based assignment has no closed form); the fit
+    # manifest stores the filled spec, which TiledSpatialEngine reads.
+    stats = cell_metrics(tiled)
+    srows = stats.collect()
+    storage.write_table(
+        local_frame(spark, {f.name: [r[f.name] for r in srows] for f in stats.schema.fields},
+                    stats.schema.toDDL()).coalesce(1),
+        os.path.join(out_root, "cell_stats"))
+    srows.sort(key=lambda r: r["cell_id"])
+    cells = [r["cell_id"] for r in srows]
+    if scheme == "str":
+        part.mbrs = [[int(r["cell_id"]), float(r["minx"]), float(r["miny"]),
+                      float(r["maxx"]), float(r["maxy"])] for r in srows]
+
+    # phase 4: model fit, cell-granular resume
     manifest = CheckpointManifest.load_or_create(
         os.path.join(out_root, "_ckpt"), "fit_models", part.to_spec(),
         reset_on_mismatch=True)
@@ -96,18 +115,6 @@ def build_tiled_index(
 
     fitted = run_resumable_cells(manifest, cells, fit_batch, batch_size=FIT_BATCH_CELLS)
 
-    # phase 4: stats + lineage
-    stats_path = os.path.join(out_root, "cell_stats")
-    storage.write_table(cell_metrics(tiled), stats_path)
-    if scheme == "str":
-        # STR routes by per-cell MBRs (rank-based assignment has no closed
-        # form): fill the spec from the stats table and refresh the manifest
-        # so TiledSpatialEngine prunes real candidate cells, not [].
-        srows = sorted(storage.read_table(spark, stats_path).collect(), key=lambda r: r["cell_id"])
-        part.mbrs = [[int(r["cell_id"]), float(r["minx"]), float(r["miny"]),
-                      float(r["maxx"]), float(r["maxy"])] for r in srows]
-        manifest.partitioner_spec = part.to_spec()
-        manifest.flush()
     run_id = log.record_run(
         "build_tiled_index", part.to_spec(),
         inputs={"pages": pages_path or "<points_df>", "rows": n},

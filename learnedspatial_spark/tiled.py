@@ -64,8 +64,7 @@ class TiledSpatialEngine(SpatialQueryCore):
     def cell_stats(self) -> CellStats:
         """Memoized O(#cells) stats from the persisted stats table."""
         if self._stats is None:
-            self._stats = CellStats.from_rows(self._table("cell_stats").collect(),
-                                              count="rows_in_cell")
+            self._stats = CellStats.from_rows(self._table("cell_stats").collect())
         return self._stats
 
     def _model_dict(self):

@@ -218,39 +218,6 @@ def test_boundary_distance_exactly_radius_is_kept(spark, monkeypatch):
         assert _pair_rows(distance_join_pairs(df, r)) == ({(0, 1)} if d <= r else set()), path
 
 
-def test_haversine_col_bit_identical_to_sql(spark, sf_dir):
-    """The Column haversine (the s^2 pre-filter's home) and the SQL string
-    the DuckDB twins use must agree to the bit on corpus point pairs.  Each
-    form runs in its own job: within one projection, subexpression
-    elimination treats reassociated products as equal and evaluates only
-    one of them."""
-    import math
-
-    from pyspark.sql import functions as F
-
-    from learnedspatial_spark.functions import geo
-    from learnedspatial_spark.sources.points import points_df
-
-    def radians(df, a, b):
-        return df.select((F.col("x") / 180.0 * math.pi).alias(a),
-                         (F.col("y") / 180.0 * math.pi).alias(b))
-
-    pts = points_df(spark, sf_dir)
-    names = ("la1", "lo1", "la2", "lo2")
-    pairs = radians(pts, "la1", "lo1").crossJoin(
-        F.broadcast(radians(pts.orderBy("pid").limit(8), "la2", "lo2")))
-
-    def values(expr):
-        return np.asarray(sorted(pairs.select(*names, expr.alias("v")).collect()))[:, 4]
-
-    cols = [F.col(c) for c in names]
-    s2 = values(geo.haversine_s2_col(*cols))
-    assert s2.shape[0] > 10_000
-    assert np.array_equal(s2, values(F.expr(geo.haversine_s2_sql(*names))))
-    assert np.array_equal(values(geo.haversine_m_col(*cols)),
-                          values(F.expr(geo.haversine_m_sql(*names))))
-
-
 @pytest.mark.parametrize("batch", [1, 7])
 def test_bands_split_across_arrow_batches(spark, batch, monkeypatch):
     """The kernel carries a band's rows from one Arrow batch into the

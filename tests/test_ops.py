@@ -4,7 +4,6 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from learnedspatial_spark.functions import sketches as sk
 from learnedspatial_spark.ops.checkpoint import CheckpointManifest, run_resumable_cells
 
 
@@ -74,7 +73,7 @@ def test_minhash_finds_near_dups(spark):
                                                "text": [r[1] for r in rows]}))
     from learnedspatial_spark.operators import dedup
     pairs = {(r["doc_a"], r["doc_b"]) for r in
-             dedup.minhash_dedup_pairs(docs, threshold=0.5, bands=32).collect()}
+             dedup.minhash_md5_pairs(docs, threshold=0.5, bands=32).collect()}
     assert (0, 3) in pairs          # exact dup
     assert (0, 1) in pairs or (1, 3) in pairs  # near dup
     assert not any(2 in p for p in pairs)
@@ -155,12 +154,20 @@ def test_connected_components_long_path_and_random(spark):
     check(edges)
 
 
-def test_simhash_hamming():
-    a = sk.simhash("the quick brown fox jumps over the lazy dog")
-    b = sk.simhash("the quick brown fox jumps over the lazy cat")
-    c = sk.simhash("zzz completely unrelated content qqq xyzzy")
-    d_ab = sk.hamming64(np.array([a]), np.array([b]))[0]
-    d_ac = sk.hamming64(np.array([a]), np.array([c]))[0]
+def test_simhash_hamming(spark):
+    from learnedspatial_spark.operators import dedup
+    docs = spark.createDataFrame(
+        [(0, "the quick brown fox jumps over the lazy dog"),
+         (1, "the quick brown fox jumps over the lazy cat"),
+         (2, "zzz completely unrelated content qqq xyzzy")],
+        "doc_id bigint, text string")
+    sim = {r["doc_id"]: (r["sim_lo"], r["sim_hi"])
+           for r in dedup.simhash_md5_table(docs).collect()}
+
+    def hamming(i, j):
+        return sum(bin(x ^ y).count("1") for x, y in zip(sim[i], sim[j]))
+    d_ab = hamming(0, 1)
+    d_ac = hamming(0, 2)
     assert d_ab < d_ac
 
 
@@ -506,27 +513,6 @@ def test_all_pairs_twins_guarded_at_scale(spark):
     # under the ceiling: untouched
     small = big.limit(5)
     assert similarity.brute_cosine_topk(small, q, k=1).count() == 1
-
-
-def test_broadcast_texts_guarded_at_scale(spark):
-    """ADVICE r4 / VERDICT r4 #8: the broadcast_texts opt-in drives
-    toPandas() over the full corpus text — it must refuse a corpus above
-    BROADCAST_TEXTS_MAX_ROWS unless forced, mirroring _guard_all_pairs."""
-    from learnedspatial_spark.operators import dedup as dd
-    big = spark.range(dd.BROADCAST_TEXTS_MAX_ROWS + 1).select(
-        F.col("id").alias("doc_id"), F.lit("same text here").alias("text"))
-    with pytest.raises(ValueError, match="broadcast_texts"):
-        dd.minhash_dedup_pairs(big, broadcast_texts=True)
-    # small corpora and the default join path stay functional
-    small = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta"),
-         (2, "alpha beta gamma delta epsilon zeta"),
-         (3, "totally different words entirely here now")],
-        "doc_id bigint, text string")
-    got = {(r["doc_a"], r["doc_b"])
-           for r in dd.minhash_dedup_pairs(small, broadcast_texts=True,
-                                           ngram=2).collect()}
-    assert got == {(1, 2)}
 
 
 def test_guard_all_pairs_caches_passing_input(spark):

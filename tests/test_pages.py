@@ -18,6 +18,42 @@ def test_extract_text_byte_identical_and_deterministic():
     assert (pdf1["text"] == pdf2["text"]).all()
 
 
+def test_arrow_extraction_udf_byte_identical_per_url(spark):
+    """``extract.with_extracted_text`` (the Arrow-batched UDF) recomputes
+    ``text`` from ``html`` byte-identical to the oracle extractor per url,
+    across partitions and 7-row Arrow batches, on generated pages plus
+    hand-made ones with multi-byte UTF-8 and nested tags; the input's
+    column order survives."""
+    import datetime as dt
+
+    from learnedspatial_spark import extract
+    hand = [
+        "<html><body><div><p>Zürich — 東京 <b>naïve <i>café</i></b></p></div>"
+        "<p>geo:47.37,8.54 😀</p></body></html>",
+        "<div><span><a href='x'>tief <em>verschachtelt</em></a> ünd</span></div>  ",
+        "<p>ñ<br/>ß<!-- kommentar --> Ω</p>",
+    ]
+    pages = datagen.pages_df(spark, 600, partitions=3).unionByName(spark.createDataFrame(
+        [(f"https://hand.example/{i}", dt.datetime(2024, 1, 1), h.encode("utf-8"), "stale", "xx")
+         for i, h in enumerate(hand)],
+        "url string, warc_ts timestamp, html binary, text string, lang string"))
+    pages = pages.select("html", "url", "lang", "text", "warc_ts")
+    want = {r["url"]: datagen.extract_text_bytes(bytes(r["html"])) for r in pages.collect()}
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        out = extract.with_extracted_text(pages)
+        rows = out.collect()
+    finally:
+        spark.conf.set(key, old)
+    assert out.columns == pages.columns
+    got = {r["url"]: r["text"].encode("utf-8") for r in rows}
+    assert len(rows) == len(got) == len(want) == 603
+    assert got == want
+    assert got["https://hand.example/0"].decode("utf-8") == "Zürich — 東京 naïve cafégeo:47.37,8.54 😀"
+
+
 def test_pages_df_matches_local(spark):
     df = datagen.pages_df(spark, 200, partitions=4)
     rows = {r["url"]: r for r in df.collect()}
